@@ -39,7 +39,6 @@ object Tables {
     * round-robin over recomputed input), and the bench keys are
     * near-unique ids, thousands of distinct values per partition. */
   def fanOut(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_FANOUT")) return df // A/B instrument
     // streaming frames can't be planned as an RDD (and the micro-batch
     // engine shapes its own partitioning): identity there, so the shared
     // per-row ops stay stream-safe

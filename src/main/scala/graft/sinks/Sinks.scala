@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 
 /** Per-sink success tracking, mirroring the reference's StorageResult
   * (service/StorageResult.java:11-79): which sinks succeeded, and the
@@ -33,7 +35,7 @@ final case class StorageResult(
   *    (kafka itself is config-gated; no broker in CI).
   *  - K8 fanout: the tri-store write with per-sink failure isolation and
   *    partial-failure → DLQ routing (HRFCOStorageService.java:72-122,
-  *    WaterLevelProcessor.java:70-75).
+  *    WaterLevelProcessor.java:70-75); the three writes run concurrently.
   */
 object Sinks {
 
@@ -266,25 +268,32 @@ object Sinks {
       timestamp.as("timestamp"))
 
   /** K8: tri-store fanout with per-sink failure isolation. The batch is
-    * persisted once, written to the three stores, and per-sink failures
-    * are captured instead of failing the stream; partial failure produces
-    * a DLQ frame covering the batch (the reference's per-record
-    * StorageResult folded up to batch granularity). */
+    * persisted once, then the archive, timeseries and raw writes run at
+    * the same time, each on its own [[fork]]ed thread: no write's
+    * planning or commit waits for another's. Per-sink failures are
+    * captured instead of failing the stream; once all three writes have
+    * joined, partial failure produces a DLQ frame covering the batch (the
+    * reference's per-record StorageResult folded up to batch
+    * granularity). The frame is returned, not appended: a caller that
+    * also appends to the DLQ must order the two appends itself. */
   def fanout(classified: DataFrame, archivePath: String, timeseriesPath: String,
              rawPath: String, processingTime: Column = current_timestamp()): (StorageResult, Option[DataFrame]) = {
     classified.persist()
     try {
-      val attempts = Seq(
-        "archive" -> (() => writeArchive(classified, archivePath, processingTime)),
-        "timeseries" -> (() => writeTimeseries(classified, timeseriesPath, processingTime)),
-        "raw" -> (() => writeRaw(classified, rawPath, processingTime)))
-        .map { case (name, run) =>
+      val writes = Seq(
+        "archive" -> fork("archive")(writeArchive(classified, archivePath, processingTime)),
+        "timeseries" -> fork("timeseries")(writeTimeseries(classified, timeseriesPath, processingTime)),
+        "raw" -> fork("raw")(writeRaw(classified, rawPath, processingTime)))
+      joinAll(writes.map(_._2): _*)
+      val failures = writes.flatMap { case (name, w) =>
+        w.outcome match {
+          case Success(_) => None
           // NonFatal only: an OOM/LinkageError means the JVM is suspect and
           // must not be recorded as a routine sink failure
-          try { run(); name -> None }
-          catch { case scala.util.control.NonFatal(e) => name -> Some(e.toString) }
+          case Failure(NonFatal(e)) => Some((name, e.toString))
+          case Failure(fatal) => throw fatal
         }
-      val failures = attempts.collect { case (n, Some(msg)) => (n, msg) }
+      }
       val result = StorageResult(
         archiveOk = !failures.exists(_._1 == "archive"),
         timeseriesOk = !failures.exists(_._1 == "timeseries"),
@@ -305,5 +314,49 @@ object Sinks {
         }
       (result, dlq)
     } finally classified.unpersist()
+  }
+
+  /** A write running on its own thread, started by [[fork]]. */
+  private[graft] final class Forked[A] private[Sinks] (name: String, body: => A) {
+    @volatile private var result: Try[A] = _
+    private[Sinks] val thread = new Thread(() =>
+      result = try Success(body) catch { case t: Throwable => Failure(t) },
+      s"graft-sink-$name")
+
+    /** How the write ended, fatal errors included, so the caller decides
+      * what to rethrow. Read it only after [[joinAll]] returns. */
+    def outcome: Try[A] = result
+  }
+
+  /** Start `body` on a fresh thread. Fresh, not pooled: a new thread
+    * inherits the caller's SparkContext local properties, so a write
+    * forked from a micro-batch keeps the batch's job group and
+    * `sql.streaming.queryId`. `StreamingQuery.stop()` cancels the write's
+    * jobs through that group, and each job still traces back to its
+    * batch. A pooled thread would keep the properties of whichever
+    * thread created it. */
+  private[graft] def fork[A](name: String)(body: => A): Forked[A] = {
+    val f = new Forked(name, body)
+    f.thread.setDaemon(true)
+    f.thread.start()
+    f
+  }
+
+  /** Wait for every forked write. If the waiting thread is interrupted
+    * (`StreamingQuery.stop()`), interrupt the writes too and still wait
+    * for them, so none starts a job after its caller has returned; then
+    * rethrow the interrupt. */
+  private[graft] def joinAll(forks: Forked[_]*): Unit = {
+    var interrupted: Option[InterruptedException] = None
+    forks.foreach { f =>
+      while (f.thread.isAlive)
+        try f.thread.join()
+        catch {
+          case e: InterruptedException =>
+            if (interrupted.isEmpty) forks.foreach(_.thread.interrupt())
+            interrupted = interrupted.orElse(Some(e))
+        }
+    }
+    interrupted.foreach(throw _)
   }
 }

@@ -20,7 +20,14 @@ import graft.sinks.Sinks
   *  - `maxFilesPerTrigger` is the file-source analogue of
   *    `maxOffsetsPerTrigger` backpressure;
   *  - foreachBatch does the K8 tri-sink fanout with per-sink failure →
-  *    DLQ parquet (at-least-once, DLQ-not-fail: SURVEY.md §2.6);
+  *    DLQ parquet (at-least-once, DLQ-not-fail: SURVEY.md §2.6). The
+  *    parse-failure DLQ append and the fanout's archive, timeseries and
+  *    raw writes all run at the same time, on fresh threads that inherit
+  *    the micro-batch's Spark local properties (job group,
+  *    `sql.streaming.queryId`), so `stop()` still cancels every sink job.
+  *    The storage-failure DLQ append starts only after the parse-failure
+  *    one has finished (one parquet directory, one committer), and a
+  *    failed parse-failure append still fails the batch;
   *  - the threshold dim is re-derived per batch — the streaming analogue
   *    of the reference's continuously-refreshed broadcast dimension.
   */
@@ -73,14 +80,24 @@ object StreamingPipeline {
         // write and the storage fanout share ONE scan of the micro-batch.
         val raw = Hrfco.rawObservations(batch).persist()
         try {
-          Hrfco.dlqEnvelope(raw).drop("event_id")
-            .write.mode("append").parquet(paths.dlq)
           val classified = Hrfco.pipelineFromRaw(raw, dimProvider(), wlMax = wlMax)
-          val (result, dlq) = Sinks.fanout(classified, paths.archive, paths.timeseries, paths.raw)
-          dlq.foreach { d =>
-            d.write.mode("append").parquet(paths.dlq)
-            d.unpersist()
+          // the parse-failure DLQ append runs alongside the fanout's three
+          // writes, on a thread that inherits this batch's local properties
+          val parseDlq = Sinks.fork("dlq") {
+            Hrfco.dlqEnvelope(raw).drop("event_id")
+              .write.mode("append").parquet(paths.dlq)
           }
+          val (result, dlq) =
+            try Sinks.fanout(classified, paths.archive, paths.timeseries, paths.raw)
+            finally Sinks.joinAll(parseDlq)
+          try {
+            // a failed parse-failure DLQ write fails the batch; otherwise
+            // the storage-failure append goes second, never concurrently:
+            // two appends to one parquet directory share the committer's
+            // _temporary directory
+            parseDlq.outcome.get
+            dlq.foreach(_.write.mode("append").parquet(paths.dlq))
+          } finally dlq.foreach(_.unpersist())
           if (!result.allOk)
             logger.warn(s"batch $batchId partial storage failure: ${result.failures}")
         } finally raw.unpersist(blocking = false)

@@ -216,6 +216,10 @@ class SinksSpec extends SparkSpec {
       s"$base/a2", roFile.getAbsolutePath + "/x", s"$base/r2")
     assert(partial.archiveOk && partial.rawOk && !partial.timeseriesOk)
     assert(partial.failures.map(_._1) === Seq("timeseries"))
+    // the writes run concurrently; the failing one must not cost the
+    // other two a row
+    assert(spark.read.json(s"$base/a2").count() === 10)
+    assert(spark.read.parquet(s"$base/r2").count() === 10)
     val env = dlq.get.collect()
     assert(env.length === 10)
     assert(env.head.getAs[String]("errorReason").contains("timeseries"))

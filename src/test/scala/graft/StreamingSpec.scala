@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Hrfco, Thresholds}
 import graft.streaming.StreamingPipeline
@@ -135,5 +137,100 @@ class StreamingSpec extends SparkSpec {
       graft.ops.Hrfco.rawObservations(ev)).count()
     assert(spark.read.parquet(paths.dlq).count() === expectedParseFailures)
     assert(expectedParseFailures > 0)
+  }
+
+  /** 1000 synthetic events (four station types, `k` payloads; ids that
+    * are multiples of 107 become parse failures) as `files` source files
+    * under a fresh work directory, so `maxFilesPerTrigger = 1` drives that
+    * many micro-batches. Returns the work directory, the source directory
+    * and the events as the batch pipeline reads them. */
+  private def eventSource(name: String, files: Int): (String, String, DataFrame) = {
+    val base = new java.io.File("target/test-out").getAbsoluteFile.toPath
+    Files.createDirectories(base)
+    val work = Files.createTempDirectory(base, name).toString
+    val stations = array(Seq("click", "purchase", "view", "signup").map(lit): _*)
+    spark.range(1, 1001, 1, files).select(
+      col("id").as("event_id"),
+      timestamp_seconds(lit(1765290600L) + col("id") * 60).cast("timestamp_ntz").as("ts"),
+      (col("id") % 50).as("user_id"),
+      element_at(stations, (col("id") % 4 + 1).cast("int")).as("event_type"),
+      (col("id") % 250).cast("double").as("value"),
+      format_string("{\"k\": \"%d.5\"}", col("id") % 9).as("props"))
+      .write.parquet(s"$work/incoming")
+    (work, s"$work/incoming", Tables.normalizeEvents(spark.read.parquet(s"$work/incoming")))
+  }
+
+  test("a failing sink routes every stored row to the DLQ after the parse failures, batch after batch") {
+    // the storage-failure DLQ append must wait for the parse-failure one:
+    // two appends in flight on one parquet directory share the committer's
+    // `_temporary` directory, and the first job commit deletes the other's
+    // task output. DLQ data files take two seconds to close here, so an
+    // append that did not wait would overlap the parse-failure write.
+    val (work, srcDir, ev) = eventSource("dlqorder", 2)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.slowclose.impl", classOf[SlowCloseFileSystem].getName)
+    val notADir = new java.io.File(s"$work/not-a-dir"); notADir.createNewFile()
+    val paths = StreamingPipeline.SinkPaths(s"$work/archive",
+      notADir.getAbsolutePath + "/ts", s"$work/raw", s"slowclose://$work/dlq")
+    val q = StreamingPipeline.start(
+      spark, srcDir, ev, paths, s"$work/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0)
+    // a failed batch would make this throw: the query must survive the sink
+    assert(q.awaitTermination(120000), "streaming query timed out")
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 2, "expected >= 2 micro-batches")
+
+    val stored = Hrfco.pipeline(ev, Thresholds.fromEvents(ev), wlMax = 300.0).count()
+    val parseFailures = Hrfco.dlqEnvelope(Hrfco.rawObservations(ev)).count()
+    assert(stored > 0 && parseFailures > 0)
+    assert(spark.read.parquet(paths.raw).count() === stored)
+    val dlq = spark.read.parquet(paths.dlq)
+    assert(dlq.count() === parseFailures + stored)
+    assert(dlq.filter(col("errorReason") === "Storage failed for: timeseries").count() === stored)
+  }
+
+  test("every job the stream runs carries its query id, sink writes included") {
+    // the sink writes run on their own threads; without the micro-batch's
+    // local properties their jobs would escape stop()'s job-group cancel.
+    // Two queries in a row, so a writer thread kept from the first query
+    // would show up with the wrong id in the second.
+    val (work, srcDir, ev) = eventSource("queryid", 2)
+    val dim = Thresholds.fromEvents(ev)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId"))))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Seq("first", "second").foreach { run =>
+      jobs.clear()
+      val paths = StreamingPipeline.SinkPaths(s"$work/$run/archive",
+        s"$work/$run/timeseries", s"$work/$run/raw", s"$work/$run/dlq")
+      val q = StreamingPipeline.startWithDim(spark, srcDir, () => dim, paths,
+        s"$work/$run/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0)
+      assert(q.awaitTermination(120000), "streaming query timed out")
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      assert(q.recentProgress.count(_.numInputRows > 0) === 2, "expected two micro-batches")
+      val seen = jobs.asScala.toSeq
+      // per batch: the DLQ write plus one job per sink at least
+      assert(seen.size >= 8, s"$run query: too few jobs seen: ${seen.size}")
+      assert(seen.forall(_.contains(q.id.toString)), s"$run query: " +
+        s"${seen.count(!_.contains(q.id.toString))} of ${seen.size} jobs lack its id")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+}
+
+/** The local file system under the `slowclose:` scheme, except that each
+  * `part-` data file takes two seconds to close: a write task stays open long
+  * enough for a concurrent job on the same directory to commit first. */
+class SlowCloseFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def getScheme: String = "slowclose"
+  override def getUri: java.net.URI = java.net.URI.create("slowclose:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (!f.getName.startsWith("part-")) out
+    else new FSDataOutputStream(out, null) {
+      override def close(): Unit = { Thread.sleep(2000); super.close() }
+    }
   }
 }
