@@ -22,81 +22,25 @@ object SparkEntry {
     * (HRFCOStorageService.java:240-243) — injectable per SURVEY §7. */
   private def fixedFallback = to_timestamp(lit("1970-01-01 00:00:00"))
 
-  /** Location of the persisted IVF centroid artifact (see
-    * Similarity.centroidArtifact), keyed by corpus tag + sf dir so
-    * different corpora never share centroids; the version prefix
-    * invalidates old artifacts if the training recipe ever changes. */
-  private def ivfArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/ivf_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
+  /** Near-dup pair-list artifact: the candidate generators are
+    * deterministic (exact inverted index / xxhash64 band family), so the
+    * three component-resolution entries share ONE generation pass per
+    * corpus instead of re-shingling ~2 s each — the offline shape, where
+    * the pair list is a nightly artifact and cluster resolution consumes
+    * it. */
+  private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
+    Artifacts.cached(s, "pairs", "jaccard", dir)(Dedup.ngramJaccard(Tables.documents(s, dir)))
 
-  /** Near-dup pair-list artifact (see Artifacts.parquetArtifact): the
-    * candidate generators are deterministic (exact inverted index /
-    * xxhash64 band family), so the three component-resolution entries
-    * share ONE generation pass per corpus instead of re-shingling ~2 s
-    * each — the offline shape, where the pair list is a nightly artifact
-    * and cluster resolution consumes it. Keyed by generator + sf dir;
-    * version prefix invalidates on recipe change. */
-  private def pairArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/pairs_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
-  private def pqArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/pq_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
-  /** Stored IVF-PQ index artifact (vec_id, cell, sub, code): integral
-    * columns round-trip parquet exactly and assignment against fixed
-    * models is deterministic — the serving index a deployment stores
-    * (annIndexStateSink maintains the same frame from a stream). */
-  private def idxArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/idx_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
-  /** Stored BPE merge-table artifact (rank, left_tok, right_tok,
-    * merged, pair_count): training is bit-deterministic and the frame
-    * round-trips parquet exactly — the nightly tokenizer a deployment
-    * trains once and prices many runs with (Bpe.mergeArtifact). */
-  private def bpeArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/bpe_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
-  /** Stored bigram-LM artifact (w1, w2, n — pair/prefix/V rows):
-    * exact counts round-trip parquet and training is deterministic,
-    * the TextAnalysis.bigramModel train-once/score-many seam. */
-  private def lmArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/lm_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
+  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
+    Artifacts.cached(s, "pairs", "minhash", dir)(Dedup.minhashLsh(Tables.documents(s, dir)))
 
   /** Stored suffix-rank artifact (doc_id, p, key, r): the doubling
     * rounds are the dominant cost of the substring-dedup family and
     * both faces (census + removal) consume the SAME ranks — integral
     * columns, deterministic min-key class ids, so the frame
     * round-trips parquet exactly (the pair-list/components seam). */
-  private def substrRanksPath(dir: String): String =
-    new java.io.File("target/graft-artifacts/substr_v1_w32_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
   private def substrRanks(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Artifacts.parquetArtifact(s, substrRanksPath(dir))(
-      Dedup.substringRanks(Tables.documents(s, dir)))
-
-  /** Stored cdx index artifact (record geometry × owning gzip member):
-    * both walks are deterministic byte arithmetic and every column is
-    * integral or a type name, so the seekable index round-trips parquet
-    * exactly — the read-side artifact a Common-Crawl consumer builds
-    * once per crawl and serves random access from. */
-  private def cdxArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/cdx_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
-  private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Artifacts.parquetArtifact(s, pairArtifactPath("jaccard", dir))(
-      Dedup.ngramJaccard(Tables.documents(s, dir)))
-
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Artifacts.parquetArtifact(s, pairArtifactPath("minhash", dir))(
-      Dedup.minhashLsh(Tables.documents(s, dir)))
+    Artifacts.cached(s, "substr", "w32", dir)(Dedup.substringRanks(Tables.documents(s, dir)))
 
   /** Resolved-components artifact (id, comp): pointer doubling is
     * deterministic (min-label fixpoint over a deterministic pair list),
@@ -105,18 +49,12 @@ object SparkEntry {
     * (components, canonical mapping, cluster histogram, leakage-safe
     * split, source dup rate) reads the resolved frame. At 100 TB the
     * closure is the dominant dedup cost and runs as a nightly job; this
-    * is that job's output seam. Keyed by pair generator + sf dir. */
-  private def componentsArtifactPath(tag: String, dir: String): String =
-    new java.io.File("target/graft-artifacts/comps_v1_" + tag + "_" +
-      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
-
+    * is that job's output seam. */
   private def jaccardComponents(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Artifacts.parquetArtifact(s, componentsArtifactPath("jaccard", dir))(
-      Graph.connectedComponents(jaccardPairs(s, dir)))
+    Artifacts.cached(s, "comps", "jaccard", dir)(Graph.connectedComponents(jaccardPairs(s, dir)))
 
   private def minhashComponents(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Artifacts.parquetArtifact(s, componentsArtifactPath("minhash", dir))(
-      Graph.connectedComponents(minhashPairs(s, dir)))
+    Artifacts.cached(s, "comps", "minhash", dir)(Graph.connectedComponents(minhashPairs(s, dir)))
 
   /** The shared canonical resolution every downstream entry consumes:
     * one left equi-join of the corpus against the components artifact. */
@@ -840,8 +778,8 @@ object SparkEntry {
     // terminal dedup stage: resolve the jaccard pair list into connected
     // components (min-label + pointer doubling, O(log n) rounds), then map
     // EVERY corpus doc to its cluster representative. BOTH stages come
-    // through write-once artifacts (see pairArtifactPath /
-    // componentsArtifactPath) — generation and closure are deterministic,
+    // through write-once artifacts (see jaccardPairs /
+    // jaccardComponents) — generation and closure are deterministic,
     // so artifact and recompute are result-identical and each entry's
     // oracle still certifies the full composition; the whole components
     // family shares ONE closure run per corpus.
@@ -927,8 +865,7 @@ object SparkEntry {
     "dedup_components_increment" -> ((s, dir) => {
       val pairs = jaccardPairs(s, dir)
       val isNew = pmod(col("id1") + col("id2"), lit(4L)) === 0L
-      val stored = graft.ops.Artifacts.parquetArtifact(
-        s, componentsArtifactPath("jaccard_seen", dir))(
+      val stored = Artifacts.cached(s, "comps", "jaccard_seen", dir)(
         Graph.connectedComponents(pairs.filter(!isNew)))
       Graph.componentsIncrement(stored, pairs.filter(isNew)).orderBy("id")
     }),
@@ -1046,7 +983,7 @@ object SparkEntry {
     "sim_topk_ivf" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.topKIvf(emb, pretrained =
-        Some(Similarity.centroidArtifact(emb, ivfArtifactPath("base", dir),
+        Some(Similarity.centroidArtifact(emb, Artifacts.path("ivf", "base", dir),
           k = 16, iterations = 2)))
         .orderBy("query_id", "rank")
     }),
@@ -1059,7 +996,7 @@ object SparkEntry {
     "sim_topk_ivf_full" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.topKIvf(emb, nprobe = Int.MaxValue, pretrained =
-        Some(Similarity.centroidArtifact(emb, ivfArtifactPath("base", dir),
+        Some(Similarity.centroidArtifact(emb, Artifacts.path("ivf", "base", dir),
           k = 16, iterations = 2)))
         .orderBy("query_id", "rank")
     }),
@@ -1073,7 +1010,7 @@ object SparkEntry {
       val corpus = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
       Similarity.topKIvf(corpus, k = 5, numQueries = 8, numCells = 16, nprobe = 3,
         pretrained = Some(Similarity.centroidArtifact(corpus,
-          ivfArtifactPath("clustered", dir), k = 16, iterations = 2)))
+          Artifacts.path("ivf", "clustered", dir), k = 16, iterations = 2)))
         .orderBy("query_id", "rank")
     }),
 
@@ -1082,7 +1019,7 @@ object SparkEntry {
     "sim_topk_pq" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.topKPqRerank(emb, pretrained =
-        Some(Similarity.pqCodebookArtifact(emb, pqArtifactPath("base", dir))))
+        Some(Similarity.pqCodebookArtifact(emb, Artifacts.path("pq", "base", dir))))
         .orderBy("query_id", "rank")
     }),
 
@@ -1092,7 +1029,7 @@ object SparkEntry {
     "sim_topk_pq_full" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
       Similarity.topKPqRerank(emb, numQueries = 10, shortlist = Int.MaxValue,
-        pretrained = Some(Similarity.pqCodebookArtifact(emb, pqArtifactPath("base", dir))))
+        pretrained = Some(Similarity.pqCodebookArtifact(emb, Artifacts.path("pq", "base", dir))))
         .orderBy("query_id", "rank")
     }),
 
@@ -1103,7 +1040,7 @@ object SparkEntry {
     "sim_topk_pq_planted" -> ((s, dir) => {
       val corpus = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
       Similarity.topKPqRerank(corpus, pretrained =
-        Some(Similarity.pqCodebookArtifact(corpus, pqArtifactPath("planted", dir))))
+        Some(Similarity.pqCodebookArtifact(corpus, Artifacts.path("pq", "planted", dir))))
         .orderBy("query_id", "rank")
     }),
 
@@ -1113,8 +1050,8 @@ object SparkEntry {
       val emb = Tables.embeddings(s, dir)
       Similarity.topKIvfPq(emb,
         centroids = Some(Similarity.centroidArtifact(emb,
-          ivfArtifactPath("base", dir), k = 16, iterations = 2)),
-        codebooks = Some(Similarity.pqCodebookArtifact(emb, pqArtifactPath("base", dir))))
+          Artifacts.path("ivf", "base", dir), k = 16, iterations = 2)),
+        codebooks = Some(Similarity.pqCodebookArtifact(emb, Artifacts.path("pq", "base", dir))))
         .orderBy("query_id", "rank")
     }),
 
@@ -1125,8 +1062,8 @@ object SparkEntry {
       val corpus = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
       Similarity.topKIvfPq(corpus,
         centroids = Some(Similarity.centroidArtifact(corpus,
-          ivfArtifactPath("clustered", dir), k = 16, iterations = 2)),
-        codebooks = Some(Similarity.pqCodebookArtifact(corpus, pqArtifactPath("planted", dir))))
+          Artifacts.path("ivf", "clustered", dir), k = 16, iterations = 2)),
+        codebooks = Some(Similarity.pqCodebookArtifact(corpus, Artifacts.path("pq", "planted", dir))))
         .orderBy("query_id", "rank")
     }),
 
@@ -1141,9 +1078,9 @@ object SparkEntry {
       val base = emb.filter(col("vec_id") % 8 =!= 7)
       val batch = emb.filter(col("vec_id") % 8 === 7)
       Similarity.indexIncrement(batch,
-        Similarity.centroidArtifact(base, ivfArtifactPath("incr", dir),
+        Similarity.centroidArtifact(base, Artifacts.path("ivf", "incr", dir),
           k = 16, iterations = 2),
-        Similarity.pqCodebookArtifact(base, pqArtifactPath("incr", dir)))
+        Similarity.pqCodebookArtifact(base, Artifacts.path("pq", "incr", dir)))
         .orderBy("vec_id", "sub")
     }),
 
@@ -1160,14 +1097,13 @@ object SparkEntry {
         pmod(col("vec_id") - 1000L, lit(6L)) >= 4L
       val base = corpus.filter(!isBatch)
       val cents = Similarity.centroidArtifact(base,
-        ivfArtifactPath("incr_planted", dir), k = 16, iterations = 2)
-      val books = Similarity.pqCodebookArtifact(base, pqArtifactPath("incr_planted", dir))
+        Artifacts.path("ivf", "incr_planted", dir), k = 16, iterations = 2)
+      val books = Similarity.pqCodebookArtifact(base, Artifacts.path("pq", "incr_planted", dir))
       // the base index is the STORED serving state (what a deployment
       // keeps on disk and annIndexStateSink maintains) — an artifact,
       // not a per-query rebuild; only the increment and the serve are
       // per-run work
-      val index = graft.ops.Artifacts.parquetArtifact(
-          s, idxArtifactPath("incr_planted", dir))(
+      val index = Artifacts.cached(s, "idx", "incr_planted", dir)(
           Similarity.buildIndex(base, cents, books))
         .unionByName(Similarity.indexIncrement(corpus.filter(isBatch), cents, books))
       Similarity.serveFromIndex(corpus, index, cents, books,
@@ -1317,7 +1253,7 @@ object SparkEntry {
     "text_langid_trained_stored" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       TextAnalysis.langIdScoreFrom(docs,
-        graft.ops.Artifacts.parquetArtifact(s, lmArtifactPath("langid_nb", dir))(
+        Artifacts.cached(s, "lm", "langid_nb", dir)(
           TextAnalysis.langIdModel(docs).coalesce(1)))
         .orderBy("doc_id")
     }),
@@ -1401,7 +1337,7 @@ object SparkEntry {
     "text_bigram_lp_stored" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       TextAnalysis.bigramScoreFrom(docs,
-        graft.ops.Artifacts.parquetArtifact(s, lmArtifactPath("bigram", dir))(
+        Artifacts.cached(s, "lm", "bigram", dir)(
           TextAnalysis.bigramModel(docs).coalesce(1)))
         .orderBy("doc_id")
     }),
@@ -1427,7 +1363,7 @@ object SparkEntry {
     "text_quality_score_stored" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       graft.ops.QualityModel.scoreFrom(
-        graft.ops.Artifacts.parquetArtifact(s, lmArtifactPath("quality_erm", dir))(
+        Artifacts.cached(s, "lm", "quality_erm", dir)(
           graft.ops.QualityModel.train(docs).coalesce(1)), docs)
         .orderBy("doc_id")
     }),
@@ -1758,8 +1694,7 @@ object SparkEntry {
     // Artifacts seam (the jaccardComponents shape): at 100 TB the
     // closure is a nightly job and every consumer reads its parquet
     "dedup_media_components" -> ((s, dir) =>
-      graft.ops.Artifacts.parquetArtifact(s,
-        componentsArtifactPath("media", dir)) {
+      Artifacts.cached(s, "comps", "media", dir) {
         val docs = Tables.documents(s, dir)
         val img = Dedup.imageAHashPairs(Multimodal.imageAHash(
           Multimodal.imageNearDupFrame(docs)))
@@ -1843,7 +1778,7 @@ object SparkEntry {
     "text_token_budget_stored" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       Bpe.tokenBudgetFrom(docs,
-        Bpe.mergeArtifact(docs, bpeArtifactPath("budget16", dir), nMerges = 16))
+        Bpe.mergeArtifact(docs, Artifacts.path("bpe", "budget16", dir), nMerges = 16))
         .orderBy("source")
     }),
     // tokenizer-quality scorecard: per-source bytes-per-BPE-token — the
@@ -1852,7 +1787,7 @@ object SparkEntry {
     "text_bpe_compression" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       Bpe.compression(docs, Bpe.mergesFromFrame(
-        Bpe.mergeArtifact(docs, bpeArtifactPath("budget16", dir), nMerges = 16)))
+        Bpe.mergeArtifact(docs, Artifacts.path("bpe", "budget16", dir), nMerges = 16)))
         .orderBy("source")
     }),
     // per-language fertility (BPE tokens per whitespace word) — the
@@ -1861,7 +1796,7 @@ object SparkEntry {
     "text_bpe_fertility" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       Bpe.fertility(docs, Bpe.mergesFromFrame(
-        Bpe.mergeArtifact(docs, bpeArtifactPath("budget16", dir), nMerges = 16)))
+        Bpe.mergeArtifact(docs, Artifacts.path("bpe", "budget16", dir), nMerges = 16)))
         .orderBy("lang")
     }),
     // the OTHER production tokenizer family beside BPE: hard-EM unigram
@@ -1885,7 +1820,7 @@ object SparkEntry {
     "text_ulm_tokens_stored" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       graft.ops.Ulm.tokenCountsFrom(docs,
-        graft.ops.Ulm.segmentArtifact(docs, lmArtifactPath("ulm_seg", dir)))
+        graft.ops.Ulm.segmentArtifact(docs, Artifacts.path("lm", "ulm_seg", dir)))
         .orderBy("doc_id")
     }),
     // PRODUCTION-DEPTH merge table: the same greedy trainer run to 1024
@@ -2045,7 +1980,7 @@ object SparkEntry {
     // the payload start — built once at the Artifacts seam, served
     // from parquet; the oracle re-derives both walks analytically
     "q_multimodal_cdx" -> ((s, dir) =>
-      graft.ops.Artifacts.parquetArtifact(s, cdxArtifactPath("warcgz", dir))(
+      Artifacts.cached(s, "cdx", "warcgz", dir)(
         Multimodal.cdxIndex(Multimodal.warcGzFrame(Tables.documents(s, dir))))
         .orderBy("doc_id", "rec_idx")),
 

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import graft.streaming.StreamingPipeline
 
 /** Drive the streaming pipeline end-to-end from the public API: file
@@ -10,12 +9,7 @@ import graft.streaming.StreamingPipeline
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = Tables.configured(SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.session("8")
 
     val work = Files.createTempDirectory(
       new java.io.File("target").getAbsoluteFile.toPath, "streaming-demo").toString

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * partition pruning — here they are single parquet files per table.
   */
 object Tables {
-  /** Confs every graft session needs, applied at builder time by the
-    * entrypoints (Bench/Verify/Smoke/PlanAudit/StreamingDemo/tests):
+  /** Confs every graft session needs, applied at builder time through
+    * [[configured]] (by [[session]] for the entrypoints, and by the tests):
     * nanosAsLong stays set so a TIMESTAMP(NANOS) events regeneration
     * (the pre-round-9 encoding, which Spark 4 otherwise rejects) reads
     * as a raw long that `normalizeEvents` adapts to; on the current
@@ -18,10 +18,25 @@ object Tables {
   val sessionConfs: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
-  /** Apply `sessionConfs` to a builder mechanically — every entrypoint goes
-    * through here, so adding a conf above propagates everywhere at once. */
+  /** Apply `sessionConfs` to a builder mechanically — every session
+    * builder goes through here, so adding a conf above propagates
+    * everywhere at once. */
   def configured(b: SparkSession.Builder): SparkSession.Builder =
     sessionConfs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+
+  /** The session every entry point runs on: local mode on `cpus` cores
+    * with as many shuffle partitions, UTC session time, no UI, the
+    * `sessionConfs`, and WARN logging. */
+  def session(cpus: String): SparkSession = {
+    val spark = configured(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Spread a narrow input across the session's cores before per-row
     * expression-heavy work — the optimization guide's §2.5 "input skew:

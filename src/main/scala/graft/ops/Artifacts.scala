@@ -23,4 +23,22 @@ object Artifacts {
       build.write.mode("overwrite").parquet(path)
     spark.read.parquet(path)
   }
+
+  /** Absolute location of the `kind` artifact `tag` built from the sf
+    * dir `dir`: `target/graft-artifacts/<kind>_v1_<tag>_<dir>`, every
+    * character of `dir` outside `[A-Za-z0-9.]` replaced by `_`, so
+    * different corpora never share an artifact. The `v1` prefix
+    * invalidates old artifacts if a recipe ever changes. Kinds: `ivf`
+    * centroids, `pq` codebooks, `idx` IVF-PQ index, `pairs` near-dup
+    * pair lists, `comps` resolved components, `substr` suffix ranks,
+    * `bpe` merge tables, `lm` language/quality models, `cdx` record
+    * index. */
+  def path(kind: String, tag: String, dir: String): String =
+    new java.io.File(s"target/graft-artifacts/${kind}_v1_${tag}_" +
+      dir.replaceAll("[^A-Za-z0-9.]", "_")).getAbsolutePath
+
+  /** [[parquetArtifact]] at [[path]]`(kind, tag, dir)`. */
+  def cached(spark: SparkSession, kind: String, tag: String, dir: String)
+            (build: => DataFrame): DataFrame =
+    parquetArtifact(spark, path(kind, tag, dir))(build)
 }

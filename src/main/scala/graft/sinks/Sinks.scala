@@ -39,18 +39,30 @@ final case class StorageResult(
   */
 object Sinks {
 
+  /** Partition columns of the K1 layout, in directory order:
+    * `type=normal|anomalies/y=yyyy/m=MM/d=dd`, all strings. */
+  private val ArchivePartitions = Seq("type", "y", "m", "d")
+
+  /** Glob matching every leaf directory of the K1 layout. */
+  private val ArchiveLeaves = ArchivePartitions.map(_ + "=*").mkString("/")
+
+  /** Writer of `classified` into the K1 layout: the partition values
+    * derive from the anomaly flag and `processingTime`. */
+  private def archiveWriter(classified: DataFrame, processingTime: Column) = {
+    val values = Seq(when(col("is_anomaly"), "anomalies").otherwise("normal"),
+      date_format(processingTime, "yyyy"),
+      date_format(processingTime, "MM"),
+      date_format(processingTime, "dd"))
+    ArchivePartitions.zip(values)
+      .foldLeft(classified) { case (df, (name, value)) => df.withColumn(name, value) }
+      .write.partitionBy(ArchivePartitions: _*)
+  }
+
   /** K1: partitioned JSON archive. Layout: type=normal|anomalies/y/M/d.
     * One file per partition per batch instead of one file per record. */
   def writeArchive(classified: DataFrame, basePath: String,
                    processingTime: Column = current_timestamp()): Unit =
-    classified
-      .withColumn("type", when(col("is_anomaly"), "anomalies").otherwise("normal"))
-      .withColumn("y", date_format(processingTime, "yyyy"))
-      .withColumn("m", date_format(processingTime, "MM"))
-      .withColumn("d", date_format(processingTime, "dd"))
-      .write.mode(SaveMode.Append)
-      .partitionBy("type", "y", "m", "d")
-      .json(basePath)
+    archiveWriter(classified, processingTime).mode(SaveMode.Append).json(basePath)
 
   /** Idempotent re-run of the K1 archive: overwrite ONLY the partitions
     * present in the replacement frame (dynamic partition overwrite as a
@@ -61,20 +73,14 @@ object Sinks {
     * cost is the replaced leaves only. */
   def rewriteArchive(classified: DataFrame, basePath: String,
                      processingTime: Column): Unit =
-    classified
-      .withColumn("type", when(col("is_anomaly"), "anomalies").otherwise("normal"))
-      .withColumn("y", date_format(processingTime, "yyyy"))
-      .withColumn("m", date_format(processingTime, "MM"))
-      .withColumn("d", date_format(processingTime, "dd"))
-      .write.mode(SaveMode.Overwrite)
+    archiveWriter(classified, processingTime).mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("type", "y", "m", "d")
       .json(basePath)
 
   /** Partition columns of the K1 layout, as the strings they are written
     * as. Appending these to an explicit data schema bypasses partition
     * type inference without touching session conf. */
-  private val ArchivePartitionFields = Seq("type", "y", "m", "d")
+  private val ArchivePartitionFields = ArchivePartitions
     .map(org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType))
 
   /** Run `body` with partition-value type inference disabled: the archive
@@ -149,14 +155,14 @@ object Sinks {
     // copy of a leaf mid-swap) is never clobbered by the next run
     val tmp = basePath + s".compacting-${System.currentTimeMillis()}"
     readArchive(spark, basePath, archiveType, date, schema)
-      .repartition(parallelism, col("type"), col("y"), col("m"), col("d"))
+      .repartition(parallelism, ArchivePartitions.map(col): _*)
       .write.mode(SaveMode.ErrorIfExists)
-      .partitionBy("type", "y", "m", "d")
+      .partitionBy(ArchivePartitions: _*)
       .json(tmp)
     val basePth = new Path(basePath)
     val tmpPth = new Path(tmp)
     val fs = basePth.getFileSystem(spark.sessionState.newHadoopConf())
-    val leaves = fs.globStatus(new Path(tmpPth, "type=*/y=*/m=*/d=*"))
+    val leaves = fs.globStatus(new Path(tmpPth, ArchiveLeaves))
     leaves.foreach { leaf =>
       val rel = leaf.getPath.toUri.getPath.stripPrefix(tmpPth.toUri.getPath).stripPrefix("/")
       val target = new Path(basePth, rel)
@@ -187,7 +193,7 @@ object Sinks {
     val basePth = new Path(basePath)
     val fs = basePth.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(basePth)) return
-    val orphans = fs.globStatus(new Path(basePth, "type=*/y=*/m=*/d=*.old"))
+    val orphans = fs.globStatus(new Path(basePth, ArchiveLeaves + ".old"))
     if (orphans != null) orphans.foreach { o =>
       val target = new Path(o.getPath.getParent, o.getPath.getName.stripSuffix(".old"))
       if (!fs.exists(target)) {

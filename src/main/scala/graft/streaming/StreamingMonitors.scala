@@ -1,9 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import scala.util.{Failure, Try}
 
 /** Streaming-native forms of the monitoring operators:
   *
@@ -17,6 +19,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State is per-key and O(1) per station — at cluster scale the state
   * store shards by key, so a million stations cost a million tiny rows of
   * state, not driver memory.
+  *
+  * The `*StateSink`s keep VERSIONED parquet state under one layout:
+  * `v<batchId>` holds a micro-batch's version (latest-wins sinks) or
+  * segment (the ANN index and SemDeDup logs), `c<k>` a compaction base
+  * folding segments up to k, and `b<batchId>` a score sink's per-batch
+  * output; a dir counts once its `_SUCCESS` exists, and a batch merges
+  * against the newest committed version BELOW its id, so a replayed
+  * batch rewrites only its own dir. Private helpers hold the layout:
+  * `startBatches` (the one foreachBatch writer), `mergeStateSink` /
+  * `partialStateSink` / `sumByKey` (latest-wins merges),
+  * `committedStateDirs` (the one listing), `segmentState` (the one
+  * segment reader, retrying on a vanished path), `compactSegments` and
+  * `deleteQuietly`.
   */
 object StreamingMonitors {
 
@@ -871,24 +886,9 @@ object StreamingMonitors {
     * file-per-order-range drop gives naturally. */
   def basketStateSink(lineitemStream: DataFrame, stateDir: String,
                       checkpoint: Option[String] = None,
-                      availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = lineitemStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Incremental.partialBasketStats(batch)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => graft.ops.Incremental.mergeBasketStats(prev, partial)
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                      availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(lineitemStream, stateDir, checkpoint, availableNow)(
+      graft.ops.Incremental.partialBasketStats)(graft.ops.Incremental.mergeBasketStats(_, _))
 
   /** Streaming maintenance of the heavy-hitter sketch
     * (ops/HeavyHitters): each micro-batch's Misra-Gries sketch and token
@@ -903,39 +903,23 @@ object StreamingMonitors {
     * to the batch computation (spec'd). */
   def heavySketchSink(docStream: DataFrame, stateDir: String, k: Int = 32,
                       checkpoint: Option[String] = None,
-                      availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        import graft.ops.HeavyHitters
-        val (bs, bn) = HeavyHitters.tokensOf(batch).as[String]
-          .select(new HeavyHitters.MisraGries(k).toColumn, count(lit(1)).as[Long])
-          .head()
-        val (ps, pn) = latestVersionedState(spark, stateDir, batchId) match {
-          case Some(prev) =>
-            val rows = prev.collect()
-            val total = rows.find(_.isNullAt(0)).map(_.getLong(1)).getOrElse(0L)
-            val m = rows.filter(!_.isNullAt(0))
-              .map(r => r.getString(0) -> r.getLong(1)).toMap
-            (m, total)
-          case None => (Map.empty[String, Long], 0L)
-        }
-        val merged = HeavyHitters.mergeSketches(ps, bs, k)
-        val out = merged.toSeq.map { case (t, c) => (Option(t), c) } :+
-          ((None: Option[String], pn + bn))
-        out.toDF("token", "cnt")
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
+                      availableNow: Boolean = false): StreamingQuery =
+    mergeStateSink(docStream, stateDir, checkpoint, availableNow) { (prev, batch) =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      import graft.ops.HeavyHitters
+      val (bs, bn) = HeavyHitters.tokensOf(batch).as[String]
+        .select(new HeavyHitters.MisraGries(k).toColumn, count(lit(1)).as[Long])
+        .head()
+      val (ps, pn) = prev.fold((Map.empty[String, Long], 0L)) { p =>
+        val rows = p.collect()
+        val total = rows.find(_.isNullAt(0)).map(_.getLong(1)).getOrElse(0L)
+        (rows.filter(!_.isNullAt(0)).map(r => r.getString(0) -> r.getLong(1)).toMap, total)
       }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+      val out = HeavyHitters.mergeSketches(ps, bs, k).toSeq
+        .map { case (t, c) => (Option(t), c) } :+ ((None: Option[String], pn + bn))
+      out.toDF("token", "cnt").repartition(1)
+    }
 
   /** Streaming maintenance of the hourly CUSUM partials
     * (ops/TimeSeries.hourlyQuantized): per-(key, hour) sums merge by
@@ -950,26 +934,10 @@ object StreamingMonitors {
   def hourlyStateSink(eventStream: DataFrame, stateDir: String,
                       keyCol: String = "event_type",
                       checkpoint: Option[String] = None,
-                      availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = eventStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.TimeSeries.hourlyQuantized(batch, keyCol)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("key", "bucket_us")
-            .agg(sum("swq").as("swq"), sum("n").as("n"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                      availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(eventStream, stateDir, checkpoint, availableNow)(
+      graft.ops.TimeSeries.hourlyQuantized(_, keyCol))(
+      sumByKey(Seq("key", "bucket_us"), Seq("swq", "n")))
 
   /** Streaming maintenance of the (day, hour-of-day, category) counts
     * frame (ops/Expectations.typeTimeCounts) — ONE state table serving
@@ -981,26 +949,10 @@ object StreamingMonitors {
   def typeTimeStateSink(eventStream: DataFrame, stateDir: String,
                         category: String = "event_type",
                         checkpoint: Option[String] = None,
-                        availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = eventStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Expectations.typeTimeCounts(batch, category)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("day", "hour", category)
-            .agg(org.apache.spark.sql.functions.sum("c").as("c"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                        availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(eventStream, stateDir, checkpoint, availableNow)(
+      graft.ops.Expectations.typeTimeCounts(_, category))(
+      sumByKey(Seq("day", "hour", category), Seq("c")))
 
   /** Streaming maintenance of the per-(source, lang) scorecard counters
     * (ops/TextAnalysis.scorecardPartials): doc counts, exact token
@@ -1013,29 +965,10 @@ object StreamingMonitors {
   def scorecardStateSink(docStream: DataFrame, stateDir: String,
                          qualityFloor: Double = 0.5,
                          checkpoint: Option[String] = None,
-                         availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.sum
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.TextAnalysis.scorecardPartials(batch, qualityFloor)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("source", "lang")
-            .agg(sum("n_docs").as("n_docs"),
-              sum("n_tokens_total").as("n_tokens_total"),
-              sum("n_quality_pass").as("n_quality_pass"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                         availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(
+      graft.ops.TextAnalysis.scorecardPartials(_, qualityFloor))(
+      sumByKey(Seq("source", "lang"), Seq("n_docs", "n_tokens_total", "n_quality_pass")))
 
   /** Streaming maintenance of the per-(source, token) counts frame
     * (ops/TextAnalysis.entropyPartials) — vocabulary-grain state, the
@@ -1046,27 +979,9 @@ object StreamingMonitors {
     * idempotent-replay contract as the other state sinks. */
   def entropyStateSink(docStream: DataFrame, stateDir: String,
                        checkpoint: Option[String] = None,
-                       availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.sum
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.TextAnalysis.entropyPartials(batch)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("source", "w")
-            .agg(sum("cnt").as("cnt"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                       availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(
+      graft.ops.TextAnalysis.entropyPartials)(sumByKey(Seq("source", "w"), Seq("cnt")))
 
   /** Streaming maintenance of the 21-bin quality-score histogram
     * (ops/TextAnalysis.calibrationPartials) — the cheapest state table
@@ -1078,27 +993,10 @@ object StreamingMonitors {
     * idempotent-replay contract as the other state sinks. */
   def calibrationStateSink(docStream: DataFrame, stateDir: String,
                            checkpoint: Option[String] = None,
-                           availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.sum
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.TextAnalysis.calibrationPartials(batch)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("b")
-            .agg(sum("h_docs").as("h_docs"), sum("h_tokens").as("h_tokens"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                           availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(
+      graft.ops.TextAnalysis.calibrationPartials)(
+      sumByKey(Seq("b"), Seq("h_docs", "h_tokens")))
 
   /** Streaming maintenance of the HyperLogLog register table
     * (ops/Sketches.hllRegisters): registers merge by plain MAX — the
@@ -1109,26 +1007,9 @@ object StreamingMonitors {
   def hllStateSink(stream: DataFrame, stateDir: String,
                    valueCol: String = "user_id",
                    checkpoint: Option[String] = None,
-                   availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, max}
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Sketches.hllRegisters(batch, col(valueCol))
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("bucket").agg(max("m_j").as("m_j"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                   availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(stream, stateDir, checkpoint, availableNow)(
+      graft.ops.Sketches.hllRegisters(_, col(valueCol)))(graft.ops.Sketches.hllMerge)
 
   /** Streaming maintenance of the count-min cell table
     * (ops/Sketches.cmsCells): cells merge by plain SUM, so the ≤4096-row
@@ -1138,29 +1019,11 @@ object StreamingMonitors {
     * other state sinks. */
   def cmsStateSink(docStream: DataFrame, stateDir: String,
                    checkpoint: Option[String] = None,
-                   availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, count, explode, lit, split, sum}
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val counts = batch
-          .select(explode(split(col("text"), " ")).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("cnt"))
-        val partial = graft.ops.Sketches.cmsCells(counts)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("row", "col").agg(sum("cell").as("cell"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                   availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(batch =>
+      graft.ops.Sketches.cmsCells(batch
+        .select(explode(split(col("text"), " ")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt"))))(graft.ops.Sketches.cmsMerge)
 
   /** Streaming maintenance of the Bloom set-bit table
     * (ops/Sketches.bloomBits): positions merge by plain DISTINCT union,
@@ -1171,25 +1034,9 @@ object StreamingMonitors {
   def bloomStateSink(docStream: DataFrame, stateDir: String,
                      valueCol: String = "text",
                      checkpoint: Option[String] = None,
-                     availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Sketches.bloomBits(batch, col(valueCol))
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial).distinct()
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                     availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(
+      graft.ops.Sketches.bloomBits(_, col(valueCol)))(_.unionByName(_).distinct())
 
   /** Streaming maintenance of the KMV distinct sketch
     * (ops/Sketches.kmvSketch): the k smallest value hashes merge by
@@ -1200,93 +1047,50 @@ object StreamingMonitors {
   def kmvStateSink(stream: DataFrame, stateDir: String,
                    valueCol: String = "user_id",
                    checkpoint: Option[String] = None,
-                   availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    val writer = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Sketches.kmvSketch(batch, col(valueCol))
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => graft.ops.Sketches.kmvMerge(prev, partial)
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                   availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(stream, stateDir, checkpoint, availableNow)(
+      graft.ops.Sketches.kmvSketch(_, col(valueCol)))(graft.ops.Sketches.kmvMerge(_, _))
 
   /** Streaming maintenance of the WARC corpus census
     * (ops/Multimodal.warcCensus): each micro-batch of documents is
     * framed, walked, and reduced to ONE summary row of pure sums —
     * record/type counts, malformed count, byte accounting — which
     * merges with the stored state by column-wise sum (the census
-    * monoid). The face an archive-ingest pipeline watches: records
-    * seen, types, bytes, and malformed files COUNTED in-band. Same
-    * versioned idempotent-replay contract as the other state sinks. */
+    * monoid, ops/Multimodal.warcCensusMerge). The face an archive-ingest
+    * pipeline watches: records seen, types, bytes, and malformed files
+    * COUNTED in-band. Same versioned idempotent-replay contract as the
+    * other state sinks. */
   def warcStateSink(docStream: DataFrame, stateDir: String,
                     checkpoint: Option[String] = None,
-                    availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    censusStateSink(docStream, stateDir, checkpoint, availableNow)(b =>
+                    availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(b =>
       graft.ops.Multimodal.warcCensus(
-        graft.ops.Multimodal.warcStats(graft.ops.Multimodal.warcFrame(b))))
+        graft.ops.Multimodal.warcStats(graft.ops.Multimodal.warcFrame(b))))(
+      graft.ops.Multimodal.warcCensusMerge)
 
   /** Streaming twin of the corpus-wide tar census
     * (ops/Multimodal.tarCensus): per micro-batch the shard census runs
     * on the batch alone, then merges into the stored one-row state by
-    * column-wise sum — the same sum-monoid contract as
-    * [[warcStateSink]], versioned for idempotent replay. */
+    * column-wise sum — the same sum-monoid contract (and the same
+    * warcCensusMerge: all three censuses share its column-wise-sum
+    * shape) as [[warcStateSink]], versioned for idempotent replay. */
   def tarStateSink(docStream: DataFrame, stateDir: String,
                    checkpoint: Option[String] = None,
-                   availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    censusStateSink(docStream, stateDir, checkpoint, availableNow)(b =>
+                   availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(b =>
       graft.ops.Multimodal.tarCensus(
-        graft.ops.Multimodal.tarStats(graft.ops.Multimodal.tarFrame(b))))
+        graft.ops.Multimodal.tarStats(graft.ops.Multimodal.tarFrame(b))))(
+      graft.ops.Multimodal.warcCensusMerge)
 
   /** Streaming twin of the corpus-wide zip census — same sum-monoid
     * contract over ops/Multimodal.zipCensus. */
   def zipStateSink(docStream: DataFrame, stateDir: String,
                    checkpoint: Option[String] = None,
-                   availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    censusStateSink(docStream, stateDir, checkpoint, availableNow)(b =>
+                   availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(docStream, stateDir, checkpoint, availableNow)(b =>
       graft.ops.Multimodal.zipCensus(
-        graft.ops.Multimodal.zipStats(graft.ops.Multimodal.zipFrame(b))))
-
-  /** The ONE container-census sink body the warc/tar/zip faces share:
-    * run `batchCensus` on the micro-batch alone, merge the one-row
-    * result into the stored state by the census sum monoid
-    * (ops/Multimodal.warcCensusMerge — all three censuses share its
-    * column-wise-sum shape), write `v<batchId>` — the versioned
-    * idempotent-replay contract verbatim. Factored so the
-    * checkpoint/trigger/overwrite boilerplate exists ONCE. */
-  private def censusStateSink(docStream: DataFrame, stateDir: String,
-                              checkpoint: Option[String],
-                              availableNow: Boolean)
-                             (batchCensus: DataFrame => DataFrame)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = batchCensus(batch)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => graft.ops.Multimodal.warcCensusMerge(prev, partial)
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+        graft.ops.Multimodal.zipStats(graft.ops.Multimodal.zipFrame(b))))(
+      graft.ops.Multimodal.warcCensusMerge)
 
   /** Streaming maintenance of the per-type quantile sample
     * (ops/Sketches.quantileSample): the k hash-smallest rows per key
@@ -1298,27 +1102,10 @@ object StreamingMonitors {
     * as the other state sinks. */
   def quantileStateSink(eventStream: DataFrame, stateDir: String,
                         checkpoint: Option[String] = None,
-                        availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.col
-    val writer = eventStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Sketches.quantileSample(
-          batch, Seq("event_type"), col("event_id"), col("value"))
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) =>
-            graft.ops.Sketches.quantileSampleMerge(prev, partial, Seq("event_type"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                        availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(eventStream, stateDir, checkpoint, availableNow)(
+      graft.ops.Sketches.quantileSample(_, Seq("event_type"), col("event_id"), col("value")))(
+      graft.ops.Sketches.quantileSampleMerge(_, _, Seq("event_type")))
 
   /** Streaming maintenance of the per-(label, pos) centroid partials
     * (ops/Similarity.centroidPartials): quantized component sums and
@@ -1330,27 +1117,9 @@ object StreamingMonitors {
     * through the same versioned idempotent-replay seam. */
   def centroidStateSink(embStream: DataFrame, stateDir: String,
                         checkpoint: Option[String] = None,
-                        availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.sum
-    val writer = embStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Similarity.centroidPartials(batch)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("label", "pos")
-            .agg(sum("csum").as("csum"), sum("n").as("n"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                        availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(embStream, stateDir, checkpoint, availableNow)(
+      graft.ops.Similarity.centroidPartials)(sumByKey(Seq("label", "pos"), Seq("csum", "n")))
 
   /** Streaming fluency scoring against a STORED bigram model — the LM
     * serving face (the scoring service a curation stream runs): each
@@ -1358,24 +1127,14 @@ object StreamingMonitors {
     * stream-static joins against the vocabulary-sized model frame,
     * ZERO cross-batch state, because a doc's score depends only on its
     * own row and the fixed model — and lands as its own committed
-    * per-batch output. Spec'd: the union of per-batch outputs equals
-    * batch scoring of the union corpus exactly. */
+    * per-batch output `b<batchId>`. Spec'd: the union of per-batch
+    * outputs equals batch scoring of the union corpus exactly. */
   def bigramScoreSink(docsStream: DataFrame, model: DataFrame, outDir: String,
                       checkpoint: Option[String] = None,
-                      availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docsStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.TextAnalysis.bigramScoreFrom(batch, model)
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                      availableNow: Boolean = false): StreamingQuery =
+    startBatches(docsStream, checkpoint, availableNow) { (batch, batchId) =>
+      writeBatchDir(graft.ops.TextAnalysis.bigramScoreFrom(batch, model), outDir, 'b', batchId)
+    }
 
   /** Streaming language-ID routing against a STORED NB model — the
     * [[bigramScoreSink]] shape applied to the trained router
@@ -1386,20 +1145,10 @@ object StreamingMonitors {
     * union of per-batch outputs equals batch scoring of the union. */
   def langIdScoreSink(docsStream: DataFrame, model: DataFrame, outDir: String,
                       checkpoint: Option[String] = None,
-                      availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docsStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.TextAnalysis.langIdScoreFrom(batch, model)
-          .write.mode("overwrite").parquet(s"$outDir/b$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                      availableNow: Boolean = false): StreamingQuery =
+    startBatches(docsStream, checkpoint, availableNow) { (batch, batchId) =>
+      writeBatchDir(graft.ops.TextAnalysis.langIdScoreFrom(batch, model), outDir, 'b', batchId)
+    }
 
   /** Streaming maintenance of the exact Gram sketch
     * (ops/Similarity.gramPartials) — the TRAIN face of the spectral
@@ -1413,31 +1162,17 @@ object StreamingMonitors {
     * idempotent-replay contract as the other merge sinks. */
   def gramStateSink(embStream: DataFrame, stateDir: String,
                     checkpoint: Option[String] = None,
-                    availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import org.apache.spark.sql.functions.{col, max, min, sum, when}
-    val writer = embStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partial = graft.ops.Similarity.gramPartials(batch)
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => prev.unionByName(partial)
-            .groupBy("i", "j")
-            .agg(sum("v").as("sv"), min("v").as("mnv"), max("v").as("mxv"))
-            .select(col("i"), col("j"),
-              when(col("i") === -2, col("mnv"))
-                .when(col("i") === -3, col("mxv"))
-                .otherwise(col("sv")).as("v"))
-          case None => partial
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                    availableNow: Boolean = false): StreamingQuery =
+    partialStateSink(embStream, stateDir, checkpoint, availableNow)(
+      graft.ops.Similarity.gramPartials) { (prev, partial) =>
+      prev.unionByName(partial)
+        .groupBy("i", "j")
+        .agg(sum("v").as("sv"), min("v").as("mnv"), max("v").as("mxv"))
+        .select(col("i"), col("j"),
+          when(col("i") === -2, col("mnv"))
+            .when(col("i") === -3, col("mxv"))
+            .otherwise(col("sv")).as("v"))
+    }
 
   /** Streaming maintenance of the IVF-PQ serving index — the streaming
     * face of ops/Similarity.indexIncrement, completing the rolling-ingest
@@ -1450,7 +1185,8 @@ object StreamingMonitors {
     * batches is bit-equal to a full [[graft.ops.Similarity.buildIndex]]
     * over the vectors seen so far (spec'd), and
     * [[graft.ops.Similarity.serveFromIndex]] serves top-k straight from
-    * the maintained state. Same versioned idempotent-replay contract as
+    * the maintained state.
+    *
     * The versioning here differs from the merge sinks ON PURPOSE: their
     * state is BOUNDED (vocab/histogram/centroid grain) so rewriting it
     * per batch is cheap, but the ANN index is CORPUS-sized — rewriting
@@ -1463,20 +1199,11 @@ object StreamingMonitors {
   def annIndexStateSink(embStream: DataFrame, stateDir: String,
                         centroids: DataFrame, books: DataFrame, m: Int = 4,
                         checkpoint: Option[String] = None,
-                        availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = embStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Similarity.indexIncrement(batch, centroids, books, m)
-          .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                        availableNow: Boolean = false): StreamingQuery =
+    startBatches(embStream, checkpoint, availableNow) { (batch, batchId) =>
+      writeBatchDir(graft.ops.Similarity.indexIncrement(batch, centroids, books, m),
+        stateDir, 'v', batchId)
+    }
 
   /** Streaming maintenance of the near-dup components state — the
     * streaming face of ops/Graph.componentsIncrement, closing the loop on
@@ -1492,23 +1219,11 @@ object StreamingMonitors {
     * connectedComponents over all pairs seen (merge ≡ recompute). */
   def closureStateSink(pairStream: DataFrame, stateDir: String,
                        checkpoint: Option[String] = None,
-                       availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = pairStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => graft.ops.Graph.componentsIncrement(prev, batch)
-          case None => graft.ops.Graph.connectedComponents(batch)
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                       availableNow: Boolean = false): StreamingQuery =
+    mergeStateSink(pairStream, stateDir, checkpoint, availableNow) { (prev, batch) =>
+      prev.fold(graft.ops.Graph.connectedComponents(batch))(
+        graft.ops.Graph.componentsIncrement(_, batch))
+    }
 
   /** Streaming face of the SemDeDup increment — the semantic-dedup
     * terminal's online maintenance (ops/Similarity.semanticDedupIncrement,
@@ -1536,27 +1251,18 @@ object StreamingMonitors {
   def semanticDedupStateSink(embStream: DataFrame, stateDir: String,
                              stored: DataFrame, threshold: Double = 0.9,
                              k: Int = 8, checkpoint: Option[String] = None,
-                             availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                             availableNow: Boolean = false): StreamingQuery = {
     import graft.ops.Similarity
     val centers = Similarity.semanticCenters(stored, k).persist()
     val storedKept = Similarity.semanticKeptOf(
       Similarity.assignToCenters(centers)(stored), threshold).persist()
     storedKept.count() // materialize the served state before batch 0
-    val writer = embStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val earlier = semanticDedupState(batch.sparkSession, stateDir,
-          beforeBatch = batchId).map(_.select("vec_id", "center_id", "v"))
-        Similarity.semanticDedupIncrementAgainst(
-            centers, storedKept, earlier, batch, threshold)
-          .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
+    startBatches(embStream, checkpoint, availableNow) { (batch, batchId) =>
+      val earlier = semanticDedupState(batch.sparkSession, stateDir,
+        beforeBatch = batchId).map(_.select("vec_id", "center_id", "v"))
+      writeBatchDir(Similarity.semanticDedupIncrementAgainst(
+        centers, storedKept, earlier, batch, threshold), stateDir, 'v', batchId)
+    }
   }
 
   /** Union reader over the SemDeDup decision segments: the accumulated
@@ -1569,35 +1275,10 @@ object StreamingMonitors {
     * fold can no longer separate — the compactor keeps the newest
     * segment live precisely so the one replayable batch stays above
     * the base, so that call is a contract violation and fails loudly.
-    * Bounded retry on vanished paths (the [[annIndexState]] rule): a
-    * reader racing a compaction's delete re-lists and lands on the
-    * newer consistent view. */
-  def semanticDedupState(spark: org.apache.spark.sql.SparkSession,
-                         stateDir: String,
-                         beforeBatch: Long = Long.MaxValue): Option[DataFrame] = {
-    var remaining = 4
-    while (true) {
-      remaining -= 1
-      try {
-        val base = compactionBase(spark, stateDir)
-        base.foreach { case (bid, _) =>
-          require(beforeBatch > bid,
-            s"semanticDedupState: beforeBatch=$beforeBatch is not above the " +
-              s"compacted base c$bid — only batches newer than the base can " +
-              "replay (compactSemanticDedupState keeps the newest segment " +
-              "live to guarantee exactly that)")
-        }
-        val floor = base.map(_._1).getOrElse(Long.MinValue)
-        val dirs = base.map(_._2.toString).toSeq ++
-          committedStateVersions(spark, stateDir, beforeBatch)
-            .filter(_._1 > floor).map(_._2.toString)
-        return if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-      } catch {
-        case e: Throwable if remaining > 0 && stateMissingPath(e) => // re-list
-      }
-    }
-    None // unreachable
-  }
+    * Retries on vanished paths like [[annIndexState]]. */
+  def semanticDedupState(spark: SparkSession, stateDir: String,
+                         beforeBatch: Long = Long.MaxValue): Option[DataFrame] =
+    segmentState(spark, stateDir, beforeBatch)
 
   /** Streaming maintenance of the BPE word-count state — the streaming
     * face of ops/Bpe.vocabIncrement, keeping the tokenizer's sufficient
@@ -1613,70 +1294,19 @@ object StreamingMonitors {
     * distinct-word-bounded, not corpus-bounded. */
   def bpeVocabStateSink(docStream: DataFrame, stateDir: String,
                         checkpoint: Option[String] = None,
-                        availableNow: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = docStream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val merged = latestVersionedState(batch.sparkSession, stateDir, batchId) match {
-          case Some(prev) => graft.ops.Bpe.vocabIncrement(prev, batch)
-          case None => graft.ops.Bpe.wordCounts(batch)
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v$batchId")
-        ()
-      }
-    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
-    (if (availableNow)
-      ck.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    else ck).start()
-  }
+                        availableNow: Boolean = false): StreamingQuery =
+    mergeStateSink(docStream, stateDir, checkpoint, availableNow) { (prev, batch) =>
+      prev.fold(graft.ops.Bpe.wordCounts(batch))(graft.ops.Bpe.vocabIncrement(_, batch))
+    }
 
   /** The maintained ANN index: the newest committed compaction base
     * (`c<k>`, if any) plus every segment committed after it (`v<i>`,
     * i > k) — one multi-path parquet read, so Spark plans ONE scan over
     * all live files, not a per-segment union. None when nothing has
-    * committed yet. */
-  def annIndexState(spark: org.apache.spark.sql.SparkSession,
-                    stateDir: String): Option[DataFrame] = {
-    // Listing bases and segments are two filesystem reads, so a reader
-    // racing a concurrent compactAnnIndexState can observe the OLD base
-    // list but plan AFTER the sweep deleted the folded v<i> dirs —
-    // read.parquet then fails on a vanished path. The compaction
-    // committed a NEWER consistent view before sweeping, so the right
-    // response is to re-list and re-plan: the retry lands on the new
-    // base. Bounded attempts; anything else (or persistent absence)
-    // propagates.
-    var remaining = 4
-    while (true) {
-      remaining -= 1
-      try {
-        val base = compactionBase(spark, stateDir)
-        val floor = base.map(_._1).getOrElse(Long.MinValue)
-        val dirs = base.map(_._2.toString).toSeq ++
-          committedStateVersions(spark, stateDir, Long.MaxValue)
-            .filter(_._1 > floor).map(_._2.toString)
-        // read.parquet resolves the file listing eagerly, so a vanished
-        // dir surfaces HERE (retryable), not at some later action
-        return if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-      } catch {
-        case e: Throwable if remaining > 0 && stateMissingPath(e) => // re-list
-      }
-    }
-    None // unreachable
-  }
-
-  /** A vanished state dir (a reader racing a compaction/sweep delete)
-    * anywhere in a throwable's cause chain — the retryable class the
-    * segmented-state readers re-list on. */
-  private def stateMissingPath(e: Throwable): Boolean = e match {
-    case null => false
-    case _: java.io.FileNotFoundException => true
-    case a: org.apache.spark.sql.AnalysisException
-      if a.getMessage != null &&
-         (a.getMessage.contains("PATH_NOT_FOUND") ||
-          a.getMessage.contains("does not exist")) => true
-    case other => stateMissingPath(other.getCause)
-  }
+    * committed yet. A reader racing a concurrent compaction re-lists
+    * (see [[segmentState]]). */
+  def annIndexState(spark: SparkSession, stateDir: String): Option[DataFrame] =
+    segmentState(spark, stateDir, Long.MaxValue)
 
   /** Compact the segmented index log: fold the current state (base +
     * live segments) into ONE consolidated base `c<maxSegmentId>`, then
@@ -1690,31 +1320,8 @@ object StreamingMonitors {
     * with monotone ids, which always sort after the base. At 100 TB
     * this is the nightly job that keeps the segment count — and the
     * reader's file listing — bounded. */
-  def compactAnnIndexState(spark: org.apache.spark.sql.SparkSession,
-                           stateDir: String): Unit = {
-    val bases = compactionBases(spark, stateDir)
-    val base = bases.lastOption
-    val floor = base.map(_._1).getOrElse(Long.MinValue)
-    val allSegs = committedStateVersions(spark, stateDir, Long.MaxValue)
-    // garbage an interrupted earlier compaction may have left: superseded
-    // bases and segments the current base already folds in
-    val stale = (bases.dropRight(1).map(_._2) ++
-      allSegs.filter(_._1 <= floor).map(_._2))
-    val segs = allSegs.filter(_._1 > floor)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def sweep(ps: Seq[org.apache.hadoop.fs.Path]): Unit = ps.foreach { p =>
-      try fs.delete(p, true)
-      catch { case _: java.io.IOException => () } // next compaction retries
-    }
-    if (segs.isEmpty) { sweep(stale); return } // nothing newer than the base
-    val top = segs.map(_._1).max
-    spark.read.parquet(
-      (base.map(_._2.toString).toSeq ++ segs.map(_._2.toString)): _*)
-      .write.mode("overwrite").parquet(s"$stateDir/c$top")
-    // the new base is committed; everything it folded in is garbage
-    sweep(base.map(_._2).toSeq ++ segs.map(_._2) ++ stale)
-  }
+  def compactAnnIndexState(spark: SparkSession, stateDir: String): Unit =
+    compactSegments(spark, stateDir, keepNewest = false)
 
   /** Retention for the ~15 latest-wins snapshot sinks (basket, heavy,
     * hourly, typeTime, scorecard, entropy, calibration, hll, cms,
@@ -1737,19 +1344,12 @@ object StreamingMonitors {
     * `_SUCCESS` — an in-flight or crashed write) are never touched; a
     * failed delete is left for the next sweep. Idempotent. At 100 TB
     * this is the same nightly job slot as the index compaction. */
-  def sweepVersionedState(spark: org.apache.spark.sql.SparkSession,
-                          stateDir: String, keep: Int = 2): Unit = {
+  def sweepVersionedState(spark: SparkSession, stateDir: String, keep: Int = 2): Unit = {
     require(keep >= 2,
       s"sweepVersionedState: keep=$keep < 2 breaks the reader-race and " +
         "replay-predecessor guarantees (see scaladoc)")
-    val versions = committedStateVersions(spark, stateDir, Long.MaxValue)
-      .sortBy(_._1)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    versions.dropRight(keep).foreach { case (_, p) =>
-      try { fs.delete(p, true); () }
-      catch { case _: java.io.IOException => () } // next sweep retries
-    }
+    deleteQuietly(spark, stateDir,
+      committedStateDirs(spark, stateDir, 'v').dropRight(keep).map(_._2))
   }
 
   /** Compaction for the SemDeDup decision LOG — the one log-structured
@@ -1768,99 +1368,178 @@ object StreamingMonitors {
     * newer committed segments below k) = exactly its original
     * predecessors. [[semanticDedupState]] enforces the contract with a
     * loud require. Crash-safe by the [[compactAnnIndexState]] marker
-    * ordering: the base counts only once `_SUCCESS` exists; readers
-    * take the newest base and only segments above it, so the
-    * overlap window reads consistently; a crash mid-delete leaves
-    * garbage the next compaction removes. */
-  def compactSemanticDedupState(spark: org.apache.spark.sql.SparkSession,
-                                stateDir: String): Unit = {
-    val bases = compactionBases(spark, stateDir)
-    val base = bases.lastOption
-    val floor = base.map(_._1).getOrElse(Long.MinValue)
-    val allSegs = committedStateVersions(spark, stateDir, Long.MaxValue)
-      .sortBy(_._1)
-    val stale = bases.dropRight(1).map(_._2) ++
-      allSegs.filter(_._1 <= floor).map(_._2)
-    val segs = allSegs.filter(_._1 > floor)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def sweep(ps: Seq[org.apache.hadoop.fs.Path]): Unit = ps.foreach { p =>
-      try { fs.delete(p, true); () }
-      catch { case _: java.io.IOException => () }
-    }
-    // the NEWEST committed segment stays live (the replay window);
-    // with <= 1 segment above the base there is nothing to fold
-    val foldable = segs.dropRight(1)
-    if (foldable.isEmpty) { sweep(stale); return }
-    val top = foldable.map(_._1).max
-    spark.read.parquet(
-      (base.map(_._2.toString).toSeq ++ foldable.map(_._2.toString)): _*)
-      .write.mode("overwrite").parquet(s"$stateDir/c$top")
-    sweep(base.map(_._2).toSeq ++ foldable.map(_._2) ++ stale)
-  }
-
-  /** Committed compaction bases `c<k>` under `stateDir`, ascending. */
-  private def compactionBases(spark: org.apache.spark.sql.SparkSession,
-                              stateDir: String)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val path = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq
-      .filter(_.isDirectory)
-      .map(_.getPath)
-      .flatMap { p =>
-        val name = p.getName
-        if (name.startsWith("c") && name.drop(1).nonEmpty &&
-            name.drop(1).forall(_.isDigit) &&
-            fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-          Some(name.drop(1).toLong -> p)
-        else None
-      }
-      .sortBy(_._1)
-  }
-
-  private def compactionBase(spark: org.apache.spark.sql.SparkSession,
-                             stateDir: String)
-      : Option[(Long, org.apache.hadoop.fs.Path)] =
-    compactionBases(spark, stateDir).lastOption
+    * ordering. */
+  def compactSemanticDedupState(spark: SparkSession, stateDir: String): Unit =
+    compactSegments(spark, stateDir, keepNewest = true)
 
   /** Highest committed state version strictly BELOW `beforeBatch`
     * (so a replayed batch merges against its ORIGINAL predecessor, not
     * its own failed output). Pass Long.MaxValue to read the tip. Shared
     * by every versioned-merge sink (basket stats, heavy-hitter sketch). */
-  def latestVersionedState(spark: org.apache.spark.sql.SparkSession,
-                           stateDir: String,
-                           beforeBatch: Long = Long.MaxValue): Option[DataFrame] = {
-    val versions = committedStateVersions(spark, stateDir, beforeBatch)
-    if (versions.isEmpty) None
-    else Some(spark.read.parquet(versions.maxBy(_._1)._2.toString))
+  def latestVersionedState(spark: SparkSession, stateDir: String,
+                           beforeBatch: Long = Long.MaxValue): Option[DataFrame] =
+    committedStateDirs(spark, stateDir, 'v', beforeBatch).lastOption
+      .map(v => spark.read.parquet(v._2.toString))
+
+  // ---- the versioned-state layout (see the object scaladoc) ----
+
+  /** Start `stream` with `body` run on every micro-batch: the one
+    * foreachBatch writer behind every sink above — append mode, the
+    * optional checkpoint, and AvailableNow when asked. */
+  private def startBatches(stream: DataFrame, checkpoint: Option[String],
+                           availableNow: Boolean)
+                          (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = stream.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) => body(batch, batchId) }
+    val ck = checkpoint.fold(writer)(c => writer.option("checkpointLocation", c))
+    (if (availableNow) ck.trigger(Trigger.AvailableNow()) else ck).start()
   }
 
-  /** All committed (`_SUCCESS`-marked) `v<batchId>` state dirs under
-    * `stateDir` with batch id strictly below `beforeBatch` — the shared
-    * listing for both the latest-version merge sinks and the segmented
-    * [[annIndexState]] reader. Hadoop-FS resolved, so it works wherever
-    * the state lives (s3a/HDFS/local). */
-  private def committedStateVersions(spark: org.apache.spark.sql.SparkSession,
-                                     stateDir: String, beforeBatch: Long)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val path = new org.apache.hadoop.fs.Path(stateDir)
+  /** The dir of state entry `id` under `dir`: `v<id>` versions and
+    * segments, `c<id>` compaction bases, `b<id>` per-batch outputs. */
+  private def stateEntry(dir: String, prefix: Char, id: Long): String = s"$dir/$prefix$id"
+
+  /** Write `df` as entry `<prefix><batchId>`, replacing whatever a
+    * failed earlier attempt of the same batch left there. */
+  private def writeBatchDir(df: DataFrame, dir: String, prefix: Char, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(stateEntry(dir, prefix, batchId))
+
+  /** The latest-wins merge sink: each micro-batch's new state is
+    * `step(the newest committed version below the batch, batch)`,
+    * written as `v<batchId>`. */
+  private def mergeStateSink(stream: DataFrame, stateDir: String,
+                             checkpoint: Option[String], availableNow: Boolean)
+                            (step: (Option[DataFrame], DataFrame) => DataFrame): StreamingQuery =
+    startBatches(stream, checkpoint, availableNow) { (batch, batchId) =>
+      writeBatchDir(step(latestVersionedState(batch.sparkSession, stateDir, batchId), batch),
+        stateDir, 'v', batchId)
+    }
+
+  /** [[mergeStateSink]] for a state that is a monoid over batch
+    * partials: the first version is the batch's partial, later ones
+    * `merge(prev, partial)`. */
+  private def partialStateSink(stream: DataFrame, stateDir: String,
+                               checkpoint: Option[String], availableNow: Boolean)
+                              (partial: DataFrame => DataFrame)
+                              (merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+    mergeStateSink(stream, stateDir, checkpoint, availableNow) { (prev, batch) =>
+      val p = partial(batch)
+      prev.fold(p)(merge(_, p))
+    }
+
+  /** Merge by per-key sums: the `keys` columns, then each of `sums`
+    * summed under its own name, in that order. */
+  private def sumByKey(keys: Seq[String], sums: Seq[String])
+                      (prev: DataFrame, partial: DataFrame): DataFrame =
+    prev.unionByName(partial)
+      .groupBy(keys.map(col): _*)
+      .agg(sum(sums.head).as(sums.head), sums.tail.map(c => sum(c).as(c)): _*)
+
+  /** The segmented state: the newest committed base `c<k>` (if any)
+    * plus every committed segment `v<i>` with k < i < `beforeBatch`, as
+    * one multi-path parquet read.
+    *
+    * Listing bases and segments are separate filesystem reads, so a
+    * reader racing a concurrent compaction can observe the OLD listing
+    * but plan AFTER the sweep deleted the folded dirs — read.parquet
+    * then fails on a vanished path. The compaction committed a NEWER
+    * consistent view before sweeping, so the right response is to
+    * re-list and re-plan: the retry lands on the new base. Bounded
+    * attempts; anything else (or persistent absence) propagates. */
+  @scala.annotation.tailrec
+  private def segmentState(spark: SparkSession, stateDir: String, beforeBatch: Long,
+                           attempts: Int = 4): Option[DataFrame] =
+    Try {
+      val base = committedStateDirs(spark, stateDir, 'c').lastOption
+      base.foreach { case (bid, _) =>
+        require(beforeBatch > bid,
+          s"semanticDedupState: beforeBatch=$beforeBatch is not above the " +
+            s"compacted base c$bid — only batches newer than the base can " +
+            "replay (compactSemanticDedupState keeps the newest segment " +
+            "live to guarantee exactly that)")
+      }
+      val floor = base.fold(Long.MinValue)(_._1)
+      val dirs = base.toSeq ++
+        committedStateDirs(spark, stateDir, 'v', beforeBatch).filter(_._1 > floor)
+      // read.parquet resolves the file listing eagerly, so a vanished
+      // dir surfaces HERE (retryable), not at some later action
+      if (dirs.isEmpty) None else Some(spark.read.parquet(dirs.map(_._2.toString): _*))
+    } match {
+      case Failure(e) if attempts > 1 && stateMissingPath(e) =>
+        segmentState(spark, stateDir, beforeBatch, attempts - 1)
+      case read => read.get
+    }
+
+  /** A vanished state dir (a reader racing a compaction/sweep delete)
+    * anywhere in a throwable's cause chain — the retryable class the
+    * segmented-state reader re-lists on. */
+  private def stateMissingPath(e: Throwable): Boolean = e match {
+    case null => false
+    case _: java.io.FileNotFoundException => true
+    case a: org.apache.spark.sql.AnalysisException
+      if a.getMessage != null &&
+         (a.getMessage.contains("PATH_NOT_FOUND") ||
+          a.getMessage.contains("does not exist")) => true
+    case other => stateMissingPath(other.getCause)
+  }
+
+  /** Fold the segmented log into one base `c<highest folded id>`, then
+    * delete what the base supersedes, plus the garbage an interrupted
+    * earlier compaction left (superseded bases, segments the current
+    * base already folds in). `keepNewest` leaves the newest segment
+    * live — SemDeDup's replay window. */
+  private def compactSegments(spark: SparkSession, stateDir: String,
+                              keepNewest: Boolean): Unit = {
+    val bases = committedStateDirs(spark, stateDir, 'c')
+    val base = bases.lastOption
+    val floor = base.fold(Long.MinValue)(_._1)
+    val (folded, segs) = committedStateDirs(spark, stateDir, 'v').partition(_._1 <= floor)
+    val stale = (bases.dropRight(1) ++ folded).map(_._2)
+    val foldable = if (keepNewest) segs.dropRight(1) else segs
+    if (foldable.isEmpty) deleteQuietly(spark, stateDir, stale)
+    else {
+      val live = (base.toSeq ++ foldable).map(_._2)
+      spark.read.parquet(live.map(_.toString): _*)
+        .write.mode("overwrite").parquet(stateEntry(stateDir, 'c', foldable.last._1))
+      // the new base is committed; everything it folded in is garbage
+      deleteQuietly(spark, stateDir, live ++ stale)
+    }
+  }
+
+  /** Best-effort recursive delete: a failed delete is left for the next
+    * compaction or sweep. */
+  private def deleteQuietly(spark: SparkSession, stateDir: String, paths: Seq[Path]): Unit = {
+    val fs = new Path(stateDir).getFileSystem(spark.sessionState.newHadoopConf())
+    paths.foreach { p =>
+      try { fs.delete(p, true); () }
+      catch { case _: java.io.IOException => () }
+    }
+  }
+
+  /** All committed (`_SUCCESS`-marked) `<prefix><id>` dirs under
+    * `stateDir` with id strictly below `beforeBatch`, ascending by id:
+    * the one listing behind versions and segments (`v`) and compaction
+    * bases (`c`). Hadoop-FS resolved, so it works wherever the state
+    * lives (s3a/HDFS/local). */
+  private def committedStateDirs(spark: SparkSession, stateDir: String, prefix: Char,
+                                 beforeBatch: Long = Long.MaxValue): Seq[(Long, Path)] = {
+    val path = new Path(stateDir)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(path)) Seq.empty
     else fs.listStatus(path).toSeq
       .filter(_.isDirectory)
       .map(_.getPath)
       .flatMap { p =>
-        val name = p.getName
+        val id = p.getName.drop(1)
         // nonEmpty: a dir named bare "v" must not NumberFormatException
         // the whole state listing
-        if (name.startsWith("v") && name.drop(1).nonEmpty &&
-            name.drop(1).forall(_.isDigit) &&
-            fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-          Some(name.drop(1).toLong -> p)
+        if (p.getName.startsWith(prefix.toString) && id.nonEmpty && id.forall(_.isDigit) &&
+            fs.exists(new Path(p, "_SUCCESS")))
+          Some(id.toLong -> p)
         else None
       }
       .filter(_._1 < beforeBatch)
+      .sortBy(_._1)
   }
 }

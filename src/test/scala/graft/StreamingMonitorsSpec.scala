@@ -2034,4 +2034,54 @@ class StreamingMonitorsSpec extends SparkSpec {
     assert(cen.getAs[Long]("payload_bytes") + cen.getAs[Long]("header_bytes")
       === cen.getAs[Long]("total_bytes"))
   }
+
+  test("the segment reader re-lists when a listed segment vanishes before its read") {
+    // a compaction racing the reader: the first listing of the state dir
+    // reports a committed segment v2 that is gone by the time the reader
+    // resolves its paths. The reader must re-list and read the real ones.
+    val dir = s"${work()}/vanishing-state"
+    spark.range(0, 5).toDF("vec_id").write.parquet(s"$dir/v0")
+    spark.range(5, 9).toDF("vec_id").write.parquet(s"$dir/v1")
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.vanishing.impl", classOf[VanishingSegmentFileSystem].getName)
+    VanishingSegmentFileSystem.arm(s"$dir/v2")
+    val state = StreamingMonitors.annIndexState(spark, s"vanishing://$dir").get
+    assert(VanishingSegmentFileSystem.vanished, "the reader never listed the vanishing segment")
+    assert(state.orderBy("vec_id").collect().map(_.getLong(0)).toSeq === (0L until 9L))
+  }
+}
+
+/** The local file system under the `vanishing:` scheme, plus one phantom
+  * committed segment: until something resolves the phantom dir itself,
+  * listings of its parent report it and its `_SUCCESS` marker exists; the
+  * first lookup of the dir finds it deleted, and it is gone from then on. */
+class VanishingSegmentFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import VanishingSegmentFileSystem.{phantom, vanished}
+  override def getScheme: String = "vanishing"
+  override def getUri: java.net.URI = java.net.URI.create("vanishing:///")
+  private def live: Option[String] = phantom.filter(_ => !vanished)
+  override def listStatus(f: Path): Array[FileStatus] = {
+    val real = super.listStatus(f)
+    live.filter(p => new Path(p).getParent.toUri.getPath == f.toUri.getPath)
+      .fold(real)(p => real :+ new FileStatus(0L, true, 1, 0L, 0L, makeQualified(new Path(p))))
+  }
+  override def getFileStatus(f: Path): FileStatus = {
+    val p = f.toUri.getPath
+    if (live.exists(ph => p == s"$ph/_SUCCESS"))
+      new FileStatus(0L, false, 1, 0L, 0L, makeQualified(f))
+    else if (live.contains(p)) {
+      VanishingSegmentFileSystem.vanished = true
+      throw new java.io.FileNotFoundException(s"$f was deleted")
+    } else super.getFileStatus(f)
+  }
+  override def exists(f: Path): Boolean =
+    try { getFileStatus(f); true }
+    catch { case _: java.io.FileNotFoundException => false }
+}
+
+object VanishingSegmentFileSystem {
+  @volatile private var phantom: Option[String] = None
+  @volatile var vanished: Boolean = false
+  def arm(dir: String): Unit = { phantom = Some(dir); vanished = false }
 }

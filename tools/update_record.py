@@ -1,16 +1,17 @@
 #!/usr/bin/env python3
 """Fold a clean full-census bench run into the committed per-query record.
 
-round-20 policy (the r16-r19 precedent): queries NEW this round enter at
-the run's measured time; existing entries are lowered where the run beat
-the prior minimum (records are historical clean minima, never raised).
-The summary `value` is re-derived as the sum of the per-query entries.
+Policy (unchanged since round 16): queries NEW this round enter at the
+run's measured time; existing entries are lowered where the run beat the
+prior minimum (records are historical clean minima, never raised). The
+summary `value` is re-derived as the sum of the per-query entries, and
+the record's note gains ` r<round>-<note-suffix>`.
 
-Usage: python3 tools/update_record_r20.py <bench_run.json> <note-suffix>
+Usage: python3 tools/update_record.py <round> <bench_run.json> <note-suffix>
 """
 import json, sys
 
-run_path, note_suffix = sys.argv[1], sys.argv[2]
+round_no, run_path, note_suffix = int(sys.argv[1]), sys.argv[2], sys.argv[3]
 rec_path = "src/main/resources/graft/bench_record.json"
 
 run = json.load(open(run_path))
@@ -31,8 +32,8 @@ for name, t in run["queries"].items():
         lowered.append(name)
 
 rec["value"] = sum(q.values())
-rec["note"] = rec["note"] + " " + note_suffix
+rec["note"] = rec["note"] + f" r{round_no}-{note_suffix}"
 json.dump(rec, open(rec_path, "w"), indent=None)
-print(f"entered {len(entered)}: {sorted(entered)}")
-print(f"lowered {len(lowered)}: {sorted(lowered)}")
+print(f"round {round_no}: entered {len(entered)}: {sorted(entered)}")
+print(f"round {round_no}: lowered {len(lowered)}: {sorted(lowered)}")
 print(f"new total: {rec['value']:.2f} over {len(q)} queries")
