@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops._
+import graft.queries._
 
-/** Driver contract: one `queries` entry per implemented operator
-  * (SURVEY.md §2), each with DuckDB-runnable `oracleSql`. Column names and
+/** Driver contract: `entry` (the flagship smoke query), `queries` (every
+  * implemented operator of SURVEY.md §2, by name) and `oracleSql` (the
+  * DuckDB SQL each oracle-checked query must hash-match). Both maps are
+  * derived from one registry: each query is declared once, as a
+  * [[graft.queries.Query]] in its family object under `graft/queries/`,
+  * with either its `Oracle(sql)` or its `RowsOnly(reason)`. This object
+  * keeps only the helpers more than one family shares. Column names and
   * arithmetic are kept IDENTICAL between the Spark plan and the SQL so the
   * driver's sorted-column hash compare is exact (bit-deterministic double
   * ops: min/max + fixed fractions, no interpolated percentiles, no
@@ -20,61 +25,10 @@ object SparkEntry {
 
   /** Deterministic stand-in for the reference's fallback-to-now()
     * (HRFCOStorageService.java:240-243) — injectable per SURVEY §7. */
-  private def fixedFallback = to_timestamp(lit("1970-01-01 00:00:00"))
-
-  /** Near-dup pair-list artifact: the candidate generators are
-    * deterministic (exact inverted index / xxhash64 band family), so the
-    * three component-resolution entries share ONE generation pass per
-    * corpus instead of re-shingling ~2 s each — the offline shape, where
-    * the pair list is a nightly artifact and cluster resolution consumes
-    * it. */
-  private def jaccardPairs(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, "pairs", "jaccard", dir)(Dedup.ngramJaccard(Tables.documents(s, dir)))
-
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, "pairs", "minhash", dir)(Dedup.minhashLsh(Tables.documents(s, dir)))
-
-  /** Stored suffix-rank artifact (doc_id, p, key, r): the doubling
-    * rounds are the dominant cost of the substring-dedup family and
-    * both faces (census + removal) consume the SAME ranks — integral
-    * columns, deterministic min-key class ids, so the frame
-    * round-trips parquet exactly (the pair-list/components seam). */
-  private def substrRanks(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, "substr", "w32", dir)(Dedup.substringRanks(Tables.documents(s, dir)))
-
-  /** Resolved-components artifact (id, comp): pointer doubling is
-    * deterministic (min-label fixpoint over a deterministic pair list),
-    * so like the pair list it is a write-once artifact — the closure runs
-    * ONCE per corpus and every consumer in the components family
-    * (components, canonical mapping, cluster histogram, leakage-safe
-    * split, source dup rate) reads the resolved frame. At 100 TB the
-    * closure is the dominant dedup cost and runs as a nightly job; this
-    * is that job's output seam. */
-  private def jaccardComponents(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, "comps", "jaccard", dir)(Graph.connectedComponents(jaccardPairs(s, dir)))
-
-  private def minhashComponents(s: SparkSession, dir: String): DataFrame =
-    Artifacts.cached(s, "comps", "minhash", dir)(Graph.connectedComponents(minhashPairs(s, dir)))
-
-  /** The shared canonical resolution every downstream entry consumes:
-    * one left equi-join of the corpus against the components artifact. */
-  private def canonicalDocs(s: SparkSession, dir: String): DataFrame =
-    Graph.canonicalizeFromComponents(Tables.documents(s, dir), jaccardComponents(s, dir))
-
-  // fanOut at the batch seam only (the streaming entry shapes its own
-  // micro-batches): the whole parse → validate → classify chain is
-  // per-row expression work above a single-split scan otherwise
-  private def rawObs(s: SparkSession, dir: String): DataFrame =
-    Hrfco.rawObservations(Tables.fanOut(Tables.events(s, dir), col("event_id")))
-
-  private def parsed(s: SparkSession, dir: String): DataFrame =
-    Hrfco.parseTyped(rawObs(s, dir), fixedFallback)
-
-  private def dim(s: SparkSession, dir: String): DataFrame =
-    Thresholds.fromEvents(Tables.events(s, dir))
+  private[graft] def fixedFallback = to_timestamp(lit("1970-01-01 00:00:00"))
 
   /** Full hot path at data-scaled range. */
-  private def enriched(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def enriched(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.fanOut(Tables.events(s, dir), col("event_id"))
     Hrfco.pipeline(ev, Thresholds.fromEvents(ev), fixedFallback, wlMax = WlMax)
   }
@@ -87,2030 +41,23 @@ object SparkEntry {
       .groupBy("alert_level")
       .agg(count(lit(1)).as("n_stations"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---- HRFCO core transforms -------------------------------------------
-    "q_raw_parse" -> ((s, dir) =>
-      parsed(s, dir).select(
-        col("event_id"), col("wlobscd"),
-        col("wl").as("wl_raw"), col("fw").as("fw_raw"),
-        col("water_level"), col("flow_rate"), col("obs_time_fmt"),
-        date_format(col("obs_ts_utc"), "yyyy-MM-dd HH:mm:ss").as("obs_ts_str"))
-        .orderBy("event_id")),
-
-    "q_required_filter" -> ((s, dir) =>
-      parsed(s, dir).filter(!Hrfco.parseFailed && Hrfco.requiredFields)
-        .select("event_id", "wlobscd", "water_level", "flow_rate")
-        .orderBy("event_id")),
-
-    "q_dlq" -> ((s, dir) =>
-      Hrfco.dlqEnvelope(rawObs(s, dir), timestamp = lit(0L))
-        .drop("timestamp").orderBy("event_id")),
-
-    "q_threshold_dim" -> ((s, dir) =>
-      dim(s, dir).select("wlobscd", "attwl", "wrnwl", "almwl", "srswl", "obsnm", "addr")
-        .orderBy("wlobscd")),
-
-    // unpivot/melt (the reverse of q_alert_pivot's shape): wide threshold
-    // columns to long (station, name, value) form
-    "q_threshold_unpivot" -> ((s, dir) =>
-      dim(s, dir)
-        .unpivot(Array(col("wlobscd")),
-          Array(col("attwl"), col("wrnwl"), col("almwl"), col("srswl")),
-          "threshold_name", "threshold_value")
-        .filter(col("threshold_value").isNotNull) // explicit either way: melt null policy is not part of the contract
-        .orderBy("wlobscd", "threshold_name")),
-
-    "q_classify" -> ((s, dir) =>
-      enriched(s, dir).select(
-        col("event_id"), col("wlobscd"), col("water_level"), col("flow_rate"),
-        col("range_valid"), col("valid_threshold_count"), col("is_anomaly"),
-        col("anomaly_reason"), col("flood_warning_level"))
-        .orderBy("event_id")),
-
-    "q_alerts" -> ((s, dir) =>
-      enriched(s, dir).select(
-        col("event_id"), col("wlobscd").as("observation_code"),
-        col("obs_time_fmt").as("observation_time"),
-        col("water_level"), col("flow_rate"),
-        col("alert_level").as("warning_level"), col("is_anomaly"), col("message"))
-        .orderBy("event_id")),
-
-    "q_latest_per_station" -> ((s, dir) =>
-      Monitoring.latestPerStation(enriched(s, dir))
-        .select("wlobscd", "event_id", "water_level", "flood_warning_level", "alert_level")
-        .orderBy("wlobscd")),
-
-    "q_alert_counts" -> ((s, dir) => {
-      val bucket = when(col("is_anomaly"), "anomaly")
-        .when(col("alert_level").isin("ATTENTION", "CAUTION", "WARNING", "CRITICAL"), "alert")
-        .otherwise("normal")
-      // single pass: the 'all' row is the sum of the bucket counts, so the
-      // pipeline is evaluated once, not once per union branch
-      val counts = enriched(s, dir).groupBy(bucket.as("bucket")).agg(count(lit(1)).as("n"))
-      counts
-        .unionByName(counts.agg(coalesce(sum("n"), lit(0L)).cast("long").as("n"))
-          .select(lit("all").as("bucket"), col("n")))
-        .orderBy("bucket")
-    }),
-
-    // ---- ingestion envelope split (S2→T1→T2) -----------------------------
-    "q_json_split" -> ((s, dir) =>
-      Ingest.splitEnvelopes(Ingest.envelopes(Tables.events(s, dir))).orderBy("event_id")),
-
-    // ---- monitoring / serving surface ------------------------------------
-    "q_topn_recent" -> ((s, dir) => Monitoring.topNRecent(enriched(s, dir))),
-
-    "q_threshold_scale" -> ((s, dir) =>
-      Monitoring.thresholdGaugeScale(dim(s, dir)).orderBy("wlobscd")),
-
-    "q_delta_rate" -> ((s, dir) =>
-      Monitoring.deltaRate(Tables.events(s, dir)).orderBy("event_id")),
-
-    "q_per_record_avg" -> ((s, dir) =>
-      Monitoring.perRecordAvg(Tables.events(s, dir)).orderBy("event_id")),
-
-    "q_quantiles" -> ((s, dir) =>
-      Monitoring.discreteQuantiles(Tables.events(s, dir)).orderBy("event_type")),
-
-    // sketch family: no oracle by design (GK vs t-digest differ by
-    // algorithm); the structural companion is q_quantiles itself plus the
-    // SkewAndScalarsSpec rank-error-bound case — the approxDistinct pattern
-    "q_quantiles_approx" -> ((s, dir) =>
-      Monitoring.approxQuantiles(Tables.events(s, dir)).orderBy("event_type")),
-
-    "q_queue_backpressure" -> ((s, dir) =>
-      Monitoring.queueBackpressure(Tables.events(s, dir)).orderBy("event_type")),
-
-    "q_processor_rollup" -> ((s, dir) =>
-      Monitoring.processorRollup(Tables.events(s, dir)).orderBy("event_type")),
-
-    "q_humanize_bytes" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy("event_type")
-        .agg(sum(floor(col("value") * 1000000.0).cast("long")).as("bytes"))
-        .select(col("event_type"), col("bytes"),
-          Monitoring.humanizeBytes(col("bytes")).as("human"))
-        .orderBy("event_type")),
-
-    "q_station_list" -> ((s, dir) => Monitoring.stationList(dim(s, dir)).orderBy("code")),
-
-    "q_station_detail" -> ((s, dir) => Monitoring.stationDetail(dim(s, dir), "click")),
-
-    // ---- relational / bench-weight queries -------------------------------
-    "q1_pricing_summary" -> ((s, dir) => Relational.pricingSummary(s, dir)),
-    "q3_top_orders" -> ((s, dir) => Relational.topUnshippedOrders(s, dir)),
-    "q5_region_revenue" -> ((s, dir) => Relational.regionRevenue(s, dir)),
-    "q_top_customers" -> ((s, dir) => Relational.topCustomers(s, dir)),
-    "q_spend_ranks" -> ((s, dir) => Relational.customerSpendRanks(s, dir)),
-    "q13_order_dist" -> ((s, dir) => Relational.customerOrderDistribution(s, dir)),
-    "q16_supplier_variety" -> ((s, dir) => Relational.supplierVarietyByType(s, dir)),
-    "q_semi_anti" -> ((s, dir) => Relational.nationCustomerPresence(s, dir)),
-    "q_intersect" -> ((s, dir) => Relational.repeatCustomersIntersect(s, dir)),
-    "q17_small_qty_revenue" -> ((s, dir) => Relational.smallQuantityRevenue(s, dir)),
-    "q21_late_suppliers" -> ((s, dir) => Relational.lateSoleSuppliers(s, dir)),
-    "q18_large_orders" -> ((s, dir) => Relational.largeVolumeOrders(s, dir)),
-    "q18_large_orders_cte" -> ((s, dir) => Relational.largeVolumeOrdersCte(s, dir)),
-    "q19_branded_revenue" -> ((s, dir) => Relational.brandedRevenue(s, dir)),
-    "q22_dormant_balances" -> ((s, dir) => Relational.dormantBalances(s, dir)),
-    "q7_bilateral_trade" -> ((s, dir) => Relational.bilateralTrade(s, dir)),
-    "q6_revenue_change" -> ((s, dir) => Relational.revenueChange(s, dir)),
-    "q12_shipmode_priority" -> ((s, dir) => Relational.shipmodePriority(s, dir)),
-    "q14_promo_share" -> ((s, dir) => Relational.promoShare(s, dir)),
-    "q2_min_cost_supplier" -> ((s, dir) => Relational.minCostSupplier(s, dir)),
-    "q2_min_cost_supplier_cte" -> ((s, dir) => Relational.minCostSupplierCte(s, dir)),
-    "q20_volume_suppliers_cte" -> ((s, dir) => Relational.volumeSuppliersCte(s, dir)),
-    "q4_late_priority" -> ((s, dir) => Relational.latePriorityCount(s, dir)),
-    "q8_market_share" -> ((s, dir) => Relational.marketShare(s, dir)),
-    "q9_product_profit" -> ((s, dir) => Relational.productProfit(s, dir)),
-    "q10_returned_items" -> ((s, dir) => Relational.returnedItems(s, dir)),
-    "q11_important_parts" -> ((s, dir) => Relational.importantParts(s, dir)),
-    "q15_top_supplier" -> ((s, dir) => Relational.topSupplier(s, dir)),
-    "q20_volume_suppliers" -> ((s, dir) => Relational.volumeSuppliers(s, dir)),
-
-    "q_sessionize" -> ((s, dir) =>
-      Monitoring.sessionize(Tables.events(s, dir)).orderBy("user_id", "session_seq")),
-
-    // ordered-sequence funnel: one shuffle + codegen'd array fold vs the
-    // oracle's n-self-join min cascade
-    "q_resample_interp" -> ((s, dir) =>
-      TimeSeries.resampleHourlyInterp(Tables.events(s, dir)).orderBy("event_type", "bucket")),
-
-    "q_retention" -> ((s, dir) =>
-      Funnel.retentionCohorts(Tables.events(s, dir)).orderBy("cohort_week", "week_offset")),
-
-    "q_quality_thin" -> ((s, dir) =>
-      Sampling.qualityThin(Tables.documents(s, dir), 1L, 2L).orderBy("doc_id")),
-
-    // the pre-training validation gate: one profile pass, declared rules,
-    // auditable pass/fail report (the enforce() form throws naming every
-    // violated expectation — spec'd)
-    "q_data_expectations" -> ((s, dir) => {
-      import graft.ops.{Expectations => E}
-      E.report(Tables.events(s, dir), Seq(
-        E.nonEmpty("event_id"), E.notNull("event_id"), E.unique("event_id"),
-        E.notNull("event_type"), E.notNull("value"),
-        E.minAtLeast("value", 0.0), E.maxAtMost("value", 100000.0),
-        E.unique("user_id")))
-        .orderBy("column", "check")
-    }),
-
-    // integer-exact damped PageRank over the event-transition graph; the
-    // oracle unrolls the same 5 iterations in SQL (no floats anywhere)
-    "graph_pagerank" -> ((s, dir) =>
-      Graph.pagerankInt(Graph.eventTransitions(Tables.events(s, dir)))
-        .orderBy("node")),
-
-    // synchronous min-tie label propagation over the undirected type
-    // graph — fixed 5 rounds, bit-deterministic; oracle unrolls them
-    "graph_communities" -> ((s, dir) =>
-      Graph.labelPropagation(Graph.eventTransitions(Tables.events(s, dir)))
-        .orderBy("node")),
-
-    // exact Markov transition shares over the type graph: integer counts
-    // plus one bit-exact double division per row
-    "graph_transition_probs" -> ((s, dir) =>
-      Graph.transitionProbs(Graph.eventTransitions(Tables.events(s, dir)))
-        .orderBy("src", "dst")),
-
-    // robust anomaly screen: micro-quantized lower median / MAD / k·MAD
-    // outlier counts — pure integer selection, zero interpolation
-    "q_value_mad" -> ((s, dir) =>
-      Monitoring.madOutliers(Tables.events(s, dir)).orderBy("event_type")),
-
-    // robust location next to MAD's robust spread: exact rank-selected
-    // [p5, p95] cut points, integer clamp + sum, one rendering division
-    "q_value_winsorize" -> ((s, dir) =>
-      Monitoring.winsorizedStats(Tables.events(s, dir)).orderBy("event_type")),
-
-    // event-time disorder vs arrival order — the statistic that sizes
-    // streaming watermarks; integer micros, one running-max window
-    "q_disorder_audit" -> ((s, dir) =>
-      Monitoring.disorderAudit(Tables.events(s, dir)).orderBy("event_type")),
-
-    // the pre-join skew profile: top-20 hottest l_partkey values with
-    // shares — the statistic that decides plain shuffle vs salting
-    "q_join_skew_audit" -> ((s, dir) =>
-      graft.ops.Skew.keySkewAudit(Tables.lineitem(s, dir), "l_partkey").orderBy("rank")),
-
-    // referential-integrity preflight over the TPC-H relations: anti
-    // joins against deduped parent keys, scalar-cross summary rows
-    "q_ref_integrity" -> ((s, dir) =>
-      Expectations.orphanAudit(Tables.lineitem(s, dir), "l_orderkey",
-          Tables.orders(s, dir), "o_orderkey", "lineitem->orders")
-        .unionByName(Expectations.orphanAudit(Tables.orders(s, dir), "o_custkey",
-          Tables.customer(s, dir), "c_custkey", "orders->customer"))
-        .orderBy("relation")),
-
-    // CDC reconciliation: mid-month latest-value snapshot vs the full
-    // month's, diffed by one full-outer join into exact counts
-    "q_snapshot_diff" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(col("user_id").isNotNull && col("value").isNotNull)
-      def latest(df: DataFrame): DataFrame = df.groupBy("user_id")
-        .agg(max_by(col("value"), struct(col("ts_us"), col("event_id"))).as("v"))
-      Incremental.snapshotDiff(
-        latest(ev.filter(dayofmonth(col("ts")) < 15)), latest(ev), "user_id", "v")
-    }),
-
-    // empirical-CDF normalization: ties share a RANGE-frame position,
-    // one double division of exact longs per row
-    "q_value_cdf" -> ((s, dir) =>
-      Monitoring.quantileNormalize(Tables.events(s, dir)).orderBy("event_id")),
-
-    // PAA time-series similarity: which types share a temporal shape —
-    // 64 integer segments, decimal-exact pairwise distance
-    "q_series_paa_dist" -> ((s, dir) =>
-      TimeSeries.paaProfileDistance(Tables.events(s, dir)).orderBy("key_a", "key_b")),
-
-    // volume-spike detection vs the trailing-24h baseline — the burst
-    // axis next to CUSUM's drift; cross-multiplied integer gate
-    "q_burst_hours" -> ((s, dir) =>
-      TimeSeries.burstHours(Tables.events(s, dir)).orderBy("key")),
-
-    // who moves first: argmax-lag exact cross-correlation numerator
-    // over the hourly series, ±3h scan, decimal-string dots
-    "q_series_lead_lag" -> ((s, dir) =>
-      TimeSeries.leadLagDot(Tables.events(s, dir)).orderBy("key_a", "key_b")),
-
-    // seasonality diagnostic: lag-1..12 autocorrelation of the hourly
-    // activity series, exact integer moments to one division + sqrt
-    "q_series_acf" -> ((s, dir) =>
-      TimeSeries.hourlyAcf(Tables.events(s, dir)).orderBy("lag")),
-
-    // the per-metric resolution of the same diagnostic: which TYPES
-    // have a daily cycle (pairs keyed on (type, hour))
-    "q_series_acf_by_type" -> ((s, dir) =>
-      TimeSeries.hourlyAcfByKey(Tables.events(s, dir)).orderBy("key", "lag")),
-
-    // daily mix concentration by Gini-Simpson (1 - sum p^2): the
-    // log-free entropy surrogate, exact to one division
-    "q_type_diversity" -> ((s, dir) =>
-      Expectations.dailyDiversity(Tables.events(s, dir)).orderBy("day")),
-
-    // nonparametric drift: integer-exact two-sample KS distance of doc
-    // lengths between the doc_id-parity halves, per language
-    "text_length_ks" -> ((s, dir) =>
-      Expectations.ksDistance(Tables.documents(s, dir), "n_chars",
-        col("doc_id") % 2 === 1, "lang").orderBy("lang")),
-
-    // the same generic KS over micro-quantized VALUES between month
-    // halves — did each type's level distribution move, not just its mean
-    "q_value_ks" -> ((s, dir) =>
-      Expectations.ksDistance(
-        Tables.events(s, dir).withColumn("qv",
-          floor(col("value") * 1000000.0).cast("long")),
-        "qv", dayofmonth(col("ts")) >= 15, "event_type").orderBy("event_type")),
-
-    // diurnal peak: each type's busiest hour-of-day and its share —
-    // struct-max pick, one division of exact longs; served from the
-    // same (day, hour, type) counts frame the diversity family shares
-    "q_diurnal_peak" -> ((s, dir) =>
-      Monitoring.diurnalPeak(Tables.events(s, dir)).orderBy("event_type")),
-
-    // chi-square drift of the event-type mix, first half vs second half
-    // of the month — decimal-exact numerators, one double division
-    "q_type_drift" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      Expectations.distributionDrift(
-        ev.filter(dayofmonth(col("ts")) < 15),
-        ev.filter(dayofmonth(col("ts")) >= 15), "event_type")
-        .orderBy("event_type")
-    }),
-
-    // exact-moment Pearson correlation (decimal/HUGEINT integers until
-    // the final division and correctly-rounded sqrt)
-    "q_value_hour_corr" -> ((s, dir) =>
-      Monitoring.valueHourCorr(Tables.events(s, dir)).orderBy("event_type")),
-
-    // Pearson on within-type min-ranks: the monotone-robust dependence
-    // measure, integer-exact to the final division + sqrt
-    "q_value_hour_rankcorr" -> ((s, dir) =>
-      Monitoring.valueHourRankCorr(Tables.events(s, dir)).orderBy("event_type")),
-
-    // the post-screen drill-down: each type's k lowest/highest readings
-    // with deterministic (qv, event_id) tie order
-    "q_value_extremes" -> ((s, dir) =>
-      Monitoring.valueExtremes(Tables.events(s, dir))
-        .orderBy("event_type", "side", "rank")),
-
-    // equi-depth bin edges by pure-integer rank selection, with the
-    // exact ≤-edge counts that make tie inflation visible
-    "q_equidepth_bins" -> ((s, dir) =>
-      Monitoring.equidepthBins(Tables.events(s, dir)).orderBy("event_type", "bin")),
-
-    // CUSUM drift flags via the prefix-min identity (recursive max(0,·)
-    // = P - cummin(P)) — two windows, pure integer arithmetic
-    // integer-exact EWMA level tracking over the hourly series: rational
-    // alpha, floor division each step, one per-key fold — the oracle
-    // replays the recurrence with a recursive CTE
-    "q_ewma_hourly" -> ((s, dir) =>
-      TimeSeries.ewmaHourly(Tables.events(s, dir)).orderBy("key", "bucket_us")),
-
-    // integer-exact Holt level+trend forecasting: rational alpha/beta,
-    // explicit floor division at BOTH recurrence steps (trend deltas go
-    // negative on declines — where floor and truncation diverge), one
-    // per-key fold off the same hourly seam as the EWMA
-    "q_holt_trend" -> ((s, dir) =>
-      TimeSeries.holtHourly(Tables.events(s, dir)).orderBy("key", "bucket_us")),
-
-    "q_cusum_drift" -> ((s, dir) =>
-      TimeSeries.cusumDrift(Tables.events(s, dir)).orderBy("key", "bucket_us")),
-
-    // deterministic Poisson bootstrap: hex-threshold weights, exact
-    // integer replicate sums, rank-selected band — hash-matchable CI
-    "q_bootstrap_ci" -> ((s, dir) =>
-      Sampling.bootstrapCI(Tables.events(s, dir)).orderBy("event_type")),
-
-    // Misra-Gries proposes (no token shuffle), exact pass disposes: the
-    // n/k guarantee makes the verified output deterministic, so a plain
-    // HAVING oracle hash-matches a sketch-driven plan
-    "q_heavy_tokens" -> ((s, dir) =>
-      HeavyHitters.heavyTokens(Tables.documents(s, dir)).orderBy("token")),
-
-    // dangling-mass-conserving PageRank on the event-chain graph, whose
-    // per-user terminal events are certified sinks; the oracle unrolls
-    // the same iterations with the same per-iteration dangling scalar
-    "graph_pagerank_dangling" -> ((s, dir) =>
-      Graph.pagerankInt(Graph.eventChainEdges(Tables.events(s, dir)),
-          redistributeDangling = true)
-        .orderBy("node")),
-
-    // market-basket lift over part pairs with co-order support >= 2;
-    // integer counts, one bit-exact double division
-    "q_basket_lift" -> ((s, dir) =>
-      Graph.basketLift(Tables.lineitem(s, dir)).orderBy("a", "b")),
-
-    // the directional companion: confidence P(cons | ante), both
-    // directions per surviving pair, exact counts, one division
-    "q_basket_confidence" -> ((s, dir) =>
-      Graph.basketConfidence(Tables.lineitem(s, dir)).orderBy("ante", "cons")),
-
-    // incremental maintenance of the same view: split on the ORDER key
-    // (basket-atomic — a date split would sever baskets, spec'd as a
-    // negative law), merge the monoid state, serve; oracle = the direct
-    // computation's SQL, so merge-then-serve must equal recompute exactly
-    "q_basket_increment" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val prev = Incremental.partialBasketStats(li.filter(col("l_orderkey") % 2 === 0))
-      val delta = Incremental.partialBasketStats(li.filter(col("l_orderkey") % 2 === 1))
-      Incremental.serveBasketLift(Incremental.mergeBasketStats(prev, delta))
-        .orderBy("a", "b")
-    }),
-
-    // per-part triangle counts on the co-ordered-parts graph; the engine
-    // enumerates by degree-ordered wedge closure, the oracle by plain
-    // id-order — the triangle SET is orientation-invariant
-    "graph_triangles" -> ((s, dir) =>
-      Graph.triangleCounts(Graph.coOrderedParts(Tables.lineitem(s, dir)))
-        .orderBy("part")),
-
-    // k-core decomposition on the same co-parts graph: fixed-round
-    // synchronous h-operator iterate (degree -> h-index of neighbor
-    // values, provably convergent to coreness), oracle unrolls the
-    // identical rounds
-    "graph_kcore" -> ((s, dir) =>
-      Graph.kCore(Graph.coOrderedParts(Tables.lineitem(s, dir)))
-        .orderBy("node")),
-
-    // incremental view maintenance: the engine merges a two-way split of
-    // the history; the oracle recomputes directly — the associativity law
-    "q_rollup_increment" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val prev = Incremental.partialRollup(ev.filter(dayofmonth(col("ts")) < 15))
-      val delta = Incremental.partialRollup(ev.filter(dayofmonth(col("ts")) >= 15))
-      Incremental.mergeRollups(prev, delta)
-        .select("event_type", "day", "n", "sum_q", "min_v", "max_v")
-        .orderBy("event_type", "day")
-    }),
-
-    "q_scd2_intervals" -> ((s, dir) => {
-      val iv = TimeSeries.validityIntervals(Tables.events(s, dir),
-        Seq("event_type"), "ts", "event_id", Seq("value"))
-      iv.select(col("event_type"),
-        date_format(col("valid_from"), "yyyy-MM-dd HH:mm:ss").as("valid_from"),
-        date_format(col("valid_to"), "yyyy-MM-dd HH:mm:ss").as("valid_to"),
-        col("value"))
-        .orderBy("event_type", "valid_from")
-    }),
-
-    "q_funnel" -> ((s, dir) =>
-      Funnel.funnel(Tables.events(s, dir), Seq("view", "click", "purchase"))
-        .orderBy("user_id")),
-
-    // day-1 window: at this corpus's density every user converts over the
-    // full month, so the rollup is windowed to keep stage variety
-    "q_funnel_rollup" -> ((s, dir) =>
-      Funnel.conversionRollup(
-        Tables.events(s, dir)
-          .filter(col("ts") < to_timestamp(lit("2024-01-02 00:00:00"))),
-        Seq("view", "click", "purchase"))
-        .orderBy("stage_reached")),
-
-    // as-of join: purchases to the same user's most recent prior view
-    "q_asof_attribution" -> ((s, dir) =>
-      TimeSeries.purchaseAttribution(Tables.events(s, dir)).orderBy("event_id")),
-
-    // regular hourly grid + forward fill: the resample/gap-fill staple
-    "q_resample_ffill" -> ((s, dir) =>
-      TimeSeries.resampleHourly(Tables.events(s, dir))
-        .orderBy("event_type", "bucket")),
-
-    // the hot-key bucketed refinement produces identical output (carry-in
-    // across 6h buckets), so it shares the plain form's oracle
-    "q_asof_attribution_bucketed" -> ((s, dir) =>
-      TimeSeries.purchaseAttribution(Tables.events(s, dir),
-        bucketUs = Some(6L * 3600L * 1000000L)).orderBy("event_id")),
-
-    // nearest-event join: minimum |Δt| either direction (as-of is its
-    // backward half); tie policy (|Δt|, view id) mirrored in the oracle
-    "q_nearest_view" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      TimeSeries.nearestJoin(
-          ev.filter(col("event_type") === "purchase"),
-          ev.filter(col("event_type") === "view"),
-          Seq("user_id"), "ts_us", "event_id", payload = Seq("event_id"))
-        .select(col("event_id"), col("user_id"),
-          col("nearest_event_id").as("view_event_id"),
-          col("nearest_dist").as("dist_us"))
-        .orderBy("event_id")
-    }),
-
-    // RANGE-frame window: trailing 1h mean/count per event type
-    "q_trailing_avg" -> ((s, dir) =>
-      Monitoring.trailingStats(Tables.events(s, dir)).orderBy("event_id")),
-
-    // range join: purchases contained in the same user's browse sessions
-    "q_range_sessions" -> ((s, dir) =>
-      TimeSeries.purchasesInSessions(Tables.events(s, dir))
-        .orderBy("user_id", "session_seq", "event_id")),
-
-    // grouping sets: per-(station, level) counts with station subtotals
-    "q_alert_rollup" -> ((s, dir) =>
-      enriched(s, dir)
-        .rollup(col("wlobscd"), col("alert_level"))
-        .agg(count(lit(1)).as("n"))
-        .select(
-          coalesce(col("wlobscd"), lit("<all>")).as("station"),
-          coalesce(col("alert_level"), lit("<all>")).as("level"),
-          col("n"))
-        .orderBy("station", "level")),
-
-    // full CUBE: every grouping-set combination, incl. the per-level
-    // margin ROLLUP cannot produce
-    "q_alert_cube" -> ((s, dir) =>
-      enriched(s, dir)
-        .cube(col("wlobscd"), col("alert_level"))
-        .agg(count(lit(1)).as("n"))
-        .select(
-          coalesce(col("wlobscd"), lit("<all>")).as("station"),
-          coalesce(col("alert_level"), lit("<all>")).as("level"),
-          col("n"))
-        .orderBy("station", "level")),
-
-    // arbitrary GROUPING SETS (the three sets rollup can't pick: both
-    // margins plus the detail, NO grand total), disambiguated by
-    // grouping_id — the bit vector both engines derive identically
-    "q_alert_grouping_sets" -> ((s, dir) =>
-      enriched(s, dir)
-        .groupingSets(
-          Seq(Seq(col("wlobscd")), Seq(col("alert_level")),
-            Seq(col("wlobscd"), col("alert_level"))),
-          col("wlobscd"), col("alert_level"))
-        .agg(count(lit(1)).as("n"), grouping_id().cast("long").as("gid"))
-        .select(
-          coalesce(col("wlobscd"), lit("<all>")).as("station"),
-          coalesce(col("alert_level"), lit("<all>")).as("level"),
-          col("n"), col("gid"))
-        .orderBy("gid", "station", "level")),
-
-    // pivot: station × alert-level count matrix (fixed level list so the
-    // output schema is static and oracle-expressible)
-    "q_alert_pivot" -> ((s, dir) =>
-      enriched(s, dir)
-        .groupBy(col("wlobscd").as("station"))
-        .pivot("alert_level", Seq("NORMAL", "ATTENTION", "CAUTION", "WARNING", "CRITICAL", "ANOMALY"))
-        .agg(count(lit(1)))
-        .na.fill(0L) // zero-fills the missing pivot cells (count itself is never null)
-        .orderBy("station")),
-
-    // set operation: users active in the first month but silent after
-    "q_churned_users" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val cutoff = to_timestamp(lit("2024-02-01 00:00:00"))
-      ev.filter(col("ts") < cutoff).select("user_id")
-        .except(ev.filter(col("ts") >= cutoff).select("user_id"))
-        .orderBy("user_id")
-    }),
-
-    // ---- LLM-pipeline: reproducible sampling -----------------------------
-    "q_split_census" -> ((s, dir) =>
-      Sampling.splitCensus(Tables.documents(s, dir)).orderBy("lang", "split")),
-
-    // deterministic k-fold assignment census: fold = md5 byte mod k,
-    // per-row and engine-portable like the split column
-    "q_kfold_census" -> ((s, dir) =>
-      Sampling.kfoldCensus(Tables.documents(s, dir), k = 5).orderBy("fold", "lang")),
-
-    // ceil-pow2 token-length histogram + pad-waste — integer-only bucket
-    // via bit length, no float log2 to mis-bin at exact powers of two
-    "q_length_buckets" -> ((s, dir) =>
-      Sampling.lengthBuckets(Tables.documents(s, dir)).orderBy("bucket")),
-
-    "q_source_cap" -> ((s, dir) =>
-      Sampling.perSourceCap(Tables.documents(s, dir), cap = 100)
-        .select(col("source"), col("rank_in_source").cast("long").as("rank_in_source"),
-          col("doc_id"), col("n_chars"))
-        .orderBy("source", "rank_in_source")),
-
-    // two-phase hot-source form; same oracle as q_source_cap because the
-    // salted pre-prune provably never changes the output
-    "q_source_cap_salted" -> ((s, dir) =>
-      Sampling.perSourceCapSalted(Tables.documents(s, dir), cap = 100, salts = 8)
-        .select(col("source"), col("rank_in_source").cast("long").as("rank_in_source"),
-          col("doc_id"), col("n_chars"))
-        .orderBy("source", "rank_in_source")),
-
-    // contiguous-fill sequence packing in reproducible hash order
-    "q_seq_pack" -> ((s, dir) =>
-      Sampling.packSequences(Tables.documents(s, dir), budgetTokens = 2048L)
-        .orderBy("doc_id")),
-
-    // whole-doc best-fit-decreasing packing beside the contiguous-fill
-    // spans: per-shard sequential fold (the ewmaServe discipline), bins
-    // never overfill, ties to the smallest bin id; oracle = the same
-    // fold as a recursive CTE
-    "q_seq_pack_bfd" -> ((s, dir) =>
-      Sampling.packSequencesBfd(Tables.documents(s, dir), budgetTokens = 256L)
-        .orderBy("doc_id")),
-
-    // what best-fit bought: per-shard bins/waste vs the greedy next-fit
-    // packer on the same decreasing order
-    "q_seq_pack_waste" -> ((s, dir) =>
-      Sampling.packWasteReport(Tables.documents(s, dir), budgetTokens = 256L)
-        .orderBy("shard")),
-
-    // the same packer dealing in BPE tokens — pack boundaries land where
-    // the trainer's actual budget runs out, not where whitespace does
-    "q_seq_pack_bpe" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Sampling.packSequencesBy(docs,
-        Bpe.tokenCountColumn(col("text"), Bpe.train(docs)), budgetTokens = 2048L)
-        .orderBy("doc_id")
-    }),
-
-    // write-path layout key: Z-order interleave of (p_size, floor(price))
-    // — the two-dimensional pruning sort key, bit-exact across engines
-    "q_zorder_layout" -> ((s, dir) =>
-      Tables.part(s, dir).select(col("p_partkey"),
-        Layout.zorderKey(col("p_size"), floor(col("p_retailprice"))).as("zkey"))
-        .orderBy("zkey", "p_partkey")),
-
-    // the better-locality curve over the same two dimensions: the Hilbert
-    // key's rotate/reflect state machine runs in a codegen'd custom
-    // Expression; the oracle unrolls the same 16 levels as chained CTEs
-    "q_hilbert_layout" -> ((s, dir) =>
-      Tables.part(s, dir).select(col("p_partkey"),
-        Layout.hilbertKey(col("p_size"), floor(col("p_retailprice"))).as("hkey"))
-        .orderBy("hkey", "p_partkey")),
-
-    // weighted sampling WITHOUT replacement (Efraimidis–Spirakis):
-    // priority ln(u)/w from the row's md5 draw, top-100 by priority —
-    // inclusion probability proportional to the weight (doc length
-    // here), the quality-weighted pick a plain shuffle can't express
-    "q_weighted_sample" -> ((s, dir) =>
-      Sampling.weightedSample(Tables.documents(s, dir), col("n_chars"))),
-
-    // corpus mixing: keep 50% of en, 25% of zh, everything else whole —
-    // membership purely per-row off the portable md5, exact vs the oracle
-    "q_stratified_sample" -> ((s, dir) =>
-      Sampling.stratifiedSample(Tables.documents(s, dir),
-          rates = Map("en" -> 0.5, "zh" -> 0.25))
-        .select("doc_id", "lang", "source").orderBy("doc_id")),
-
-    "text_normalize" -> ((s, dir) =>
-      TextAnalysis.normalize(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    // PII scrub over a PLANTED corpus (the synthetic documents carry no
-    // natural emails/IPs, so deterministic ones are appended for some ids
-    // — mirrored in the oracle — making counts AND redacted text
-    // hash-checkable)
-    "text_pii" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val planted = docs.select(col("doc_id"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            concat(lit(" contact user"), col("doc_id"), lit("@example.com now")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 13 === 0,
-            concat(lit(" card 4111-1111-1111-"), col("doc_id") % 9000 + 1000,
-              lit(" used")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 5 === 0,
-            concat(lit(" call 555-"), col("doc_id") % 900 + 100, lit("-0199 ok")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0,
-            concat(lit(" from 10.0."), col("doc_id") % 256, lit(".1 logged")))
-            .otherwise(lit(""))).as("text"))
-      TextAnalysis.piiScrub(planted).orderBy("doc_id")
-    }),
-
-    "q_shuffle_order" -> ((s, dir) =>
-      Sampling.deterministicShuffle(Tables.documents(s, dir), seed = "epoch1:")
-        .select("doc_id", "shuffle_key").limit(100)),
-
-    // repetition metrics: top-word and top-bigram shares per doc
-    "text_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    // decontamination: train docs containing >=50% of an eval doc's
-    // shingles, with the eval side drawn by the reproducible split
-    "text_decontaminate" -> ((s, dir) =>
-      Dedup.decontaminate(Tables.documents(s, dir),
-          isEval = Sampling.splitColumn(col("doc_id")) === "eval")
-        .orderBy("train_id", "eval_id")),
-
-    // ---- LLM-pipeline: dedup ---------------------------------------------
-    "dedup_exact" -> ((s, dir) => Dedup.exact(Tables.documents(s, dir)).orderBy("keep_id")),
-
-    // append-only ingest: docs >= 250 arrive as the new batch, docs < 250
-    // are the accumulated corpus — survivors are batch-unseen texts
-    "dedup_incremental" -> ((s, dir) => {
-      val all = Tables.documents(s, dir)
-      Dedup.exactIncrement(
-        all.filter(col("doc_id") >= 250),
-        all.filter(col("doc_id") < 250)).orderBy("keep_id")
-    }),
-
-    // the Bloom pre-filter in front of that anti-join: probe the batch
-    // against the corpus Bloom — zero false negatives structurally, only
-    // the FPR slice of unseen texts pays the exact check. The probe set
-    // plants the corpus's first 50 docs so the no-false-negative invariant
-    // is exercised on real members, not vacuously
-    "dedup_bloom_prefilter" -> ((s, dir) => {
-      val all = Tables.documents(s, dir)
-      graft.ops.Sketches.bloomCertificate(
-        all.filter(col("doc_id") < 250),
-        all.filter(col("doc_id") >= 250 || col("doc_id") < 50), col("text"))
-    }),
-
-    // the fuzzy twin: batch docs near-duplicating the accumulated corpus
-    // via the banded MinHash table (what a rolling ingest drops nightly)
-    "dedup_incremental_lsh" -> ((s, dir) => {
-      val all = Tables.documents(s, dir)
-      Dedup.minhashIncrement(
-        all.filter(col("doc_id") >= 250),
-        all.filter(col("doc_id") < 250)).orderBy("batch_id", "seen_id")
-    }),
-
-    "dedup_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccard(Tables.documents(s, dir)).orderBy("id1", "id2")),
-
-    "dedup_minhash" -> ((s, dir) =>
-      Dedup.minhashLsh(Tables.documents(s, dir)).orderBy("id1", "id2")),
-
-    // the 100 TB scale guard: drop shingles present in more than
-    // maxDocFreq docs BEFORE the pair-generating self-join (a ubiquitous
-    // shingle's posting list is a quadratic blowup and carries no dedup
-    // signal). 5 bites on this corpus (max df is 7-9 at test SFs).
-    "dedup_jaccard_capped" -> ((s, dir) =>
-      Dedup.ngramJaccard(Tables.documents(s, dir), maxDocFreq = 5).orderBy("id1", "id2")),
-
-    // terminal dedup stage: resolve the jaccard pair list into connected
-    // components (min-label + pointer doubling, O(log n) rounds), then map
-    // EVERY corpus doc to its cluster representative. BOTH stages come
-    // through write-once artifacts (see jaccardPairs /
-    // jaccardComponents) — generation and closure are deterministic,
-    // so artifact and recompute are result-identical and each entry's
-    // oracle still certifies the full composition; the whole components
-    // family shares ONE closure run per corpus.
-    "dedup_components" -> ((s, dir) => jaccardComponents(s, dir).orderBy("id")),
-
-    "dedup_canonical" -> ((s, dir) => canonicalDocs(s, dir).orderBy("doc_id")),
-
-    // how BAD is duplication: clusters and docs per cluster size — the
-    // corpus-report curve over the same canonical resolution
-    "dedup_cluster_sizes" -> ((s, dir) => Graph.clusterSizeHistogram(
-      canonicalDocs(s, dir)).orderBy("cluster_size")),
-
-    // cluster-keyed split over the same canonical resolution: near-dups
-    // can never straddle the train/eval boundary
-    "q_split_leakage_safe" -> ((s, dir) =>
-      Sampling.leakageSafeSplitFromCanon(canonicalDocs(s, dir))
-        .orderBy("doc_id")),
-
-    // cluster-representative selection by QUALITY: per near-dup cluster
-    // keep the highest-quality member (micro-quantized exact longs, tie
-    // → min doc_id) — the curation refinement of min-id
-    // canonicalization ("keep the best copy, not the first copy"), over
-    // the same shared closure artifact; one join + one aggregate
-    "dedup_best_of_cluster" -> ((s, dir) => {
-      val qm = TextAnalysis.quality(Tables.documents(s, dir))
-        .select(col("doc_id"),
-          floor(col("quality_score") * 1000000.0).cast("long").as("qm"))
-      canonicalDocs(s, dir).join(qm, "doc_id")
-        .groupBy("canonical_id")
-        .agg(count(lit(1)).as("n_members"),
-          max("qm").as("best_q_micro"),
-          min_by(col("doc_id"), struct((-col("qm")).as("nq"), col("doc_id")))
-            .as("keep_id"))
-        .select("canonical_id", "keep_id", "n_members", "best_q_micro")
-        .orderBy("canonical_id")
-    }),
-
-    // per-user DAILY ingest throttle on the event stream (day bucket:
-    // this corpus tops out at 3 events per user-hour but 10 per user-day,
-    // so the cap provably drops rows here)
-    "q_rate_cap" -> ((s, dir) =>
-      Sampling.rateCap(Tables.events(s, dir), cap = 5, bucket = "day")
-        .select("event_id", "user_id", "rank_in_bucket")
-        .orderBy("event_id")),
-
-    // curation dashboards over the same pair artifact: which sources copy
-    // which, and how much of each source a dedup pass would drop
-    "dedup_source_matrix" -> ((s, dir) => Graph.sourceDupMatrix(
-      Tables.documents(s, dir), jaccardPairs(s, dir)).orderBy("source_a", "source_b")),
-
-    "dedup_source_rate" -> ((s, dir) => Graph.sourceDupRateFromCanon(
-      canonicalDocs(s, dir), Tables.documents(s, dir)).orderBy("source")),
-
-    // the volume-weighted companion: source_rate counts DOCS a dedup
-    // pass drops; this weighs them in CHARS — at 100 TB the byte bill,
-    // not the row count, is what the scan budget reads. Same shared
-    // canonical resolution, one join + one aggregate
-    "dedup_savings" -> ((s, dir) =>
-      canonicalDocs(s, dir)
-        .join(Tables.documents(s, dir).select("doc_id", "source", "n_chars"), "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_chars").as("chars_total"),
-          sum(when(col("canonical_id") =!= col("doc_id"), col("n_chars"))
-            .otherwise(0L)).as("chars_dropped"))
-        .withColumn("drop_share",
-          col("chars_dropped").cast("double") / col("chars_total"))
-        .orderBy("source")),
-
-    // the 100 TB composition: CC over the MinHash-LSH pair generator —
-    // same oracle as dedup_components because LSH+verify reproduces the
-    // exact pair set on this corpus (the dedup_minhash contract); its own
-    // components artifact, keyed by its generator
-    "dedup_components_lsh" -> ((s, dir) => minhashComponents(s, dir).orderBy("id")),
-
-    // incremental closure maintenance: a STORED components frame (itself
-    // a write-once artifact — the state a nightly job maintains, read
-    // here, never re-resolved per query) merged with a new pair batch
-    // through the batch-bounded quotient closure — no corpus re-walk.
-    // The result is split-invariant, so the oracle is the same full
-    // transitive closure as dedup_components: merge ≡ recompute, end to
-    // end
-    "dedup_components_increment" -> ((s, dir) => {
-      val pairs = jaccardPairs(s, dir)
-      val isNew = pmod(col("id1") + col("id2"), lit(4L)) === 0L
-      val stored = Artifacts.cached(s, "comps", "jaccard_seen", dir)(
-        Graph.connectedComponents(pairs.filter(!isNew)))
-      Graph.componentsIncrement(stored, pairs.filter(isNew)).orderBy("id")
-    }),
-
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(Tables.documents(s, dir)).orderBy("id1", "id2")),
-
-    // the portable md5 twin: the SAME sign-aggregate + pigeonhole
-    // pipeline over a 60-bit md5 slice, so the FULL near-dup pair set
-    // hash-matches a DuckDB replay — the verification face the xxhash64
-    // hot path (rows-only by design) gets checked against
-    "dedup_simhash_md5" -> ((s, dir) =>
-      Dedup.simhashPairsPortable(Tables.documents(s, dir)).orderBy("id1", "id2")),
-
-    // simhash's hash family isn't SQL-expressible, but identical shingle
-    // SETS imply identical simhash structurally — so planting exact copies
-    // (and pairing at hamming 0) reduces the operator to an
-    // oracle-checkable one: the pair set must equal the identical-
-    // shingle-set (jaccard = 1.0) pairs over the same planted universe,
-    // recall 1.0 by construction. The universe is docs 0..99 — measured
-    // free of natural near-dups at every SF — because simhash at hamming 0
-    // legitimately pairs the generator's planted near-dups too (2-3
-    // differing shingles need not flip any of 64 bit-sums), and no jaccard
-    // threshold separates those from non-pairs. The probabilistic
-    // hamming<=3 variant above stays rows-only.
-    "dedup_simhash_planted" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).select("doc_id", "text")
-        .filter(col("doc_id") < 100)
-      val planted = base.filter(col("doc_id") < 20)
-        .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
-      Dedup.simhashPairs(base.unionByName(planted), maxHamming = 0)
-        .select("id1", "id2").orderBy("id1", "id2")
-    }),
-
-    "dedup_embedding" -> ((s, dir) =>
-      Dedup.embeddingNearDup(Tables.embeddings(s, dir)).orderBy("id1", "id2")),
-
-    // unlabeled scale path: banded SRP-LSH buckets + exact-cosine verify.
-    // The corpus has no natural near-dups (max pairwise cosine ≈ 0.48), so
-    // the query PLANTS scaled copies of the first 20 vectors: a scaled
-    // copy has structurally identical projection signs → recall 1.0 by
-    // construction, precision exact by verification — which is what lets a
-    // probabilistic LSH operator be hash-compared against a brute-force
-    // DuckDB oracle over the same planted corpus. Compared output is the
-    // pair SET only: a scaled pair's cosine is degenerate (≈1.0), where
-    // DuckDB's list_cosine_similarity clamps to exactly 1.0 while the
-    // mirrored arithmetic lands one ulp below — cosine VALUES are
-    // hash-checked by dedup_embedding, whose natural pairs sit far from
-    // the boundary.
-    "dedup_embedding_lsh" -> ((s, dir) => {
-      val base = Tables.embeddings(s, dir)
-        .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("embedding"))
-      val planted = base.filter(col("vec_id") < 20)
-        .select((col("vec_id") + 1000000L).as("vec_id"),
-          transform(col("embedding"), _ * lit(1.001)).as("embedding"))
-      Dedup.embeddingNearDupLsh(base.unionByName(planted), threshold = 0.99)
-        .select("id1", "id2").orderBy("id1", "id2")
-    }),
-
-    // SemDeDup over the planted-cluster corpus (the embeddings table has
-    // no natural semantic dups — max pairwise cosine ≈ 0.5): k-center
-    // cells bound the pair stage, within-cell cosine >= 0.9 prunes to
-    // the cell-local min-id keeper. Both faces replay fully in DuckDB
-    // through the shared unrolled k-center chain.
-    "dedup_semantic_pairs" -> ((s, dir) =>
-      Similarity.semanticDedupPairs(
-        Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir)))
-        .orderBy("id1", "id2")),
-    "dedup_semantic" -> ((s, dir) =>
-      Similarity.semanticDedup(
-        Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir)))
-        .orderBy("vec_id")),
-
-    // the terminal's incremental-maintenance face: late batch (% 5 = 4,
-    // the sim_index_increment split) pruned against stored KEPT
-    // cellmates and smaller-id batch cellmates, exemplars from the
-    // stored slice only — the whole increment replays in DuckDB
-    "dedup_semantic_increment" -> ((s, dir) => {
-      val planted = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
-      Similarity.semanticDedupIncrement(
-        planted.filter(col("vec_id") % 5 =!= 4),
-        planted.filter(col("vec_id") % 5 === 4))
-        .orderBy("vec_id")
-    }),
-
-    "dedup_editdist" -> ((s, dir) =>
-      // candidates come through the same write-once jaccard pair artifact
-      // the component-resolution entries consume — the DP verify is the
-      // only per-run cost (the offline shape: pair list nightly, verify on
-      // demand); generation-vs-artifact equality is Artifacts' determinism
-      // contract, and the oracle below stays the full brute-force check
-      Dedup.editDistanceFrom(jaccardPairs(s, dir), Tables.documents(s, dir))
-        .orderBy("id1", "id2")),
-
-    // ---- LLM-pipeline: similarity search ---------------------------------
-    "sim_topk_brute" -> ((s, dir) =>
-      Similarity.topKBrute(Tables.embeddings(s, dir)).orderBy("query_id", "rank")),
-
-    // class prototypes + belongs-to-its-class scoring: the centroid is
-    // quantized-integer-exact, so it is bit-identical across engines
-    "q_label_centroid" -> ((s, dir) =>
-      Similarity.labelCentroids(Tables.embeddings(s, dir))
-        .select(col("label"), col("pos").cast("long").as("pos"), col("mean"))
-        .orderBy("label", "pos")),
-
-    "q_embed_outliers" -> ((s, dir) =>
-      Similarity.centroidOutliers(Tables.embeddings(s, dir))),
-
-    // All three IVF entries run the train-once/apply-many shape a real
-    // deployment uses: centroids come from a persisted artifact (trained
-    // on first touch, a tiny parquet read afterwards), so repeated query
-    // sets — and bench steady-state — pay only assign + probe, never the
-    // count + Lloyd jobs. Training is bit-deterministic, so the artifact
-    // path is output-identical to self-training (LlmOpsSpec asserts it).
-    "sim_topk_ivf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.topKIvf(emb, pretrained =
-        Some(Similarity.centroidArtifact(emb, Artifacts.path("ivf", "base", dir),
-          k = 16, iterations = 2)))
-        .orderBy("query_id", "rank")
-    }),
-
-    // exactness dial at full: probing EVERY cell makes IVF equivalent to
-    // the brute scan, so the whole machinery (Lloyd training, cell
-    // assignment, probing, candidate ranking) is oracle-checked exactly;
-    // the approximate nprobe=3 variant above stays rows-only because ANN
-    // candidate internals aren't SQL-expressible.
-    "sim_topk_ivf_full" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.topKIvf(emb, nprobe = Int.MaxValue, pretrained =
-        Some(Similarity.centroidArtifact(emb, Artifacts.path("ivf", "base", dir),
-          k = 16, iterations = 2)))
-        .orderBy("query_id", "rank")
-    }),
-
-    // IVF recall certificate: on the planted-cluster corpus the true top-5
-    // of each query are its cluster siblings BY CONSTRUCTION, so the
-    // approximate path (nprobe=3 of 16 cells) structurally achieves recall
-    // 1.0 and the output is hash-checkable against DuckDB brute force —
-    // the clustered-data recall claim sim_topk_ivf rests on, proven.
-    "sim_topk_ivf_clustered" -> ((s, dir) => {
-      val corpus = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
-      Similarity.topKIvf(corpus, k = 5, numQueries = 8, numCells = 16, nprobe = 3,
-        pretrained = Some(Similarity.centroidArtifact(corpus,
-          Artifacts.path("ivf", "clustered", dir), k = 16, iterations = 2)))
-        .orderBy("query_id", "rank")
-    }),
-
-    // PQ on the real corpus: rows-only by design (codebook internals are
-    // not SQL-expressible); the oracle-green companion is _planted below
-    "sim_topk_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.topKPqRerank(emb, pretrained =
-        Some(Similarity.pqCodebookArtifact(emb, Artifacts.path("pq", "base", dir))))
-        .orderBy("query_id", "rank")
-    }),
-
-    // full-shortlist PQ ≡ brute (the sim_topk_ivf_full pattern): the cut
-    // keeps everything, so the exact rerank IS the brute scan — proves
-    // the rerank arithmetic against the same TOPK oracle
-    "sim_topk_pq_full" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.topKPqRerank(emb, numQueries = 10, shortlist = Int.MaxValue,
-        pretrained = Some(Similarity.pqCodebookArtifact(emb, Artifacts.path("pq", "base", dir))))
-        .orderBy("query_id", "rank")
-    }),
-
-    // PQ recall certificate, the sim_topk_ivf_clustered pattern: cluster
-    // siblings share near-identical codes, so the ADC shortlist keeps the
-    // true top-5 structurally and the exact rerank reproduces brute force
-    // — hash-checked against the SAME DuckDB brute-force oracle
-    "sim_topk_pq_planted" -> ((s, dir) => {
-      val corpus = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
-      Similarity.topKPqRerank(corpus, pretrained =
-        Some(Similarity.pqCodebookArtifact(corpus, Artifacts.path("pq", "planted", dir))))
-        .orderBy("query_id", "rank")
-    }),
-
-    // the production composition: IVF probe restriction × PQ ADC scoring
-    // × exact rerank; rows-only on the real corpus, certified by _planted
-    "sim_topk_ivfpq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.topKIvfPq(emb,
-        centroids = Some(Similarity.centroidArtifact(emb,
-          Artifacts.path("ivf", "base", dir), k = 16, iterations = 2)),
-        codebooks = Some(Similarity.pqCodebookArtifact(emb, Artifacts.path("pq", "base", dir))))
-        .orderBy("query_id", "rank")
-    }),
-
-    // composed certificate: siblings land in the probed cells (IVF
-    // argument) with dominant ADC scores (PQ argument) — output is brute
-    // force, hash-checked against the same clustered oracle
-    "sim_topk_ivfpq_planted" -> ((s, dir) => {
-      val corpus = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
-      Similarity.topKIvfPq(corpus,
-        centroids = Some(Similarity.centroidArtifact(corpus,
-          Artifacts.path("ivf", "clustered", dir), k = 16, iterations = 2)),
-        codebooks = Some(Similarity.pqCodebookArtifact(corpus, Artifacts.path("pq", "planted", dir))))
-        .orderBy("query_id", "rank")
-    }),
-
-    // rolling-ingest ANN maintenance: assign a NEW batch (vec_id % 8 == 7)
-    // against centroid/codebook artifacts trained on the SEEN corpus and
-    // emit exactly the index rows to append — no retrain, no touch of
-    // seen-corpus state. Rows-only by design (cell/code internals aren't
-    // SQL-expressible); certified by the spec (bit-equal to full-rebuild
-    // assignment on the union) and the _planted serve-through entry below.
-    "sim_index_increment" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val base = emb.filter(col("vec_id") % 8 =!= 7)
-      val batch = emb.filter(col("vec_id") % 8 === 7)
-      Similarity.indexIncrement(batch,
-        Similarity.centroidArtifact(base, Artifacts.path("ivf", "incr", dir),
-          k = 16, iterations = 2),
-        Similarity.pqCodebookArtifact(base, Artifacts.path("pq", "incr", dir)))
-        .orderBy("vec_id", "sub")
-    }),
-
-    // the increment certificate, end to end: serve top-k THROUGH an
-    // incremented index — stored rows for the base planted corpus plus
-    // indexIncrement rows for a late-arriving batch (the j∈{4,5} cluster
-    // members), models trained on the base only — and the output is brute
-    // force over the full planted corpus, hash-checked against the SAME
-    // oracle as sim_topk_ivfpq_planted: the late siblings are found ONLY
-    // if the appended rows land in the right cells with the right codes.
-    "sim_index_increment_planted" -> ((s, dir) => {
-      val corpus = Similarity.plantedClusterCorpusMaterialized(Tables.embeddings(s, dir))
-      val isBatch = col("vec_id") >= 1000L && col("vec_id") < 1000000L &&
-        pmod(col("vec_id") - 1000L, lit(6L)) >= 4L
-      val base = corpus.filter(!isBatch)
-      val cents = Similarity.centroidArtifact(base,
-        Artifacts.path("ivf", "incr_planted", dir), k = 16, iterations = 2)
-      val books = Similarity.pqCodebookArtifact(base, Artifacts.path("pq", "incr_planted", dir))
-      // the base index is the STORED serving state (what a deployment
-      // keeps on disk and annIndexStateSink maintains) — an artifact,
-      // not a per-query rebuild; only the increment and the serve are
-      // per-run work
-      val index = Artifacts.cached(s, "idx", "incr_planted", dir)(
-          Similarity.buildIndex(base, cents, books))
-        .unionByName(Similarity.indexIncrement(corpus.filter(isBatch), cents, books))
-      Similarity.serveFromIndex(corpus, index, cents, books,
-        k = 5, numQueries = 8, nprobe = 3, m = 4, shortlist = 32)
-        .orderBy("query_id", "rank")
-    }),
-
-    // embedding-space diversity selection: greedy k-center exemplars
-    // (farthest-first, min-vec_id seed, (mc, vec_id) argmin tie rule) —
-    // the oracle unrolls the same 8 rounds as chained CTEs and the frame
-    // hash-matches bit-for-bit (shared sequential-sum cosine kernel,
-    // order-insensitive max, raw-double argmin compare)
-    "q_diverse_kcenter" -> ((s, dir) =>
-      Similarity.kCenterSelect(Tables.embeddings(s, dir), k = 8).orderBy("rank")),
-
-    // the selection's PURPOSE: corpus vectors mapped to their nearest
-    // exemplar — the strata a curation pass samples from, with the
-    // coverage census that says whether k exemplars span the space
-    "q_diverse_kcenter_assign" -> ((s, dir) =>
-      Similarity.kCenterAssign(Tables.embeddings(s, dir), k = 8).orderBy("rank")),
-
-    // the increment through the k-center path — unlike the Lloyd IVF's
-    // rows-only increment this one is FULLY oracle-replayed: exemplars
-    // selected from the stored 80% only, the late-arriving 20% assigned
-    // per-row against the broadcast exemplar set, appended rows
-    // hash-checked end to end (and spec'd ≡ full-rebuild assignment)
-    "sim_index_increment_kcenter" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.kCenterIndexIncrement(
-        emb.filter(col("vec_id") % 5 =!= 4), emb.filter(col("vec_id") % 5 === 4))
-        .orderBy("vec_id")
-    }),
-
-    // the k-center IVF serving path end-to-end: farthest-first centers,
-    // probe-1 corpus cells, nprobe-3 query fan-out, per-cell candidate
-    // ranking — every step is engine-portable relational arithmetic, so
-    // unlike the Lloyd-trained IVF this ANN serving result hash-matches
-    // a FULL DuckDB replay on the real corpus (no planted certificate)
-    "sim_topk_kcenter" -> ((s, dir) =>
-      Similarity.topKIvfKCenter(Tables.embeddings(s, dir))
-        .orderBy("query_id", "rank")),
-
-    // the serving-quality monitor a production ANN stack actually
-    // tracks: exact recall@5 of the k-center IVF path against
-    // brute-force truth on the bounded query sample — n_true/n_hits by
-    // exact set intersection, recall one exact small-int division;
-    // the oracle replays BOTH sides (brute truth and the k-center
-    // serving path) and the spec pins full-probe recall ≡ 1.0
-    "sim_recall_audit" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.recallAudit(emb, Similarity.topKIvfKCenter(emb))
-        .orderBy("query_id")
-    }),
-
-    // the recall audit's position-aware sibling: rank of the FIRST
-    // brute-truth neighbor in the k-center-served list, rr = 10^6 DIV
-    // rank (0 on all-miss) — measures real ANN serving degradation,
-    // not just set overlap
-    "sim_mrr_kcenter" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.mrrServedAudit(emb, Similarity.topKIvfKCenter(emb))
-        .orderBy("query_id")
-    }),
-
-    // the Matryoshka question: recall@5 of first-d/2-coordinate serving
-    // vs full-dimension truth — both arms exact brute passes, so the
-    // oracle replays the whole audit
-    "sim_dim_truncation" -> ((s, dir) =>
-      Similarity.dimTruncationAudit(Tables.embeddings(s, dir))
-        .orderBy("query_id")),
-
-    // top principal direction by portable power iteration — the
-    // spectral axis for drift/whitening/outlier projection; every
-    // loading hash-matches the oracle's unrolled iterations
-    "q_embed_principal" -> ((s, dir) =>
-      Similarity.principalDirection(Tables.embeddings(s, dir)).orderBy("dim")),
-
-    // the axis's consumer: every vector's 1-D coordinate on the stored
-    // principal direction (train-once/apply-many, like the BPE pricer)
-    "q_embed_principal_scores" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val axis = Similarity.principalDirection(emb)
-        .orderBy("dim").collect().map(_.getDouble(1)).toSeq
-      Similarity.principalScores(emb, axis).orderBy("vec_id")
-    }),
-
-    // per-class drift screen on the axis coordinate: exact median/MAD
-    // of the projection, count beyond 3·MAD
-    "q_embed_axis_outliers" -> ((s, dir) =>
-      Similarity.axisOutliers(Tables.embeddings(s, dir)).orderBy("label")),
-
-    // the rank-2 spectral sketch: leading two directions by deflated
-    // power iteration, near-orthogonal (lambdas order once converged)
-    "q_embed_principal2" -> ((s, dir) =>
-      Similarity.principalDirections(Tables.embeddings(s, dir), components = 2)
-        .orderBy("component", "dim")),
-
-    // the 2-D drift map: every vector's coordinates on the two trained
-    // axes (c2 by the residual convention — exactly what the deflated
-    // iteration optimized)
-    "q_embed_coords2" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val both = Similarity.principalDirections(emb, components = 2)
-        .orderBy("component", "dim").collect()
-      val a1 = both.filter(_.getInt(0) == 1).map(_.getDouble(2)).toSeq
-      val a2 = both.filter(_.getInt(0) == 2).map(_.getDouble(2)).toSeq
-      Similarity.principalCoords(emb, a1, a2).orderBy("vec_id")
-    }),
-
-    // representation-health check: exact mean pairwise cosine +
-    // mean-vector norm over the unit-normalized corpus, one scan, no
-    // pairwise join (the sum-of-sums identity on micro-quantized coords)
-    "q_embed_isotropy" -> ((s, dir) =>
-      Similarity.isotropy(Tables.embeddings(s, dir))),
-
-    "q_embed_quantize" -> ((s, dir) => {
-      val q = Quantization.quantize(Tables.embeddings(s, dir))
-      q.select(
-        (Seq(col("vec_id"), col("qmin"), col("qscale")) ++
-          (0 until 8).map(i => element_at(col("codes"), i + 1).as(s"q$i"))): _*)
-        .orderBy("vec_id")
-    }),
-
-    // ---- LLM-pipeline: text analysis -------------------------------------
-    "text_langid" -> ((s, dir) => TextAnalysis.langId(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    // TRAINED language ID, the model half: char-bigram naive Bayes as
-    // one persistable (lang, g, n) frame — pair counts, per-lang
-    // totals, one vocabulary row; the routed replacement for the
-    // vowel-shape heuristic above (kept as the spec-side comparison)
-    "text_langid_model" -> ((s, dir) =>
-      TextAnalysis.langIdModel(Tables.documents(s, dir))
-        .orderBy(col("lang").asc_nulls_first, col("g").asc_nulls_first)),
-
-    // ... and the scoring half: per doc the add-one NB likelihood in
-    // exact micro-nat integers under every language, argmax routed
-    // with the lang-ascending tie rule — trained and scored on the
-    // corpus, every step replayed by the oracle
-    "text_langid_trained" -> ((s, dir) =>
-      TextAnalysis.langIdTrained(Tables.documents(s, dir))
-        .orderBy("doc_id")),
-
-    // the train-once/score-many face: scoring through the STORED model
-    // artifact — training is deterministic and counts round-trip
-    // parquet exactly, so the served labels hash-match the live
-    // trainer's oracle with ZERO training jobs on re-touch
-    "text_langid_trained_stored" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.langIdScoreFrom(docs,
-        Artifacts.cached(s, "lm", "langid_nb", dir)(
-          TextAnalysis.langIdModel(docs).coalesce(1)))
-        .orderBy("doc_id")
-    }),
-    "text_quality" -> ((s, dir) => TextAnalysis.quality(Tables.documents(s, dir)).orderBy("doc_id")),
-    "text_tokens" -> ((s, dir) => TextAnalysis.tokenCounts(Tables.documents(s, dir)).orderBy("doc_id")),
-    "text_fingerprint" -> ((s, dir) => TextAnalysis.fingerprint(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    "text_tf" -> ((s, dir) =>
-      TextAnalysis.termFrequency(Tables.documents(s, dir)).orderBy("lang", "rnk")),
-
-    "text_tfidf" -> ((s, dir) =>
-      TextAnalysis.distinctiveTerms(Tables.documents(s, dir))
-        .orderBy(col("doc_id"), col("score").desc, col("token"))),
-
-    "text_top_shingles" -> ((s, dir) =>
-      Dedup.shingleDocFreq(Tables.documents(s, dir))),
-
-    // per-doc duplicated-shingle coverage: the substring-level dedup
-    // signal (corpus-repeated fraction), exact counts + one division
-    "text_dup_coverage" -> ((s, dir) =>
-      Dedup.dupShingleCoverage(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    // sparse lexical retrieval next to the dense ANN stack: integer
-    // idf-surrogate weights, postings self-join, per-doc top-k window
-    "sim_lexical_topk" -> ((s, dir) =>
-      Dedup.lexicalTopK(Tables.documents(s, dir)).orderBy("doc_id", "rank")),
-
-    // true BM25 (k1=1.2, b=0.75, Lucene idf) over the inverted index —
-    // exact micro-unit contributions, doc-as-query probes, df-capped
-    "sim_bm25_topk" -> ((s, dir) =>
-      Dedup.bm25TopK(Tables.documents(s, dir)).orderBy("query_id", "rank")),
-
-    // reciprocal-rank fusion of the BM25 arm and the dense arm (depth 10
-    // each, same doc-as-query probes): rrf = Σ 10^6 DIV (60 + rank) —
-    // exact integers, one equi-join of two bounded rank frames
-    "sim_hybrid_topk" -> ((s, dir) =>
-      Similarity.hybridTopK(Tables.documents(s, dir), Tables.embeddings(s, dir))
-        .orderBy("query_id", "rank")),
-
-    // MRR@5 of the fused stack vs brute-cosine truth: first-true-hit
-    // rank and 10^6 DIV rank per serving list (lex/dense/fused) — the
-    // position-aware quality number recall@k can't provide; the dense
-    // arm is brute force, so its column is the calibration line
-    "sim_mrr_audit" -> ((s, dir) =>
-      Similarity.mrrAudit(Tables.documents(s, dir), Tables.embeddings(s, dir))
-        .orderBy("query_id")),
-
-    // k-anonymity exposure over (lang, source, ceil-pow2 length) quasi-
-    // identifiers — the indirect-identifier audit next to the PII scrub
-    "q_anonymity_census" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .withColumn("len_bucket",
-          when(col("n_chars") <= 1L, 1L)
-            .otherwise(expr("CAST(shiftleft(1L, length(bin(n_chars - 1))) AS BIGINT)")))
-      Expectations.kAnonymityCensus(d, Seq("lang", "source", "len_bucket"), k = 5L)
-        .orderBy("lang")
-    }),
-
-    // context-window prep: 16-token windows every 12 tokens (short docs in
-    // this corpus still produce 2-3 overlapping chunks each)
-    "text_chunks" -> ((s, dir) =>
-      TextAnalysis.chunkDocuments(Tables.documents(s, dir), window = 16, stride = 12)
-        .orderBy("doc_id", "chunk_id")),
-
-    "text_oov" -> ((s, dir) =>
-      TextAnalysis.oovRate(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    "text_unigram_lp" -> ((s, dir) =>
-      TextAnalysis.unigramLogLik(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    // order-sensitive fluency: corpus-trained bigram log-likelihood with
-    // add-one smoothing, micro-nat quantized before the per-doc sum
-    "text_bigram_lp" -> ((s, dir) =>
-      TextAnalysis.bigramLogLik(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    // the fluency scorer's train-once/score-many face: scoring through
-    // the STORED model artifact (pair/prefix/V frame) — on the training
-    // corpus every pair is present, so the served scores hash-match the
-    // live trainer's oracle; unseen pairs/prefixes back off to the
-    // add-one floor (spec'd against a driver model)
-    "text_bigram_lp_stored" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.bigramScoreFrom(docs,
-        Artifacts.cached(s, "lm", "bigram", dir)(
-          TextAnalysis.bigramModel(docs).coalesce(1)))
-        .orderBy("doc_id")
-    }),
-
-    // the TRAINED quality classifier: exact empirical-risk minimization
-    // over a broadcast integer hypothesis grid in micro-ratio feature
-    // space, teacher = the rule-based quality floor — the fitted weights
-    // (it recovers the teacher's own (4,3,3,-5)) hash-checked end to end
-    "text_quality_model" -> ((s, dir) =>
-      graft.ops.QualityModel.train(Tables.documents(s, dir))),
-
-    // the model's corpus scoring: exact integer margin, sign prediction
-    // (ties negative), teacher label alongside — the confusion audit
-    "text_quality_score" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.ops.QualityModel.scoreFrom(
-        graft.ops.QualityModel.train(docs), docs).orderBy("doc_id")
-    }),
-
-    // the stored-model serving face (the bigramModel artifact pattern):
-    // train once into a ≤513-row parquet artifact, score from it — no
-    // training job on re-touch; shares the live entry's oracle
-    "text_quality_score_stored" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.ops.QualityModel.scoreFrom(
-        Artifacts.cached(s, "lm", "quality_erm", dir)(
-          graft.ops.QualityModel.train(docs).coalesce(1)), docs)
-        .orderBy("doc_id")
-    }),
-
-    "text_source_scorecard" -> ((s, dir) =>
-      TextAnalysis.sourceScorecard(Tables.documents(s, dir)).orderBy("source")),
-
-    // corpus-balance inequality: rank-form Gini in ONE division
-    "text_source_gini" -> ((s, dir) =>
-      TextAnalysis.sourceGini(Tables.documents(s, dir)).orderBy("source")),
-
-    // vocabulary diversity per source: token Shannon entropy in exact
-    // integer micro-nats (template farms score low, prose high)
-    "text_source_entropy" -> ((s, dir) =>
-      TextAnalysis.sourceEntropy(Tables.documents(s, dir)).orderBy("source")),
-
-    // data-mixture drift: KL(source ‖ corpus) over token distributions,
-    // exact integer micro-nats; shares the entropy state frame
-    "text_source_kl" -> ((s, dir) =>
-      TextAnalysis.sourceKl(Tables.documents(s, dir)).orderBy("source")),
-
-    // seasonal-naive forecast backtest: forecast(h) = actual(h − 24h),
-    // exact micro-unit MAE/bias per type — one scan, dual-role explode,
-    // gap-safe (no row-lag misalignment across missing hours)
-    "q_seasonal_backtest" -> ((s, dir) =>
-      TimeSeries.seasonalBacktest(Tables.events(s, dir)).orderBy("event_type")),
-
-    // DSIR importance weights: per-doc log-likelihood ratio between the
-    // hashed-ngram model of the English subcorpus (the target) and the
-    // whole-corpus model — the data-selection score, exact micro-nats
-    "text_dsir_weights" -> ((s, dir) =>
-      Sampling.dsirWeights(Tables.documents(s, dir), col("lang") === "en")
-        .orderBy("doc_id")),
-
-    // the resampling step those weights exist for: the top-100 most
-    // target-resembling docs, TakeOrdered shape (never a global sort)
-    "text_dsir_select" -> ((s, dir) =>
-      Sampling.dsirSelect(Tables.documents(s, dir), col("lang") === "en")
-        .orderBy("rank")),
-
-    // count-min sketch certificate: exact top-20 token counts next to
-    // their 4×1024-cell sketch estimates (overcount ≥ 0 by construction);
-    // one scan — the counts frame is scope-cached like dedup postings
-    "q_heavy_cms" -> ((s, dir) =>
-      graft.ops.Sketches.cmsCertificate(Tables.documents(s, dir))
-        .orderBy(col("n_exact").desc, col("token"))),
-
-    // portable-HLL cardinality certificate: the md5-register sketch AND
-    // the exact distinct count from one linear plan, realized error
-    // reported next to the estimate (real 100 TB use calls
-    // Sketches.hllRegisters and skips the exact pass)
-    "q_distinct_hll" -> ((s, dir) =>
-      graft.ops.Sketches.hllCertificate(Tables.events(s, dir), col("user_id"))),
-
-    // audience overlap from sketches alone: est(A∩B) by inclusion-
-    // exclusion over the A/B/union register sets, exact flags beside it
-    "q_distinct_overlap" -> ((s, dir) =>
-      graft.ops.Sketches.hllOverlapCertificate(Tables.events(s, dir),
-        col("event_type"), col("user_id"), "click", "purchase")),
-
-    // the same sketch composed relationally: distinct users PER EVENT
-    // TYPE in one pass — what a register-table representation buys over
-    // an opaque blob (GROUP BY composes with it)
-    "q_distinct_hll_by_type" -> ((s, dir) =>
-      graft.ops.Sketches.hllCertificateBy(Tables.events(s, dir),
-        Seq("event_type"), col("user_id")).orderBy("event_type")),
-
-    // KMV overlap: est(A∩B) as (sample fraction)·est(union) — a PRODUCT,
-    // not HLL's difference of three estimates, so small intersections
-    // keep bounded relative error; exact counts beside the estimates
-    "q_distinct_kmv" -> ((s, dir) =>
-      graft.ops.Sketches.kmvOverlapCertificate(Tables.events(s, dir),
-        col("event_type"), col("user_id"), "click", "purchase")),
-
-    // the KMV sketch composed relationally — distinct users PER EVENT
-    // TYPE, k smallest hashes per key by one rank window, estimate and
-    // exact count side by side (the GROUP-BY proof HLL already has)
-    "q_distinct_kmv_by_type" -> ((s, dir) =>
-      graft.ops.Sketches.kmvCertificateBy(Tables.events(s, dir),
-        Seq("event_type"), col("user_id")).orderBy("event_type")),
-
-    // deterministic bottom-k row-sample quantile sketch: per-type
-    // p50/p90 picked from the k hash-smallest rows, exact discrete
-    // quantiles and the realized CDF error measured beside them
-    "q_quantiles_sketch" -> ((s, dir) =>
-      graft.ops.Sketches.quantileCertificate(Tables.events(s, dir))
-        .orderBy("event_type")),
-
-    // Zipf-law fit over the frequency head: OLS slope/intercept on the
-    // micro-quantized log-rank/log-count line (healthy prose ≈ −1)
-    "text_zipf" -> ((s, dir) =>
-      TextAnalysis.zipfFit(Tables.documents(s, dir))),
-
-    // quality-floor threshold sweep: docs/tokens surviving each candidate
-    // floor — the curve read before committing to the scorecard floor
-    "text_quality_calibration" -> ((s, dir) =>
-      TextAnalysis.qualityCalibration(Tables.documents(s, dir)).orderBy("floor_pct")),
-
-    // Heaps-law checkpoints: distinct vocabulary among the first
-    // 1%/10%/100% of doc ids — min-first-seen, no cumulative distinct
-    "text_vocab_growth" -> ((s, dir) =>
-      TextAnalysis.vocabGrowth(Tables.documents(s, dir)).orderBy("pct")),
-
-    // char-class composition: the C4-family debris detector (markup,
-    // base64, emoji soup all surface as high other_share)
-    "text_char_classes" -> ((s, dir) =>
-      TextAnalysis.charClasses(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    "sim_label_affinity" -> ((s, dir) =>
-      graft.ops.Similarity.labelAffinity(Tables.embeddings(s, dir))
-        .orderBy("label_a", "label_b")),
-
-    // per-class cohesion: mean (micro-quantized before the sum) and
-    // worst member->centroid cosine — the label-quality table
-    "sim_label_cohesion" -> ((s, dir) =>
-      graft.ops.Similarity.labelCohesion(Tables.embeddings(s, dir)).orderBy("label")),
-
-    // embedding drift between the vec_id-parity halves: cross-multiplied
-    // exact centroid shift, decimal-string rendered
-    "sim_centroid_drift" -> ((s, dir) =>
-      graft.ops.Similarity.centroidDrift(Tables.embeddings(s, dir),
-        col("vec_id") % 2 === 1).orderBy("label")),
-
-    "text_curation" -> ((s, dir) =>
-      Curation.curationStats(Tables.documents(s, dir))),
-
-    // the full raw→train-ready chain in one composed plan
-    "text_train_ready" -> ((s, dir) =>
-      Curation.trainReadyStats(Tables.documents(s, dir))),
-
-    // HTML→text extraction: expression-built doc-id-varied page, then
-    // the single-pass codegen'd walk strips tags, elides script/style/
-    // comments, decodes the core entities, and prices the boilerplate
-    // signals; md5 of the extracted text pins the string end to end
-    "text_html_extract" -> ((s, dir) =>
-      TextAnalysis.htmlExtractCensus(Tables.documents(s, dir))
-        .orderBy("doc_id")),
-
-    // the decode gate between container payloads and every string op:
-    // doc-id-cycled ill-formed UTF-8 planted after the text bytes,
-    // censused and REPAIRED (one U+FFFD per maximal subpart — the JDK
-    // decoder's policy, property-pinned against new String(bytes)); the
-    // oracle derives byte/codepoint/repair counts and the repaired
-    // string's md5 from the construction classes, exact for any text
-    "text_utf8_census" -> ((s, dir) =>
-      TextAnalysis.utf8Census(TextAnalysis.rawBytesFrame(
-        Tables.documents(s, dir))).orderBy("doc_id")),
-
-    // crawl-frontier URL canonicalization: doc_id-cycled wire noise
-    // (case, default port, tracking params, fragment, trailing slash)
-    // normalized by RE2-safe regex steps the oracle replays verbatim —
-    // raw and canonical STRINGS hash-compared end to end
-    "text_url_canon" -> ((s, dir) =>
-      Curation.urlFrontier(Tables.documents(s, dir))
-        .orderBy("doc_id", "url_raw")),
-
-    // the frontier dedup census: fetch volume saved by canonicalization
-    // (a kept query param is a DIFFERENT resource and must NOT merge)
-    "text_url_dedup" -> ((s, dir) =>
-      Curation.urlDedupCensus(Curation.urlFrontier(
-        Tables.documents(s, dir)))),
-
-    // RFC 9309 robots parse: per-domain robots.txt (deterministic
-    // fixture classes — bot-specific override, block-all + re-allow,
-    // shared user-agent group) → the (domain, agent, rule, prefix)
-    // rule table a crawl frontier broadcasts
-    "text_robots_rules" -> ((s, dir) =>
-      Curation.robotsRules(Curation.robotsTable(Tables.documents(s, dir)))
-        .orderBy("domain", "line_no", "agent")),
-
-    // ... and the gate itself: per doc the winning rule under
-    // longest-prefix-wins with Allow breaking ties (exact agent group
-    // beats the catch-all) — the politeness filter that completes
-    // canonicalUrl → url_dedup → robots
-    "text_robots_gate" -> ((s, dir) =>
-      Curation.robotsGate(Tables.documents(s, dir))
-        .orderBy("doc_id")),
-
-    // the fetch budget the gate leaves: per source, docs and tokens a
-    // polite crawler may actually pull — the census the frontier's
-    // owner reads before dispatching the fleet
-    "text_robots_budget" -> ((s, dir) =>
-      Curation.robotsBudget(Tables.documents(s, dir))
-        .orderBy("source")),
-
-    // ... and the politeness TIME budget: Crawl-delay parsed per
-    // user-agent group (participating in the RFC grouping even though
-    // the path rules don't emit it), exact-agent else catch-all else
-    // the 1 s default, times the allowed count — the number that
-    // decides how many crawler slots a domain needs
-    "text_robots_crawl_time" -> ((s, dir) =>
-      Curation.robotsCrawlTime(Tables.documents(s, dir))
-        .orderBy("domain")),
-
-    // sitemap walk (sitemaps.org): per-domain TWO-LEVEL sitemaps —
-    // a sitemapindex over urlset chunks capped at the protocol file
-    // bound (cap 7 here so the index level carries real multi-chunk
-    // traffic at test scale; production keeps the 50k default) —
-    // built by expression, then parsed back off the XML STRINGS:
-    // index → chunk locs → equi-join fetch → per-URL loc/lastmod/
-    // priority with the optional fields NULL when omitted
-    "text_sitemap_entries" -> ((s, dir) =>
-      Curation.sitemapEntries(Tables.documents(s, dir), cap = 7)
-        .orderBy("domain", "loc")),
-
-    // ... and the frontier seed census the walk feeds: per domain,
-    // what the sitemap advertises vs what the corpus already has vs
-    // what a POLITE crawler may fetch of the new (robots precedence on
-    // each listed URL) and the serial cost at the effective
-    // Crawl-delay — discovery, dedup, politeness, and budget composed
-    // into one domain-grain frame
-    "text_sitemap_frontier" -> ((s, dir) =>
-      Curation.sitemapFrontier(Tables.documents(s, dir), cap = 7)
-        .orderBy("domain")),
-
-    // the robots → sitemap discovery handshake: Sitemap directives
-    // advertised per domain (group- and position-independent per the
-    // protocol), resolved against the index actually serving the
-    // domain, with the chunk fan-out behind the resolved index —
-    // zero directives is the convention-fallback branch
-    "text_robots_sitemaps" -> ((s, dir) =>
-      Curation.robotsSitemapCensus(Tables.documents(s, dir), cap = 7)
-        .orderBy("domain")),
-
-    // code-vs-prose routing: symbol density, camelCase, keyword and
-    // indent counts in exact integer ppm; the gate a mixed corpus runs
-    // before language-ID or perplexity scoring
-    "text_code_detect" -> ((s, dir) =>
-      TextAnalysis.codeDetect(Tables.documents(s, dir))
-        .orderBy("doc_id")),
-
-    // CCNet-style perplexity buckets: head/middle/tail rank terciles of
-    // mean bigram log-prob under the corpus-trained LM (exact micro-nat
-    // floor means, doc_id tie-break) — the split a web corpus takes
-    // before mixture weighting
-    "text_ppl_buckets" -> ((s, dir) =>
-      TextAnalysis.pplBuckets(Tables.documents(s, dir))
-        .orderBy("bucket")),
-
-    // the 100 TB face of the same split: tercile CUT POINTS from a
-    // deterministic bottom-k row sample (TakeOrdered — no global rank
-    // window, no single-task corpus sort), then one broadcast compare
-    // at scan speed; the portable md5 row hash makes the sample — and
-    // so the whole face — oracle-replayable, not merely rows-only
-    "text_ppl_buckets_sketch" -> ((s, dir) =>
-      TextAnalysis.pplBucketsSketch(Tables.documents(s, dir))
-        .orderBy("bucket")),
-
-    // the split CCNet actually ships: per-LANGUAGE terciles (a global
-    // cut would let a verbose language crowd out a terse one) — the
-    // same sketch discipline keyed by lang, per-lang bottom-k samples
-    // and one broadcast langs×1 cut frame
-    "text_ppl_buckets_by_lang" -> ((s, dir) =>
-      TextAnalysis.pplBucketsSketchByLang(Tables.documents(s, dir))
-        .orderBy("lang", "bucket")),
-
-    // gate-redundancy diagnostic: Cohen's kappa between the Gopher
-    // minimum-length gate and the exact-integer repetition cap — how
-    // much the second filter agrees with the first beyond chance;
-    // every term an exact integer, ONE double division
-    "text_gate_kappa" -> ((s, dir) =>
-      Curation.gateKappa(Tables.documents(s, dir))),
-
-    // the composed Common-Crawl read path: page → response record →
-    // WARC; the engine walks the record geometry, slices the response
-    // payload back out of the raw bytes, and runs the extraction census
-    // on what the container actually carried
-    "q_multimodal_warc_html" -> ((s, dir) =>
-      Multimodal.warcHtmlTextCensus(Tables.documents(s, dir))
-        .orderBy("doc_id")),
-
-    // C4-style LINE-level dedup: fixed 8-word windows, boilerplate =
-    // a line in >= 2 distinct docs; per-doc census + exact ppm + md5 of
-    // the doc reassembled without its boilerplate lines
-    "text_line_dedup" -> ((s, dir) =>
-      Dedup.lineDedup(Tables.documents(s, dir)).orderBy("doc_id")),
-
-    // exact substring dedup by prefix-doubling suffix ranks (Lee et al.
-    // 2021): every position whose 32-token window recurs — anywhere /
-    // cross-doc — flagged via log2(32) doubling rounds of rank classing
-    // (no window string ever materialized); the oracle unrolls the same
-    // five rounds
-    // census and removal SHARE the stored rank artifact (the doubling
-    // rounds run once per corpus, the pair-list seam)
-    "dedup_substring" -> ((s, dir) =>
-      Dedup.substringDedupFromRanks(Tables.documents(s, dir),
-        substrRanks(s, dir)).orderBy("doc_id")),
-
-    // the removal face: every token covered by a repeated 32-window is
-    // CUT (the ExactSubstr rule — all occurrences) and the doc
-    // reassembled; per-doc counts + kept-md5 + exact ppm
-    "dedup_substring_remove" -> ((s, dir) =>
-      Dedup.substringDedupRemoveFromRanks(Tables.documents(s, dir),
-        substrRanks(s, dir)).orderBy("doc_id")),
-
-    // IMAGE near-dup: 64-bit integer average hash over the BMP pixel
-    // walk (codegen'd, 16 hex chars), planted one-byte-perturbed twins,
-    // hamming-banded pair join through the simhash pigeonhole — the
-    // multimodal member of the dedup family; the oracle rebuilds both
-    // pixel streams and replays hash, banding, and exact hamming
-    "dedup_image_ahash" -> ((s, dir) =>
-      Dedup.imageAHashPairs(Multimodal.imageAHash(
-        Multimodal.imageNearDupFrame(Tables.documents(s, dir))))
-        .orderBy("id1", "id2")),
-
-    // the gradient twin: 65-cell difference hash (adjacent-cell
-    // comparisons — the axis that survives brightness ramps aHash
-    // cannot), same planted twins, same pigeonhole bands
-    "dedup_image_dhash" -> ((s, dir) =>
-      Dedup.imageHashPairs(Multimodal.imageDHash(
-        Multimodal.imageNearDupFrame(Tables.documents(s, dir))), "dhash")
-        .orderBy("id1", "id2")),
-
-    // the AUDIO member of the perceptual-hash family: 65 time bands of
-    // mean |amplitude| over the WAV PCM stream, adjacent-band gradient
-    // bits (uniform-gain invariant), planted one-byte twins recovered
-    // through the SAME pigeonhole bands — dedup closed across text,
-    // image, and audio
-    "dedup_audio_dhash" -> ((s, dir) =>
-      Dedup.imageHashPairs(Multimodal.audioDHash(
-        Multimodal.audioNearDupFrame(Tables.documents(s, dir))), "dhash")
-        .orderBy("id1", "id2")),
-
-    // ONE terminal resolution across modalities: the image-aHash and
-    // audio-dHash pair lists union into the SAME pointer-doubling
-    // closure the text family uses — perceptual dup clusters for the
-    // whole media corpus from one shared components engine. Rides the
-    // Artifacts seam (the jaccardComponents shape): at 100 TB the
-    // closure is a nightly job and every consumer reads its parquet
-    "dedup_media_components" -> ((s, dir) =>
-      Artifacts.cached(s, "comps", "media", dir) {
-        val docs = Tables.documents(s, dir)
-        val img = Dedup.imageAHashPairs(Multimodal.imageAHash(
-          Multimodal.imageNearDupFrame(docs)))
-        val aud = Dedup.imageHashPairs(Multimodal.audioDHash(
-          Multimodal.audioNearDupFrame(docs)), "dhash")
-        Graph.connectedComponents(
-          img.select("id1", "id2").unionByName(aud.select("id1", "id2")))
-      }.orderBy("id")),
-
-    // C4-style URL hygiene: per-registered-domain census over doc URLs
-    // (derived deterministically — the fixture has no URL column; the
-    // extraction then reads the URL STRING, never the construction)
-    "text_domain_census" -> ((s, dir) =>
-      Curation.domainCensus(Tables.documents(s, dir)).orderBy("domain")),
-
-    // the blocklist gate's census twin: per source, total/blocked/kept
-    // counts under the default broadcast blocklist
-    "text_domain_gated" -> ((s, dir) =>
-      Curation.domainGatedStats(Tables.documents(s, dir)).orderBy("source")),
-
-    // PSL-aware URL hygiene: registered domains under multi-label
-    // public suffixes (cdn.foo.co.uk -> foo.co.uk) via a plan-time
-    // literal suffix CASE chain — the extraction that survives real
-    // URLs where the last-dot-label rule calls the TLD "uk"
-    "text_domain_psl" -> ((s, dir) =>
-      Curation.domainCensusPsl(Tables.documents(s, dir))
-        .orderBy("domain", "suffix")),
-
-    // the C4 "badwords" token gate's census: exact whitespace-token
-    // match against a plan-time literal list — a pure per-row filter,
-    // no join; per source, total/blocked/kept counts
-    "text_token_gated" -> ((s, dir) =>
-      Curation.tokenGatedStats(Tables.documents(s, dir)).orderBy("source")),
-
-    // the capstone budget: docs and tokens surviving the full chain,
-    // priced by SOURCE — what the training run actually reads
-    "text_token_budget" -> ((s, dir) =>
-      Curation.tokenBudget(Tables.documents(s, dir)).orderBy("source")),
-
-    // the mixture PLAN over that budget: α=½ temperature allocation of a
-    // 1B-token budget across sources (sqrt is the one engine-portable
-    // temperature; weights quantize to integer micro-units)
-    "q_mix_temperature" -> ((s, dir) =>
-      Sampling.temperatureMix(Tables.documents(s, dir), 1000000000L)
-        .orderBy("source")),
-
-    // ---- LLM-pipeline: subword (BPE) tokenization ------------------------
-    // the merge-table artifact (train-once seam like centroids/codebooks),
-    // the per-doc subword pricing it enables, and the train-ready budget
-    // re-priced in the units a trainer actually bills; the oracle unrolls
-    // the identical greedy rounds as chained materialized CTEs
-    "text_bpe_vocab" -> ((s, dir) =>
-      Bpe.trainMerges(Tables.documents(s, dir)).orderBy("rank")),
-    "text_bpe_tokens" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Bpe.tokenCounts(docs, Bpe.train(docs)).orderBy("doc_id")
-    }),
-    "text_bpe_segments" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Bpe.segments(docs, Bpe.train(docs)).orderBy("doc_id")
-    }),
-    // incremental vocab maintenance: the stored (word, n) artifact is
-    // BPE training's sufficient statistic and a count monoid, so merging
-    // a batch and retraining from counts IS a full retrain — the oracle
-    // is literally the full-corpus training SQL
-    "text_bpe_vocab_increment" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val seen = docs.filter(Sampling.splitColumn(col("doc_id")) === "train")
-      val batch = docs.filter(Sampling.splitColumn(col("doc_id")) === "eval")
-      val merged = Bpe.vocabIncrement(Bpe.wordCounts(seen), batch)
-      Bpe.mergesFrame(s, Bpe.trainFromCounts(merged)).orderBy("rank")
-    }),
-    "text_token_budget_bpe" -> ((s, dir) =>
-      Bpe.tokenBudget(Tables.documents(s, dir)).orderBy("source")),
-    // the budget through the ARTIFACT seam: prices against a STORED
-    // merge table (first touch trains and persists, later touches only
-    // read — zero training jobs, spec-pinned), output identical to the
-    // live-trained budget because training is deterministic and the
-    // frame round-trips parquet exactly; hash-checked against the SAME
-    // oracle as the live entry
-    "text_token_budget_stored" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Bpe.tokenBudgetFrom(docs,
-        Bpe.mergeArtifact(docs, Artifacts.path("bpe", "budget16", dir), nMerges = 16))
-        .orderBy("source")
-    }),
-    // tokenizer-quality scorecard: per-source bytes-per-BPE-token — the
-    // compression metric a tokenizer eval tracks; exact integer sums,
-    // one division per source, priced through the SAME stored artifact
-    "text_bpe_compression" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Bpe.compression(docs, Bpe.mergesFromFrame(
-        Bpe.mergeArtifact(docs, Artifacts.path("bpe", "budget16", dir), nMerges = 16)))
-        .orderBy("source")
-    }),
-    // per-language fertility (BPE tokens per whitespace word) — the
-    // multilingual-equity scorecard, priced through the SAME stored
-    // 16-round artifact as the budget/compression consumers
-    "text_bpe_fertility" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Bpe.fertility(docs, Bpe.mergesFromFrame(
-        Bpe.mergeArtifact(docs, Artifacts.path("bpe", "budget16", dir), nMerges = 16)))
-        .orderBy("lang")
-    }),
-    // the OTHER production tokenizer family beside BPE: hard-EM unigram
-    // LM (SentencePiece-style) — candidate pieces with quantized
-    // micro-nat costs, Viterbi min-cost segmentation, fixed EM rounds in
-    // exact integer arithmetic; the oracle replays the WHOLE trainer
-    // (seed counts, per-position DP CTEs, recount, re-score)
-    "text_ulm_vocab" -> ((s, dir) =>
-      graft.ops.Ulm.vocab(Tables.documents(s, dir)).orderBy("piece")),
-    // its pricing consumer: per-doc ULM token counts over the trained
-    // vocabulary's word universe, one broadcast word→pieces join
-    "text_ulm_tokens" -> ((s, dir) =>
-      graft.ops.Ulm.tokenCounts(Tables.documents(s, dir)).orderBy("doc_id")),
-    // the tokenizer-equity comparison entry in ULM units, beside
-    // text_bpe_fertility's BPE pricing of the same corpus
-    "text_ulm_fertility" -> ((s, dir) =>
-      graft.ops.Ulm.fertility(Tables.documents(s, dir)).orderBy("lang")),
-    // the stored-segmentation serving face (the bigramModel artifact
-    // pattern): train once into a bounded parquet table, price from it
-    // with zero training jobs on re-touch; shares the live oracle
-    "text_ulm_tokens_stored" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.ops.Ulm.tokenCountsFrom(docs,
-        graft.ops.Ulm.segmentArtifact(docs, Artifacts.path("lm", "ulm_seg", dir)))
-        .orderBy("doc_id")
-    }),
-    // PRODUCTION-DEPTH merge table: the same greedy trainer run to 1024
-    // rounds driver-side on the one-scan word-count statistic. No
-    // unrolled oracle at this depth (rows-only); its structural
-    // companion is text_bpe_vocab — greedy BPE is prefix-consistent, so
-    // the deep table's first 16 rows ARE the oracle-green 16-round
-    // table (BpeSpec pins the prefix equality and the golden sequence)
-    "text_bpe_vocab_deep" -> ((s, dir) =>
-      Bpe.trainDeepMerges(Tables.documents(s, dir), nMerges = 1024).orderBy("rank")),
-    // the deep table's pricing consumer: same per-row codegen'd replay,
-    // depth-independent (a constant-size loop, janino-safe past 64
-    // merges). Rows-only; companion text_bpe_tokens + BpeSpec's
-    // loop-vs-unrolled and driver-replay equalities
-    "text_bpe_tokens_deep" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Bpe.tokenCounts(docs, Bpe.trainDeep(docs, nMerges = 1024)).orderBy("doc_id")
-    }),
-
-    // ---- LLM-pipeline: multimodal decode + features ----------------------
-    // end-to-end byte round-trip: the BMP/WAV headers are BUILT by
-    // expression on the write side, PARSED from the raw bytes on the read
-    // side, and the body DSP (per-channel mean/std over BMP pixels, RMS +
-    // zero-crossing rate over WAV PCM) runs as codegen'd expressions over
-    // the same bytes; the oracle recomputes headers AND features
-    // independently from the byte stream, so a wrong offset, byte order,
-    // or accumulation order fails the hash compare
-    "q_multimodal" -> ((s, dir) =>
-      Multimodal.extractFeatures(Multimodal.mediaFrame(Tables.documents(s, dir)))
-        .select(col("doc_id"), col("media_type"), col("container"), col("n_bytes"),
-          col("width"), col("height"), col("sample_rate"), col("channels"),
-          when(col("container") === "wav", element_at(col("feature"), 1)).as("pcm_rms"),
-          when(col("container") === "wav", element_at(col("feature"), 2)).as("pcm_zcr"),
-          when(col("container") === "bmp", element_at(col("feature"), 1)).as("px_mean_b"),
-          when(col("container") === "bmp", element_at(col("feature"), 2)).as("px_mean_g"),
-          when(col("container") === "bmp", element_at(col("feature"), 3)).as("px_mean_r"),
-          when(col("container") === "bmp", element_at(col("feature"), 4)).as("px_std_b"),
-          when(col("container") === "bmp", element_at(col("feature"), 5)).as("px_std_g"),
-          when(col("container") === "bmp", element_at(col("feature"), 6)).as("px_std_r"))
-        .orderBy("doc_id")),
-
-    // JPEG/FLAC: container build → marker-walk / bit-group decode, all
-    // expression-side; the exposed sof_off pins the walk (its landing
-    // offset varies per row with the doc_id-derived COM length)
-    "q_multimodal_codecs" -> ((s, dir) =>
-      Multimodal.decodeCodecHeaders(Multimodal.codecFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // codec-body DSP: the JPEG body sits at a per-row WALKED offset and
-    // ends before the EOI, so the pixel kernel runs through the
-    // dynamic-offset expression; FLAC PCM is the fixed-42 twin of WAV
-    "q_multimodal_codec_features" -> ((s, dir) =>
-      Multimodal.extractCodecFeatures(Multimodal.codecFrame(Tables.documents(s, dir)))
-        .select(col("doc_id"), col("media_type"), col("container"),
-          when(col("container") === "flac", element_at(col("feature"), 1)).as("pcm_rms"),
-          when(col("container") === "flac", element_at(col("feature"), 2)).as("pcm_zcr"),
-          when(col("container") === "jpeg", element_at(col("feature"), 1)).as("px_mean_b"),
-          when(col("container") === "jpeg", element_at(col("feature"), 2)).as("px_mean_g"),
-          when(col("container") === "jpeg", element_at(col("feature"), 3)).as("px_mean_r"),
-          when(col("container") === "jpeg", element_at(col("feature"), 4)).as("px_std_b"),
-          when(col("container") === "jpeg", element_at(col("feature"), 5)).as("px_std_g"),
-          when(col("container") === "jpeg", element_at(col("feature"), 6)).as("px_std_r"))
-        .orderBy("doc_id")),
-
-    // progressive-JPEG table/scan census: DQT/DHT counts and per-scan
-    // byte lengths re-derived from the BYTES by the full native marker
-    // walk (length-less scan regions terminated by FF-scan with
-    // stuffing/RSTn framing) — the oracle derives the same integers
-    // analytically from the construction formulas, so a wrong hop, a
-    // missed table, or an off-by-one scan boundary fails the hash
-    "q_multimodal_scan_stats" -> ((s, dir) =>
-      Multimodal.scanStats(Multimodal.scanFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // PNG chunk walk: payload BUILT by expression (CRC-32 via Spark's
-    // crc32), PARSED back by the native walk with per-chunk CRC
-    // recompute — crc_bad = 0 across the corpus certifies the framing
-    "q_multimodal_png" -> ((s, dir) =>
-      Multimodal.pngStats(Multimodal.pngFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // EXIF metadata walk: APP1/TIFF IFD chains BUILT by expression in
-    // BOTH byte orders (pointer IFDs + a next-IFD thumbnail chain),
-    // re-PARSED from the bytes by the native IFD walk — endianness,
-    // tag census, and the GPS half the scrub face erases; the oracle
-    // recomputes every column analytically from the construction
-    "q_multimodal_exif" -> ((s, dir) =>
-      Multimodal.exifStats(Multimodal.exifFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // ... and the GPS scrub read back through the SAME walk: the
-    // multimodal counterpart of text_pii — coordinates zeroed,
-    // structure (tags, types, counts, offsets) bit-for-bit preserved
-    "q_multimodal_exif_scrub" -> ((s, dir) =>
-      Multimodal.exifScrubStats(Multimodal.exifFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // ISO-BMFF (MP4) box walk: size/type-framed payload BUILT by
-    // expression (ftyp + moov[mvhd + traks] + mdat split), PARSED back
-    // by the native walk — movie timescale/duration out of mvhd, trak
-    // census from moov's tiled children, mdat byte totals re-derived
-    // from the per-row box geometry
-    "q_multimodal_mp4" -> ((s, dir) =>
-      Multimodal.mp4Stats(Multimodal.mp4Frame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // WARC (ISO 28500) — the container a Common-Crawl-scale text
-    // pipeline reads FIRST: version-line + named-header + Content-Length
-    // framed records BUILT by expression with doc-id-varied geometry,
-    // re-PARSED from the raw bytes by the native record walk; the
-    // oracle recomputes the census from the construction arithmetic
-    "q_multimodal_warc" -> ((s, dir) =>
-      Multimodal.warcStats(Multimodal.warcFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // the WARC seam's per-record geometry: one row per record with the
-    // payload offset a reader slices by — walk + explode expression-side
-    "q_multimodal_warc_records" -> ((s, dir) =>
-      Multimodal.warcRecords(Multimodal.warcFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id", "rec_idx")),
-
-    // the corpus-wide census monoid row (the streaming face's batch
-    // twin — warcStateSink serves the same sums)
-    "q_multimodal_warc_census" -> ((s, dir) =>
-      Multimodal.warcCensus(Multimodal.warcStats(
-        Multimodal.warcFrame(Tables.documents(s, dir))))),
-
-    // gzip (RFC 1952) — the MEMBER framing real Common-Crawl captures
-    // arrive in (one gzip member per record, concatenated): multi-member
-    // streams BUILT by expression with doc-id-varied geometry (optional
-    // FNAME/FEXTRA fields, per-member MTIME, stored-block splits),
-    // re-PARSED from the raw bytes by the native member walk with CRC32
-    // + ISIZE recomputed per member; the oracle recomputes the census
-    // from the construction arithmetic
-    "q_multimodal_gzip" -> ((s, dir) =>
-      Multimodal.gzipStats(Multimodal.gzipFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // the gzip seam's per-member geometry: one row per member with the
-    // header/deflate lengths an indexer records (the cdx offset
-    // discipline) — walk + explode expression-side
-    "q_multimodal_gzip_members" -> ((s, dir) =>
-      Multimodal.gzipMembers(Multimodal.gzipFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id", "member_idx")),
-
-    // the full .warc.gz read path: WARC records wrapped in gzip members
-    // by expression, inflated back (stored-block identity) and run
-    // through the SAME WARC census walk — the oracle is the WARC
-    // census's, verbatim, because the inflated stream is byte-identical
-    // to the uncompressed build
-    "q_multimodal_warc_gz" -> ((s, dir) =>
-      Multimodal.warcGzStats(Multimodal.warcGzFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // the cdx seekable-index artifact over the .warc.gz frame: record
-    // geometry joined with the gzip member whose inflated span holds
-    // the payload start — built once at the Artifacts seam, served
-    // from parquet; the oracle re-derives both walks analytically
-    "q_multimodal_cdx" -> ((s, dir) =>
-      Artifacts.cached(s, "cdx", "warcgz", dir)(
-        Multimodal.cdxIndex(Multimodal.warcGzFrame(Tables.documents(s, dir))))
-        .orderBy("doc_id", "rec_idx")),
-
-    // the FULL real-capture chain: HTML pages inside WARC response
-    // records compressed with actual zlib deflate, read back end to end
-    // by OUR inflater -> record walk -> payload slice -> extraction
-    // census; the oracle is text_html_extract's verbatim because the
-    // round trip is lossless and the inflater is CRC-certified
-    "q_multimodal_warc_gz_html" -> ((s, dir) =>
-      Multimodal.warcGzRealHtmlCensus(Tables.documents(s, dir))
-        .orderBy("doc_id")),
-
-    // the REAL-capture read path: WARC streams compressed with actual
-    // zlib deflate (dynamic/fixed Huffman via java.util.zip.Deflater,
-    // level cycling 1-9 by doc) and read back by OUR RFC 1951 inflater.
-    // gz_crc_ok = 1 is the built-in certificate: the walker recomputes
-    // CRC32 + ISIZE over what IT inflates, so a match proves the
-    // inflater against zlib's compressor byte for byte; the WARC census
-    // columns then prove the inflated stream parses identically to the
-    // uncompressed build (one analytic oracle, no byte ever parsed by
-    // DuckDB)
-    "q_multimodal_gzip_real" -> ((s, dir) =>
-      Multimodal.warcGzRealStats(
-        Multimodal.warcGzRealFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // POSIX ustar (tar) — the container WebDataset shards multimodal
-    // training samples into: per-doc archives BUILT by expression
-    // (`<doc_id>.{txt,cls,json}` members, computed header checksums,
-    // NUL padding, two zero terminator blocks), re-PARSED from the raw
-    // bytes by the native header-chain walk with the checksum
-    // RECOMPUTED per member; the oracle re-derives the census from the
-    // construction arithmetic
-    "q_multimodal_tar" -> ((s, dir) =>
-      Multimodal.tarStats(Multimodal.tarFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // the tar seam's per-member geometry: one row per member with the
-    // (sample key, field, body offset) a WebDataset shard reader seeks
-    // by — walk + explode expression-side
-    "q_multimodal_tar_members" -> ((s, dir) =>
-      Multimodal.tarMembers(Multimodal.tarFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id", "member_idx")),
-
-    // WebDataset SAMPLE reassembly: members grouped by their numeric
-    // basename into (key -> {txt, cls, json}) samples — the grouping a
-    // shard reader performs before training; aggregation keys only
-    "q_multimodal_wds" -> ((s, dir) =>
-      Multimodal.wdsSamples(Multimodal.tarFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // the REAL WebDataset shard read path: the tar archive compressed
-    // with actual zlib deflate (level cycling 1-9 by doc) and read back
-    // by OUR RFC 1951 inflater, then the SAME ustar walk — gz_crc_ok =
-    // 1 is the walker-recomputed certificate; the tar census columns
-    // prove the inflated archive parses identically to the uncompressed
-    // build (one analytic oracle, no byte ever parsed by DuckDB)
-    "q_multimodal_tar_gz" -> ((s, dir) =>
-      Multimodal.tarGzStats(Multimodal.tarGzFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // ZIP (PKWARE APPNOTE) — the other container datasets ship in:
-    // WebDataset-trio entries BUILT by expression (stored method,
-    // computed CRC32s, central directory, EOCD), re-PARSED by the
-    // native three-layer walk with the CRC recomputed per entry and the
-    // directory cross-checked field-for-field; the oracle re-derives
-    // the census from the construction arithmetic
-    "q_multimodal_zip" -> ((s, dir) =>
-      Multimodal.zipStats(Multimodal.zipFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // the zip seam's per-entry geometry: (sample key, field, header and
-    // data offsets, sizes, verification bits) — walk + explode
-    // expression-side
-    "q_multimodal_zip_entries" -> ((s, dir) =>
-      Multimodal.zipEntries(Multimodal.zipFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id", "entry_idx")),
-
-    // the REFERENCE-implementation read path: java.util.zip's
-    // ZipOutputStream writes each doc as a DEFLATED entry (streaming
-    // data descriptor, level cycling 1-9), and OUR walker + RFC 1951
-    // inflater read it back — crc_ok = cd_ok = 1 certify the reader
-    // against the JDK's writer; deflater-dependent csize stays out of
-    // the frame (one analytic oracle)
-    "q_multimodal_zip_real" -> ((s, dir) =>
-      Multimodal.zipRealStats(Multimodal.zipRealFrame(Tables.documents(s, dir)))
-        .orderBy("doc_id")),
-
-    // container dispatch: a mixed tar/zip/gzip/WARC ingest directory
-    // sniffed by magic bytes (pure built-in hex/substring expressions)
-    // and censused by type — the routing pass a heterogeneous 100 TB
-    // ingest runs before any walker
-    "q_multimodal_sniff" -> ((s, dir) =>
-      Multimodal.sniffCensus(Multimodal.mixedContainerFrame(
-        Tables.documents(s, dir))).orderBy("container")),
-
-    // the corpus-wide tar/zip census monoids (ONE summary row each —
-    // the batch twins of the streaming state sinks, which merge the
-    // same row column-wise per micro-batch)
-    "q_multimodal_tar_census" -> ((s, dir) =>
-      Multimodal.tarCensus(Multimodal.tarStats(
-        Multimodal.tarFrame(Tables.documents(s, dir))))),
-
-    "q_multimodal_zip_census" -> ((s, dir) =>
-      Multimodal.zipCensus(Multimodal.zipStats(
-        Multimodal.zipFrame(Tables.documents(s, dir))))),
-
-    // the MP4 seam's FEATURE step: per-channel stats over the
-    // concatenated mdat payloads the walk locates (global body index
-    // spans mdat boundaries, so the split body featurizes exactly like
-    // the unsplit bytes); FLAC rows run the fixed-offset PCM kernel
-    "q_multimodal_mp4_features" -> ((s, dir) =>
-      Multimodal.mp4Features(Multimodal.mp4Frame(Tables.documents(s, dir)))
-        .select(col("doc_id"), col("media_type"), col("container"),
-          when(col("container") === "flac", element_at(col("feature"), 1)).as("pcm_rms"),
-          when(col("container") === "flac", element_at(col("feature"), 2)).as("pcm_zcr"),
-          when(col("container") === "mp4", element_at(col("feature"), 1)).as("px_mean_b"),
-          when(col("container") === "mp4", element_at(col("feature"), 2)).as("px_mean_g"),
-          when(col("container") === "mp4", element_at(col("feature"), 3)).as("px_mean_r"),
-          when(col("container") === "mp4", element_at(col("feature"), 4)).as("px_std_b"),
-          when(col("container") === "mp4", element_at(col("feature"), 5)).as("px_std_g"),
-          when(col("container") === "mp4", element_at(col("feature"), 6)).as("px_std_r"))
-        .orderBy("doc_id")),
-  )
-
-  // ---- DuckDB oracle -----------------------------------------------------
+  /** Every declared query, family by family. Lazy: the family objects
+    * read this object's shared constants while they initialize. */
+  lazy val registry: Seq[Query] =
+    HrfcoQueries.all ++ RelationalQueries.all ++ SamplingQueries.all ++ DedupQueries.all ++
+      SimilarityQueries.all ++ TextQueries.all ++ BpeQueries.all ++ MultimodalQueries.all
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case Query(name, _, Oracle(sql)) => name -> sql }.toMap
+
+  // ---- DuckDB oracle SQL more than one family shares ---------------------
 
   /** Shared CTE chain mirroring the Spark pipeline expression-for-expression.
     * `events` is the driver-registered view over the same parquet. */
-  private val C =
+  private[graft] val C =
     """WITH raw AS (
       |  SELECT event_id,
       |    CASE WHEN event_id % 103 = 0 THEN '' ELSE event_type END AS wlobscd,
@@ -2197,4272 +144,12 @@ object SparkEntry {
       |  FROM alerts)
       |""".stripMargin
 
-  /** The analytic WARC census (see the scaladoc at its
-    * q_multimodal_warc use) — ONE definition serving both the
-    * uncompressed read path (q_multimodal_warc) and the .warc.gz path
-    * (q_multimodal_warc_gz), which inflates to the byte-identical
-    * stream by the stored-block identity. */
-  private val WARC_STATS_SQL: String =
-    """WITH d AS (SELECT doc_id, doc_id % 4 + 1 AS nr,
-      |    CAST(length(text) AS BIGINT) AS l FROM documents),
-      |r AS (SELECT d.doc_id, d.nr, d.l, i.i
-      |  FROM d CROSS JOIN (SELECT unnest(range(4)) AS i) i
-      |  WHERE i.i < d.nr),
-      |per AS (SELECT doc_id, i,
-      |    l // nr + CASE WHEN i < l % nr THEN 1 ELSE 0 END AS chunk,
-      |    CASE WHEN i = 0 THEN 'warcinfo'
-      |         ELSE CASE (doc_id + i) % 3 WHEN 0 THEN 'response'
-      |              WHEN 1 THEN 'request' ELSE 'metadata' END
-      |    END AS wtype,
-      |    length('<urn:graft:' || CAST(doc_id AS VARCHAR) || '-'
-      |      || CAST(i AS VARCHAR) || '>') AS ridlen
-      |  FROM r),
-      |agg AS (SELECT doc_id,
-      |    CAST(count(*) AS BIGINT) AS n_records,
-      |    CAST(sum(CASE WHEN wtype = 'warcinfo' THEN 1 ELSE 0 END) AS BIGINT) AS n_warcinfo,
-      |    CAST(sum(CASE WHEN wtype = 'response' THEN 1 ELSE 0 END) AS BIGINT) AS n_response,
-      |    CAST(sum(CASE WHEN wtype = 'request' THEN 1 ELSE 0 END) AS BIGINT) AS n_request,
-      |    CAST(sum(CASE WHEN wtype = 'metadata' THEN 1 ELSE 0 END) AS BIGINT) AS n_metadata,
-      |    CAST(0 AS BIGINT) AS n_other,
-      |    CAST(sum(chunk) AS BIGINT) AS payload_bytes,
-      |    CAST(sum(65 + length(wtype) + ridlen
-      |      + length(CAST(chunk AS VARCHAR))) AS BIGINT) AS header_bytes
-      |  FROM per GROUP BY doc_id)
-      |SELECT doc_id, n_records, n_warcinfo, n_response, n_request,
-      |  n_metadata, n_other, payload_bytes, header_bytes,
-      |  payload_bytes + header_bytes AS total_bytes
-      |FROM agg ORDER BY doc_id""".stripMargin
-
-  /** Shared per-member gzip geometry CTEs — the construction arithmetic
-    * of gzipPayload/gzipFrame (member split, flag cycle, MTIME, block
-    * split, header/deflate lengths), used by both gzip oracles. */
-  private val GZIP_PER_MEMBER_CTES: String =
-    """WITH d AS (SELECT doc_id, doc_id % 4 + 1 AS nm,
-      |    CAST(length(text) AS BIGINT) AS l FROM documents),
-      |r AS (SELECT d.doc_id, d.nm, d.l, i.i
-      |  FROM d CROSS JOIN (SELECT unnest(range(4)) AS i) i
-      |  WHERE i.i < d.nm),
-      |per AS (SELECT doc_id, i,
-      |    l // nm + CASE WHEN i < l % nm THEN 1 ELSE 0 END AS chunk,
-      |    CASE (doc_id + i) % 3 WHEN 1 THEN 8 WHEN 2 THEN 4 ELSE 0 END AS flg,
-      |    (doc_id + i) % 4 + 1 AS nblk,
-      |    (doc_id * 16 + i) % 4294967296 AS mtime
-      |  FROM r),
-      |sized AS (SELECT doc_id, i, chunk, flg, nblk, mtime,
-      |    10 + CASE flg WHEN 8 THEN 9 WHEN 4 THEN 6 ELSE 0 END AS header_len,
-      |    5 * nblk + chunk AS deflate_len
-      |  FROM per)""".stripMargin
-
-  /** Per-member arithmetic of the WebDataset tar builder: member i of
-    * doc d is `<d>.{txt,cls,json}` with body bytes (strlen — BYTE
-    * length) text / 1-char label / the json template, mtime
-    * (d·16+i) mod 2^33, padded to the 512 block. Shared by the tar
-    * census, geometry, sample, and .tar.gz oracles. */
-  private val TAR_PER_MEMBER_CTES: String =
-    """WITH d AS (SELECT doc_id, doc_id % 3 + 1 AS nm,
-      |    CAST(strlen(text) AS BIGINT) AS s0,
-      |    CAST(strlen(CAST(doc_id % 10 AS VARCHAR)) AS BIGINT) AS s1,
-      |    CAST(14 + strlen(CAST(doc_id AS VARCHAR))
-      |      + strlen(CAST(strlen(text) AS VARCHAR)) AS BIGINT) AS s2
-      |  FROM documents),
-      |sized AS (SELECT d.doc_id, d.nm, i.i,
-      |    CASE i.i WHEN 0 THEN d.s0 WHEN 1 THEN d.s1 ELSE d.s2 END AS msize,
-      |    ((CASE i.i WHEN 0 THEN d.s0 WHEN 1 THEN d.s1 ELSE d.s2 END
-      |      + 511) // 512) * 512 AS padded,
-      |    (d.doc_id * 16 + i.i) % 8589934592 AS mtime
-      |  FROM d CROSS JOIN (SELECT unnest(range(3)) AS i) i
-      |  WHERE i.i < d.nm)""".stripMargin
-
-  /** The messy-URL construction and canonicalization of
-    * Curation.messyUrl/canonicalUrl, replayed step-for-step in DuckDB
-    * RE2 (patterns identical by the RE2-safe design; replacements use
-    * \1 where Spark uses $1 — same values). */
-  private val URL_FRONTIER_CTES: String =
-    """WITH base AS (SELECT doc_id,
-      |    'https://' || CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END
-      |      || source || '-' || CAST(doc_id % 100 AS VARCHAR) || '.'
-      |      || (['com','org','net','io','edu'])[CAST(doc_id % 5 AS INT) + 1]
-      |      || '/doc/' || CAST(doc_id AS VARCHAR) AS u
-      |  FROM documents),
-      |messy AS (SELECT doc_id,
-      |    CASE doc_id % 6
-      |      WHEN 1 THEN upper(regexp_extract(u, '^(https://[^/]*)', 1))
-      |        || regexp_replace(u, '^https://[^/]*', '')
-      |      WHEN 2 THEN regexp_replace(u, '^(https://[^/]*)', '\1:443')
-      |      WHEN 3 THEN u || '?utm_source=feed&ref=r1&utm_campaign=c9'
-      |      WHEN 4 THEN u || '#section-5'
-      |      WHEN 5 THEN u || '/'
-      |      ELSE u END AS m
-      |  FROM base),
-      |frontier AS (
-      |  SELECT doc_id, u AS url_raw FROM base
-      |  UNION ALL SELECT doc_id, m AS url_raw FROM messy),
-      |canon AS (SELECT doc_id, url_raw,
-      |    regexp_replace(
-      |      regexp_replace(
-      |        regexp_replace(
-      |          regexp_replace(
-      |            regexp_replace(
-      |              regexp_replace(
-      |                lower(regexp_extract(regexp_replace(url_raw, '#.*', ''),
-      |                  '^([A-Za-z]+://[^/?]*)', 1))
-      |                || regexp_replace(regexp_replace(url_raw, '#.*', ''),
-      |                  '^[A-Za-z]+://[^/?]*', ''),
-      |                '^(https://[^/?:]*):443([/?]|$)', '\1\2'),
-      |              '^(http://[^/?:]*):80([/?]|$)', '\1\2'),
-      |            '&(utm_[a-z]+|gclid|fbclid)=[^&#]*', '', 'g'),
-      |          '\?(utm_[a-z]+|gclid|fbclid)=[^&#]*&', '?'),
-      |        '\?(utm_[a-z]+|gclid|fbclid)=[^&#]*$', ''),
-      |      '([^/])/$', '\1') AS url_canonical
-      |  FROM frontier)""".stripMargin
-
-  /** The image aHash pair chain (pixels -> cells -> bits -> hex ->
-    * pigeonhole candidates -> exact hamming), shared by the image
-    * pair oracle and the cross-modality components closure. Ends at
-    * CTE `ham`. */
-  private val IMAGE_AHASH_CTES: String =
-    """img AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 1),
-        |alli AS (SELECT doc_id, text FROM img
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, 'x' || substr(text, 2) AS text
-        |  FROM img WHERE doc_id % 30 = 0),
-        |dims AS (SELECT doc_id, text, CAST(length(text) // 3 AS BIGINT) AS n
-        |  FROM alli WHERE length(text) >= 3),
-        |px AS (SELECT doc_id, n, 64 * u.i // n AS cell,
-        |    ord(substr(text, CAST(3 * u.i + 1 AS INT), 1))
-        |      + ord(substr(text, CAST(3 * u.i + 2 AS INT), 1))
-        |      + ord(substr(text, CAST(3 * u.i + 3 AS INT), 1)) AS gray
-        |  FROM dims, unnest(range(dims.n)) AS u(i)),
-        |cl AS (SELECT doc_id, cell, CAST(sum(gray) AS BIGINT) AS cs,
-        |    CAST(count(*) AS BIGINT) AS cnt FROM px GROUP BY 1, 2),
-        |tt AS (SELECT doc_id, CAST(sum(cs) AS BIGINT) AS total
-        |  FROM cl GROUP BY 1),
-        |grid AS (SELECT d.doc_id, d.n, g.c AS cell
-        |  FROM dims d, unnest(range(64)) AS g(c)),
-        |bits AS (SELECT grid.doc_id, grid.cell,
-        |    CASE WHEN coalesce(cl.cs, 0) * grid.n
-        |              > tt.total * coalesce(cl.cnt, 0)
-        |         THEN 1 ELSE 0 END AS b
-        |  FROM grid
-        |  LEFT JOIN cl ON cl.doc_id = grid.doc_id AND cl.cell = grid.cell
-        |  JOIN tt ON tt.doc_id = grid.doc_id),
-        |nib AS (SELECT doc_id, cell // 4 AS k,
-        |    sum(b * CASE cell % 4 WHEN 0 THEN 8 WHEN 1 THEN 4
-        |            WHEN 2 THEN 2 ELSE 1 END) AS v
-        |  FROM bits GROUP BY 1, 2),
-        |hash AS (SELECT doc_id,
-        |    string_agg(substr('0123456789abcdef', CAST(v + 1 AS INT), 1),
-        |      '' ORDER BY k) AS ahash
-        |  FROM nib GROUP BY 1),
-        |ch AS (SELECT doc_id, ahash, c.c AS chunk_idx,
-        |    substr(ahash, CAST(4 * c.c + 1 AS INT), 4) AS chunk
-        |  FROM hash, unnest(range(4)) AS c(c)),
-        |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM ch a JOIN ch b ON a.chunk_idx = b.chunk_idx
-        |    AND a.chunk = b.chunk AND a.doc_id < b.doc_id),
-        |ham AS (SELECT c.id1, c.id2,
-        |    CAST(sum(abs(x.b - y.b)) AS BIGINT) AS hamming
-        |  FROM cand c
-        |  JOIN bits x ON x.doc_id = c.id1
-        |  JOIN bits y ON y.doc_id = c.id2 AND y.cell = x.cell
-        |  GROUP BY 1, 2)""".stripMargin
-
-  /** The audio dHash pair chain (samples -> bands -> gradient bits ->
-    * pigeonhole candidates -> exact hamming), a_-prefixed so it
-    * composes beside the image chain. Ends at CTE `a_ham`. */
-  private val AUDIO_DHASH_CTES: String =
-    """a_aud AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 1),
-        |a_all AS (SELECT doc_id, text FROM a_aud
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, 'x' || substr(text, 2) AS text
-        |  FROM a_aud WHERE doc_id % 30 = 1),
-        |a_dims AS (SELECT doc_id, text, CAST(length(text) // 2 AS BIGINT) AS n
-        |  FROM a_all WHERE length(text) >= 2),
-        |a_raw AS (SELECT doc_id, n, u.i AS i,
-        |    ord(substr(text, CAST(2 * u.i + 1 AS INT), 1))
-        |      + 256 * ord(substr(text, CAST(2 * u.i + 2 AS INT), 1)) AS v
-        |  FROM a_dims, unnest(range(a_dims.n)) AS u(i)),
-        |a_smp AS (SELECT doc_id, n, 65 * i // n AS band,
-        |    abs(CASE WHEN v >= 32768 THEN v - 65536 ELSE v END) AS amp
-        |  FROM a_raw),
-        |a_bl AS (SELECT doc_id, band, CAST(sum(amp) AS BIGINT) AS bs,
-        |    CAST(count(*) AS BIGINT) AS cnt FROM a_smp GROUP BY 1, 2),
-        |a_grid AS (SELECT d.doc_id, g.c AS c
-        |  FROM a_dims d, unnest(range(64)) AS g(c)),
-        |a_bits AS (SELECT a_grid.doc_id, a_grid.c,
-        |    CASE WHEN coalesce(a.bs, 0) * coalesce(b.cnt, 0)
-        |              > coalesce(b.bs, 0) * coalesce(a.cnt, 0)
-        |         THEN 1 ELSE 0 END AS b
-        |  FROM a_grid
-        |  LEFT JOIN a_bl a ON a.doc_id = a_grid.doc_id AND a.band = a_grid.c
-        |  LEFT JOIN a_bl b ON b.doc_id = a_grid.doc_id AND b.band = a_grid.c + 1),
-        |a_chk AS (SELECT doc_id, c // 16 AS chunk_idx,
-        |    sum(b << CAST(15 - c % 16 AS INT)) AS chunk
-        |  FROM a_bits GROUP BY 1, 2),
-        |a_cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM a_chk a JOIN a_chk b ON a.chunk_idx = b.chunk_idx
-        |    AND a.chunk = b.chunk AND a.doc_id < b.doc_id),
-        |a_ham AS (SELECT c.id1, c.id2,
-        |    CAST(sum(abs(x.b - y.b)) AS BIGINT) AS hamming
-        |  FROM a_cand c
-        |  JOIN a_bits x ON x.doc_id = c.id1
-        |  JOIN a_bits y ON y.doc_id = c.id2 AND y.c = x.c
-        |  GROUP BY 1, 2)""".stripMargin
-
-  def oracleSql: Map[String, String] = Map(
-    "q_raw_parse" -> (C +
-      """SELECT event_id, wlobscd, wl AS wl_raw, fw AS fw_raw, water_level, flow_rate,
-        |  obs_time_fmt, strftime(obs_ts_utc, '%Y-%m-%d %H:%M:%S') AS obs_ts_str
-        |FROM parsed ORDER BY event_id""".stripMargin),
-
-    "q_required_filter" -> (C +
-      "SELECT event_id, wlobscd, water_level, flow_rate FROM valid ORDER BY event_id"),
-
-    "q_dlq" -> (C +
-      """SELECT event_id, wlobscd AS "originalKey", raw_payload AS "originalValue",
-        |  'Processing failed: JsonParseException' AS "errorReason",
-        |  'JsonParseException' AS "exceptionClass",
-        |  'malformed payload' AS "exceptionMessage"
-        |FROM raw
-        |WHERE (CASE WHEN json_valid(raw_payload)
-        |       THEN json_extract_string(raw_payload, '$.k') END) IS NULL
-        |ORDER BY event_id""".stripMargin),
-
-    "q_threshold_dim" -> (C +
-      "SELECT wlobscd, attwl, wrnwl, almwl, srswl, obsnm, addr FROM dim ORDER BY wlobscd"),
-
-    "q_threshold_unpivot" -> (C +
-      """SELECT wlobscd, threshold_name, threshold_value FROM (
-        |  SELECT wlobscd, 'attwl' AS threshold_name, attwl AS threshold_value FROM dim
-        |  UNION ALL SELECT wlobscd, 'wrnwl', wrnwl FROM dim
-        |  UNION ALL SELECT wlobscd, 'almwl', almwl FROM dim
-        |  UNION ALL SELECT wlobscd, 'srswl', srswl FROM dim)
-        |WHERE threshold_value IS NOT NULL
-        |ORDER BY wlobscd, threshold_name""".stripMargin),
-
-    "q_classify" -> (C +
-      """SELECT event_id, wlobscd, water_level, flow_rate, range_valid,
-        |  valid_threshold_count, is_anomaly, anomaly_reason, flood_warning_level
-        |FROM classified ORDER BY event_id""".stripMargin),
-
-    "q_alerts" -> (C +
-      """SELECT event_id, wlobscd AS observation_code, obs_time_fmt AS observation_time,
-        |  water_level, flow_rate, alert_level AS warning_level, is_anomaly, message
-        |FROM msgs ORDER BY event_id""".stripMargin),
-
-    "q_latest_per_station" -> (C +
-      """SELECT wlobscd, event_id, water_level, flood_warning_level, alert_level
-        |FROM (SELECT *, row_number() OVER (PARTITION BY wlobscd ORDER BY ts DESC, event_id DESC) AS rn
-        |      FROM alerts) WHERE rn = 1
-        |ORDER BY wlobscd""".stripMargin),
-
-    "q_alert_counts" -> (C +
-      """SELECT bucket, n FROM (
-        |  SELECT CASE WHEN is_anomaly THEN 'anomaly'
-        |              WHEN alert_level IN ('ATTENTION','CAUTION','WARNING','CRITICAL') THEN 'alert'
-        |              ELSE 'normal' END AS bucket, count(*) AS n
-        |  FROM alerts GROUP BY 1
-        |  UNION ALL SELECT 'all' AS bucket, count(*) AS n FROM alerts)
-        |ORDER BY bucket""".stripMargin),
-
-    "q_json_split" ->
-      "SELECT event_id, event_type, value FROM events ORDER BY event_id",
-
-    "q_topn_recent" -> (C +
-      """SELECT event_id, wlobscd AS observation_code, alert_level AS warning_level,
-        |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f') AS alert_ts
-        |FROM msgs ORDER BY ts DESC, event_id DESC LIMIT 500""".stripMargin),
-
-    "q_threshold_scale" -> (C +
-      """SELECT wlobscd, coalesce(greatest(
-        |    CASE WHEN attwl > 0 THEN attwl END, CASE WHEN wrnwl > 0 THEN wrnwl END,
-        |    CASE WHEN almwl > 0 THEN almwl END, CASE WHEN srswl > 0 THEN srswl END) * 1.2,
-        |  10.0) AS gauge_max
-        |FROM dim ORDER BY wlobscd""".stripMargin),
-
-    "q_delta_rate" ->
-      """SELECT event_id, event_type, value, prev_value, delta,
-        |  delta / nullif((epoch_us(ts) - prev_us) / 1000000.0, 0.0) AS rate_per_sec,
-        |  (delta IS NOT NULL AND delta <> 0.0) AS is_active
-        |FROM (
-        |  SELECT event_id, event_type, value, ts,
-        |    lag(value) OVER w AS prev_value,
-        |    value - lag(value) OVER w AS delta,
-        |    lag(epoch_us(ts)) OVER w AS prev_us
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id))
-        |ORDER BY event_id""".stripMargin,
-
-    "q_per_record_avg" ->
-      """SELECT event_id, event_type,
-        |  value / CAST(greatest(CAST(json_extract_string(props, '$.k') AS INT), 1) AS DOUBLE) AS per_record_avg
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "q_quantiles" ->
-      """SELECT event_type,
-        |  max(CASE WHEN rn = greatest(1, CAST(ceil(0.5 * n) AS BIGINT)) THEN value END) AS p50,
-        |  max(CASE WHEN rn = greatest(1, CAST(ceil(0.9 * n) AS BIGINT)) THEN value END) AS p90
-        |FROM (
-        |  SELECT event_type, value, event_id,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events)
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q_queue_backpressure" ->
-      """SELECT event_type,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS flow_files_queued,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS bytes_queued,
-        |  count(CASE WHEN value >= 300.0 THEN 1 END) AS saturated,
-        |  count(*) AS connections
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q_processor_rollup" ->
-      """SELECT event_type,
-        |  count(DISTINCT user_id) AS processors,
-        |  count(CASE WHEN CAST(json_extract_string(props, '$.k') AS BIGINT) > 0 THEN 1 END) AS active_samples,
-        |  CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS total_work,
-        |  count(*) AS samples
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q_humanize_bytes" ->
-      """SELECT event_type, bytes,
-        |  CASE WHEN bytes < 1024 THEN CAST(bytes AS VARCHAR) || ' B'
-        |       WHEN bytes < 1024 * 1024
-        |         THEN printf('%.1f KB', floor(CAST(bytes AS DOUBLE) / 1024.0 * 10.0 + 0.5) / 10.0)
-        |       WHEN bytes < 1024 * 1024 * 1024
-        |         THEN printf('%.1f MB', floor(CAST(bytes AS DOUBLE) / (1024.0 * 1024) * 10.0 + 0.5) / 10.0)
-        |       ELSE printf('%.1f GB', floor(CAST(bytes AS DOUBLE) / (1024.0 * 1024 * 1024) * 10.0 + 0.5) / 10.0)
-        |  END AS human
-        |FROM (SELECT event_type, CAST(sum(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS bytes
-        |      FROM events GROUP BY 1)
-        |ORDER BY event_type""".stripMargin,
-
-    "q_station_list" -> (C +
-      "SELECT wlobscd AS code, obsnm AS name, addr AS address FROM dim ORDER BY code"),
-
-    "q_station_detail" -> (C +
-      """SELECT wlobscd AS observation_code, obsnm AS name, addr AS address,
-        |  attwl, wrnwl, almwl, srswl
-        |FROM dim WHERE wlobscd = 'click'""".stripMargin),
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  sum(l_quantity) AS sum_qty,
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_base_price,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q3_top_orders" ->
-      """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_orderpriority,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM customer JOIN orders ON c_custkey = o_custkey
-        |  JOIN lineitem ON o_orderkey = l_orderkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY 1, 2, 3
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT n_name,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  JOIN orders ON l_orderkey = o_orderkey
-        |  JOIN customer ON o_custkey = c_custkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND c_nationkey = s_nationkey
-        |GROUP BY 1 ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q_top_customers" ->
-      """SELECT c_custkey, c_name, total_spent, n_orders FROM (
-        |  SELECT o_custkey,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_spent,
-        |    count(*) AS n_orders
-        |  FROM orders GROUP BY 1) JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_spent DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q13_order_dist" ->
-      """SELECT n_orders, n_customers FROM (
-        |  SELECT n_orders, count(*) AS n_customers FROM (
-        |    SELECT c_custkey, count(o_orderkey) AS n_orders
-        |    FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-        |    GROUP BY 1)
-        |  GROUP BY 1)
-        |ORDER BY n_customers DESC, n_orders DESC""".stripMargin,
-
-    "q16_supplier_variety" ->
-      """SELECT p_type,
-        |  CAST(count(DISTINCT l_suppkey) AS BIGINT) AS n_suppliers,
-        |  count(*) AS n_lineitems
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1 ORDER BY n_suppliers DESC, p_type""".stripMargin,
-
-    "q_spend_ranks" ->
-      """SELECT o_custkey AS custkey, total_spent,
-        |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        |  percent_rank() OVER w AS pct_rank,
-        |  cume_dist() OVER w AS cume
-        |FROM (
-        |  SELECT o_custkey,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE) AS total_spent
-        |  FROM orders GROUP BY 1)
-        |WINDOW w AS (ORDER BY total_spent DESC, o_custkey)
-        |ORDER BY total_spent DESC, custkey LIMIT 50""".stripMargin,
-
-    "q_semi_anti" ->
-      """SELECT n_nationkey, n_name, TRUE AS has_customers FROM nation n
-        |WHERE EXISTS (SELECT 1 FROM customer c WHERE c.c_nationkey = n.n_nationkey)
-        |UNION ALL
-        |SELECT n_nationkey, n_name, FALSE AS has_customers FROM nation n
-        |WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_nationkey = n.n_nationkey)
-        |ORDER BY n_nationkey""".stripMargin,
-
-    "q_intersect" ->
-      """SELECT o_custkey FROM orders WHERE o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE o_orderdate >= TIMESTAMP '1998-06-01 00:00:00'
-        |ORDER BY o_custkey""".stripMargin,
-
-    // decorrelation shapes: the oracle is the IDENTICAL SQL text Spark
-    // executes (Relational.scala) — both engines parse one string
-    "q17_small_qty_revenue" -> Relational.smallQuantityRevenueSql,
-    "q21_late_suppliers" -> Relational.lateSoleSuppliersSql,
-    "q2_min_cost_supplier" -> Relational.minCostSupplierSql,
-    "q2_min_cost_supplier_cte" -> Relational.minCostSupplierCteSql,
-    "q20_volume_suppliers_cte" -> Relational.volumeSuppliersCteSql(),
-    "q4_late_priority" -> Relational.latePriorityCountSql,
-    "q11_important_parts" -> Relational.importantPartsSql,
-    "q15_top_supplier" -> Relational.topSupplierSql,
-    "q20_volume_suppliers" -> Relational.volumeSuppliersSql(),
-
-    "q8_market_share" ->
-      """SELECT o_year, mkt_share FROM (
-        |  SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
-        |    CAST(sum(CAST(CASE WHEN n1.n_name = 'NATION_3'
-        |        THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END AS DECIMAL(18,4))) AS DOUBLE)
-        |    / CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS mkt_share
-        |  FROM lineitem
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation n2 ON n2.n_nationkey = c_nationkey
-        |  JOIN region ON r_regionkey = n2.n_regionkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation n1 ON n1.n_nationkey = s_nationkey
-        |  WHERE r_name = 'ASIA'
-        |  GROUP BY 1)
-        |ORDER BY o_year""".stripMargin,
-
-    "q9_product_profit" ->
-      """SELECT nation, o_year, sum_profit FROM (
-        |  SELECT n_name AS nation,
-        |    CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
-        |    CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |      - 0.6 * p_retailprice * l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS sum_profit
-        |  FROM lineitem
-        |  JOIN part ON p_partkey = l_partkey
-        |  JOIN supplier ON s_suppkey = l_suppkey
-        |  JOIN nation ON n_nationkey = s_nationkey
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  WHERE p_name LIKE '%widget%'
-        |  GROUP BY 1, 2)
-        |ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q10_returned_items" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name, revenue FROM (
-        |  SELECT c_custkey, c_name, c_acctbal, n_name,
-        |    CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue
-        |  FROM lineitem
-        |  JOIN orders ON o_orderkey = l_orderkey
-        |  JOIN customer ON c_custkey = o_custkey
-        |  JOIN nation ON n_nationkey = c_nationkey
-        |  WHERE l_returnflag = 'R'
-        |    AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY 1, 2, 3, 4)
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    "q18_large_orders" -> Relational.largeVolumeOrdersSql,
-    "q18_large_orders_cte" -> Relational.largeVolumeOrdersCteSql,
-    "q19_branded_revenue" -> Relational.brandedRevenueSql,
-    "q22_dormant_balances" -> Relational.dormantBalancesSql,
-    "q7_bilateral_trade" -> Relational.bilateralTradeSql,
-
-    "q_alert_rollup" -> (C +
-      """SELECT coalesce(wlobscd, '<all>') AS station,
-        |  coalesce(alert_level, '<all>') AS level, count(*) AS n
-        |FROM alerts GROUP BY ROLLUP (wlobscd, alert_level)
-        |ORDER BY station, level""".stripMargin),
-
-    "q_alert_cube" -> (C +
-      """SELECT coalesce(wlobscd, '<all>') AS station,
-        |  coalesce(alert_level, '<all>') AS level, count(*) AS n
-        |FROM alerts GROUP BY CUBE (wlobscd, alert_level)
-        |ORDER BY station, level""".stripMargin),
-
-    "q_alert_grouping_sets" -> (C +
-      """SELECT coalesce(wlobscd, '<all>') AS station,
-        |  coalesce(alert_level, '<all>') AS level, count(*) AS n,
-        |  CAST(2 * GROUPING(wlobscd) + GROUPING(alert_level) AS BIGINT) AS gid
-        |FROM alerts
-        |GROUP BY GROUPING SETS ((wlobscd), (alert_level), (wlobscd, alert_level))
-        |ORDER BY gid, station, level""".stripMargin),
-
-    "q_alert_pivot" -> (C +
-      """SELECT wlobscd AS station,
-        |  count(CASE WHEN alert_level = 'NORMAL' THEN 1 END) AS "NORMAL",
-        |  count(CASE WHEN alert_level = 'ATTENTION' THEN 1 END) AS "ATTENTION",
-        |  count(CASE WHEN alert_level = 'CAUTION' THEN 1 END) AS "CAUTION",
-        |  count(CASE WHEN alert_level = 'WARNING' THEN 1 END) AS "WARNING",
-        |  count(CASE WHEN alert_level = 'CRITICAL' THEN 1 END) AS "CRITICAL",
-        |  count(CASE WHEN alert_level = 'ANOMALY' THEN 1 END) AS "ANOMALY"
-        |FROM alerts GROUP BY 1 ORDER BY station""".stripMargin),
-
-    "q_churned_users" ->
-      """SELECT user_id FROM events WHERE ts < TIMESTAMP '2024-02-01 00:00:00'
-        |EXCEPT
-        |SELECT user_id FROM events WHERE ts >= TIMESTAMP '2024-02-01 00:00:00'
-        |ORDER BY user_id""".stripMargin,
-
-    "q6_revenue_change" ->
-      """SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.04 AND 0.06 AND l_quantity < 24""".stripMargin,
-
-    "q12_shipmode_priority" ->
-      """SELECT l_linestatus,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_priority,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_priority
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q14_promo_share" ->
-      """SELECT 100.0 * CAST(sum(CAST(CASE WHEN p_type LIKE 'PROMO%'
-        |      THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END AS DECIMAL(18,4))) AS DOUBLE)
-        |  / CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS promo_share_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1997-07-01 00:00:00'""".stripMargin,
-
-    // stage k+1 must be STRICTLY later than the recorded stage-k time, so
-    // the walk's first-qualifying pick equals the min-cascade below
-    "q_funnel" ->
-      s"""WITH $FUNNEL_CTES
-         |SELECT user_id, stage_reached, t1_us, t2_us, t3_us FROM f
-         |ORDER BY user_id""".stripMargin,
-
-    // week = integral epoch-micros // week_micros (// is floor division;
-    // timestamps are non-negative, so it matches Spark's truncating DIV)
-    "q_retention" ->
-      """WITH weeks AS (
-        |  SELECT DISTINCT user_id, epoch_us(ts) // 604800000000 AS week
-        |  FROM events WHERE ts IS NOT NULL),
-        |cohorts AS (SELECT user_id, min(week) AS cohort_week FROM weeks GROUP BY 1)
-        |SELECT cohort_week, week - cohort_week AS week_offset, count(*) AS n_users
-        |FROM weeks JOIN cohorts USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q_funnel_rollup" ->
-      s"""WITH $FUNNEL_DAY1_CTES
-         |SELECT stage_reached, count(*) AS n_users,
-         |  CAST(sum(t3_us - t1_us) AS DOUBLE) / count(t3_us) AS avg_convert_us
-         |FROM f GROUP BY stage_reached ORDER BY stage_reached""".stripMargin,
-
-    "q_sessionize" ->
-      """SELECT user_id, session_seq, count(*) AS n_events,
-        |  (max(us) - min(us)) / 1000000 AS duration_sec
-        |FROM (
-        |  SELECT user_id, us, event_id,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        |  FROM (
-        |    SELECT user_id, event_id, epoch_us(ts) AS us,
-        |      CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |             OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_session
-        |    FROM events
-        |    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)))
-        |GROUP BY 1, 2 ORDER BY user_id, session_seq""".stripMargin,
-
-    // v is pre-reduced to one row per (user_id, ts) keeping the greatest
-    // event_id (with ITS value, atomically): DuckDB's ASOF JOIN has no
-    // tie-break among right rows sharing a timestamp, while the Spark side
-    // pins (ts, event_id) — without the reduction, agreement would hinge on
-    // the data never holding duplicate (user_id, ts) view rows
-    "q_asof_attribution" -> ASOF_ATTRIBUTION_SQL,
-
-    // per-column profile via UNION ALL, rules as literal rows over it;
-    // double min/max render through DECIMAL(28,6) in both engines
-    "q_data_expectations" ->
-      """WITH p AS (
-        |  SELECT 'event_id' AS col_name, count(*) AS n_rows,
-        |    count(CASE WHEN event_id IS NULL THEN 1 END) AS n_null,
-        |    count(DISTINCT event_id) AS n_distinct,
-        |    CAST(min(event_id) AS VARCHAR) AS min_value,
-        |    CAST(max(event_id) AS VARCHAR) AS max_value FROM events
-        |  UNION ALL SELECT 'event_type', count(*),
-        |    count(CASE WHEN event_type IS NULL THEN 1 END),
-        |    count(DISTINCT event_type),
-        |    CAST(min(event_type) AS VARCHAR), CAST(max(event_type) AS VARCHAR) FROM events
-        |  UNION ALL SELECT 'value', count(*),
-        |    count(CASE WHEN value IS NULL THEN 1 END),
-        |    count(DISTINCT value),
-        |    CAST(CAST(min(value) AS DECIMAL(28,6)) AS VARCHAR),
-        |    CAST(CAST(max(value) AS DECIMAL(28,6)) AS VARCHAR) FROM events
-        |  UNION ALL SELECT 'user_id', count(*),
-        |    count(CASE WHEN user_id IS NULL THEN 1 END),
-        |    count(DISTINCT user_id),
-        |    CAST(min(user_id) AS VARCHAR), CAST(max(user_id) AS VARCHAR) FROM events),
-        |r AS (
-        |  SELECT 'event_id' AS "column", 'non_empty' AS "check",
-        |    'event_id must have rows' AS expectation, n_rows > 0 AS passed,
-        |    n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'event_id'
-        |  UNION ALL SELECT 'event_id', 'not_null', 'event_id must contain no nulls',
-        |    n_null = 0, n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'event_id'
-        |  UNION ALL SELECT 'event_id', 'unique', 'event_id must be unique among non-null values',
-        |    n_distinct = n_rows - n_null, n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'event_id'
-        |  UNION ALL SELECT 'event_type', 'not_null', 'event_type must contain no nulls',
-        |    n_null = 0, n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'event_type'
-        |  UNION ALL SELECT 'value', 'not_null', 'value must contain no nulls',
-        |    n_null = 0, n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'value'
-        |  UNION ALL SELECT 'value', 'min_at_least', 'value minimum must be >= 0.0',
-        |    CAST(min_value AS DOUBLE) >= 0.0, n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'value'
-        |  UNION ALL SELECT 'value', 'max_at_most', 'value maximum must be <= 100000.0',
-        |    CAST(max_value AS DOUBLE) <= 100000.0, n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'value'
-        |  UNION ALL SELECT 'user_id', 'unique', 'user_id must be unique among non-null values',
-        |    n_distinct = n_rows - n_null, n_rows, n_null, n_distinct, min_value, max_value FROM p WHERE col_name = 'user_id')
-        |SELECT * FROM r ORDER BY "column", "check"""".stripMargin,
-
-    // quality_score reproduced exactly as in text_quality's oracle; keep
-    // test = per-row hex threshold over the md5 slice, all integer
-    "q_quality_thin" ->
-      """WITH q AS (
-        |  SELECT doc_id,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')) * 0.4 +
-        |    CAST(len(list_filter(string_split(text, ' '), w -> w IN ('the', 'a'))) AS DOUBLE)
-        |      / len(string_split(text, ' ')) * 0.3 +
-        |    CASE WHEN len(string_split(text, ' ')) >= 40 THEN 0.3
-        |         ELSE CAST(len(string_split(text, ' ')) AS DOUBLE) / 40.0 * 0.3 END AS quality_score
-        |  FROM documents),
-        |qq AS (SELECT doc_id, CAST(floor(quality_score * 1000000.0) AS BIGINT) AS qq FROM q)
-        |SELECT doc_id, qq FROM qq
-        |WHERE 1 * qq >= 2 * 1000000
-        |   OR substr(md5('qthin:' || CAST(doc_id AS VARCHAR)), 1, 5)
-        |      < lpad(lower(to_hex((1 * qq * 1048576) // (2 * 1000000))), 5, '0')
-        |ORDER BY doc_id""".stripMargin,
-
-    "graph_pagerank" -> PAGERANK_SQL,
-    "graph_communities" -> LPA_SQL,
-
-    "graph_pagerank_dangling" -> PAGERANK_DANGLING_SQL,
-
-    "graph_transition_probs" ->
-      """WITH seq AS (SELECT user_id, event_type, ts, event_id FROM events
-        |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL),
-        |pairs AS (SELECT event_type AS src,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-        |  FROM seq),
-        |edges AS (SELECT src, dst, count(*) AS m FROM pairs WHERE dst IS NOT NULL
-        |  GROUP BY 1, 2)
-        |SELECT src, dst, m,
-        |  CAST(sum(m) OVER (PARTITION BY src) AS BIGINT) AS w,
-        |  CAST(m AS DOUBLE) / CAST(sum(m) OVER (PARTITION BY src) AS BIGINT) AS p
-        |FROM edges ORDER BY src, dst""".stripMargin,
-
-    "q_value_hour_corr" ->
-      """WITH q AS (SELECT event_type,
-        |    CAST(floor(value * 1000000.0) AS HUGEINT) AS x,
-        |    CAST(epoch_us(ts) % 86400000000 // 3600000000 AS HUGEINT) AS y
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |m AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-        |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-        |    sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM q GROUP BY 1)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN NULL
-        |       ELSE CAST(n * sxy - sx * sy AS DOUBLE) /
-        |            sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |                 CAST(n * syy - sy * sy AS DOUBLE)) END AS corr_xy
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    // both windows rank the (quantized value, event_id) tuple
-    "q_value_extremes" ->
-      """WITH q AS (SELECT event_type, event_id, value,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        |lo AS (SELECT event_type, 'low' AS side,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |      ORDER BY qv, event_id) AS BIGINT) AS rank, event_id, value
-        |  FROM q),
-        |hi AS (SELECT event_type, 'high' AS side,
-        |    CAST(row_number() OVER (PARTITION BY event_type
-        |      ORDER BY qv DESC, event_id DESC) AS BIGINT) AS rank, event_id, value
-        |  FROM q)
-        |SELECT * FROM (SELECT * FROM lo WHERE rank <= 3
-        |  UNION ALL SELECT * FROM hi WHERE rank <= 3)
-        |ORDER BY event_type, side, rank""".stripMargin,
-
-    // min-rank (rank(), not tie-averaged) mirrors the engine exactly
-    "q_value_hour_rankcorr" ->
-      """WITH q0 AS (SELECT event_type,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv,
-        |    CAST(epoch_us(ts) % 86400000000 // 3600000000 AS HUGEINT) AS y
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |q AS (SELECT event_type, y,
-        |    CAST(rank() OVER (PARTITION BY event_type ORDER BY qv) AS HUGEINT) AS x
-        |  FROM q0),
-        |m AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-        |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-        |    sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM q GROUP BY 1)
-        |SELECT event_type, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN NULL
-        |       ELSE CAST(n * sxy - sx * sy AS DOUBLE) /
-        |            sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |                 CAST(n * syy - sy * sy AS DOUBLE)) END AS rank_corr
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    "q_equidepth_bins" ->
-      """WITH q AS (SELECT event_type, CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        |r AS (SELECT event_type, qv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY qv) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM q),
-        |cum AS (SELECT event_type, qv,
-        |    sum(cnt) OVER (PARTITION BY event_type ORDER BY qv
-        |                   ROWS UNBOUNDED PRECEDING) AS n_le
-        |  FROM (SELECT event_type, qv, count(*) AS cnt FROM q GROUP BY 1, 2)),
-        |edges AS (SELECT r.event_type, b.bin, r.qv AS edge_q
-        |  FROM r CROSS JOIN (SELECT unnest(range(1, 11)) AS bin) b
-        |  WHERE r.rn = (b.bin * r.n + 9) // 10)
-        |SELECT e.event_type AS event_type, e.bin, e.edge_q,
-        |  CAST(c.n_le AS BIGINT) AS n_le
-        |FROM edges e JOIN cum c ON c.event_type = e.event_type AND c.qv = e.edge_q
-        |ORDER BY e.event_type, e.bin""".stripMargin,
-
-    // the EWMA recurrence replayed stepwise by a recursive CTE over the
-    // row-numbered hourly frame; // is DuckDB's floor division, matching
-    // the engine's explicit posmod floor-div spelling on negatives
-    "q_ewma_hourly" ->
-      """WITH RECURSIVE q AS (SELECT event_type AS key,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket_us,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |hourly AS (SELECT key, bucket_us, CAST(sum(qv) AS BIGINT) AS swq
-        |  FROM q GROUP BY 1, 2),
-        |hx AS (SELECT key, bucket_us, swq,
-        |    CAST(row_number() OVER (PARTITION BY key ORDER BY bucket_us) AS BIGINT) AS i
-        |  FROM hourly),
-        |ew AS (
-        |  SELECT key, i, bucket_us, swq, swq AS s FROM hx WHERE i = 1
-        |  UNION ALL
-        |  SELECT h.key, h.i, h.bucket_us, h.swq,
-        |    (1 * h.swq + 3 * e.s) // 4 AS s
-        |  FROM ew e JOIN hx h ON h.key = e.key AND h.i = e.i + 1)
-        |SELECT key, bucket_us, swq, CAST(s AS BIGINT) AS ewma_q
-        |FROM ew ORDER BY key, bucket_us""".stripMargin,
-
-    // Holt level+trend: the same recursive-CTE replay as the EWMA, with
-    // floor division spelled explicitly ((x - posmod(x, den)) // den) —
-    // the trend step's numerator goes negative on declining series, where
-    // DuckDB's truncating // and the recurrence's floor diverge
-    "q_holt_trend" ->
-      """WITH RECURSIVE q AS (SELECT event_type AS key,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket_us,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |hourly AS (SELECT key, bucket_us, CAST(sum(qv) AS BIGINT) AS swq
-        |  FROM q GROUP BY 1, 2),
-        |hx AS (SELECT key, bucket_us, swq,
-        |    CAST(row_number() OVER (PARTITION BY key ORDER BY bucket_us) AS BIGINT) AS i
-        |  FROM hourly),
-        |ho AS (
-        |  SELECT key, i, bucket_us, swq, swq AS l, CAST(0 AS BIGINT) AS b
-        |  FROM hx WHERE i = 1
-        |  UNION ALL
-        |  SELECT h.key, h.i, h.bucket_us, h.swq,
-        |    ((1 * h.swq + 3 * (e.l + e.b))
-        |      - (((1 * h.swq + 3 * (e.l + e.b)) % 4 + 4) % 4)) // 4 AS l,
-        |    ((1 * (((1 * h.swq + 3 * (e.l + e.b))
-        |          - (((1 * h.swq + 3 * (e.l + e.b)) % 4 + 4) % 4)) // 4 - e.l)
-        |        + 1 * e.b)
-        |      - (((1 * (((1 * h.swq + 3 * (e.l + e.b))
-        |            - (((1 * h.swq + 3 * (e.l + e.b)) % 4 + 4) % 4)) // 4 - e.l)
-        |          + 1 * e.b) % 2 + 2) % 2)) // 2 AS b
-        |  FROM ho e JOIN hx h ON h.key = e.key AND h.i = e.i + 1)
-        |SELECT key, bucket_us, swq, CAST(l AS BIGINT) AS level_q,
-        |  CAST(b AS BIGINT) AS trend_q, CAST(l + b AS BIGINT) AS forecast_q
-        |FROM ho ORDER BY key, bucket_us""".stripMargin,
-
-    "q_cusum_drift" ->
-      """WITH q AS (SELECT event_type AS key,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket_us,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |hourly AS (SELECT key, bucket_us, CAST(sum(qv) AS BIGINT) AS swq,
-        |    count(*) AS n FROM q GROUP BY 1, 2),
-        |ref AS (SELECT CASE WHEN sum(qv) >= 0
-        |      THEN CAST(sum(qv) AS BIGINT) // count(*)
-        |      ELSE -(CAST(-sum(qv) AS BIGINT) // count(*)) END AS k_ref FROM q),
-        |px AS (SELECT key, bucket_us, n,
-        |    sum(swq - k_ref * n) OVER w AS p,
-        |    k_ref
-        |  FROM hourly CROSS JOIN ref
-        |  WINDOW w AS (PARTITION BY key ORDER BY bucket_us
-        |               ROWS UNBOUNDED PRECEDING)),
-        |cs AS (SELECT key, bucket_us, n, k_ref,
-        |    p - min(p) OVER (PARTITION BY key ORDER BY bucket_us
-        |                     ROWS UNBOUNDED PRECEDING) AS s
-        |  FROM px)
-        |SELECT key, bucket_us, n, CAST(s AS BIGINT) AS cusum_q,
-        |  s * 10 > 1 * k_ref * n AS drift
-        |FROM cs ORDER BY key, bucket_us""".stripMargin,
-
-    "q_bootstrap_ci" ->
-      """WITH q AS (SELECT event_type, event_id,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        |hg AS (SELECT event_type, qv, g,
-        |    md5('boot:' || CAST(event_id AS VARCHAR) || ':' || CAST(g AS VARCHAR)) AS h
-        |  FROM q CROSS JOIN (SELECT unnest(range(25)) AS g) r),
-        |reps AS (SELECT event_type, qv, substr(h, 1 + 8 * j, 8) AS h8,
-        |    g * 4 + j AS rep
-        |  FROM hg CROSS JOIN (SELECT unnest(range(4)) AS j) s),
-        |wt AS (SELECT event_type, rep, qv,
-        |    CASE WHEN h8 < '5e2d58d8' THEN 0 WHEN h8 < 'bc5ab1b1' THEN 1
-        |         WHEN h8 < 'eb715e1d' THEN 2 WHEN h8 < 'fb239797' THEN 3
-        |         WHEN h8 < 'ff1025f5' THEN 4 WHEN h8 < 'ffd90f3b' THEN 5
-        |         WHEN h8 < 'fffa8b71' THEN 6 ELSE 7 END AS w
-        |  FROM reps),
-        |mb AS (SELECT event_type, rep,
-        |    CAST(CAST(sum(w * qv) AS BIGINT) AS DOUBLE) / CAST(sum(w) AS BIGINT) AS mean_b
-        |  FROM wt GROUP BY 1, 2 HAVING CAST(sum(w) AS BIGINT) > 0),
-        |rk AS (SELECT event_type, mean_b,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY mean_b) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS nb FROM mb),
-        |lo AS (SELECT event_type, mean_b AS ci_lo FROM rk
-        |  WHERE rn = greatest(1, CAST(ceil(0.05 * nb) AS BIGINT))),
-        |hi AS (SELECT event_type, mean_b AS ci_hi FROM rk
-        |  WHERE rn = greatest(1, CAST(ceil(0.95 * nb) AS BIGINT))),
-        |pt AS (SELECT event_type, count(*) AS n,
-        |    CAST(CAST(sum(qv) AS BIGINT) AS DOUBLE) / count(*) AS mean_q
-        |  FROM q GROUP BY 1)
-        |SELECT pt.event_type, n, mean_q, ci_lo, ci_hi
-        |FROM pt JOIN lo USING (event_type) JOIN hi USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    "q_heavy_tokens" ->
-      """WITH t AS (SELECT unnest(string_split(text, ' ')) AS token
-        |  FROM documents WHERE text IS NOT NULL),
-        |tt AS (SELECT token FROM t WHERE token <> ''),
-        |tot AS (SELECT count(*) AS n FROM tt)
-        |SELECT token, count(*) AS cnt
-        |FROM tt CROSS JOIN tot
-        |GROUP BY token, tot.n
-        |HAVING count(*) * 32 > tot.n
-        |ORDER BY token""".stripMargin,
-
-    "q_value_mad" ->
-      """WITH q AS (SELECT event_type, CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        |r AS (SELECT event_type, qv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY qv) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM q),
-        |med AS (SELECT event_type, qv AS med_q FROM r WHERE rn = (n + 1) // 2),
-        |d AS (SELECT q.event_type, q.qv, med.med_q, abs(q.qv - med.med_q) AS dev
-        |      FROM q JOIN med USING (event_type)),
-        |rd AS (SELECT event_type, dev,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY dev) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM d),
-        |mad AS (SELECT event_type, dev AS mad_q FROM rd WHERE rn = (n + 1) // 2)
-        |SELECT d.event_type, count(*) AS n, max(d.med_q) AS med_q,
-        |  max(mad.mad_q) AS mad_q,
-        |  CAST(sum(CASE WHEN d.dev > 3 * mad.mad_q THEN 1 ELSE 0 END) AS BIGINT) AS n_out
-        |FROM d JOIN mad USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
-
-    // cut points by the same rank selection as the engine ((n-1)*p//100+1
-    // on the micro-quantized values); rendering division in the
-    // unigram_lp order so the double is bit-identical
-    "q_value_winsorize" ->
-      """WITH q AS (SELECT event_type, CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        |r AS (SELECT event_type, qv,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY qv) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM q),
-        |cuts AS (SELECT event_type, min(qv) AS lo_q, max(qv) AS hi_q FROM r
-        |  WHERE rn = (n - 1) * 5 // 100 + 1 OR rn = (n - 1) * 95 // 100 + 1
-        |  GROUP BY 1)
-        |SELECT q.event_type, count(*) AS n, max(lo_q) AS lo_q, max(hi_q) AS hi_q,
-        |  CAST(sum(least(greatest(q.qv, lo_q), hi_q)) AS BIGINT) AS sum_w_q,
-        |  CAST(CAST(sum(least(greatest(q.qv, lo_q), hi_q)) AS BIGINT) AS DOUBLE)
-        |    / 1000000.0 / count(*) AS mean_w
-        |FROM q JOIN cuts USING (event_type)
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // (n desc, key) is the engine's TakeOrdered tie rule; shares are
-    // single divisions of exact longs
-    "q_join_skew_audit" ->
-      """WITH c AS (SELECT l_partkey AS key, count(*) AS n FROM lineitem
-        |  WHERE l_partkey IS NOT NULL GROUP BY 1),
-        |t AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM c),
-        |top AS (SELECT key, n FROM c ORDER BY n DESC, key LIMIT 20),
-        |r AS (SELECT key, CAST(n AS BIGINT) AS n,
-        |    CAST(row_number() OVER (ORDER BY n DESC, key) AS BIGINT) AS rank,
-        |    sum(n) OVER (ORDER BY n DESC, key
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM top)
-        |SELECT key, n, rank, CAST(n AS DOUBLE) / n_total AS share,
-        |  CAST(cum AS DOUBLE) / n_total AS cum_share
-        |FROM r, t ORDER BY rank""".stripMargin,
-
-    // orphans via NOT EXISTS (NULL-safe where NOT IN is not); the
-    // scalar one-row CTEs mirror the engine's bounded crosses
-    "q_ref_integrity" ->
-      """WITH l AS (SELECT count(*) AS n_child, count(l_orderkey) AS n_nonnull FROM lineitem),
-        |lo AS (SELECT count(*) AS n_orphans FROM lineitem
-        |  WHERE l_orderkey IS NOT NULL
-        |    AND NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)),
-        |c AS (SELECT count(*) AS n_child, count(o_custkey) AS n_nonnull FROM orders),
-        |co AS (SELECT count(*) AS n_orphans FROM orders
-        |  WHERE o_custkey IS NOT NULL
-        |    AND NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey))
-        |SELECT 'lineitem->orders' AS relation, l.n_child,
-        |  l.n_child - l.n_nonnull AS n_null_keys, lo.n_orphans,
-        |  CAST(lo.n_orphans AS DOUBLE) / l.n_child AS orphan_rate FROM l, lo
-        |UNION ALL
-        |SELECT 'orders->customer', c.n_child, c.n_child - c.n_nonnull, co.n_orphans,
-        |  CAST(co.n_orphans AS DOUBLE) / c.n_child FROM c, co
-        |ORDER BY relation""".stripMargin,
-
-    // latest-per-key picks mirror max_by(value, (ts_us, event_id))
-    "q_snapshot_diff" ->
-      """WITH e AS (SELECT user_id, event_id, ts, value FROM events
-        |  WHERE user_id IS NOT NULL AND value IS NOT NULL),
-        |o AS (SELECT user_id, value AS v_old FROM (
-        |    SELECT user_id, value, row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-        |    FROM e WHERE day(ts) < 15) WHERE rn = 1),
-        |n AS (SELECT user_id, value AS v_new FROM (
-        |    SELECT user_id, value, row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-        |    FROM e) WHERE rn = 1),
-        |j AS (SELECT o.v_old, n.v_new FROM o FULL OUTER JOIN n USING (user_id))
-        |SELECT count(v_old) AS n_old, count(v_new) AS n_new,
-        |  CAST(sum(CASE WHEN v_old IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_added,
-        |  CAST(sum(CASE WHEN v_new IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_removed,
-        |  CAST(sum(CASE WHEN v_old IS NOT NULL AND v_new IS NOT NULL
-        |                 AND v_old <> v_new THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-        |  CAST(sum(CASE WHEN v_old = v_new THEN 1 ELSE 0 END) AS BIGINT) AS n_unchanged
-        |FROM j""".stripMargin,
-
-    // argmax by (dot DESC, lag) row_number — the engine's rank window;
-    // HUGEINT dots rendered as strings (the PAA 2^64 rule)
-    "q_series_lead_lag" ->
-      """WITH q AS (SELECT event_type AS key,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket_us,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT key, bucket_us, sum(qv) AS swq FROM q GROUP BY 1, 2),
-        |l AS (SELECT key AS key_b, bucket_us, swq AS swq_b,
-        |    unnest(range(-3, 4)) AS lag FROM h),
-        |j AS (SELECT a.key AS key_a, l.key_b, l.lag,
-        |    sum(CAST(a.swq AS HUGEINT) * l.swq_b) AS dot, count(*) AS n_overlap
-        |  FROM h a JOIN l ON a.bucket_us = l.bucket_us + l.lag * 3600000000
-        |    AND a.key < l.key_b
-        |  GROUP BY 1, 2, 3),
-        |r AS (SELECT key_a, key_b, lag, dot, n_overlap,
-        |    row_number() OVER (PARTITION BY key_a, key_b
-        |      ORDER BY dot DESC, lag) AS rn
-        |  FROM j)
-        |SELECT key_a, key_b, CAST(lag AS BIGINT) AS best_lag,
-        |  CAST(n_overlap AS BIGINT) AS n_overlap, CAST(dot AS VARCHAR) AS dot
-        |FROM r WHERE rn = 1 ORDER BY key_a, key_b""".stripMargin,
-
-    // hourly counts pair at (h, h+lag) only where BOTH hours have rows
-    // (sparse convention, as lead_lag); HUGEINT moments mirror the
-    // engine's decimal(38,0); ts floor-div is non-negative epoch so
-    // // == floor == the engine's floorDiv
-    "q_series_acf" ->
-      """WITH hourly AS (SELECT epoch_us(ts) // 3600000000 AS h,
-        |    CAST(count(*) AS HUGEINT) AS c
-        |  FROM events WHERE ts IS NOT NULL GROUP BY 1),
-        |pairs AS (SELECT l.lag, a.c AS x, b.c AS y
-        |  FROM (SELECT unnest(range(1, 13)) AS lag) l
-        |  CROSS JOIN hourly a
-        |  JOIN hourly b ON b.h = a.h + l.lag),
-        |m AS (SELECT lag, CAST(count(*) AS HUGEINT) AS n,
-        |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-        |    sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM pairs GROUP BY 1)
-        |SELECT CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_pairs,
-        |  CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN NULL
-        |       ELSE CAST(n * sxy - sx * sy AS DOUBLE) /
-        |            sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |                 CAST(n * syy - sy * sy AS DOUBLE)) END AS acf
-        |FROM m ORDER BY lag""".stripMargin,
-
-    // per-type resolution: identical moment arithmetic with the pair
-    // join keyed on (type, hour)
-    "q_series_acf_by_type" ->
-      """WITH hourly AS (SELECT event_type AS key,
-        |    epoch_us(ts) // 3600000000 AS h, CAST(count(*) AS HUGEINT) AS c
-        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |pairs AS (SELECT a.key, l.lag, a.c AS x, b.c AS y
-        |  FROM (SELECT unnest(range(1, 13)) AS lag) l
-        |  CROSS JOIN hourly a
-        |  JOIN hourly b ON b.key = a.key AND b.h = a.h + l.lag),
-        |m AS (SELECT key, lag, CAST(count(*) AS HUGEINT) AS n,
-        |    sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy,
-        |    sum(x * x) AS sxx, sum(y * y) AS syy
-        |  FROM pairs GROUP BY 1, 2)
-        |SELECT key, CAST(lag AS BIGINT) AS lag, CAST(n AS BIGINT) AS n_pairs,
-        |  CASE WHEN n * sxx - sx * sx = 0 OR n * syy - sy * sy = 0 THEN NULL
-        |       ELSE CAST(n * sxy - sx * sy AS DOUBLE) /
-        |            sqrt(CAST(n * sxx - sx * sx AS DOUBLE) *
-        |                 CAST(n * syy - sy * sy AS DOUBLE)) END AS acf
-        |FROM m ORDER BY key, lag""".stripMargin,
-
-    // the burst gate is the cross-multiplied integer comparison; only
-    // the reported peak ratio divides
-    "q_burst_hours" ->
-      """WITH q AS (SELECT event_type AS key,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket_us
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT key, bucket_us, count(*) AS n FROM q GROUP BY 1, 2),
-        |w AS (SELECT key, n,
-        |    sum(n) OVER (PARTITION BY key ORDER BY bucket_us
-        |      ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS t_sum,
-        |    count(*) OVER (PARTITION BY key ORDER BY bucket_us
-        |      ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING) AS t_cnt
-        |  FROM h)
-        |SELECT key, count(*) AS n_hours,
-        |  CAST(sum(CASE WHEN t_cnt > 0 AND n * t_cnt > 3 * t_sum
-        |                THEN 1 ELSE 0 END) AS BIGINT) AS n_burst_hours,
-        |  max(CASE WHEN t_cnt > 0 THEN CAST(n * t_cnt AS DOUBLE) / t_sum END)
-        |    AS max_ratio
-        |FROM w GROUP BY 1 ORDER BY key""".stripMargin,
-
-    // the same hourly frame as cusum, compressed to 64 integer
-    // segments; HUGEINT squared diffs cast to double once
-    "q_series_paa_dist" ->
-      """WITH q AS (SELECT event_type AS key,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket_us,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT key, bucket_us, sum(qv) AS swq FROM q GROUP BY 1, 2),
-        |sp AS (SELECT min(bucket_us) AS h_min, max(bucket_us) AS h_max FROM h),
-        |s AS (SELECT key,
-        |    CAST((bucket_us - h_min) * 64 // (h_max - h_min + 3600000000) AS INT) AS seg,
-        |    CAST(sum(swq) AS BIGINT) AS sv
-        |  FROM h, sp GROUP BY 1, 2),
-        |grid AS (SELECT k.key, g.seg
-        |  FROM (SELECT DISTINCT key FROM s) k CROSS JOIN (SELECT DISTINCT seg FROM s) g),
-        |dense AS (SELECT grid.key, grid.seg, coalesce(s.sv, 0) AS sv
-        |  FROM grid LEFT JOIN s USING (key, seg))
-        |SELECT a.key AS key_a, b.key AS key_b, count(*) AS n_segs,
-        |  CAST(sum((CAST(a.sv AS HUGEINT) - b.sv) * (CAST(a.sv AS HUGEINT) - b.sv))
-        |    AS VARCHAR) AS dist_sq
-        |FROM dense a JOIN dense b ON a.seg = b.seg AND a.key < b.key
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // RANGE frame (not rows) so ties share one deterministic position
-    "q_value_cdf" ->
-      """WITH q AS (SELECT event_id, event_type,
-        |    CAST(floor(value * 1000000.0) AS BIGINT) AS qv
-        |  FROM events WHERE event_type IS NOT NULL AND value IS NOT NULL),
-        |w AS (SELECT event_id, event_type, qv,
-        |    CAST(count(*) OVER (PARTITION BY event_type ORDER BY qv
-        |      RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS n_le,
-        |    CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-        |  FROM q)
-        |SELECT event_id, event_type, qv, n_le, n,
-        |  CAST(n_le AS DOUBLE) / n AS cdf
-        |FROM w ORDER BY event_id""".stripMargin,
-
-    // the generic KS shape over micro-quantized values, month halves
-    "q_value_ks" ->
-      """WITH c AS (SELECT event_type, CAST(floor(value * 1000000.0) AS BIGINT) AS v,
-        |    sum(CASE WHEN day(ts) < 15 THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN day(ts) >= 15 THEN 1 ELSE 0 END) AS cb
-        |  FROM events WHERE value IS NOT NULL AND event_type IS NOT NULL
-        |  GROUP BY 1, 2),
-        |w AS (SELECT event_type,
-        |    sum(ca) OVER (PARTITION BY event_type ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_a,
-        |    sum(cb) OVER (PARTITION BY event_type ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_b,
-        |    sum(ca) OVER (PARTITION BY event_type) AS tot_a,
-        |    sum(cb) OVER (PARTITION BY event_type) AS tot_b
-        |  FROM c)
-        |SELECT event_type, CAST(max(tot_a) AS BIGINT) AS n_a,
-        |  CAST(max(tot_b) AS BIGINT) AS n_b,
-        |  CASE WHEN max(tot_a) > 0 AND max(tot_b) > 0 THEN
-        |    CAST(max(abs(cum_a * tot_b - cum_b * tot_a)) AS DOUBLE)
-        |      / CAST(max(tot_a) * max(tot_b) AS DOUBLE)
-        |  END AS ks
-        |FROM w GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // (c DESC, hour) row_number mirrors max_by's (c, -hour) struct pick
-    "q_diurnal_peak" ->
-      """WITH h AS (SELECT event_type,
-        |    CAST(epoch_us(ts) % 86400000000 // 3600000000 AS BIGINT) AS hour,
-        |    count(*) AS c
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
-        |r AS (SELECT event_type, hour, c,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY c DESC, hour) AS rn,
-        |    sum(c) OVER (PARTITION BY event_type) AS n
-        |  FROM h)
-        |SELECT event_type, CAST(n AS BIGINT) AS n, hour AS peak_hour,
-        |  CAST(c AS BIGINT) AS peak_n, CAST(c AS DOUBLE) / n AS peak_share
-        |FROM r WHERE rn = 1 ORDER BY event_type""".stripMargin,
-
-    // max |cum_a*n_b - cum_b*n_a| over the merged value grid — every
-    // candidate integer, one division renders D
-    "text_length_ks" ->
-      """WITH c AS (SELECT lang, n_chars AS v,
-        |    sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS ca,
-        |    sum(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END) AS cb
-        |  FROM documents WHERE n_chars IS NOT NULL AND lang IS NOT NULL
-        |  GROUP BY 1, 2),
-        |w AS (SELECT lang,
-        |    sum(ca) OVER (PARTITION BY lang ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_a,
-        |    sum(cb) OVER (PARTITION BY lang ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_b,
-        |    sum(ca) OVER (PARTITION BY lang) AS tot_a,
-        |    sum(cb) OVER (PARTITION BY lang) AS tot_b
-        |  FROM c)
-        |SELECT lang, CAST(max(tot_a) AS BIGINT) AS n_a,
-        |  CAST(max(tot_b) AS BIGINT) AS n_b,
-        |  CASE WHEN max(tot_a) > 0 AND max(tot_b) > 0 THEN
-        |    CAST(max(abs(cum_a * tot_b - cum_b * tot_a)) AS DOUBLE)
-        |      / CAST(max(tot_a) * max(tot_b) AS DOUBLE)
-        |  END AS ks
-        |FROM w GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    // (N^2 - sum c^2) / N^2 in HUGEINT, one division — the strftime
-    // day matches the engine's date_format under the UTC session
-    "q_type_diversity" ->
-      """WITH c AS (SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
-        |    CAST(count(*) AS HUGEINT) AS c
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |  GROUP BY 1, 2),
-        |m AS (SELECT day, sum(c) AS n, count(*) AS n_categories,
-        |    sum(c * c) AS sc2
-        |  FROM c GROUP BY 1)
-        |SELECT day, CAST(n AS BIGINT) AS n,
-        |  CAST(n_categories AS BIGINT) AS n_categories,
-        |  CAST(n * n - sc2 AS DOUBLE) / CAST(n * n AS DOUBLE) AS diversity
-        |FROM m ORDER BY day""".stripMargin,
-
-    // HUGEINT numerator/denominator cast to double and divided ONCE —
-    // mirrors the engine's decimal(38,0) discipline
-    "q_type_drift" ->
-      """WITH o AS (SELECT event_type, count(*) AS c_old FROM events
-        |  WHERE event_type IS NOT NULL AND day(ts) < 15 GROUP BY 1),
-        |n AS (SELECT event_type, count(*) AS c_new FROM events
-        |  WHERE event_type IS NOT NULL AND day(ts) >= 15 GROUP BY 1),
-        |t AS (SELECT (SELECT sum(c_old) FROM o) AS n_old,
-        |             (SELECT sum(c_new) FROM n) AS n_new),
-        |j AS (SELECT event_type, coalesce(c_old, 0) AS c_old, coalesce(c_new, 0) AS c_new
-        |      FROM o FULL OUTER JOIN n USING (event_type))
-        |SELECT j.event_type, CAST(c_old AS BIGINT) AS c_old, CAST(c_new AS BIGINT) AS c_new,
-        |  CASE WHEN c_old > 0 THEN
-        |    CAST((CAST(c_new AS HUGEINT) * n_old - CAST(c_old AS HUGEINT) * n_new)
-        |       * (CAST(c_new AS HUGEINT) * n_old - CAST(c_old AS HUGEINT) * n_new) AS DOUBLE)
-        |    / CAST(CAST(c_old AS HUGEINT) * n_new * n_old AS DOUBLE)
-        |  END AS chi2_term
-        |FROM j, t ORDER BY event_type""".stripMargin,
-
-    // NULL prev_max on each type's first arrival falls to late 0 in both
-    // engines (NULL > x is NULL, CASE else-branch)
-    "q_disorder_audit" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE event_type IS NOT NULL),
-        |m AS (SELECT event_type, ts_us,
-        |    max(ts_us) OVER (PARTITION BY event_type ORDER BY event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max_us
-        |  FROM e),
-        |d AS (SELECT event_type,
-        |    CASE WHEN prev_max_us > ts_us THEN prev_max_us - ts_us ELSE 0 END AS late_us
-        |  FROM m)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-        |  CAST(max(late_us) AS BIGINT) AS max_late_us,
-        |  CAST(CAST(sum(CASE WHEN late_us > 0 THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
-        |    / count(*) AS late_rate
-        |FROM d GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // the BM25 arithmetic replayed term by term: idf and saturation in
-    // the exact Spark operation order, each contribution quantized to
-    // micro-units BEFORE the per-pair sum
-    "sim_bm25_topk" ->
-      """WITH tf AS (SELECT doc_id, w, count(*) AS tf
-        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        |        FROM documents) GROUP BY 1, 2),
-        |lens AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-        |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(dl) AS BIGINT) AS n_tokens FROM lens),
-        |dfreq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1
-        |  HAVING count(*) <= 1000),
-        |q AS (SELECT doc_id AS query_id, w FROM tf WHERE doc_id < 5),
-        |sc AS (SELECT q.query_id, t.doc_id,
-        |    CAST(round(ln((CAST(s.n_docs AS DOUBLE) - CAST(d.df AS DOUBLE) + 0.5)
-        |        / (CAST(d.df AS DOUBLE) + 0.5) + 1.0)
-        |      * (CAST(t.tf AS DOUBLE) * 2.2)
-        |      / (CAST(t.tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-        |        * CAST(l.dl AS DOUBLE)
-        |        / (CAST(s.n_tokens AS DOUBLE) / CAST(s.n_docs AS DOUBLE))))
-        |      * 1000000) AS BIGINT) AS qs
-        |  FROM q JOIN tf t ON t.w = q.w AND t.doc_id <> q.query_id
-        |  JOIN dfreq d ON d.w = q.w
-        |  JOIN lens l ON l.doc_id = t.doc_id
-        |  CROSS JOIN stats s),
-        |agg AS (SELECT query_id, doc_id, CAST(sum(qs) AS BIGINT) AS score_q
-        |  FROM sc GROUP BY 1, 2),
-        |r AS (SELECT query_id, doc_id, score_q,
-        |    row_number() OVER (PARTITION BY query_id
-        |      ORDER BY score_q DESC, doc_id) AS rank FROM agg)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank,
-        |  doc_id AS neighbor_id,
-        |  CAST(score_q AS DOUBLE) / 1000000.0 AS bm25
-        |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // both retrieval arms replayed at depth 10 (the BM25 chain above
-    // verbatim, the dense brute scan), then the fusion's exact integer
-    // arithmetic: 10^6 // (60 + rank), missing arm contributes 0
-    "sim_hybrid_topk" -> ("WITH " + HYBRID_RANK_CTES + """
-        |SELECT query_id, rank, neighbor_id, rrf, lex_rank, dense_rank
-        |FROM rr WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
-
-    // MRR@5 of each serving list (lexical @5, dense @5, fused @5)
-    // against brute-force cosine truth: first-true-hit rank per arm,
-    // rr_scaled = 10^6 // first_rank (0 on all-miss) — the dense arm IS
-    // the truth generator here, so its row is the calibration line
-    "sim_mrr_audit" -> ("WITH " + HYBRID_RANK_CTES + """,
-        |truth AS (SELECT query_id, neighbor_id FROM dense WHERE dense_rank <= 5),
-        |qs AS (SELECT query_id FROM lex UNION SELECT query_id FROM dense),
-        |lh AS (SELECT t.query_id, CAST(min(l.lex_rank) AS BIGINT) AS fr
-        |       FROM truth t JOIN lex l ON l.query_id = t.query_id
-        |         AND l.neighbor_id = t.neighbor_id
-        |       WHERE l.lex_rank <= 5 GROUP BY 1),
-        |dh AS (SELECT t.query_id, CAST(min(d.dense_rank) AS BIGINT) AS fr
-        |       FROM truth t JOIN dense d ON d.query_id = t.query_id
-        |         AND d.neighbor_id = t.neighbor_id
-        |       WHERE d.dense_rank <= 5 GROUP BY 1),
-        |fh AS (SELECT t.query_id, CAST(min(r.rank) AS BIGINT) AS fr
-        |       FROM truth t JOIN rr r ON r.query_id = t.query_id
-        |         AND r.neighbor_id = t.neighbor_id
-        |       WHERE r.rank <= 5 GROUP BY 1)
-        |SELECT q.query_id,
-        |  lh.fr AS lex_first_rank,
-        |  CAST(coalesce(1000000 // lh.fr, 0) AS BIGINT) AS lex_rr,
-        |  dh.fr AS dense_first_rank,
-        |  CAST(coalesce(1000000 // dh.fr, 0) AS BIGINT) AS dense_rr,
-        |  fh.fr AS fused_first_rank,
-        |  CAST(coalesce(1000000 // fh.fr, 0) AS BIGINT) AS fused_rr
-        |FROM qs q LEFT JOIN lh ON lh.query_id = q.query_id
-        |LEFT JOIN dh ON dh.query_id = q.query_id
-        |LEFT JOIN fh ON fh.query_id = q.query_id
-        |ORDER BY q.query_id""".stripMargin),
-
-    // same integer idf surrogate as text_tfidf ((N+1)//(df+1), scaled
-    // 10^6), same df cap as the engine, ties by neighbor id
-    "sim_lexical_topk" ->
-      """WITH tok AS (SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS s
-        |  FROM documents),
-        |w AS (SELECT s, (1000000 * ((SELECT count(*) FROM documents) + 1)) // (df + 1) AS w
-        |  FROM (SELECT s, count(*) AS df FROM tok GROUP BY 1 HAVING count(*) <= 1000)),
-        |tw AS (SELECT tok.doc_id, tok.s, w.w FROM tok JOIN w USING (s)),
-        |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, CAST(sum(a.w) AS BIGINT) AS score
-        |  FROM tw a JOIN tw b ON a.s = b.s AND a.doc_id < b.doc_id
-        |  GROUP BY 1, 2),
-        |m AS (SELECT id1 AS doc_id, id2 AS nbr_id, score FROM pairs
-        |      UNION ALL SELECT id2, id1, score FROM pairs),
-        |r AS (SELECT doc_id, nbr_id, score,
-        |    CAST(row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, nbr_id)
-        |      AS BIGINT) AS rank
-        |  FROM m)
-        |SELECT doc_id, nbr_id, score, rank FROM r WHERE rank <= 3
-        |ORDER BY doc_id, rank""".stripMargin,
-
-    // the q_length_buckets pow2 bucket reused as the third quasi-identifier
-    "q_anonymity_census" ->
-      """WITH b AS (SELECT lang, source,
-        |    CASE WHEN n_chars <= 1 THEN CAST(1 AS BIGINT)
-        |         ELSE CAST(1 AS BIGINT) << length(bin(n_chars - 1)) END AS len_bucket
-        |  FROM documents),
-        |g AS (SELECT lang, source, len_bucket, count(*) AS n_rows
-        |  FROM b GROUP BY 1, 2, 3)
-        |SELECT lang, count(*) AS n_groups,
-        |  CAST(sum(CASE WHEN n_rows < 5 THEN 1 ELSE 0 END) AS BIGINT) AS n_small_groups,
-        |  CAST(sum(CASE WHEN n_rows < 5 THEN n_rows ELSE 0 END) AS BIGINT) AS n_rows_at_risk
-        |FROM g GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "q_basket_confidence" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |pc AS (SELECT a.p AS a, b.p AS b, count(*) AS n_ab
-        |       FROM op a JOIN op b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2
-        |       HAVING count(*) >= 2),
-        |parts AS (SELECT p, count(*) AS n_p FROM op GROUP BY 1),
-        |dir AS (SELECT a AS ante, b AS cons, n_ab FROM pc
-        |        UNION ALL SELECT b, a, n_ab FROM pc)
-        |SELECT d.ante AS ante, d.cons, d.n_ab, pa.n_p AS n_ante,
-        |  CAST(d.n_ab AS DOUBLE) / pa.n_p AS confidence
-        |FROM dir d JOIN parts pa ON pa.p = d.ante
-        |ORDER BY d.ante, d.cons""".stripMargin,
-
-    // identical to q_basket_lift by the merge law: the oracle recomputes
-    // directly, the engine merges the order-key split
-    "q_basket_increment" -> BASKET_LIFT_SQL,
-
-    "q_basket_lift" -> BASKET_LIFT_SQL,
-
-    // id-ordered enumeration (a < b < c with all three edges present) —
-    // the orientation-free statement of the same exact triangle set
-    "graph_triangles" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |e AS (SELECT DISTINCT a.p AS a, b.p AS b
-        |      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-        |tri AS (SELECT e1.a, e1.b, e2.b AS c
-        |        FROM e e1 JOIN e e2 ON e1.a = e2.a AND e1.b < e2.b
-        |        JOIN e e3 ON e3.a = e1.b AND e3.b = e2.b)
-        |SELECT part, count(*) AS n_tri FROM (
-        |  SELECT a AS part FROM tri UNION ALL
-        |  SELECT b FROM tri UNION ALL
-        |  SELECT c FROM tri)
-        |GROUP BY part ORDER BY part""".stripMargin,
-
-    "graph_kcore" -> KCORE_SQL,
-
-    // the oracle is the DIRECT rollup — merge(partial(A), partial(B)) must
-    // equal partial(A ∪ B); sums are micro-quantized integers (exact)
-    "q_rollup_increment" ->
-      """SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, count(*) AS n,
-        |  CAST(sum(CAST(floor(value * 1000000.0) AS BIGINT)) AS BIGINT) AS sum_q,
-        |  min(value) AS min_v, max(value) AS max_v
-        |FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // same-ts versions pre-reduce to the greatest event_id (the as-of tie
-    // rule); the open-ended last version's valid_to is null
-    "q_scd2_intervals" ->
-      """WITH v AS (SELECT event_type, ts, value,
-        |    row_number() OVER (PARTITION BY event_type, ts ORDER BY event_id DESC) AS vrank
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL),
-        |d AS (SELECT event_type, ts, value FROM v WHERE vrank = 1)
-        |SELECT event_type,
-        |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS valid_from,
-        |  strftime(lead(ts) OVER (PARTITION BY event_type ORDER BY ts),
-        |           '%Y-%m-%d %H:%M:%S') AS valid_to,
-        |  value
-        |FROM d ORDER BY event_type, valid_from""".stripMargin,
-
-    // last-in-bucket pick mirrors max_by(value, (ts, event_id)); the
-    // fill window reads the GRID, nulls before a key's first observation
-    "q_resample_ffill" ->
-      """WITH bounds AS (SELECT date_trunc('hour', min(ts)) AS lo,
-        |                       date_trunc('hour', max(ts)) AS hi FROM events),
-        |grid AS (SELECT k.event_type,
-        |    unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS bucket
-        |  FROM (SELECT DISTINCT event_type FROM events) k, bounds b),
-        |ranked AS (SELECT event_type, date_trunc('hour', ts) AS bucket, value,
-        |    row_number() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |      ORDER BY ts DESC, event_id DESC) AS rn,
-        |    count(*) OVER (PARTITION BY event_type, date_trunc('hour', ts)) AS n_obs
-        |  FROM events),
-        |hourly AS (SELECT event_type, bucket, n_obs, value AS last_value
-        |  FROM ranked WHERE rn = 1)
-        |SELECT g.event_type, strftime(g.bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
-        |  coalesce(h.n_obs, 0) AS n_obs,
-        |  last_value(h.last_value IGNORE NULLS) OVER (
-        |    PARTITION BY g.event_type ORDER BY g.bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
-        |FROM grid g LEFT JOIN hourly h
-        |  ON h.event_type = g.event_type AND h.bucket = g.bucket
-        |ORDER BY g.event_type, g.bucket""".stripMargin,
-    // linear interpolation at each grid instant: union of grid + obs rows,
-    // one window per direction; exact-time observations sort before their
-    // grid instant (side 0 < 1), so the weight degenerates to 0 there and
-    // the division is micros-exact-integer over micros-exact-integer
-    "q_resample_interp" ->
-      """WITH ev AS (SELECT event_type, epoch_us(ts) AS ts_us, CAST(value AS DOUBLE) AS v, event_id
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
-        |bounds AS (SELECT date_trunc('hour', min(ts)) AS lo, date_trunc('hour', max(ts)) AS hi
-        |  FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL),
-        |grid AS (SELECT k.event_type,
-        |    unnest(generate_series(b.lo, b.hi, INTERVAL 1 HOUR)) AS bucket
-        |  FROM (SELECT DISTINCT event_type FROM events
-        |        WHERE event_type IS NOT NULL AND ts IS NOT NULL) k, bounds b),
-        |u AS (
-        |  SELECT event_type, bucket, epoch_us(bucket) AS t_us, 1 AS side,
-        |    NULL AS v, NULL AS oid FROM grid
-        |  UNION ALL
-        |  SELECT event_type, NULL, ts_us, 0, v, event_id FROM ev),
-        |w AS (
-        |  SELECT *,
-        |    last_value(v IGNORE NULLS) OVER win_prev AS prev_v,
-        |    last_value(CASE WHEN side = 0 THEN t_us END IGNORE NULLS) OVER win_prev AS prev_t,
-        |    first_value(v IGNORE NULLS) OVER win_next AS next_v,
-        |    first_value(CASE WHEN side = 0 THEN t_us END IGNORE NULLS) OVER win_next AS next_t
-        |  FROM u
-        |  WINDOW
-        |    win_prev AS (PARTITION BY event_type ORDER BY t_us, side, oid
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |    win_next AS (PARTITION BY event_type ORDER BY t_us, side, oid DESC
-        |      ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING))
-        |SELECT event_type, strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
-        |  CASE WHEN prev_t = t_us THEN prev_v
-        |       WHEN prev_t IS NOT NULL AND next_t IS NOT NULL
-        |       THEN prev_v + (next_v - prev_v)
-        |            * (CAST(t_us - prev_t AS DOUBLE) / CAST(next_t - prev_t AS DOUBLE)) END
-        |    AS interp_value
-        |FROM w WHERE side = 1 ORDER BY event_type, bucket""".stripMargin,
-
-    // bucketed refinement == the plain as-of, same oracle
-    "q_asof_attribution_bucketed" -> ASOF_ATTRIBUTION_SQL,
-
-    "q_nearest_view" ->
-      """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |           WHERE event_type = 'purchase'),
-        |     v AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us FROM events
-        |           WHERE event_type = 'view'),
-        |cand AS (
-        |  SELECT p.event_id, v.event_id AS view_event_id,
-        |    abs(p.ts_us - v.ts_us) AS d,
-        |    row_number() OVER (PARTITION BY p.event_id
-        |      ORDER BY abs(p.ts_us - v.ts_us), v.event_id) AS rn
-        |  FROM p JOIN v ON p.user_id = v.user_id)
-        |SELECT p.event_id AS event_id, p.user_id AS user_id,
-        |  c.view_event_id AS view_event_id, c.d AS dist_us
-        |FROM p LEFT JOIN (SELECT * FROM cand WHERE rn = 1) c ON c.event_id = p.event_id
-        |ORDER BY event_id""".stripMargin,
-
-    "q_trailing_avg" ->
-      """SELECT event_id, event_type,
-        |  CAST(sum(CAST(value AS DECIMAL(18,4))) OVER w AS DOUBLE)
-        |    / count(*) OVER w AS trailing_avg,
-        |  count(*) OVER w AS n_window
-        |FROM (SELECT event_id, event_type, value, epoch_us(ts) AS ts_us FROM events)
-        |WINDOW w AS (PARTITION BY event_type ORDER BY ts_us
-        |             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "q_range_sessions" ->
-      """WITH base AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us,
-        |    CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
-        |          OR epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000 THEN 1 ELSE 0 END AS new_session
-        |  FROM events WHERE event_type IN ('click', 'view')
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)),
-        |sess AS (
-        |  SELECT user_id,
-        |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq,
-        |    us
-        |  FROM base),
-        |bounds AS (
-        |  SELECT user_id, session_seq, min(us) AS start_us,
-        |    min(us) - 3600000000 AS win_start_us, max(us) + 3600000000 AS win_end_us
-        |  FROM sess GROUP BY 1, 2),
-        |p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us, value
-        |      FROM events WHERE event_type = 'purchase')
-        |SELECT p.user_id AS user_id, b.session_seq AS session_seq,
-        |  p.event_id AS event_id, p.value AS purchase_value,
-        |  p.ts_us - b.start_us AS offset_us
-        |FROM p JOIN bounds b ON p.user_id = b.user_id
-        |  AND p.ts_us BETWEEN b.win_start_us AND b.win_end_us
-        |ORDER BY user_id, session_seq, event_id""".stripMargin,
-
-    "q_split_census" ->
-      """SELECT lang,
-        |  CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) <= 'e5'
-        |       THEN 'train' ELSE 'eval' END AS split,
-        |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |FROM documents GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
-
-    // the first md5 byte parsed with plain string ops (the q_seq_pack
-    // hex-digit trick), then mod k — same fold ids as the engine
-    "q_kfold_census" ->
-      """WITH f AS (
-        |  SELECT lang, n_chars,
-        |    CAST((
-        |      (instr('0123456789abcdef',
-        |         substr(md5('fold:' || CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-        |      + instr('0123456789abcdef',
-        |          substr(md5('fold:' || CAST(doc_id AS VARCHAR)), 2, 1)) - 1
-        |    ) % 5 AS INT) AS fold
-        |  FROM documents)
-        |SELECT fold, lang, count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |FROM f GROUP BY 1, 2 ORDER BY fold, lang""".stripMargin,
-
-    // ceil-pow2 by bit length of n-1 — integer-only in both engines
-    "q_length_buckets" ->
-      """WITH t AS (
-        |  SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |b AS (
-        |  SELECT n_tokens,
-        |    CASE WHEN n_tokens <= 1 THEN CAST(1 AS BIGINT)
-        |         ELSE CAST(1 AS BIGINT) << length(bin(n_tokens - 1)) END AS bucket
-        |  FROM t)
-        |SELECT bucket, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens_total,
-        |  CAST(sum(bucket - n_tokens) AS BIGINT) AS pad_tokens
-        |FROM b GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q_source_cap" ->
-      """SELECT source, rank_in_source, doc_id, n_chars FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id)
-        |      AS rank_in_source
-        |  FROM documents)
-        |WHERE rank_in_source <= 100 ORDER BY source, rank_in_source""".stripMargin,
-
-    // the BFD fold replayed as a recursive CTE: one anchor row per
-    // shard, each step filters the open-bin loads for fit, best fit =
-    // max fitting load, list_position takes the FIRST occurrence (= the
-    // smallest bin id on load ties), loads updated by list slicing
-    "q_seq_pack_bfd" -> (BFD_CTES +
-      """
-        |SELECT doc_id, shard, n AS n_tokens, bin
-        |FROM fold WHERE rn >= 1 ORDER BY doc_id""".stripMargin),
-
-    "q_seq_pack_waste" -> (BFD_CTES +
-      """,
-        |nf AS (
-        |  SELECT shard, CAST(0 AS BIGINT) AS rn, CAST(0 AS BIGINT) AS nbins,
-        |         CAST(256 AS BIGINT) AS cur
-        |  FROM (SELECT DISTINCT shard FROM t)
-        |  UNION ALL
-        |  SELECT t.shard, f.rn + 1,
-        |    CASE WHEN f.cur + t.n <= 256 THEN f.nbins ELSE f.nbins + 1 END,
-        |    CASE WHEN f.cur + t.n <= 256 THEN f.cur + t.n ELSE t.n END
-        |  FROM nf f JOIN t ON t.shard = f.shard AND t.rn = f.rn + 1),
-        |blast AS (SELECT shard, max(rn) AS mx FROM fold GROUP BY 1),
-        |bfinal AS (SELECT f.shard, CAST(len(f.loads) AS BIGINT) AS bins_bfd
-        |  FROM fold f JOIN blast l ON f.shard = l.shard AND f.rn = l.mx),
-        |nlast AS (SELECT shard, max(rn) AS mx FROM nf GROUP BY 1),
-        |nfinal AS (SELECT f.shard, f.nbins AS bins_greedy
-        |  FROM nf f JOIN nlast l ON f.shard = l.shard AND f.rn = l.mx),
-        |stats AS (SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(n) AS BIGINT) AS total_tokens
-        |  FROM t GROUP BY 1)
-        |SELECT s.shard, s.n_docs, s.total_tokens, b.bins_bfd,
-        |  b.bins_bfd * 256 - s.total_tokens AS waste_bfd,
-        |  g.bins_greedy, g.bins_greedy * 256 - s.total_tokens AS waste_greedy,
-        |  (g.bins_greedy - b.bins_bfd) * 256 AS waste_delta
-        |FROM stats s JOIN bfinal b USING (shard) JOIN nfinal g USING (shard)
-        |ORDER BY s.shard""".stripMargin),
-
-    "q_seq_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, md5('pack:' || CAST(doc_id AS VARCHAR)) AS h,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, h, n_tokens,
-        |    CAST(instr('0123456789abcdef', substr(h, 1, 1)) - 1 AS INT) AS shard
-        |  FROM t),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |    CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY h, doc_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-        |  FROM s)
-        |SELECT doc_id, shard, n_tokens,
-        |  (cum_tokens - n_tokens) // 2048 AS pack_id,
-        |  (cum_tokens - n_tokens) % 2048 AS pack_offset
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "text_normalize" ->
-      """SELECT doc_id, CAST(length(text) AS INT) AS n_chars_raw,
-        |  trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g')) AS normalized,
-        |  CAST(length(trim(regexp_replace(lower(text), '[ \t\n\x0B\f\r]+', ' ', 'g'))) AS INT) AS n_chars_norm
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_pii" ->
-      """WITH planted AS (
-        |  SELECT doc_id, text ||
-        |    CASE WHEN doc_id % 7 = 0
-        |         THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com now'
-        |         ELSE '' END ||
-        |    CASE WHEN doc_id % 13 = 0
-        |         THEN ' card 4111-1111-1111-' || CAST(doc_id % 9000 + 1000 AS VARCHAR) || ' used'
-        |         ELSE '' END ||
-        |    CASE WHEN doc_id % 5 = 0
-        |         THEN ' call 555-' || CAST(doc_id % 900 + 100 AS VARCHAR) || '-0199 ok'
-        |         ELSE '' END ||
-        |    CASE WHEN doc_id % 11 = 0
-        |         THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.1 logged'
-        |         ELSE '' END AS text
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(text, '\b[0-9]{4}([- ]?[0-9]{4}){3}\b')) AS BIGINT) AS n_cards,
-        |  CAST(len(regexp_extract_all(text, '\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\b')) AS BIGINT) AS n_phones,
-        |  CAST(len(regexp_extract_all(text, '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS BIGINT) AS n_ipv4,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(
-        |        regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |        '\b[0-9]{4}([- ]?[0-9]{4}){3}\b', '<CARD>', 'g'),
-        |      '\b[0-9]{3}[-. ][0-9]{3}[-. ][0-9]{4}\b', '<PHONE>', 'g'),
-        |    '\b([0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g') AS redacted
-        |FROM planted ORDER BY doc_id""".stripMargin,
-
-    "q_source_cap_salted" ->
-      """SELECT source, rank_in_source, doc_id, n_chars FROM (
-        |  SELECT source, doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id)
-        |      AS rank_in_source
-        |  FROM documents)
-        |WHERE rank_in_source <= 100 ORDER BY source, rank_in_source""".stripMargin,
-
-    "q_shuffle_order" ->
-      """SELECT doc_id, md5('epoch1:' || CAST(doc_id AS VARCHAR)) AS shuffle_key
-        |FROM documents ORDER BY shuffle_key LIMIT 100""".stripMargin,
-
-    "q_zorder_layout" ->
-      s"""SELECT p_partkey,
-         |  ${Layout.zorderSql("p_size", "CAST(floor(p_retailprice) AS BIGINT)")} AS zkey
-         |FROM part ORDER BY zkey, p_partkey""".stripMargin,
-
-    "q_hilbert_layout" -> HILBERT_LAYOUT_SQL,
-
-    // the E-S priority replay: one quantized ln per row, one exact
-    // division, top-100 by (priority desc, doc_id)
-    "q_weighted_sample" ->
-      """WITH p AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS w,
-        |    CAST(round(ln(CAST(
-        |      ('0x' || substr(md5('wsample:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-        |      + 1 AS DOUBLE) / CAST(1152921504606846976 AS DOUBLE)) * 1000000.0)
-        |      AS BIGINT) AS qln
-        |  FROM documents)
-        |SELECT doc_id, w, CAST(qln AS DOUBLE) / CAST(w AS DOUBLE) AS priority
-        |FROM p ORDER BY priority DESC, doc_id LIMIT 100""".stripMargin,
-
-    // bounds are first-16-bit hex of ceil(rate*65536)-1: 0.5 → 7fff,
-    // 0.25 → 3fff — the same fixed-width-hex compare the split uses
-    "q_stratified_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE CASE
-        |  WHEN lang = 'en' THEN substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 4) <= '7fff'
-        |  WHEN lang = 'zh' THEN substr(md5('strat:' || CAST(doc_id AS VARCHAR)), 1, 4) <= '3fff'
-        |  ELSE TRUE END
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |words AS (SELECT doc_id, unnest(ws) AS w FROM w),
-        |wc AS (SELECT doc_id, w, count(*) AS c FROM words GROUP BY 1, 2),
-        |tw AS (SELECT doc_id, max(c) AS top_wc, CAST(sum(c) AS BIGINT) AS n_words
-        |       FROM wc GROUP BY 1),
-        |bi AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS b
-        |       FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM w)),
-        |bc AS (SELECT doc_id, b, count(*) AS c FROM bi GROUP BY 1, 2),
-        |tb AS (SELECT doc_id, max(c) AS top_bc, CAST(sum(c) AS BIGINT) AS n_bigrams
-        |       FROM bc GROUP BY 1)
-        |SELECT tw.doc_id AS doc_id, tw.n_words,
-        |  CAST(tw.top_wc AS DOUBLE) / tw.n_words AS top_word_frac,
-        |  CAST(tb.top_bc AS DOUBLE) / tb.n_bigrams AS top_bigram_frac
-        |FROM tw JOIN tb ON tw.doc_id = tb.doc_id ORDER BY doc_id""".stripMargin,
-
-    "text_decontaminate" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w,
-        |    CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) <= 'e5'
-        |         THEN 0 ELSE 1 END AS is_eval
-        |  FROM documents),
-        |idx AS (SELECT doc_id, is_eval, w,
-        |        unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-        |sh AS (SELECT DISTINCT doc_id, is_eval,
-        |       array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-        |ev AS (SELECT doc_id, s FROM sh WHERE is_eval = 1),
-        |tr AS (SELECT doc_id, s FROM sh WHERE is_eval = 0),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM ev GROUP BY 1),
-        |inter AS (SELECT t.doc_id AS train_id, e.doc_id AS eval_id, count(*) AS i
-        |          FROM tr t JOIN ev e ON t.s = e.s GROUP BY 1, 2)
-        |SELECT train_id, eval_id, containment FROM (
-        |  SELECT train_id, eval_id, CAST(i AS DOUBLE) / sizes.n AS containment
-        |  FROM inter JOIN sizes ON sizes.doc_id = eval_id)
-        |WHERE containment >= 0.5 ORDER BY train_id, eval_id""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    // NOT EXISTS (not NOT IN) + explicit null-text filters: pins the same
-    // null semantics as the Scala side's isNotNull + anti join
-    "dedup_incremental" ->
-      """WITH seen AS (SELECT md5(text) AS h FROM documents WHERE doc_id < 250 AND text IS NOT NULL),
-        |b AS (SELECT doc_id, md5(text) AS h FROM documents WHERE doc_id >= 250 AND text IS NOT NULL)
-        |SELECT min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM b WHERE NOT EXISTS (SELECT 1 FROM seen WHERE seen.h = b.h)
-        |GROUP BY b.h ORDER BY keep_id""".stripMargin,
-
-    // LSH candidates + exact-Jaccard verify against the brute-force
-    // batch×seen cross scoring (misses are governed by the 16×4 band
-    // family — ~2e-4 at j=0.8, vanishing at the planted-dup 1.0)
-    "dedup_incremental_lsh" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |pairs AS (SELECT b.doc_id AS batch_id, a.doc_id AS seen_id, count(*) AS inter
-        |          FROM sh b JOIN sh a ON b.s = a.s AND b.doc_id >= 250 AND a.doc_id < 250
-        |          GROUP BY 1, 2)
-        |SELECT batch_id, seen_id, jaccard FROM (
-        |  SELECT batch_id, seen_id, CAST(inter AS DOUBLE) / (sb.n + sa.n - inter) AS jaccard
-        |  FROM pairs JOIN sizes sb ON sb.doc_id = batch_id JOIN sizes sa ON sa.doc_id = seen_id)
-        |WHERE jaccard >= 0.8 ORDER BY batch_id, seen_id""".stripMargin,
-
-    // dedup_minhash verifies its LSH candidates with exact jaccard, so its
-    // oracle is the same brute-force inverted-index query.
-    "dedup_jaccard" -> JACCARD_SQL,
-    "dedup_minhash" -> JACCARD_SQL,
-    "dedup_simhash_md5" -> SIMHASH_MD5_SQL,
-    "dedup_jaccard_capped" -> JACCARD_CAPPED_SQL,
-
-    // component resolution over the jaccard pairs: DuckDB computes the
-    // transitive closure with a recursive CTE (UNION dedups, labels are a
-    // finite id set → terminates); min reachable id per node is exactly
-    // the min-label fixpoint the engine's pointer-doubling loop certifies.
-    "dedup_components" -> COMPONENTS_SQL,
-    "dedup_components_lsh" -> COMPONENTS_SQL,
-    // merge ≡ recompute: the incremental result is split-invariant, so
-    // the full-closure oracle certifies the quotient merge exactly
-    "dedup_components_increment" -> COMPONENTS_SQL,
-
-    // the canonical-id CTE then the SAME 256-bucket md5 rule as
-    // q_split_census, keyed on the cluster representative
-    "q_split_leakage_safe" ->
-      s"""WITH RECURSIVE
-         |$COMPONENT_CTES
-         |SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS canonical_id,
-         |  CASE WHEN substr(md5('split:' || CAST(coalesce(c.comp, d.doc_id) AS VARCHAR)), 1, 2) <= 'e5'
-         |       THEN 'train' ELSE 'eval' END AS split
-         |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    "q_rate_cap" ->
-      """SELECT event_id, user_id, rank_in_bucket FROM (
-        |  SELECT event_id, user_id,
-        |    CAST(row_number() OVER (PARTITION BY user_id, date_trunc('day', ts)
-        |      ORDER BY ts, event_id) AS BIGINT) AS rank_in_bucket
-        |  FROM events WHERE ts IS NOT NULL)
-        |WHERE rank_in_bucket <= 5 ORDER BY event_id""".stripMargin,
-
-    "dedup_source_matrix" ->
-      s"""WITH RECURSIVE
-         |$COMPONENT_CTES
-         |SELECT source_a, source_b, count(*) AS n_pairs FROM (
-         |  SELECT least(da.source, db.source) AS source_a,
-         |         greatest(da.source, db.source) AS source_b
-         |  FROM p
-         |  JOIN documents da ON da.doc_id = p.id1
-         |  JOIN documents db ON db.doc_id = p.id2)
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "dedup_source_rate" ->
-      s"""WITH RECURSIVE
-         |$COMPONENT_CTES
-         |SELECT d.source, count(*) AS n_docs,
-         |  count(CASE WHEN coalesce(c.comp, d.doc_id) <> d.doc_id THEN 1 END) AS n_dups
-         |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "dedup_canonical" -> CANONICAL_SQL,
-
-    "dedup_savings" ->
-      s"""WITH RECURSIVE
-         |$COMPONENT_CTES,
-         |cmap AS (SELECT d.doc_id, d.source, d.n_chars,
-         |    coalesce(c.comp, d.doc_id) AS canonical_id
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(n_chars) AS BIGINT) AS chars_total,
-         |  CAST(sum(CASE WHEN canonical_id <> doc_id THEN n_chars ELSE 0 END) AS BIGINT)
-         |    AS chars_dropped,
-         |  CAST(sum(CASE WHEN canonical_id <> doc_id THEN n_chars ELSE 0 END) AS DOUBLE)
-         |    / sum(n_chars) AS drop_share
-         |FROM cmap GROUP BY source ORDER BY source""".stripMargin,
-
-    // quality-argmax representative over the same recursive closure: the
-    // micro-quantized score is the identical per-row double floored, so
-    // max/argmax compare exact longs in both engines
-    "dedup_best_of_cluster" ->
-      s"""WITH RECURSIVE
-         |$COMPONENT_CTES,
-         |qv AS (SELECT doc_id,
-         |    CAST(floor((ttr * 0.4 + stopword_ratio * 0.3 +
-         |      CASE WHEN n_tokens >= 40 THEN 0.3
-         |           ELSE CAST(n_tokens AS DOUBLE) / 40.0 * 0.3 END) * 1000000.0) AS BIGINT) AS qm
-         |  FROM (
-         |    SELECT doc_id,
-         |      len(string_split(text, ' ')) AS n_tokens,
-         |      CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-         |        / len(string_split(text, ' ')) AS ttr,
-         |      CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the', 'a'))) AS DOUBLE)
-         |        / len(string_split(text, ' ')) AS stopword_ratio
-         |    FROM documents)),
-         |cmap AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS canonical_id
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-         |sel AS (SELECT cm.canonical_id, cm.doc_id, q.qm,
-         |    row_number() OVER (PARTITION BY cm.canonical_id ORDER BY q.qm DESC, cm.doc_id) AS rn,
-         |    count(*) OVER (PARTITION BY cm.canonical_id) AS n_members,
-         |    max(q.qm) OVER (PARTITION BY cm.canonical_id) AS best_q_micro
-         |  FROM cmap cm JOIN qv q ON q.doc_id = cm.doc_id)
-         |SELECT canonical_id, doc_id AS keep_id,
-         |  CAST(n_members AS BIGINT) AS n_members, best_q_micro
-         |FROM sel WHERE rn = 1 ORDER BY canonical_id""".stripMargin,
-
-    "dedup_cluster_sizes" -> CLUSTER_SIZES_SQL,
-    // dedup_simhash / sim_topk_ivf: hash-family/ANN internals are not
-    // SQL-expressible; the driver records rows-only checks for them. The
-    // planted reductions below ARE hash-checked (identical shingle sets /
-    // full probing make the probabilistic machinery exact).
-
-    "dedup_simhash_planted" ->
-      """WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-        |planted AS (SELECT doc_id + 1000000 AS doc_id, text FROM base WHERE doc_id < 20),
-        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM planted),
-        |w AS (SELECT doc_id, string_split(text, ' ') AS w FROM corpus),
-        |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-        |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-        |SELECT id1, id2
-        |FROM pairs JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2
-        |WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 1.0
-        |ORDER BY id1, id2""".stripMargin,
-
-    "dedup_editdist" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |prs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-        |        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT id1, id2, CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-        |  FROM prs JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2
-        |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8)
-        |SELECT id1, id2, jaccard,
-        |  CAST(levenshtein(d1.text, d2.text) AS INT) AS edit_dist,
-        |  1.0 - CAST(levenshtein(d1.text, d2.text) AS DOUBLE)
-        |    / greatest(length(d1.text), length(d2.text)) AS edit_sim
-        |FROM cand JOIN documents d1 ON d1.doc_id = id1 JOIN documents d2 ON d2.doc_id = id2
-        |ORDER BY id1, id2""".stripMargin,
-
-    "dedup_embedding" ->
-      """SELECT id1, id2, label, cosine FROM (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2, a.label AS label,
-        |    list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cosine
-        |  FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id)
-        |WHERE cosine >= 0.3 ORDER BY id1, id2""".stripMargin,
-
-    "dedup_embedding_lsh" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |planted AS (SELECT vec_id + 1000000 AS vec_id,
-        |                   list_transform(v, x -> x * CAST(1.001 AS DOUBLE)) AS v
-        |            FROM base WHERE vec_id < 20),
-        |corpus AS (SELECT * FROM base UNION ALL SELECT * FROM planted)
-        |SELECT id1, id2 FROM (
-        |  SELECT a.vec_id AS id1, b.vec_id AS id2, list_cosine_similarity(a.v, b.v) AS cosine
-        |  FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id)
-        |WHERE cosine >= 0.99 ORDER BY id1, id2""".stripMargin,
-
-    "sim_topk_brute" -> TOPK_SQL,
-
-    "q_diverse_kcenter" -> KCENTER_SQL,
-    "sim_index_increment_kcenter" -> KCENTER_INCR_SQL,
-    "q_diverse_kcenter_assign" -> KCENTER_ASSIGN_SQL,
-
-    // the SemDeDup faces: planted corpus + k-center chain + within-cell
-    // pair stage shared via SEMDEDUP_CTES
-    "dedup_semantic_pairs" -> (SEMDEDUP_CTES + """
-      |SELECT center_id, id1, id2, cos FROM sempairs
-      |ORDER BY id1, id2""".stripMargin),
-    "dedup_semantic" -> (SEMDEDUP_CTES + """,
-      |pruned AS (SELECT id2 AS vec_id, min(id1) AS pruned_by,
-      |    max(cos) AS max_cos
-      |  FROM sempairs GROUP BY 1)
-      |SELECT g.vec_id, g.center_id, p.pruned_by,
-      |  CAST(CASE WHEN p.pruned_by IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep,
-      |  p.max_cos
-      |FROM asg g LEFT JOIN pruned p ON p.vec_id = g.vec_id
-      |ORDER BY g.vec_id""".stripMargin),
-    "dedup_semantic_increment" -> DEDUP_SEM_INCR_SQL,
-    "sim_topk_kcenter" -> KCENTER_TOPK_SQL,
-    "sim_recall_audit" -> RECALL_AUDIT_SQL,
-    "sim_mrr_kcenter" -> MRR_KCENTER_SQL,
-
-    // both audit arms are exact brute passes: truth over the full
-    // vectors, serving over the first len//2 coordinates
-    "sim_dim_truncation" ->
-      """WITH t AS (SELECT vec_id,
-        |    list_slice(CAST(embedding AS DOUBLE[]), 1, len(embedding) // 2) AS tv
-        |  FROM embeddings),
-        |serv AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(a.tv, b.tv) DESC, b.vec_id) AS rank
-        |  FROM t a JOIN t b ON a.vec_id <> b.vec_id WHERE a.vec_id < 10)
-        |  WHERE rank <= 5),
-        |truth AS (SELECT query_id, neighbor_id FROM (
-        |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-        |    row_number() OVER (PARTITION BY a.vec_id
-        |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |        CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS rank
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-        |  WHERE a.vec_id < 10)
-        |  WHERE rank <= 5)
-        |SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_true,
-        |  CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_hits,
-        |  CAST(sum(CASE WHEN s.neighbor_id IS NOT NULL THEN 1 ELSE 0 END)
-        |    AS DOUBLE) / count(*) AS recall
-        |FROM truth t LEFT JOIN serv s
-        |  ON t.query_id = s.query_id AND t.neighbor_id = s.neighbor_id
-        |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin,
-
-    // centroid = mean of floor(e*1e6) integers (exact long sum, pure
-    // double mean) — no decimal-cast rounding conventions in play;
-    // multi-unnest zips, range() is 0-based like posexplode
-    "q_label_centroid" ->
-      """WITH x AS (SELECT label,
-        |    unnest(CAST(embedding AS DOUBLE[])) AS e,
-        |    unnest(range(len(embedding))) AS pos
-        |  FROM embeddings)
-        |SELECT label, pos, CAST(sum(CAST(floor(e * 1000000.0) AS BIGINT)) AS DOUBLE)
-        |    / (1000000.0 * count(*)) AS mean
-        |FROM x GROUP BY label, pos ORDER BY label, pos""".stripMargin,
-
-    // the mean difference rescaled integer: Ca*n_b - Cb*n_a per
-    // component, squared and summed in HUGEINT, string-rendered
-    "sim_centroid_drift" ->
-      """WITH x AS (SELECT label, vec_id,
-        |    unnest(CAST(embedding AS DOUBLE[])) AS e,
-        |    unnest(range(len(embedding))) AS pos
-        |  FROM embeddings),
-        |s AS (SELECT label, pos,
-        |    sum(CASE WHEN vec_id % 2 = 0 THEN CAST(floor(e * 1000000.0) AS BIGINT)
-        |             ELSE 0 END) AS ca,
-        |    sum(CASE WHEN vec_id % 2 = 1 THEN CAST(floor(e * 1000000.0) AS BIGINT)
-        |             ELSE 0 END) AS cb
-        |  FROM x GROUP BY 1, 2),
-        |n AS (SELECT label,
-        |    CAST(sum(CASE WHEN vec_id % 2 = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS n_a,
-        |    CAST(sum(CASE WHEN vec_id % 2 = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS n_b
-        |  FROM embeddings GROUP BY 1),
-        |d AS (SELECT s.label,
-        |    sum((CAST(ca AS HUGEINT) * n_b - CAST(cb AS HUGEINT) * n_a)
-        |      * (CAST(ca AS HUGEINT) * n_b - CAST(cb AS HUGEINT) * n_a)) AS shift
-        |  FROM s JOIN n USING (label) GROUP BY 1)
-        |SELECT d.label, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-        |  CAST(shift AS VARCHAR) AS shift_sq
-        |FROM d JOIN n USING (label) ORDER BY label""".stripMargin,
-
-    // the q_embed_outliers per-member cosine, rolled up per label with
-    // the micro-quantize-before-sum mean and the (sim, vec_id) argmin
-    "sim_label_cohesion" ->
-      """WITH x AS (SELECT label,
-        |    unnest(CAST(embedding AS DOUBLE[])) AS e,
-        |    unnest(range(len(embedding))) AS pos
-        |  FROM embeddings),
-        |c AS (SELECT label, pos, CAST(sum(CAST(floor(e * 1000000.0) AS BIGINT)) AS DOUBLE)
-        |    / (1000000.0 * count(*)) AS mean
-        |  FROM x GROUP BY label, pos),
-        |cl AS (SELECT label, list(mean ORDER BY pos) AS cv FROM c GROUP BY label),
-        |s AS (SELECT e.label, e.vec_id,
-        |    list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cl.cv) AS sim
-        |  FROM embeddings e JOIN cl ON cl.label = e.label),
-        |m AS (SELECT label, count(*) AS n,
-        |    CAST(sum(CAST(floor(sim * 1000000.0) AS BIGINT)) AS BIGINT) AS sum_q,
-        |    min(sim) AS min_sim
-        |  FROM s GROUP BY 1),
-        |w AS (SELECT label, vec_id AS worst_vec_id FROM (
-        |    SELECT label, vec_id,
-        |      row_number() OVER (PARTITION BY label ORDER BY sim, vec_id) AS rn
-        |    FROM s) WHERE rn = 1)
-        |SELECT m.label, m.n, CAST(sum_q AS DOUBLE) / 1000000.0 / m.n AS mean_sim,
-        |  min_sim, worst_vec_id
-        |FROM m JOIN w USING (label) ORDER BY label""".stripMargin,
-
-    "q_embed_outliers" ->
-      """WITH x AS (SELECT label,
-        |    unnest(CAST(embedding AS DOUBLE[])) AS e,
-        |    unnest(range(len(embedding))) AS pos
-        |  FROM embeddings),
-        |c AS (SELECT label, pos, CAST(sum(CAST(floor(e * 1000000.0) AS BIGINT)) AS DOUBLE)
-        |    / (1000000.0 * count(*)) AS mean
-        |  FROM x GROUP BY label, pos),
-        |cl AS (SELECT label, list(mean ORDER BY pos) AS cv FROM c GROUP BY label)
-        |SELECT vec_id, e.label,
-        |  list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), cl.cv) AS centroid_sim
-        |FROM embeddings e JOIN cl ON cl.label = e.label
-        |ORDER BY centroid_sim, vec_id LIMIT 25""".stripMargin,
-    // full-probe IVF == the brute scan (see the queries entry)
-    "sim_topk_ivf_full" -> TOPK_SQL,
-
-    "sim_topk_pq_full" -> TOPK_SQL,
-
-    // brute force over the planted-cluster corpus: recall 1.0 is structural
-    // there, so approximate IVF (nprobe=3) must reproduce it exactly
-    "sim_topk_ivf_clustered" ->
-      PLANTED_TOPK_SQL,
-
-    "sim_topk_ivfpq_planted" -> PLANTED_TOPK_SQL,
-
-    // the increment certificate serves brute force over the SAME planted
-    // corpus — late-arriving cluster members reachable only through the
-    // indexIncrement-appended rows
-    "sim_index_increment_planted" -> PLANTED_TOPK_SQL,
-
-    // identical to sim_topk_ivf_clustered's oracle: the planted corpus is
-    // SQL-reconstructible and the certified output IS brute-force top-5
-    "sim_topk_pq_planted" ->
-      PLANTED_TOPK_SQL,
-
-    "q_embed_principal" -> PCA_SQL,
-    "q_embed_principal_scores" -> PCA_SCORES_SQL,
-    "q_embed_axis_outliers" -> PCA_OUTLIERS_SQL,
-    "q_embed_principal2" -> PCA2_SQL,
-    "q_embed_coords2" -> PCA_COORDS_SQL,
-
-    "q_embed_isotropy" ->
-      """WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS x FROM embeddings
-        |  WHERE embedding IS NOT NULL),
-        |b AS (SELECT x, sqrt(list_inner_product(x, x)) AS nr FROM e),
-        |bq AS (SELECT list_transform(x, xe ->
-        |    CAST(floor(1000000.0 * xe / nr) AS BIGINT)) AS q
-        |  FROM b WHERE nr > 0),
-        |qx AS (SELECT u.pr.i AS i, u.pr.e AS e
-        |  FROM (SELECT unnest(list_transform(q, (e, i) -> {'i': i, 'e': e})) AS pr
-        |        FROM bq) u),
-        |dims AS (SELECT i, CAST(count(*) AS BIGINT) AS cnt,
-        |    CAST(sum(e) AS HUGEINT) AS s, SUM(CAST(e AS HUGEINT) * e) AS t2
-        |  FROM qx GROUP BY i),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS d, max(cnt) AS n,
-        |    SUM(s * s) AS ss, SUM(t2) AS t FROM dims)
-        |SELECT n AS n_vectors, d AS n_dims,
-        |  CAST(ss - t AS DOUBLE)
-        |    / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE) * 1000000000000.0)
-        |    AS mean_pair_cosine,
-        |  sqrt(CAST(ss AS DOUBLE)) / CAST(n AS DOUBLE) / 1000000.0
-        |    AS mean_vector_norm
-        |FROM tot""".stripMargin,
-
-    "q_embed_quantize" ->
-      ("""SELECT vec_id,
-        |  list_aggregate(CAST(embedding AS DOUBLE[]), 'min') AS qmin,
-        |  (list_aggregate(CAST(embedding AS DOUBLE[]), 'max')
-        |   - list_aggregate(CAST(embedding AS DOUBLE[]), 'min')) / 255.0 AS qscale,
-        |""".stripMargin +
-        (0 until 8).map(i =>
-          s"""  CAST(CASE WHEN list_aggregate(CAST(embedding AS DOUBLE[]), 'max')
-             |            = list_aggregate(CAST(embedding AS DOUBLE[]), 'min') THEN -128
-             |    ELSE round((CAST(embedding[${i + 1}] AS DOUBLE) - list_aggregate(CAST(embedding AS DOUBLE[]), 'min'))
-             |    / ((list_aggregate(CAST(embedding AS DOUBLE[]), 'max')
-             |        - list_aggregate(CAST(embedding AS DOUBLE[]), 'min')) / 255.0)) - 128 END AS TINYINT) AS q$i""".stripMargin)
-          .mkString(",\n") +
-        "\nFROM embeddings ORDER BY vec_id"),
-
-    "text_langid" ->
-      """SELECT doc_id, vowel_ratio, avg_word_len,
-        |  CASE WHEN vowel_ratio >= 0.38 THEN 'es'
-        |       WHEN avg_word_len >= 4.6 THEN 'de'
-        |       WHEN vowel_ratio <= 0.33 THEN 'zh'
-        |       ELSE 'en' END AS predicted_lang,
-        |  actual_lang,
-        |  (CASE WHEN vowel_ratio >= 0.38 THEN 'es'
-        |        WHEN avg_word_len >= 4.6 THEN 'de'
-        |        WHEN vowel_ratio <= 0.33 THEN 'zh'
-        |        ELSE 'en' END) = actual_lang AS match
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(length(text) - length(regexp_replace(text, '[aeiou]', '', 'g')) AS DOUBLE) / length(text) AS vowel_ratio,
-        |    CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(string_split(text, ' ')) AS avg_word_len,
-        |    lang AS actual_lang
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_robots_rules" -> ("WITH " + ROBOTS_CTES + """
-        |SELECT domain, agent, rule, prefix, line_no FROM rules
-        |ORDER BY domain, line_no, agent""".stripMargin),
-
-    "text_robots_gate" -> ("WITH " + ROBOTS_CTES + """
-        |SELECT doc_id, domain, path, rule, prefix, allowed FROM gate
-        |ORDER BY doc_id""".stripMargin),
-
-    "text_robots_budget" -> ("WITH " + ROBOTS_CTES + """
-        |SELECT d.source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(CASE WHEN g.allowed THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_allowed,
-        |  CAST(sum(CASE WHEN g.allowed
-        |      THEN coalesce(len(string_split(d.text, ' ')), 0)
-        |      ELSE 0 END) AS BIGINT) AS n_tokens_allowed
-        |FROM gate g JOIN documents d ON g.doc_id = d.doc_id
-        |GROUP BY 1 ORDER BY d.source""".stripMargin),
-
-    // the politeness budget: exact-agent delay else the catch-all's
-    // else the 1 s default, times the allowed count — per domain
-    "text_robots_crawl_time" -> ("WITH " + ROBOTS_CTES + """
-        |, alw AS (SELECT domain,
-        |    CAST(sum(CASE WHEN allowed THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_allowed
-        |  FROM gate GROUP BY 1)
-        |SELECT a.domain, a.n_allowed,
-        |  CAST(coalesce(da.delay_s, ds.delay_s, 1) AS BIGINT) AS delay_s,
-        |  CAST(a.n_allowed * coalesce(da.delay_s, ds.delay_s, 1) AS BIGINT)
-        |    AS est_serial_s
-        |FROM alw a
-        |LEFT JOIN (SELECT domain, delay_s FROM dly WHERE agent = 'graftbot') da
-        |  ON a.domain = da.domain
-        |LEFT JOIN (SELECT domain, delay_s FROM dly WHERE agent = '*') ds
-        |  ON a.domain = ds.domain
-        |ORDER BY a.domain""".stripMargin),
-
-    // the sitemap walk replayed whole: build (chunking, optional-field
-    // omissions, index), then parse back off the XML strings
-    "text_sitemap_entries" -> ("WITH " + ROBOTS_CTES + SITEMAP_CTES + """
-        |SELECT domain, chunk_no, loc, lastmod, priority FROM sent
-        |ORDER BY domain, loc""".stripMargin),
-
-    // the frontier seed census: listed vs already-have vs new vs
-    // politely-fetchable, priced at the effective Crawl-delay
-    "text_sitemap_frontier" -> ("WITH " + ROBOTS_CTES + SITEMAP_CTES + """
-        |, scand AS (SELECT domain, loc,
-        |    CASE WHEN length(p) = 0 THEN '/' ELSE p END AS path
-        |  FROM (SELECT domain, loc,
-        |      regexp_replace(loc, '^[A-Za-z]+://[^/?]*', '') AS p FROM sent)),
-        |sbest AS (SELECT domain, loc, rule FROM (
-        |    SELECT c.domain, c.loc, r.rule,
-        |      row_number() OVER (PARTITION BY c.domain, c.loc
-        |        ORDER BY length(r.prefix) DESC, r.rule, r.line_no) AS rk
-        |    FROM scand c JOIN appl r ON c.domain = r.domain
-        |    WHERE substr(c.path, 1, length(r.prefix)) = r.prefix)
-        |  WHERE rk = 1),
-        |scen AS (SELECT e.domain,
-        |    CAST(count(*) AS BIGINT) AS n_listed,
-        |    CAST(sum(CASE WHEN cu.url IS NOT NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_in_corpus,
-        |    CAST(sum(CASE WHEN cu.url IS NULL THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_new,
-        |    CAST(sum(CASE WHEN cu.url IS NULL
-        |        AND (b.rule IS NULL OR b.rule = 'allow') THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_fetchable
-        |  FROM sent e
-        |  LEFT JOIN (SELECT DISTINCT domain, url FROM cand) cu
-        |    ON e.domain = cu.domain AND e.loc = cu.url
-        |  LEFT JOIN sbest b ON e.domain = b.domain AND e.loc = b.loc
-        |  GROUP BY 1)
-        |SELECT f.domain, f.n_listed, f.n_in_corpus, f.n_new, f.n_fetchable,
-        |  CAST(coalesce(da.delay_s, ds.delay_s, 1) AS BIGINT) AS delay_s,
-        |  CAST(f.n_fetchable * coalesce(da.delay_s, ds.delay_s, 1) AS BIGINT)
-        |    AS est_fetch_s
-        |FROM scen f
-        |LEFT JOIN (SELECT domain, delay_s FROM dly WHERE agent = 'graftbot') da
-        |  ON f.domain = da.domain
-        |LEFT JOIN (SELECT domain, delay_s FROM dly WHERE agent = '*') ds
-        |  ON f.domain = ds.domain
-        |ORDER BY f.domain""".stripMargin),
-
-    // the discovery handshake: Sitemap directives parsed off the raw
-    // comment-stripped lines (group-independent), resolved against the
-    // conventional index URL, chunk fan-out counted from the index
-    "text_robots_sitemaps" -> ("WITH " + ROBOTS_CTES + SITEMAP_CTES + """
-        |, sdir AS (SELECT domain, line_no,
-        |    trim(substr(ln, strpos(ln, ':') + 1)) AS sitemap_url
-        |  FROM lns WHERE lower(ln) LIKE 'sitemap:%'
-        |    AND length(trim(substr(ln, strpos(ln, ':') + 1))) > 0),
-        |scc AS (SELECT domain, CAST(count(*) AS BIGINT) AS n_chunks
-        |  FROM sic GROUP BY 1),
-        |sdc AS (SELECT domain, CAST(count(*) AS BIGINT) AS n_directives,
-        |    CAST(sum(CASE WHEN sitemap_url =
-        |        'https://' || domain || '/sitemap-index.xml'
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS n_resolved
-        |  FROM sdir GROUP BY 1)
-        |SELECT dom.domain,
-        |  CAST(coalesce(sdc.n_directives, 0) AS BIGINT) AS n_directives,
-        |  CAST(coalesce(sdc.n_resolved, 0) AS BIGINT) AS n_resolved,
-        |  CAST(coalesce(scc.n_chunks, 0) AS BIGINT) AS n_chunks
-        |FROM (SELECT DISTINCT domain FROM cand) dom
-        |LEFT JOIN sdc ON dom.domain = sdc.domain
-        |LEFT JOIN scc ON dom.domain = scc.domain
-        |ORDER BY dom.domain""".stripMargin),
-
-    // the NB model frame rebuilt whole: per-(lang, bigram) counts,
-    // per-lang totals, one vocabulary row — column-for-column the
-    // stored artifact
-    "text_langid_model" -> ("WITH " + LANGID_NB_CTES + """
-        |SELECT lang, g, n FROM (
-        |  SELECT lang, g, CAST(count(*) AS BIGINT) AS n FROM gf GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT lang, NULL AS g, CAST(count(*) AS BIGINT) AS n FROM gf GROUP BY 1
-        |  UNION ALL
-        |  SELECT NULL AS lang, NULL AS g,
-        |    CAST(count(DISTINCT g) AS BIGINT) AS n FROM gf)
-        |ORDER BY lang ASC NULLS FIRST, g ASC NULLS FIRST""".stripMargin),
-
-    // scoring replayed whole: add-one NB in exact micro-nat integers
-    // (quantize-before-sum, the bigram-LM discipline), argmax with the
-    // lang-ascending tie rule as a doc-grain rank window
-    "text_langid_trained" -> LANGID_SCORE_SQL,
-    // the stored face scores through the SAME trained counts (the
-    // artifact is a cache, never a fork) — shares the live replay
-    "text_langid_trained_stored" -> LANGID_SCORE_SQL,
-
-    "text_quality" ->
-      """SELECT doc_id, n_chars, n_tokens, ttr, stopword_ratio, avg_word_len,
-        |  ttr * 0.4 + stopword_ratio * 0.3 +
-        |    CASE WHEN n_tokens >= 40 THEN 0.3 ELSE CAST(n_tokens AS DOUBLE) / 40.0 * 0.3 END AS quality_score
-        |FROM (
-        |  SELECT doc_id, length(text) AS n_chars,
-        |    len(string_split(text, ' ')) AS n_tokens,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')) AS ttr,
-        |    CAST(len(list_filter(string_split(text, ' '), w -> w IN ('the', 'a'))) AS DOUBLE)
-        |      / len(string_split(text, ' ')) AS stopword_ratio,
-        |    CAST(length(replace(text, ' ', '')) AS DOUBLE) / len(string_split(text, ' ')) AS avg_word_len
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-
-    "text_tokens" ->
-      """SELECT doc_id,
-        |  len(string_split(text, ' ')) AS n_ws_tokens,
-        |  len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS n_re_tokens,
-        |  length(replace(text, ' ', '')) AS n_token_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(list_transform(string_split(text, ''), c -> CAST(ascii(c) AS BIGINT)),
-        |              (a, b) -> (a * 31 + b) % 1000000007) AS content_fp,
-        |  list_reduce(list_transform(string_split(substring(text, 1, 64), ''), c -> CAST(ascii(c) AS BIGINT)),
-        |              (a, b) -> (a * 31 + b) % 1000000007) AS prefix_fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_curation" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |prs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-        |        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT id2 AS doc_id FROM prs
-        |  JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2
-        |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-        |qual AS (
-        |  SELECT doc_id, lang,
-        |    ttr * 0.4 + stopword_ratio * 0.3 +
-        |      CASE WHEN n_tokens >= 40 THEN 0.3 ELSE CAST(n_tokens AS DOUBLE) / 40.0 * 0.3 END AS quality_score
-        |  FROM (
-        |    SELECT doc_id, lang,
-        |      len(string_split(text, ' ')) AS n_tokens,
-        |      CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')) AS ttr,
-        |      CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the', 'a'))) AS DOUBLE)
-        |        / len(string_split(text, ' ')) AS stopword_ratio
-        |    FROM documents)),
-        |curated AS (
-        |  SELECT q.* FROM qual q LEFT JOIN losers l ON q.doc_id = l.doc_id
-        |  WHERE l.doc_id IS NULL AND q.quality_score >= 0.46)
-        |SELECT lang, count(*) AS n_kept,
-        |  CAST(sum(CAST(quality_score AS DECIMAL(18,12))) AS DOUBLE) / count(*) AS mean_quality,
-        |  min(quality_score) AS min_quality,
-        |  max(quality_score) AS max_quality
-        |FROM curated GROUP BY 1 ORDER BY lang""".stripMargin,
-
-    "text_train_ready" -> (TRAIN_READY_CTES +
-      """
-        |SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(CAST(quality_score AS DECIMAL(18,12))) AS DOUBLE) / count(*) AS mean_quality
-        |FROM kept GROUP BY 1 ORDER BY lang""".stripMargin),
-
-    // the page is REBUILT by the same construction; every census column
-    // is then priced ANALYTICALLY from it (the warcPayload pattern) —
-    // extracted text = title + original text + decoded entity line,
-    // entities = 5 + escaped [&<>] occurrences, tags = 15 + optionals
-    "text_html_extract" -> HTML_EXTRACT_SQL,
-
-    // per planted class: (extra bytes, extra output codepoints, repairs,
-    // repaired suffix) — class 1 C3 28 → U+FFFD + '('; 2 C0 AF → two
-    // U+FFFDs; 3 ED A0 80 → ONE (the JDK decodes the CESU surrogate
-    // structurally and substitutes the whole 3-byte unit — the kernel
-    // matches it exactly);
-    // 4 F0 90 28 → U+FFFD + '(' (the valid two-byte prefix is ONE
-    // maximal subpart); DuckDB's md5 hashes the VARCHAR's UTF-8 bytes,
-    // same as the engine's over the repaired string
-    "text_utf8_census" ->
-      """WITH d AS (SELECT doc_id, text, doc_id % 5 AS cls FROM documents)
-        |SELECT doc_id,
-        |  CAST(strlen(text) + CASE cls WHEN 1 THEN 2 WHEN 2 THEN 2
-        |    WHEN 3 THEN 3 WHEN 4 THEN 3 ELSE 0 END AS BIGINT) AS n_bytes,
-        |  CAST(length(text) + CASE cls WHEN 1 THEN 2 WHEN 2 THEN 2
-        |    WHEN 3 THEN 1 WHEN 4 THEN 2 ELSE 0 END AS BIGINT) AS n_cp_out,
-        |  CAST(CASE cls WHEN 1 THEN 1 WHEN 2 THEN 2 WHEN 3 THEN 1
-        |    WHEN 4 THEN 1 ELSE 0 END AS BIGINT) AS n_bad,
-        |  md5(text || CASE cls WHEN 1 THEN '�(' WHEN 2 THEN '��'
-        |    WHEN 3 THEN '�' WHEN 4 THEN '�('
-        |    ELSE '' END) AS clean_md5
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // the messy-URL construction and every canonicalization step
-    // replayed in DuckDB's RE2 (same patterns — RE2-safe by design;
-    // replacement syntax differs, \1 vs $1, the VALUES are identical)
-    "text_url_canon" -> (URL_FRONTIER_CTES + """
-        |SELECT doc_id, url_raw, url_canonical
-        |FROM canon ORDER BY doc_id, url_raw""".stripMargin),
-
-    "text_url_dedup" -> (URL_FRONTIER_CTES + """
-        |SELECT CAST(sum(n_raw) AS BIGINT) AS n_urls,
-        |  CAST(count(*) AS BIGINT) AS n_canonical,
-        |  CAST(sum(n_raw - 1) AS BIGINT) AS n_merged
-        |FROM (SELECT url_canonical, count(*) AS n_raw
-        |      FROM canon GROUP BY url_canonical)""".stripMargin),
-
-    // the same exact-integer gates replayed: Gopher length (>= 40
-    // tokens) and the cross-multiplied repetition cap (bigram-less docs
-    // pass vacuously), then the kappa identity over the 2x2 marginals
-    "text_gate_kappa" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
-        |tok AS (SELECT doc_id, len(ws) AS n_tokens FROM w),
-        |bi AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS b
-        |       FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM w)),
-        |bc AS (SELECT doc_id, b, count(*) AS c FROM bi GROUP BY 1, 2),
-        |tb AS (SELECT doc_id, max(c) AS top_bc,
-        |       CAST(sum(c) AS BIGINT) AS n_bigrams FROM bc GROUP BY 1),
-        |g AS (SELECT t.doc_id,
-        |    CASE WHEN t.n_tokens >= 40 THEN 1 ELSE 0 END AS a,
-        |    CASE WHEN tb.doc_id IS NULL OR tb.top_bc * 10 <= tb.n_bigrams
-        |         THEN 1 ELSE 0 END AS b
-        |  FROM tok t LEFT JOIN tb ON tb.doc_id = t.doc_id),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(a) AS BIGINT) AS ap, CAST(sum(b) AS BIGINT) AS bp,
-        |    CAST(sum(CASE WHEN a = b THEN 1 ELSE 0 END) AS BIGINT) AS agree
-        |  FROM g)
-        |SELECT n AS n_docs, ap AS a_pos, bp AS b_pos, agree AS n_agree,
-        |  CASE WHEN n * n - ap * bp - (n - ap) * (n - bp) <> 0
-        |    THEN CAST(n * agree - ap * bp - (n - ap) * (n - bp) AS DOUBLE)
-        |       / CAST(n * n - ap * bp - (n - ap) * (n - bp) AS DOUBLE)
-        |  END AS kappa
-        |FROM s""".stripMargin,
-
-    "text_code_detect" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-        |  CAST(len(regexp_extract_all(text, '[{}();=<>\[\]]')) AS BIGINT)
-        |    AS n_symbols,
-        |  CAST(len(regexp_extract_all(text, '\b[a-z][a-z0-9]*[A-Z]'))
-        |    AS BIGINT) AS n_camel,
-        |  CAST(len(regexp_extract_all(text,
-        |    '\b(def|class|return|import|void|int|function|var|const|if|else|for|while)\b'))
-        |    AS BIGINT) AS n_keywords,
-        |  CAST(len(regexp_extract_all(text, '\n  +[^ ]')) AS BIGINT)
-        |    AS n_indented,
-        |  CAST(1000000 * len(regexp_extract_all(text, '[{}();=<>\[\]]'))
-        |    // greatest(length(text), 1) AS BIGINT) AS symbol_ppm,
-        |  (1000000 * len(regexp_extract_all(text, '[{}();=<>\[\]]'))
-        |     // greatest(length(text), 1) >= 40000
-        |   OR (len(regexp_extract_all(text,
-        |        '\b(def|class|return|import|void|int|function|var|const|if|else|for|while)\b')) >= 3
-        |       AND len(regexp_extract_all(text, '[{}();=<>\[\]]')) >= 5)
-        |   OR len(regexp_extract_all(text, '\n  +[^ ]')) >= 3) AS is_code
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the composed Common-Crawl read path shares the SAME analytic oracle:
-    // the WARC walk slices the response payload back bit-identically, so
-    // the expected census is the page construction's, unchanged
-    "q_multimodal_warc_html" -> HTML_EXTRACT_SQL,
-    // the real-deflate chain inflates to the byte-identical WARC/HTML
-    // stream, so the extraction census oracle serves it verbatim too
-    "q_multimodal_warc_gz_html" -> HTML_EXTRACT_SQL,
-
-    // the same fixed-window line derivation, the same distinct-doc
-    // boilerplate rule, and the same in-order reassembly (string_agg
-    // ORDER BY i FILTER = the sorted-collect transform)
-    "text_line_dedup" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |l0 AS (SELECT doc_id, toks,
-        |    unnest(range(CAST(ceil(len(toks) / 8.0) AS BIGINT))) AS i FROM t),
-        |ln AS (SELECT doc_id, CAST(i AS BIGINT) AS i,
-        |    array_to_string(toks[(i*8+1):(i*8+8)], ' ') AS line FROM l0),
-        |c AS (SELECT line, count(DISTINCT doc_id) AS nd FROM ln GROUP BY 1),
-        |j AS (SELECT ln.doc_id, ln.i, ln.line, c.nd
-        |      FROM ln JOIN c USING (line))
-        |SELECT doc_id, count(*) AS n_lines,
-        |  CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_dup_lines,
-        |  md5(coalesce(string_agg(line, ' ' ORDER BY i)
-        |        FILTER (WHERE nd < 2), '')) AS kept_md5,
-        |  1000000 * CAST(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-        |    // count(*) AS dup_line_ppm
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // the prefix-doubling rounds replayed verbatim: rank0 classes
-    // single tokens (class id = min packed doc_id*2^20+p key), each
-    // round refines by the (rank(p), rank(p+s)) pair for s = 1,2,4,8,16,
-    // then the per-class occurrence/distinct-doc stats and the per-doc
-    // census — the same relations as the engine, never a window string
-    "dedup_substring" -> SUBSTR_DEDUP_SQL,
-
-    // the removal tail over the same doubling CTEs: running-max
-    // coverage, FILTERed in-order reassembly
-    "dedup_substring_remove" -> SUBSTR_REMOVE_SQL,
-
-    // the average hash replayed from the construction: pixel stream =
-    // the text bytes (ord on the verified-ASCII corpus), cells by the
-    // floor mapping 64*i // n, bit = the cross-multiplied mean test,
-    // nibbles MSB-first into hex; candidates by shared 4-hex-char
-    // chunk, hamming re-derived exactly as sum |b1 - b2| over the 64
-    // cell bits (= the engine's per-chunk bit_count(xor) sum)
-    "dedup_image_ahash" -> ("WITH " + IMAGE_AHASH_CTES + """
-        |SELECT id1, id2, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY id1, id2""".stripMargin),
-
-    // the dHash replay: 65 cells under the same floor mapping, bit c =
-    // the cross-multiplied adjacent comparison mean(c) > mean(c+1)
-    // (missing cells read 0), then the same banding + exact hamming
-    // the audio dHash replay: int16 LE samples from the WAV body (char
-    // pairs — signed high byte), 65 floor-mapped time bands of |s|,
-    // adjacent cross-multiplied gradient bits, 16-bit-chunk pigeonhole
-    // candidates, exact hamming — the whole chain from the construction
-    "dedup_audio_dhash" -> ("WITH " + AUDIO_DHASH_CTES + """
-        |SELECT id1, id2, hamming FROM a_ham WHERE hamming <= 3
-        |ORDER BY id1, id2""".stripMargin),
-
-    // both pair chains replayed side by side (the audio chain is
-    // a_-prefixed so the CTE namespaces compose), then the same
-    // min-label recursive closure as the text components oracle
-    "dedup_media_components" -> ("WITH RECURSIVE " + IMAGE_AHASH_CTES +
-      ",\n" + AUDIO_DHASH_CTES + """,
-        |pe AS (SELECT id1, id2 FROM ham WHERE hamming <= 3
-        |  UNION SELECT id1, id2 FROM a_ham WHERE hamming <= 3),
-        |me AS (SELECT id1 AS u, id2 AS v FROM pe UNION SELECT id2, id1 FROM pe),
-        |mreach(id, lab) AS (
-        |  SELECT u, u FROM me
-        |  UNION
-        |  SELECT me.u, r.lab FROM mreach r JOIN me ON me.v = r.id),
-        |mcomp AS (SELECT id, min(lab) AS comp FROM mreach GROUP BY id)
-        |SELECT id, comp FROM mcomp ORDER BY id""".stripMargin),
-
-    "dedup_image_dhash" ->
-      """WITH img AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 <> 1),
-        |alli AS (SELECT doc_id, text FROM img
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id, 'x' || substr(text, 2) AS text
-        |  FROM img WHERE doc_id % 30 = 0),
-        |dims AS (SELECT doc_id, text, CAST(length(text) // 3 AS BIGINT) AS n
-        |  FROM alli WHERE length(text) >= 3),
-        |px AS (SELECT doc_id, n, 65 * u.i // n AS cell,
-        |    ord(substr(text, CAST(3 * u.i + 1 AS INT), 1))
-        |      + ord(substr(text, CAST(3 * u.i + 2 AS INT), 1))
-        |      + ord(substr(text, CAST(3 * u.i + 3 AS INT), 1)) AS gray
-        |  FROM dims, unnest(range(dims.n)) AS u(i)),
-        |cl AS (SELECT doc_id, cell, CAST(sum(gray) AS BIGINT) AS cs,
-        |    CAST(count(*) AS BIGINT) AS cnt FROM px GROUP BY 1, 2),
-        |grid AS (SELECT d.doc_id, g.c AS cell
-        |  FROM dims d, unnest(range(64)) AS g(c)),
-        |bits AS (SELECT grid.doc_id, grid.cell,
-        |    CASE WHEN coalesce(a.cs, 0) * coalesce(b.cnt, 0)
-        |              > coalesce(b.cs, 0) * coalesce(a.cnt, 0)
-        |         THEN 1 ELSE 0 END AS b
-        |  FROM grid
-        |  LEFT JOIN cl a ON a.doc_id = grid.doc_id AND a.cell = grid.cell
-        |  LEFT JOIN cl b ON b.doc_id = grid.doc_id AND b.cell = grid.cell + 1),
-        |nib AS (SELECT doc_id, cell // 4 AS k,
-        |    sum(b * CASE cell % 4 WHEN 0 THEN 8 WHEN 1 THEN 4
-        |            WHEN 2 THEN 2 ELSE 1 END) AS v
-        |  FROM bits GROUP BY 1, 2),
-        |hash AS (SELECT doc_id,
-        |    string_agg(substr('0123456789abcdef', CAST(v + 1 AS INT), 1),
-        |      '' ORDER BY k) AS dhash
-        |  FROM nib GROUP BY 1),
-        |ch AS (SELECT doc_id, dhash, c.c AS chunk_idx,
-        |    substr(dhash, CAST(4 * c.c + 1 AS INT), 4) AS chunk
-        |  FROM hash, unnest(range(4)) AS c(c)),
-        |cand AS (SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2
-        |  FROM ch a JOIN ch b ON a.chunk_idx = b.chunk_idx
-        |    AND a.chunk = b.chunk AND a.doc_id < b.doc_id),
-        |ham AS (SELECT c.id1, c.id2,
-        |    CAST(sum(abs(x.b - y.b)) AS BIGINT) AS hamming
-        |  FROM cand c
-        |  JOIN bits x ON x.doc_id = c.id1
-        |  JOIN bits y ON y.doc_id = c.id2 AND y.cell = x.cell
-        |  GROUP BY 1, 2)
-        |SELECT id1, id2, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY id1, id2""".stripMargin,
-
-    // the URL is REBUILT by the same deterministic construction, then the
-    // census extracts host/domain/tld from the string exactly as the
-    // engine does (split on ://, first path segment, strip www., last
-    // dot label)
-    "text_domain_census" -> ("WITH " + DOC_URL_CTES + """
-        |SELECT domain, string_split(domain, '.')[-1] AS tld,
-        |  count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |FROM d GROUP BY 1, 2 ORDER BY domain""".stripMargin),
-
-    // PSL URL rebuilt (www/cdn cycles, multi-label suffix cycle), host
-    // from the string, registered domain by the longest-suffix CASE
-    // chain with the two-label fallback — the same per-row rules
-    "text_domain_psl" ->
-      """WITH u AS (SELECT doc_id, source, n_chars,
-        |    'https://' || CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END
-        |    || CASE WHEN doc_id % 7 = 0 THEN 'cdn.' ELSE '' END ||
-        |    source || '-' || CAST(doc_id % 100 AS VARCHAR) || '.' ||
-        |    (['com', 'co.uk', 'org', 'com.au', 'io'])[CAST(doc_id % 5 AS INT) + 1]
-        |    || '/doc/' || CAST(doc_id AS VARCHAR) AS url
-        |  FROM documents),
-        |h AS (SELECT n_chars,
-        |    string_split(string_split(url, '://')[2], '/')[1] AS host FROM u),
-        |d AS (SELECT n_chars,
-        |    CASE
-        |      WHEN host LIKE '%.gov.uk' THEN
-        |        string_split(substr(host, 1, length(host) - 7), '.')[-1] || '.gov.uk'
-        |      WHEN host LIKE '%.com.au' THEN
-        |        string_split(substr(host, 1, length(host) - 7), '.')[-1] || '.com.au'
-        |      WHEN host LIKE '%.co.uk' THEN
-        |        string_split(substr(host, 1, length(host) - 6), '.')[-1] || '.co.uk'
-        |      WHEN host LIKE '%.ac.uk' THEN
-        |        string_split(substr(host, 1, length(host) - 6), '.')[-1] || '.ac.uk'
-        |      WHEN host LIKE '%.co.jp' THEN
-        |        string_split(substr(host, 1, length(host) - 6), '.')[-1] || '.co.jp'
-        |      WHEN len(string_split(host, '.')) >= 2 THEN
-        |        string_split(host, '.')[-2] || '.' || string_split(host, '.')[-1]
-        |      ELSE host END AS domain,
-        |    CASE
-        |      WHEN host LIKE '%.gov.uk' THEN 'gov.uk'
-        |      WHEN host LIKE '%.com.au' THEN 'com.au'
-        |      WHEN host LIKE '%.co.uk' THEN 'co.uk'
-        |      WHEN host LIKE '%.ac.uk' THEN 'ac.uk'
-        |      WHEN host LIKE '%.co.jp' THEN 'co.jp'
-        |      ELSE string_split(host, '.')[-1] END AS suffix
-        |  FROM h)
-        |SELECT domain, suffix, count(*) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS n_chars
-        |FROM d GROUP BY 1, 2 ORDER BY domain, suffix""".stripMargin,
-
-    "text_token_gated" ->
-      """WITH m AS (SELECT source,
-        |    CASE WHEN text IS NULL THEN 1
-        |         WHEN list_has_any(string_split(text, ' '),
-        |                           ['dup', 'spamword', 'badtoken']) THEN 1
-        |         ELSE 0 END AS blocked
-        |  FROM documents)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(blocked) AS BIGINT) AS n_blocked,
-        |  CAST(count(*) - sum(blocked) AS BIGINT) AS n_kept
-        |FROM m GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "text_domain_gated" -> ("WITH " + DOC_URL_CTES + """,
-        |bl AS (SELECT unnest(['src0-7.net', 'src1-13.io', 'src2-21.org',
-        |                      'src3-34.edu']) AS domain),
-        |m AS (SELECT d.source, CASE WHEN bl.domain IS NULL THEN 0 ELSE 1 END AS blocked
-        |      FROM d LEFT JOIN bl ON bl.domain = d.domain)
-        |SELECT source, count(*) AS n_docs,
-        |  CAST(sum(blocked) AS BIGINT) AS n_blocked,
-        |  CAST(count(*) - sum(blocked) AS BIGINT) AS n_kept
-        |FROM m GROUP BY 1 ORDER BY source""".stripMargin),
-
-    "q_mix_temperature" ->
-      """WITH s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |    CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-        |  FROM documents GROUP BY source),
-        |w AS (SELECT *, CAST(floor(1000000.0 * sqrt(CAST(n_tokens AS DOUBLE)))
-        |    AS BIGINT) AS weight FROM s),
-        |t AS (SELECT CAST(sum(weight) AS BIGINT) AS tw FROM w)
-        |SELECT source, n_docs, n_tokens, weight,
-        |  CAST(weight AS DOUBLE) / CAST(tw AS DOUBLE) AS share,
-        |  CAST(weight AS DOUBLE) * 1000000000.0 / CAST(tw AS DOUBLE)
-        |    AS alloc_tokens,
-        |  CAST(weight AS DOUBLE) * 1000000000.0 / CAST(tw AS DOUBLE)
-        |    / CAST(n_tokens AS DOUBLE) AS epochs
-        |FROM w, t ORDER BY source""".stripMargin,
-
-    // the post-curation budget by SOURCE: the same kept set, priced in
-    // whitespace tokens — what the training run actually reads
-    "text_token_budget" -> (TRAIN_READY_CTES +
-      """,
-        |dtok AS (SELECT doc_id, source,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT d.source, count(*) AS n_docs_kept,
-        |  CAST(sum(d.n_tokens) AS BIGINT) AS n_tokens_kept
-        |FROM kept k JOIN dtok d ON d.doc_id = k.doc_id
-        |GROUP BY 1 ORDER BY d.source""".stripMargin),
-
-    // the BPE family: merge-table training unrolled round by round, the
-    // per-doc subword pricing, and the train-ready budget in BPE units
-    "text_bpe_vocab" -> BPE_VOCAB_SQL,
-    "text_bpe_tokens" -> BPE_TOKENS_SQL,
-    "text_bpe_segments" -> BPE_SEGMENTS_SQL,
-    // increment ≡ full retrain by the count-monoid algebra: same SQL
-    "text_bpe_vocab_increment" -> BPE_VOCAB_SQL,
-    "q_seq_pack_bpe" -> ("WITH " + BPE_TRAIN_CTES + BPE_APPLY_CTES + """,
-      |dtok AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n_tokens
-      |         FROM applied GROUP BY 1),
-      |pt AS (SELECT doc_id, md5('pack:' || CAST(doc_id AS VARCHAR)) AS h, n_tokens
-      |       FROM dtok),
-      |ps AS (SELECT doc_id, h, n_tokens,
-      |         CAST(instr('0123456789abcdef', substr(h, 1, 1)) - 1 AS INT) AS shard
-      |       FROM pt),
-      |pc AS (SELECT doc_id, shard, n_tokens,
-      |         CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY h, doc_id
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens
-      |       FROM ps)
-      |SELECT doc_id, shard, n_tokens,
-      |  (cum_tokens - n_tokens) // 2048 AS pack_id,
-      |  (cum_tokens - n_tokens) % 2048 AS pack_offset
-      |FROM pc ORDER BY doc_id""".stripMargin),
-    "text_token_budget_bpe" -> (TRAIN_READY_CTES + ",\n" +
-      BPE_TRAIN_CTES + BPE_APPLY_CTES + """,
-        |dsrc AS (SELECT doc_id, source FROM documents),
-        |dbpe AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n_tokens
-        |         FROM applied GROUP BY 1)
-        |SELECT s.source, count(*) AS n_docs_kept,
-        |  CAST(sum(d.n_tokens) AS BIGINT) AS n_bpe_tokens_kept
-        |FROM kept k JOIN dsrc s ON s.doc_id = k.doc_id
-        |  JOIN dbpe d ON d.doc_id = k.doc_id
-        |GROUP BY 1 ORDER BY s.source""".stripMargin),
-
-    // per-language BPE tokens vs whitespace words off the same 16-round
-    // table: word-grain rows joined back to the lang column, exact
-    // integer sums, one division per language
-    "text_bpe_fertility" -> ("WITH " + BPE_TRAIN_CTES + BPE_APPLY_CTES + """,
-      |lf AS (SELECT d.lang, a.doc_id, a.ntok
-      |       FROM applied a JOIN documents d USING (doc_id))
-      |SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-      |  CAST(count(*) AS BIGINT) AS n_words,
-      |  CAST(sum(ntok) AS BIGINT) AS n_bpe_tokens,
-      |  CAST(CAST(sum(ntok) AS BIGINT) AS DOUBLE) / CAST(count(*) AS BIGINT)
-      |    AS fertility
-      |FROM lf GROUP BY lang ORDER BY lang""".stripMargin),
-
-    // the full hard-EM unigram-LM trainer replayed: seed substring
-    // counts, micro-nat costs, two Viterbi rounds unrolled one CTE per
-    // end position, recount + re-score — then vocab / pricing / equity
-    "text_ulm_vocab" -> ULM_VOCAB_SQL,
-    "text_ulm_tokens" -> ULM_TOKENS_SQL,
-    // the stored face prices through the SAME trained table (the
-    // artifact is a cache, never a fork) — shares the live replay
-    "text_ulm_tokens_stored" -> ULM_TOKENS_SQL,
-    "text_ulm_fertility" -> ULM_FERTILITY_SQL,
-
-    // per-source bytes vs BPE tokens off the same 16-round table: exact
-    // integer sums, one division of the two exact totals per source
-    "text_bpe_compression" -> ("WITH " + BPE_TRAIN_CTES + BPE_APPLY_CTES + """,
-      |dbpe AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS nt
-      |         FROM applied GROUP BY 1),
-      |dsrc AS (SELECT doc_id, source,
-      |         CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS nb
-      |         FROM documents)
-      |SELECT s.source, count(*) AS n_docs,
-      |  CAST(sum(s.nb) AS BIGINT) AS n_bytes,
-      |  CAST(sum(d.nt) AS BIGINT) AS n_bpe_tokens,
-      |  CAST(CAST(sum(s.nb) AS BIGINT) AS DOUBLE) / CAST(sum(d.nt) AS BIGINT)
-      |    AS bytes_per_token
-      |FROM dsrc s JOIN dbpe d ON s.doc_id = d.doc_id
-      |GROUP BY 1 ORDER BY s.source""".stripMargin),
-
-    // the stored-artifact face prices with the SAME 16-round table
-    // (deep training is prefix-consistent and the artifact a pure
-    // cache), so its oracle is literally the live entry's SQL
-    "text_token_budget_stored" -> (TRAIN_READY_CTES + ",\n" +
-      BPE_TRAIN_CTES + BPE_APPLY_CTES + """,
-        |dsrc AS (SELECT doc_id, source FROM documents),
-        |dbpe AS (SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n_tokens
-        |         FROM applied GROUP BY 1)
-        |SELECT s.source, count(*) AS n_docs_kept,
-        |  CAST(sum(d.n_tokens) AS BIGINT) AS n_bpe_tokens_kept
-        |FROM kept k JOIN dsrc s ON s.doc_id = k.doc_id
-        |  JOIN dbpe d ON d.doc_id = k.doc_id
-        |GROUP BY 1 ORDER BY s.source""".stripMargin),
-
-    "text_tf" ->
-      """SELECT lang, token, n, rnk FROM (
-        |  SELECT lang, token, n,
-        |    CAST(row_number() OVER (PARTITION BY lang ORDER BY n DESC, token) AS BIGINT) AS rnk
-        |  FROM (
-        |    SELECT lang, token, count(*) AS n FROM (
-        |      SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents)
-        |    GROUP BY 1, 2))
-        |WHERE rnk <= 10 ORDER BY lang, rnk""".stripMargin,
-
-    // the score is the log-free weight tf*(N+1)/(df+1): one exact-integer
-    // division and one multiply, identical to the Spark expression
-    "text_tfidf" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2),
-        |df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-        |n AS (SELECT count(*) AS n FROM documents)
-        |SELECT doc_id, token, tf, df, score FROM (
-        |  SELECT doc_id, tf.token AS token, tf, df.df AS df,
-        |    CAST(tf AS DOUBLE) * (CAST(n + 1 AS DOUBLE) / CAST(df + 1 AS DOUBLE)) AS score,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY CAST(tf AS DOUBLE) * (CAST(n + 1 AS DOUBLE) / CAST(df + 1 AS DOUBLE)) DESC,
-        |               tf.token) AS rnk
-        |  FROM tf JOIN df ON df.token = tf.token CROSS JOIN n)
-        |WHERE rnk <= 5 ORDER BY doc_id, score DESC, token""".stripMargin,
-
-    // chunk starts every 12 tokens while < len; list_slice is 1-based
-    // inclusive, so chunk i covers tokens [i*12+1, i*12+16]
-    "text_chunks" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |c AS (SELECT doc_id, toks,
-        |        unnest(range(0, CAST(floor(CAST(len(toks) - 1 AS DOUBLE) / 12) AS BIGINT) + 1)) AS chunk_id
-        |      FROM t)
-        |SELECT doc_id, chunk_id,
-        |  array_to_string(list_slice(toks, CAST(chunk_id * 12 + 1 AS BIGINT), CAST(chunk_id * 12 + 16 AS BIGINT)), ' ') AS chunk_text,
-        |  least(len(toks) - chunk_id * 12, 16) AS n_tokens
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "text_oov" ->
-      """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents),
-        |vocab AS (SELECT token FROM (
-        |    SELECT token, count(*) AS n FROM tok GROUP BY 1)
-        |  ORDER BY n DESC, token LIMIT 100)
-        |SELECT doc_id, n_tokens, n_in_vocab,
-        |  1.0 - CAST(n_in_vocab AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS oov_rate
-        |FROM (
-        |  SELECT doc_id, count(*) AS n_tokens,
-        |    count(CASE WHEN vocab.token IS NOT NULL THEN 1 END) AS n_in_vocab
-        |  FROM tok LEFT JOIN vocab ON vocab.token = tok.token
-        |  GROUP BY 1)
-        |ORDER BY doc_id""".stripMargin,
-
-    // per-token logprob quantized to integer micro-nats BEFORE the per-doc
-    // sum (exact integer aggregate — the raw-double-sum rule); round() is
-    // half-away-from-zero in both engines
-    "text_unigram_lp" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |counts AS (SELECT w, count(*) AS cnt FROM toks GROUP BY 1),
-        |tot AS (SELECT count(*) AS n_total FROM toks),
-        |q AS (SELECT t.doc_id,
-        |        CAST(round(ln(CAST(c.cnt AS DOUBLE) / n_total) * 1000000) AS BIGINT) AS qlp
-        |      FROM toks t JOIN counts c ON t.w = c.w CROSS JOIN tot)
-        |SELECT doc_id, count(*) AS n_tok,
-        |  CAST(sum(qlp) AS BIGINT) AS sum_qlp,
-        |  CAST(CAST(sum(qlp) AS BIGINT) AS DOUBLE) / 1000000.0 / count(*) AS mean_logprob
-        |FROM q GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // bigram twin: P(w2|w1) = (c12+1)/(c1+V), c1 the bigram-prefix
-    // count, V the distinct-suffix vocabulary (add-one smoothing);
-    // same quantize-before-sum discipline, single-token docs total with
-    // n_bigram 0 and a NULL mean
-    "text_bigram_lp" -> BIGRAM_LP_SQL,
-
-    // scoring THROUGH the stored model artifact: on the training corpus
-    // every pair/prefix is present, so the served scores equal the live
-    // trainer exactly — the oracle is literally the live entry's SQL
-    "text_bigram_lp_stored" -> BIGRAM_LP_SQL,
-
-    // the same LM replay, then the exact floor mean (pmod subtracted so
-    // the quotient divides exactly — any division semantics agree), the
-    // (mq desc, doc_id) rank, and the rank-tercile buckets
-    "text_ppl_buckets" -> ("WITH " + BIGRAM_LP_CTES + """,
-        |scored AS (SELECT doc_id, n_bigram, sum_qlp,
-        |    (sum_qlp - ((sum_qlp % n_bigram) + n_bigram) % n_bigram)
-        |      // n_bigram AS mq
-        |  FROM agg WHERE n_bigram > 0),
-        |rk AS (SELECT doc_id, n_bigram, mq,
-        |    row_number() OVER (ORDER BY mq DESC, doc_id) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM scored),
-        |bk AS (SELECT CASE WHEN rn * 3 <= n THEN 'head'
-        |    WHEN rn * 3 <= n * 2 THEN 'middle' ELSE 'tail' END AS bucket,
-        |    n_bigram, mq FROM rk)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_bigram) AS BIGINT) AS n_bigrams,
-        |  CAST(min(mq) AS BIGINT) AS min_mq,
-        |  CAST(max(mq) AS BIGINT) AS max_mq
-        |FROM bk GROUP BY 1 ORDER BY bucket""".stripMargin),
-
-    // the sketch face replayed whole: the 60-bit md5 row hash, the
-    // bottom-k sample, the tercile-rank cut values, and the per-row
-    // VALUE comparison (boundary-tied docs land together in the upper
-    // bucket — the documented tie rule the exact face's rank split
-    // does not share)
-    "text_ppl_buckets_sketch" -> ("WITH " + BIGRAM_LP_CTES + """,
-        |scored AS (SELECT doc_id, n_bigram, sum_qlp,
-        |    (sum_qlp - ((sum_qlp % n_bigram) + n_bigram) % n_bigram)
-        |      // n_bigram AS mq
-        |  FROM agg WHERE n_bigram > 0),
-        |hs AS (SELECT mq,
-        |    ('0x' || substr(md5('pplq:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM scored),
-        |samp AS (SELECT h, mq, row_number() OVER (ORDER BY h) AS srn FROM hs),
-        |sk AS (SELECT h, mq FROM samp WHERE srn <= 512),
-        |skr AS (SELECT mq, row_number() OVER (ORDER BY mq DESC, h) AS rn,
-        |    count(*) OVER () AS n_s FROM sk),
-        |cuts AS (SELECT
-        |    max(CASE WHEN rn = greatest(1, n_s // 3) THEN mq END) AS cut_head,
-        |    max(CASE WHEN rn = greatest(1, (n_s * 2) // 3) THEN mq END) AS cut_mid
-        |  FROM skr),
-        |bk AS (SELECT CASE WHEN mq >= cut_head THEN 'head'
-        |    WHEN mq >= cut_mid THEN 'middle' ELSE 'tail' END AS bucket,
-        |    n_bigram, mq FROM scored CROSS JOIN cuts)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_bigram) AS BIGINT) AS n_bigrams,
-        |  CAST(min(mq) AS BIGINT) AS min_mq,
-        |  CAST(max(mq) AS BIGINT) AS max_mq
-        |FROM bk GROUP BY 1 ORDER BY bucket""".stripMargin),
-
-    // the per-language replay: identical machinery with every stage
-    // keyed by lang (PARTITION BY lang in the sample/rank windows,
-    // per-lang cut rows)
-    "text_ppl_buckets_by_lang" -> ("WITH " + BIGRAM_LP_CTES + """,
-        |scored AS (SELECT a.doc_id, d.lang, a.n_bigram, a.sum_qlp,
-        |    (a.sum_qlp - ((a.sum_qlp % a.n_bigram) + a.n_bigram) % a.n_bigram)
-        |      // a.n_bigram AS mq
-        |  FROM agg a JOIN documents d ON a.doc_id = d.doc_id
-        |  WHERE a.n_bigram > 0),
-        |hs AS (SELECT lang, mq,
-        |    ('0x' || substr(md5('pplq:' || CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM scored),
-        |samp AS (SELECT lang, h, mq,
-        |    row_number() OVER (PARTITION BY lang ORDER BY h) AS srn FROM hs),
-        |sk AS (SELECT lang, h, mq FROM samp WHERE srn <= 512),
-        |skr AS (SELECT lang, mq,
-        |    row_number() OVER (PARTITION BY lang ORDER BY mq DESC, h) AS rn,
-        |    count(*) OVER (PARTITION BY lang) AS n_s FROM sk),
-        |cuts AS (SELECT lang,
-        |    max(CASE WHEN rn = greatest(1, n_s // 3) THEN mq END) AS cut_head,
-        |    max(CASE WHEN rn = greatest(1, (n_s * 2) // 3) THEN mq END) AS cut_mid
-        |  FROM skr GROUP BY 1),
-        |bk AS (SELECT s.lang,
-        |    CASE WHEN s.mq >= c.cut_head THEN 'head'
-        |      WHEN s.mq >= c.cut_mid THEN 'middle' ELSE 'tail' END AS bucket,
-        |    s.n_bigram, s.mq
-        |  FROM scored s JOIN cuts c ON s.lang = c.lang)
-        |SELECT lang, bucket, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_bigram) AS BIGINT) AS n_bigrams,
-        |  CAST(min(mq) AS BIGINT) AS min_mq,
-        |  CAST(max(mq) AS BIGINT) AS max_mq
-        |FROM bk GROUP BY 1, 2 ORDER BY lang, bucket""".stripMargin),
-
-    "text_quality_model" -> QUALITY_MODEL_SQL,
-    "text_quality_score" -> QUALITY_SCORE_SQL,
-    // the stored face scores through the SAME trained weights (the
-    // artifact is a cache, never a fork) — shares the live replay
-    "text_quality_score_stored" -> QUALITY_SCORE_SQL,
-
-    // quality_score reproduced exactly as in text_quality's oracle; the
-    // dominant language is the (n, lang)-max per source — the same
-    // struct-max tie rule as Spark's max_by
-    "text_source_scorecard" ->
-      """WITH q AS (
-        |  SELECT doc_id,
-        |    len(string_split(text, ' ')) AS n_tokens,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')) * 0.4 +
-        |    CAST(len(list_filter(string_split(text, ' '), w -> w IN ('the', 'a'))) AS DOUBLE)
-        |      / len(string_split(text, ' ')) * 0.3 +
-        |    CASE WHEN len(string_split(text, ' ')) >= 40 THEN 0.3
-        |         ELSE CAST(len(string_split(text, ' ')) AS DOUBLE) / 40.0 * 0.3 END AS quality_score
-        |  FROM documents),
-        |per_source AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    CAST(sum(CAST(n_tokens AS BIGINT)) AS BIGINT) AS n_tokens_total,
-        |    count(CASE WHEN floor(quality_score * 1000000) >= 500000 THEN 1 END)
-        |      AS n_quality_pass
-        |  FROM documents JOIN q USING (doc_id) GROUP BY 1),
-        |lang_counts AS (
-        |  SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2),
-        |dom AS (
-        |  SELECT source, lang AS dominant_lang FROM (
-        |    SELECT source, lang,
-        |      row_number() OVER (PARTITION BY source ORDER BY n DESC, lang DESC) AS r
-        |    FROM lang_counts) WHERE r = 1)
-        |SELECT source, n_docs, n_tokens_total, n_quality_pass, dominant_lang
-        |FROM per_source JOIN dom USING (source)
-        |ORDER BY source""".stripMargin,
-
-    "text_top_shingles" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx)
-        |SELECT s, df FROM (SELECT s, count(*) AS df FROM sh GROUP BY 1)
-        |ORDER BY df DESC, s LIMIT 50""".stripMargin,
-
-    // DuckDB needs the explicit 'g' flag to delete ALL matches like
-    // Spark does
-    "text_char_classes" ->
-      """SELECT doc_id, len(text) AS n_chars,
-        |  len(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS n_alpha,
-        |  len(regexp_replace(text, '[^0-9]', '', 'g')) AS n_digit,
-        |  len(regexp_replace(text, '[^ ]', '', 'g')) AS n_space,
-        |  len(text) - len(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        |    - len(regexp_replace(text, '[^0-9]', '', 'g'))
-        |    - len(regexp_replace(text, '[^ ]', '', 'g')) AS n_other,
-        |  CASE WHEN len(text) > 0 THEN
-        |    CAST(len(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE) / len(text)
-        |  END AS alpha_share,
-        |  CASE WHEN len(text) > 0 THEN
-        |    CAST(len(text) - len(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-        |      - len(regexp_replace(text, '[^0-9]', '', 'g'))
-        |      - len(regexp_replace(text, '[^ ]', '', 'g')) AS DOUBLE) / len(text)
-        |  END AS other_share
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // vocab(cut) = #tokens with min(doc_id) <= max_id*pct//100
-    "text_vocab_growth" ->
-      """WITH f AS (SELECT tok, min(doc_id) AS first_id FROM (
-        |    SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-        |  GROUP BY 1),
-        |mx AS (SELECT max(doc_id) AS max_id FROM documents),
-        |p AS (SELECT unnest([1, 10, 100]) AS pct),
-        |v AS (SELECT pct, count(*) AS vocab
-        |  FROM f, mx, p WHERE first_id <= max_id * pct // 100 GROUP BY 1),
-        |d AS (SELECT pct, count(*) AS n_docs
-        |  FROM documents, mx, p WHERE doc_id <= max_id * pct // 100 GROUP BY 1)
-        |SELECT CAST(p.pct AS BIGINT) AS pct, d.n_docs, v.vocab
-        |FROM p JOIN v USING (pct) JOIN d USING (pct) ORDER BY pct""".stripMargin,
-
-    // ascending (n_chars, doc_id) row_number mirrors the engine's rank;
-    // equal lengths commute so the tie order cannot move the statistic
-    "text_source_gini" ->
-      """WITH r AS (SELECT source, n_chars,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY n_chars, doc_id) AS HUGEINT) AS r
-        |  FROM documents
-        |  WHERE n_chars IS NOT NULL AND doc_id IS NOT NULL),
-        |m AS (SELECT source, CAST(count(*) AS HUGEINT) AS n,
-        |    CAST(sum(n_chars) AS HUGEINT) AS tot, sum(r * n_chars) AS srx
-        |  FROM r GROUP BY 1)
-        |SELECT source, CAST(n AS BIGINT) AS n_docs,
-        |  CAST(tot AS BIGINT) AS n_chars_total,
-        |  CASE WHEN tot > 0 THEN
-        |    CAST(2 * srx - (n + 1) * tot AS DOUBLE) / CAST(n * tot AS DOUBLE)
-        |  END AS gini
-        |FROM m ORDER BY source""".stripMargin,
-
-    // per-token −p·ln p quantized to integer micro-nats BEFORE the
-    // per-source sum (the raw-double-sum rule); every term is ≥ 0 so
-    // round() never faces a negative half-boundary; operation order
-    // ((−ln p)·p)·1e6 mirrors the Spark expression left-associatively
-    "text_source_entropy" ->
-      """WITH toks AS (SELECT source, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |counts AS (SELECT source, w, count(*) AS cnt FROM toks GROUP BY 1, 2),
-        |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n_tokens
-        |  FROM counts GROUP BY 1),
-        |q AS (SELECT c.source, t.n_tokens,
-        |    CAST(round(-ln(CAST(c.cnt AS DOUBLE) / t.n_tokens)
-        |      * (CAST(c.cnt AS DOUBLE) / t.n_tokens) * 1000000) AS BIGINT) AS qent
-        |  FROM counts c JOIN tot t ON c.source = t.source)
-        |SELECT source, CAST(max(n_tokens) AS BIGINT) AS n_tokens,
-        |  count(*) AS n_distinct_tokens,
-        |  CAST(sum(qent) AS BIGINT) AS sum_qent,
-        |  CAST(CAST(sum(qent) AS BIGINT) AS DOUBLE) / 1000000.0 AS entropy_nats
-        |FROM q GROUP BY source ORDER BY source""".stripMargin,
-
-    // the Bloom set-bit table replayed: 4 positions sliced from one md5
-    // (4 hex chars each, mod 32768), hit ⇔ all 4 set; exact membership
-    // reconciled by full-string join — false negatives must be 0
-    "dedup_bloom_prefilter" ->
-      """WITH corpus AS (SELECT DISTINCT text AS v FROM documents
-        |  WHERE doc_id < 250 AND text IS NOT NULL),
-        |probes AS (SELECT DISTINCT text AS v FROM documents
-        |  WHERE (doc_id >= 250 OR doc_id < 50) AND text IS NOT NULL),
-        |cpos AS (SELECT DISTINCT pos FROM (SELECT unnest([
-        |    ('0x' || substr(md5('bloom:' || v), 1, 4))::BIGINT % 32768,
-        |    ('0x' || substr(md5('bloom:' || v), 5, 4))::BIGINT % 32768,
-        |    ('0x' || substr(md5('bloom:' || v), 9, 4))::BIGINT % 32768,
-        |    ('0x' || substr(md5('bloom:' || v), 13, 4))::BIGINT % 32768
-        |  ]) AS pos FROM corpus)),
-        |ppos AS (SELECT v, unnest([
-        |    ('0x' || substr(md5('bloom:' || v), 1, 4))::BIGINT % 32768,
-        |    ('0x' || substr(md5('bloom:' || v), 5, 4))::BIGINT % 32768,
-        |    ('0x' || substr(md5('bloom:' || v), 9, 4))::BIGINT % 32768,
-        |    ('0x' || substr(md5('bloom:' || v), 13, 4))::BIGINT % 32768
-        |  ]) AS pos FROM probes),
-        |hit AS (SELECT p.v, count(c.pos) = 4 AS bloom_hit
-        |  FROM ppos p LEFT JOIN cpos c ON c.pos = p.pos GROUP BY p.v),
-        |fl AS (SELECT h.bloom_hit, (c.v IS NOT NULL) AS is_member
-        |  FROM hit h LEFT JOIN corpus c ON c.v = h.v),
-        |a AS (SELECT count(*) AS n_probes,
-        |    CAST(sum(CASE WHEN is_member THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_members,
-        |    CAST(sum(CASE WHEN bloom_hit THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_bloom_hits,
-        |    CAST(sum(CASE WHEN bloom_hit AND NOT is_member THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_false_pos,
-        |    CAST(sum(CASE WHEN NOT bloom_hit AND is_member THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_false_neg FROM fl)
-        |SELECT n_probes, n_members, n_bloom_hits, n_false_pos, n_false_neg,
-        |  CASE WHEN n_probes - n_members > 0 THEN
-        |    CAST(n_false_pos AS DOUBLE) / CAST(n_probes - n_members AS DOUBLE)
-        |  END AS fpr_measured
-        |FROM a""".stripMargin,
-
-    // hourly micro-unit sums matched to their prior-period hour by
-    // integer bucket equi-join; MAE/bias are exact integer sums with
-    // single final divisions mirroring the Spark order
-    "q_seasonal_backtest" ->
-      """WITH q AS (SELECT event_type,
-        |    epoch_us(ts) - epoch_us(ts) % 3600000000 AS bucket_us,
-        |    CAST(round(value * 1000000.0) AS BIGINT) AS vq
-        |  FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL AND ts IS NOT NULL),
-        |h AS (SELECT event_type, bucket_us, CAST(sum(vq) AS BIGINT) AS aq
-        |  FROM q GROUP BY 1, 2),
-        |j AS (SELECT a.event_type, a.aq, f.aq AS fq
-        |  FROM h a JOIN h f ON a.event_type = f.event_type
-        |    AND a.bucket_us = f.bucket_us + 86400000000)
-        |SELECT event_type, count(*) AS n_hours,
-        |  CAST(CAST(sum(abs(aq - fq)) AS BIGINT) AS DOUBLE)
-        |    / count(*) / 1000000.0 AS mae,
-        |  CAST(CAST(sum(aq - fq) AS BIGINT) AS DOUBLE)
-        |    / count(*) / 1000000.0 AS bias
-        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the hashed-ngram models replayed bucket-for-bucket: features =
-    // unigrams + bigrams, bucket = 12-bit md5 prefix mod 4096, add-one
-    // smoothing, per-bucket log-ratio quantized to micro-nats BEFORE the
-    // per-doc sum, literals mirroring the Spark expression
-    "text_dsir_weights" ->
-      """WITH tkl AS (SELECT doc_id,
-        |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_t,
-        |    string_split(text, ' ') AS tk FROM documents),
-        |uni AS (SELECT doc_id, is_t, unnest(tk) AS f FROM tkl),
-        |bi AS (SELECT doc_id, is_t,
-        |    unnest(list_transform(range(2, len(tk) + 1),
-        |      i -> tk[i - 1] || ' ' || tk[i])) AS f
-        |  FROM tkl WHERE len(tk) >= 2),
-        |feats AS (SELECT doc_id, is_t,
-        |    CAST(('0x' || substr(md5('dsir:' || f), 1, 3))::BIGINT % 4096
-        |      AS INTEGER) AS bucket
-        |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
-        |bc AS (SELECT bucket, CAST(sum(is_t) AS BIGINT) AS ct,
-        |    count(*) AS cr FROM feats GROUP BY 1),
-        |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-        |    CAST(sum(cr) AS BIGINT) AS nr FROM bc),
-        |ratio AS (SELECT bucket,
-        |    CAST(round((ln(CAST(ct + 1 AS DOUBLE) / CAST(nt + 4096 AS DOUBLE))
-        |        - ln(CAST(cr + 1 AS DOUBLE) / CAST(nr + 4096 AS DOUBLE)))
-        |      * 1000000) AS BIGINT) AS qlr
-        |  FROM bc CROSS JOIN tot)
-        |SELECT f.doc_id, CAST(f.is_t AS INTEGER) AS is_target,
-        |  count(*) AS n_feats, CAST(sum(r.qlr) AS BIGINT) AS sum_qlw,
-        |  CAST(CAST(sum(r.qlr) AS BIGINT) AS DOUBLE) / 1000000.0
-        |    AS logweight_nats
-        |FROM feats f JOIN ratio r USING (bucket)
-        |GROUP BY f.doc_id, f.is_t ORDER BY f.doc_id""".stripMargin,
-
-    // the selection replay: the same DSIR score CTEs, ordered by the
-    // exact integer score with doc_id tie-break, rank over the head only
-    "text_dsir_select" ->
-      """WITH tkl AS (SELECT doc_id,
-        |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS is_t,
-        |    string_split(text, ' ') AS tk FROM documents),
-        |uni AS (SELECT doc_id, is_t, unnest(tk) AS f FROM tkl),
-        |bi AS (SELECT doc_id, is_t,
-        |    unnest(list_transform(range(2, len(tk) + 1),
-        |      i -> tk[i - 1] || ' ' || tk[i])) AS f
-        |  FROM tkl WHERE len(tk) >= 2),
-        |feats AS (SELECT doc_id, is_t,
-        |    CAST(('0x' || substr(md5('dsir:' || f), 1, 3))::BIGINT % 4096
-        |      AS INTEGER) AS bucket
-        |  FROM (SELECT * FROM uni UNION ALL SELECT * FROM bi)),
-        |bc AS (SELECT bucket, CAST(sum(is_t) AS BIGINT) AS ct,
-        |    count(*) AS cr FROM feats GROUP BY 1),
-        |tot AS (SELECT CAST(sum(ct) AS BIGINT) AS nt,
-        |    CAST(sum(cr) AS BIGINT) AS nr FROM bc),
-        |ratio AS (SELECT bucket,
-        |    CAST(round((ln(CAST(ct + 1 AS DOUBLE) / CAST(nt + 4096 AS DOUBLE))
-        |        - ln(CAST(cr + 1 AS DOUBLE) / CAST(nr + 4096 AS DOUBLE)))
-        |      * 1000000) AS BIGINT) AS qlr
-        |  FROM bc CROSS JOIN tot),
-        |sc AS (SELECT f.doc_id, f.is_t,
-        |    CAST(sum(r.qlr) AS BIGINT) AS sum_qlw
-        |  FROM feats f JOIN ratio r USING (bucket)
-        |  GROUP BY f.doc_id, f.is_t),
-        |head AS (SELECT * FROM sc ORDER BY sum_qlw DESC, doc_id LIMIT 100)
-        |SELECT CAST(row_number() OVER (ORDER BY sum_qlw DESC, doc_id)
-        |    AS INTEGER) AS rank,
-        |  doc_id, CAST(is_t AS INTEGER) AS is_target, sum_qlw
-        |FROM head ORDER BY rank""".stripMargin,
-
-    // every CMS cell replayed: col_i = 12-bit prefix of md5('cms:i:'‖w)
-    // mod 1024, cells exact integer sums, estimate = min over the 4 rows
-    "q_heavy_cms" ->
-      """WITH counts AS (SELECT w, count(*) AS cnt
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |  GROUP BY w),
-        |top AS (SELECT w, cnt AS n_exact FROM counts
-        |  ORDER BY cnt DESC, w LIMIT 20),
-        |cells AS (SELECT i AS row,
-        |    CAST(('0x' || substr(md5('cms:' || CAST(i AS VARCHAR) || ':' || w),
-        |      1, 3))::BIGINT % 1024 AS INTEGER) AS col,
-        |    CAST(sum(cnt) AS BIGINT) AS cell
-        |  FROM counts, (SELECT unnest([0, 1, 2, 3]) AS i)
-        |  GROUP BY 1, 2),
-        |probes AS (SELECT t.w, t.n_exact, c.cell
-        |  FROM top t CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS i) r
-        |  JOIN cells c ON c.row = r.i
-        |    AND c.col = CAST(('0x' || substr(
-        |      md5('cms:' || CAST(r.i AS VARCHAR) || ':' || t.w), 1, 3))::BIGINT
-        |      % 1024 AS INTEGER))
-        |SELECT w AS token, CAST(n_exact AS BIGINT) AS n_exact,
-        |  CAST(min(cell) AS BIGINT) AS est_cms,
-        |  CAST(min(cell) - n_exact AS BIGINT) AS overcount
-        |FROM probes GROUP BY w, n_exact
-        |ORDER BY n_exact DESC, token""".stripMargin,
-
-    // every HLL register replayed from the same md5: bucket = 12-bit hex
-    // prefix mod 512, rank = 61 − bitlen of the next 60 bits (bin() is
-    // minimal in both engines); the indicator sum is EXACT integer
-    // (1 << (63−M_j), absent registers 2^63) with one final double
-    // division; literals mirror the Spark expression left-associatively
-    "q_distinct_hll" ->
-      """WITH vals AS (SELECT user_id AS v, count(*) AS n_occ FROM events
-        |  WHERE user_id IS NOT NULL GROUP BY 1),
-        |hs AS (SELECT md5('hll:' || CAST(v AS VARCHAR)) AS h FROM vals),
-        |pr AS (SELECT
-        |    CAST(('0x' || substr(h, 1, 3))::BIGINT % 512 AS INTEGER) AS bucket,
-        |    CAST(CASE WHEN ('0x' || substr(h, 4, 15))::BIGINT = 0 THEN 61
-        |      ELSE 61 - length(bin(('0x' || substr(h, 4, 15))::BIGINT))
-        |    END AS INTEGER) AS rho
-        |  FROM hs),
-        |regs AS (SELECT bucket, max(rho) AS m_j, count(*) AS n_vals
-        |  FROM pr GROUP BY 1),
-        |a AS (SELECT count(*) AS n_present,
-        |    sum(1::BIGINT << (63 - m_j)) AS sum_present,
-        |    sum(n_vals) AS n_exact FROM regs),
-        |s AS (SELECT CAST(n_present AS BIGINT) AS n_present,
-        |    CAST(COALESCE(n_exact, 0) AS BIGINT) AS n_exact,
-        |    COALESCE(sum_present, 0)
-        |      + (512 - n_present) * CAST('9223372036854775808' AS HUGEINT)
-        |      AS sum_scaled FROM a),
-        |e AS (SELECT n_present, n_exact,
-        |    CAST(0.7213 AS DOUBLE)
-        |      / (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(512.0 AS DOUBLE))
-        |      * CAST(262144.0 AS DOUBLE) * CAST(9.223372036854775808e18 AS DOUBLE)
-        |      / CAST(sum_scaled AS DOUBLE) AS est_raw,
-        |    512 - n_present AS v_zero FROM s),
-        |f AS (SELECT n_present, n_exact,
-        |    CASE WHEN est_raw <= CAST(2.5 AS DOUBLE) * CAST(512.0 AS DOUBLE)
-        |        AND v_zero > 0
-        |      THEN CAST(512.0 AS DOUBLE)
-        |        * ln(CAST(512.0 AS DOUBLE) / CAST(v_zero AS DOUBLE))
-        |      ELSE est_raw END AS est_hll FROM e)
-        |SELECT 512 AS m_registers, n_exact, n_present, est_hll,
-        |  CASE WHEN n_exact > 0 THEN
-        |    (est_hll - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE)
-        |  END AS rel_err
-        |FROM f""".stripMargin,
-
-    // inclusion-exclusion replay: the A/B/union register sets from the
-    // same per-user membership flags, three estimates, exact flag sums
-    "q_distinct_overlap" ->
-      """WITH pv AS (SELECT user_id AS v,
-        |    max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS fa,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS fb
-        |  FROM events WHERE user_id IS NOT NULL
-        |    AND (event_type = 'click' OR event_type = 'purchase')
-        |  GROUP BY 1),
-        |rl AS (SELECT v, unnest(['a', 'b', 'u']) AS role, fa, fb FROM pv),
-        |rf AS (SELECT v, role FROM rl
-        |  WHERE (role = 'a' AND fa = 1) OR (role = 'b' AND fb = 1)
-        |     OR role = 'u'),
-        |pr AS (SELECT role,
-        |    CAST(('0x' || substr(md5('hll:' || CAST(v AS VARCHAR)), 1, 3))::BIGINT
-        |      % 512 AS INTEGER) AS bucket,
-        |    CAST(CASE WHEN
-        |      ('0x' || substr(md5('hll:' || CAST(v AS VARCHAR)), 4, 15))::BIGINT = 0
-        |      THEN 61 ELSE 61 - length(bin(
-        |        ('0x' || substr(md5('hll:' || CAST(v AS VARCHAR)), 4, 15))::BIGINT))
-        |    END AS INTEGER) AS rho
-        |  FROM rf),
-        |regs AS (SELECT role, bucket, max(rho) AS m_j FROM pr GROUP BY 1, 2),
-        |a AS (SELECT role, count(*) AS n_present,
-        |    sum(1::BIGINT << (63 - m_j)) AS sum_present FROM regs GROUP BY 1),
-        |s AS (SELECT role, CAST(n_present AS BIGINT) AS n_present,
-        |    COALESCE(sum_present, 0)
-        |      + (512 - n_present) * CAST('9223372036854775808' AS HUGEINT)
-        |      AS sum_scaled FROM a),
-        |e AS (SELECT role, n_present,
-        |    CAST(0.7213 AS DOUBLE)
-        |      / (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(512.0 AS DOUBLE))
-        |      * CAST(262144.0 AS DOUBLE) * CAST(9.223372036854775808e18 AS DOUBLE)
-        |      / CAST(sum_scaled AS DOUBLE) AS est_raw,
-        |    512 - n_present AS v_zero FROM s),
-        |f AS (SELECT role,
-        |    CASE WHEN est_raw <= CAST(2.5 AS DOUBLE) * CAST(512.0 AS DOUBLE)
-        |        AND v_zero > 0
-        |      THEN CAST(512.0 AS DOUBLE)
-        |        * ln(CAST(512.0 AS DOUBLE) / CAST(v_zero AS DOUBLE))
-        |      ELSE est_raw END AS est_hll FROM e),
-        |p AS (SELECT max(CASE WHEN role = 'a' THEN est_hll END) AS est_a,
-        |    max(CASE WHEN role = 'b' THEN est_hll END) AS est_b,
-        |    max(CASE WHEN role = 'u' THEN est_hll END) AS est_union FROM f),
-        |x AS (SELECT CAST(sum(fa) AS BIGINT) AS n_a_exact,
-        |    CAST(sum(fb) AS BIGINT) AS n_b_exact,
-        |    CAST(sum(fa * fb) AS BIGINT) AS n_overlap_exact FROM pv)
-        |SELECT n_a_exact, n_b_exact, n_overlap_exact, est_a, est_b, est_union,
-        |  est_a + est_b - est_union AS est_overlap,
-        |  CASE WHEN n_overlap_exact > 0 THEN
-        |    (est_a + est_b - est_union - CAST(n_overlap_exact AS DOUBLE))
-        |      / CAST(n_overlap_exact AS DOUBLE)
-        |  END AS rel_err_overlap
-        |FROM x CROSS JOIN p""".stripMargin,
-
-    // KMV replay: bottom-256 of the 60-bit value hashes per role via
-    // row_number windows; estimates (k-1)·2^60/h_k with the <k exact
-    // regime; overlap = (flagged fraction of the union's bottom-k) ×
-    // est_union — every double op mirrors the Spark expression literally
-    "q_distinct_kmv" ->
-      """WITH pv AS (SELECT user_id AS v,
-        |    max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS fa,
-        |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS fb
-        |  FROM events WHERE user_id IS NOT NULL
-        |    AND (event_type = 'click' OR event_type = 'purchase')
-        |  GROUP BY 1),
-        |hv AS (SELECT
-        |    ('0x' || substr(md5('kmv:' || CAST(v AS VARCHAR)), 1, 15))::BIGINT AS h,
-        |    fa, fb FROM pv),
-        |ra AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hv WHERE fa = 1),
-        |ea AS (SELECT CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
-        |    ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |      / CAST(max(h) AS DOUBLE) END AS est_a
-        |  FROM ra WHERE rn <= 256),
-        |rb AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hv WHERE fb = 1),
-        |eb AS (SELECT CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
-        |    ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |      / CAST(max(h) AS DOUBLE) END AS est_b
-        |  FROM rb WHERE rn <= 256),
-        |ru AS (SELECT h, fa, fb, row_number() OVER (ORDER BY h) AS rn FROM hv),
-        |ku AS (SELECT CAST(count(*) AS BIGINT) AS k_used,
-        |    CAST(sum(fa * fb) AS BIGINT) AS n_both_in_k,
-        |    CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
-        |      ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |        / CAST(max(h) AS DOUBLE) END AS est_union
-        |  FROM ru WHERE rn <= 256),
-        |x AS (SELECT CAST(sum(fa) AS BIGINT) AS n_a_exact,
-        |    CAST(sum(fb) AS BIGINT) AS n_b_exact,
-        |    CAST(sum(fa * fb) AS BIGINT) AS n_overlap_exact FROM pv)
-        |SELECT n_a_exact, n_b_exact, n_overlap_exact, est_a, est_b, est_union,
-        |  k_used, n_both_in_k,
-        |  CAST(n_both_in_k AS DOUBLE) / CAST(k_used AS DOUBLE) AS jaccard_k,
-        |  CAST(n_both_in_k AS DOUBLE) / CAST(k_used AS DOUBLE) * est_union
-        |    AS est_overlap,
-        |  CASE WHEN n_overlap_exact > 0 THEN
-        |    (CAST(n_both_in_k AS DOUBLE) / CAST(k_used AS DOUBLE) * est_union
-        |      - CAST(n_overlap_exact AS DOUBLE)) / CAST(n_overlap_exact AS DOUBLE)
-        |  END AS rel_err_overlap
-        |FROM x CROSS JOIN ea CROSS JOIN eb CROSS JOIN ku""".stripMargin,
-
-    // the per-key KMV replay: every stage gains event_type, one rank
-    // window per key, same estimator with the <k exact regime
-    "q_distinct_kmv_by_type" ->
-      """WITH pv AS (SELECT event_type, user_id AS v FROM events
-        |  WHERE user_id IS NOT NULL GROUP BY 1, 2),
-        |hv AS (SELECT event_type,
-        |    ('0x' || substr(md5('kmv:' || CAST(v AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM pv),
-        |rk AS (SELECT event_type, h,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn FROM hv),
-        |sk AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_in_sketch,
-        |    max(h) AS h_k FROM rk WHERE rn <= 256 GROUP BY 1),
-        |ex AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_exact
-        |  FROM rk GROUP BY 1),
-        |est AS (SELECT s.event_type, e.n_exact, s.n_in_sketch,
-        |    CASE WHEN s.n_in_sketch < 256 THEN CAST(s.n_in_sketch AS DOUBLE)
-        |      ELSE CAST(255 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-        |        / CAST(s.h_k AS DOUBLE) END AS est_kmv
-        |  FROM sk s JOIN ex e ON s.event_type = e.event_type)
-        |SELECT event_type, n_exact, n_in_sketch, est_kmv,
-        |  CASE WHEN n_exact > 0 THEN
-        |    (est_kmv - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE)
-        |  END AS rel_err
-        |FROM est ORDER BY event_type""".stripMargin,
-
-    // quantile-sketch replay: per-type bottom-512 rows by md5(event_id),
-    // rank rule ceil(p·n) over (v, h) on the sample and (value, event_id)
-    // on the corpus — the q_quantiles selection — plus the CDF counts
-    "q_quantiles_sketch" ->
-      """WITH base AS (SELECT event_type, event_id, value FROM events
-        |  WHERE event_type IS NOT NULL AND value IS NOT NULL
-        |    AND event_id IS NOT NULL),
-        |hs AS (SELECT event_type, value AS v,
-        |    ('0x' || substr(md5('qsk:' || CAST(event_id AS VARCHAR)), 1, 15))::BIGINT AS h
-        |  FROM base),
-        |samp AS (SELECT event_type, h, v,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn FROM hs),
-        |sk AS (SELECT event_type, h, v FROM samp WHERE rn <= 512),
-        |skr AS (SELECT event_type, v,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY v, h) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n_s FROM sk),
-        |est AS (SELECT event_type,
-        |    max(CASE WHEN rn = greatest(1, CAST(ceil(0.5 * n_s) AS BIGINT))
-        |      THEN v END) AS p50_sketch,
-        |    max(CASE WHEN rn = greatest(1, CAST(ceil(0.9 * n_s) AS BIGINT))
-        |      THEN v END) AS p90_sketch,
-        |    CAST(max(n_s) AS BIGINT) AS n_sample
-        |  FROM skr GROUP BY 1),
-        |exr AS (SELECT event_type, value,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value, event_id) AS rn,
-        |    count(*) OVER (PARTITION BY event_type) AS n FROM base),
-        |exq AS (SELECT event_type,
-        |    max(CASE WHEN rn = greatest(1, CAST(ceil(0.5 * n) AS BIGINT))
-        |      THEN value END) AS p50_exact,
-        |    max(CASE WHEN rn = greatest(1, CAST(ceil(0.9 * n) AS BIGINT))
-        |      THEN value END) AS p90_exact
-        |  FROM exr GROUP BY 1),
-        |cdf AS (SELECT b.event_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(sum(CASE WHEN b.value <= e.p50_sketch THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_le_p50,
-        |    CAST(sum(CASE WHEN b.value <= e.p90_sketch THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_le_p90
-        |  FROM base b JOIN est e ON b.event_type = e.event_type GROUP BY 1)
-        |SELECT e.event_type, c.n_rows, e.n_sample,
-        |  e.p50_sketch, q.p50_exact,
-        |  abs(CAST(c.n_le_p50 AS DOUBLE) / CAST(c.n_rows AS DOUBLE)
-        |    - CAST(0.5 AS DOUBLE)) AS cdf_err_p50,
-        |  e.p90_sketch, q.p90_exact,
-        |  abs(CAST(c.n_le_p90 AS DOUBLE) / CAST(c.n_rows AS DOUBLE)
-        |    - CAST(0.9 AS DOUBLE)) AS cdf_err_p90
-        |FROM est e JOIN exq q ON e.event_type = q.event_type
-        |JOIN cdf c ON e.event_type = c.event_type
-        |ORDER BY e.event_type""".stripMargin,
-
-    // the per-key composition of the same replay: every stage gains
-    // event_type, one register table per type, same estimate arithmetic
-    "q_distinct_hll_by_type" ->
-      """WITH vals AS (SELECT event_type, user_id AS v, count(*) AS n_occ
-        |  FROM events WHERE user_id IS NOT NULL GROUP BY 1, 2),
-        |hs AS (SELECT event_type, md5('hll:' || CAST(v AS VARCHAR)) AS h
-        |  FROM vals),
-        |pr AS (SELECT event_type,
-        |    CAST(('0x' || substr(h, 1, 3))::BIGINT % 512 AS INTEGER) AS bucket,
-        |    CAST(CASE WHEN ('0x' || substr(h, 4, 15))::BIGINT = 0 THEN 61
-        |      ELSE 61 - length(bin(('0x' || substr(h, 4, 15))::BIGINT))
-        |    END AS INTEGER) AS rho
-        |  FROM hs),
-        |regs AS (SELECT event_type, bucket, max(rho) AS m_j,
-        |    count(*) AS n_vals FROM pr GROUP BY 1, 2),
-        |a AS (SELECT event_type, count(*) AS n_present,
-        |    sum(1::BIGINT << (63 - m_j)) AS sum_present,
-        |    sum(n_vals) AS n_exact FROM regs GROUP BY 1),
-        |s AS (SELECT event_type, CAST(n_present AS BIGINT) AS n_present,
-        |    CAST(COALESCE(n_exact, 0) AS BIGINT) AS n_exact,
-        |    COALESCE(sum_present, 0)
-        |      + (512 - n_present) * CAST('9223372036854775808' AS HUGEINT)
-        |      AS sum_scaled FROM a),
-        |e AS (SELECT event_type, n_present, n_exact,
-        |    CAST(0.7213 AS DOUBLE)
-        |      / (CAST(1.0 AS DOUBLE) + CAST(1.079 AS DOUBLE) / CAST(512.0 AS DOUBLE))
-        |      * CAST(262144.0 AS DOUBLE) * CAST(9.223372036854775808e18 AS DOUBLE)
-        |      / CAST(sum_scaled AS DOUBLE) AS est_raw,
-        |    512 - n_present AS v_zero FROM s),
-        |f AS (SELECT event_type, n_present, n_exact,
-        |    CASE WHEN est_raw <= CAST(2.5 AS DOUBLE) * CAST(512.0 AS DOUBLE)
-        |        AND v_zero > 0
-        |      THEN CAST(512.0 AS DOUBLE)
-        |        * ln(CAST(512.0 AS DOUBLE) / CAST(v_zero AS DOUBLE))
-        |      ELSE est_raw END AS est_hll FROM e)
-        |SELECT event_type, 512 AS m_registers, n_exact, n_present, est_hll,
-        |  CASE WHEN n_exact > 0 THEN
-        |    (est_hll - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE)
-        |  END AS rel_err
-        |FROM f ORDER BY event_type""".stripMargin,
-
-    // per-token (ln p_s − ln C_w)·p_s quantized to integer micro-nats
-    // BEFORE the per-source sum, mirroring the Spark expression
-    // left-associatively; the scalar +ln N lands on the #sources rollup
-    "text_source_kl" ->
-      """WITH toks AS (SELECT source, unnest(string_split(text, ' ')) AS w
-        |  FROM documents),
-        |counts AS (SELECT source, w, count(*) AS cnt FROM toks GROUP BY 1, 2),
-        |aug AS (SELECT source,
-        |    CAST(sum(cnt) OVER (PARTITION BY source) AS BIGINT) AS n_tokens,
-        |    CAST(sum(cnt) OVER (PARTITION BY w) AS BIGINT) AS cw, cnt
-        |  FROM counts),
-        |q AS (SELECT source, n_tokens,
-        |    CAST(round((ln(CAST(cnt AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-        |        - ln(CAST(cw AS DOUBLE)))
-        |      * (CAST(cnt AS DOUBLE) / CAST(n_tokens AS DOUBLE))
-        |      * 1000000) AS BIGINT) AS qkl
-        |  FROM aug),
-        |r AS (SELECT source, CAST(max(n_tokens) AS BIGINT) AS n_tokens,
-        |    CAST(sum(qkl) AS BIGINT) AS sum_qkl_rel FROM q GROUP BY 1),
-        |f AS (SELECT source, n_tokens,
-        |    CAST(sum(n_tokens) OVER () AS BIGINT) AS corpus_tokens,
-        |    sum_qkl_rel FROM r)
-        |SELECT source, n_tokens, corpus_tokens,
-        |  CAST(sum_qkl_rel
-        |    + CAST(round(ln(CAST(corpus_tokens AS DOUBLE)) * 1000000) AS BIGINT)
-        |    AS BIGINT) AS sum_qkl,
-        |  CAST(CAST(sum_qkl_rel
-        |    + CAST(round(ln(CAST(corpus_tokens AS DOUBLE)) * 1000000) AS BIGINT)
-        |    AS BIGINT) AS DOUBLE) / 1000000.0 AS kl_nats
-        |FROM f ORDER BY source""".stripMargin,
-
-    // OLS moments as exact HUGEINT sums of micro-nat points; slope and
-    // intercept are single divisions of the integer cross-products
-    "text_zipf" ->
-      """WITH counts AS (SELECT w, count(*) AS cnt
-        |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        |  GROUP BY w),
-        |top AS (SELECT cnt, row_number() OVER (ORDER BY cnt DESC, w) AS rnk
-        |  FROM (SELECT w, cnt FROM counts ORDER BY cnt DESC, w LIMIT 500)),
-        |pts AS (SELECT
-        |    CAST(round(ln(CAST(rnk AS DOUBLE)) * 1000000) AS BIGINT) AS x,
-        |    CAST(round(ln(CAST(cnt AS DOUBLE)) * 1000000) AS BIGINT) AS y
-        |  FROM top),
-        |m AS (SELECT CAST(count(*) AS BIGINT) AS k,
-        |    CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-        |    SUM(CAST(x AS HUGEINT) * y) AS sxy,
-        |    SUM(CAST(x AS HUGEINT) * x) AS sxx FROM pts)
-        |SELECT k AS n_fit,
-        |  CAST(k * sxy - sx * sy AS DOUBLE)
-        |    / CAST(k * sxx - sx * sx AS DOUBLE) AS zipf_slope,
-        |  CAST(sy * sxx - sx * sxy AS DOUBLE)
-        |    / CAST(k * sxx - sx * sx AS DOUBLE) / 1000000.0 AS intercept_ln
-        |FROM m""".stripMargin,
-
-    // quality_score reproduced exactly as in text_quality's oracle, then
-    // floored to integer micro-units BEFORE bucketing (the money rule);
-    // all division operands non-negative, so // == trunc == floor
-    "text_quality_calibration" ->
-      """WITH q AS (
-        |  SELECT len(string_split(text, ' ')) AS n_tokens,
-        |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-        |      / len(string_split(text, ' ')) * 0.4 +
-        |    CAST(len(list_filter(string_split(text, ' '), w -> w IN ('the', 'a'))) AS DOUBLE)
-        |      / len(string_split(text, ' ')) * 0.3 +
-        |    CASE WHEN len(string_split(text, ' ')) >= 40 THEN 0.3
-        |         ELSE CAST(len(string_split(text, ' ')) AS DOUBLE) / 40.0 * 0.3 END
-        |      AS quality_score
-        |  FROM documents),
-        |h AS (
-        |  SELECT least(CAST(floor(quality_score * 1000000) AS BIGINT) // 50000, 20) AS b,
-        |    count(*) AS h_docs, CAST(sum(n_tokens) AS BIGINT) AS h_tokens
-        |  FROM q GROUP BY 1),
-        |t AS (SELECT unnest(range(21)) AS t),
-        |sweep AS (
-        |  SELECT t.t AS t,
-        |    CAST(coalesce(sum(h.h_docs), 0) AS BIGINT) AS n_docs_pass,
-        |    CAST(coalesce(sum(h.h_tokens), 0) AS BIGINT) AS n_tokens_pass
-        |  FROM t LEFT JOIN h ON h.b >= t.t GROUP BY t.t)
-        |SELECT CAST(t * 5 AS INT) AS floor_pct, n_docs_pass, n_tokens_pass,
-        |  CAST(n_docs_pass AS DOUBLE)
-        |    / CAST(max(n_docs_pass) OVER () AS DOUBLE) AS doc_share,
-        |  CAST(n_tokens_pass AS DOUBLE)
-        |    / CAST(max(n_tokens_pass) OVER () AS DOUBLE) AS token_share
-        |FROM sweep ORDER BY floor_pct""".stripMargin,
-
-    // same shingle construction as text_top_shingles, aggregated back
-    // per doc against the corpus df
-    "text_dup_coverage" ->
-      """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-        |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-        |df AS (SELECT s, count(*) AS df FROM sh GROUP BY 1)
-        |SELECT sh.doc_id, count(*) AS n_shingles,
-        |  CAST(sum(CASE WHEN df.df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_shingles,
-        |  CAST(CAST(sum(CASE WHEN df.df > 1 THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
-        |    / count(*) AS dup_rate
-        |FROM sh JOIN df USING (s)
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
-
-    // cosine over the UNNORMALIZED quantized component-sum vectors
-    // (scale-invariant, so identical to the mean-vector cosine) — every
-    // dot is an exact decimal sum of integer products
-    "sim_label_affinity" ->
-      """WITH x AS (SELECT label,
-        |    unnest(CAST(embedding AS DOUBLE[])) AS e,
-        |    unnest(range(len(embedding))) AS pos
-        |  FROM embeddings),
-        |q AS (SELECT label, pos, sum(CAST(floor(e * 1000000.0) AS BIGINT)) AS sq
-        |  FROM x GROUP BY 1, 2)
-        |SELECT label_a, label_b,
-        |  CAST(dab AS DOUBLE) / (sqrt(CAST(daa AS DOUBLE)) * sqrt(CAST(dbb AS DOUBLE))) AS affinity
-        |FROM (
-        |  SELECT a.label AS label_a, b.label AS label_b,
-        |    sum(CAST(a.sq AS DECIMAL(18,0)) * CAST(b.sq AS DECIMAL(18,0))) AS dab,
-        |    sum(CAST(a.sq AS DECIMAL(18,0)) * CAST(a.sq AS DECIMAL(18,0))) AS daa,
-        |    sum(CAST(b.sq AS DECIMAL(18,0)) * CAST(b.sq AS DECIMAL(18,0))) AS dbb
-        |  FROM q a JOIN q b ON a.pos = b.pos AND a.label < b.label
-        |  GROUP BY 1, 2)
-        |ORDER BY label_a, label_b""".stripMargin,
-
-    // features recomputed independently from the byte stream (text is pure
-    // ASCII at every SF, so ord(char) IS the body byte): BMP channel c =
-    // body index mod 3, WAV sample k = bytes (2k, 2k+1) as signed int16 LE.
-    // All sums stay integral (DuckDB widens to HUGEINT, Spark holds longs —
-    // same exact integers), with one double division + sqrt at the end,
-    // mirroring DspKernel's operation order bit-for-bit.
-    "q_multimodal" ->
-      """WITH flat AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(string_split(text, ''), (c, i) -> {'idx': i - 1, 'v': ord(c)})) AS e
-        |  FROM documents),
-        |b AS (SELECT doc_id, e.idx AS idx, e.v AS v FROM flat),
-        |ch AS (
-        |  SELECT doc_id, idx % 3 AS c, count(*) AS n,
-        |    CAST(sum(v) AS BIGINT) AS s, CAST(sum(v * v) AS BIGINT) AS ss
-        |  FROM b GROUP BY 1, 2),
-        |chs AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN c = 0 THEN CAST(s AS DOUBLE) / n END) AS mean_b,
-        |    max(CASE WHEN c = 1 THEN CAST(s AS DOUBLE) / n END) AS mean_g,
-        |    max(CASE WHEN c = 2 THEN CAST(s AS DOUBLE) / n END) AS mean_r,
-        |    max(CASE WHEN c = 0 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_b,
-        |    max(CASE WHEN c = 1 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_g,
-        |    max(CASE WHEN c = 2 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_r
-        |  FROM ch GROUP BY doc_id),
-        |pair AS (
-        |  SELECT doc_id, idx // 2 AS k,
-        |    max(CASE WHEN idx % 2 = 0 THEN v END) AS lo,
-        |    max(CASE WHEN idx % 2 = 1 THEN v END) AS hi
-        |  FROM b GROUP BY 1, 2),
-        |smp AS (
-        |  SELECT doc_id, k,
-        |    lo + 256 * hi - CASE WHEN lo + 256 * hi >= 32768 THEN 65536 ELSE 0 END AS smpv
-        |  FROM pair WHERE hi IS NOT NULL),
-        |sgn AS (
-        |  SELECT doc_id, smpv, lag(smpv) OVER (PARTITION BY doc_id ORDER BY k) AS prev
-        |  FROM smp),
-        |wavs AS (
-        |  SELECT doc_id,
-        |    sqrt(CAST(CAST(sum(smpv * smpv) AS BIGINT) AS DOUBLE) / count(*)) AS pcm_rms,
-        |    CASE WHEN count(*) < 2 THEN 0.0
-        |         ELSE CAST(CAST(sum(CASE WHEN prev IS NOT NULL
-        |                AND ((smpv >= 0) <> (prev >= 0)) THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
-        |              / (count(*) - 1) END AS pcm_zcr
-        |  FROM sgn GROUP BY doc_id)
-        |SELECT d.doc_id AS doc_id,
-        |  (['image', 'audio', 'video'])[CAST(d.doc_id % 3 AS INT) + 1] AS media_type,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN 'wav' ELSE 'bmp' END AS container,
-        |  CAST(octet_length(CAST(d.text AS BLOB))
-        |       + CASE WHEN d.doc_id % 3 = 1 THEN 44 ELSE 54 END AS INT) AS n_bytes,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN CAST(d.doc_id % 640 + 64 AS INT) END AS width,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN CAST(d.doc_id % 480 + 48 AS INT) END AS height,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN CAST((d.doc_id % 8) * 4000 + 8000 AS INT) END AS sample_rate,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN CAST(d.doc_id % 2 + 1 AS INT) END AS channels,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN w.pcm_rms END AS pcm_rms,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN w.pcm_zcr END AS pcm_zcr,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_b END AS px_mean_b,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_g END AS px_mean_g,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_r END AS px_mean_r,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_b END AS px_std_b,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_g END AS px_std_g,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_r END AS px_std_r
-        |FROM documents d
-        |LEFT JOIN chs c ON c.doc_id = d.doc_id
-        |LEFT JOIN wavs w ON w.doc_id = d.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // JPEG/FLAC seam: the engine BUILDS real JPEG/FLAC containers then
-    // re-derives every field from the BYTES — JPEG via a marker WALK whose
-    // landing offset (sof_off) the output exposes, FLAC by unpacking the
-    // bit-packed STREAMINFO group. The oracle derives the same fields
-    // analytically from the doc_id construction formulas, so a wrong hop
-    // length, endianness, or shift/mask fails the hash.
-    // JPEG layout: SOI(2) + APP0(18) + COM(4+clen) + SOF0(19) + body + EOI(2)
-    //   with clen = doc_id%13+1 → sof_off = 25+clen, n_bytes = 45+clen+len.
-    // FLAC layout: magic(4) + blockhdr(4) + STREAMINFO(34) + body → 42+len;
-    //   total_samples = len // (channels*2), all operands non-negative.
-    "q_multimodal_codecs" ->
-      """SELECT doc_id,
-        |  (['image', 'audio', 'video'])[CAST(doc_id % 3 AS INT) + 1] AS media_type,
-        |  CASE WHEN doc_id % 3 = 1 THEN 'flac' ELSE 'jpeg' END AS container,
-        |  CAST(octet_length(CAST(text AS BLOB))
-        |       + CASE WHEN doc_id % 3 = 1 THEN 42
-        |              ELSE 45 + (doc_id % 13 + 1) END AS INT) AS n_bytes,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(25 + doc_id % 13 + 1 AS INT) END AS sof_off,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(8 AS INT) END AS sof_precision,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 480 + 48 AS INT) END AS height,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 640 + 64 AS INT) END AS width,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(3 AS INT) END AS n_components,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST((doc_id % 8) * 4000 + 8000 AS INT) END AS sample_rate,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(doc_id % 2 + 1 AS INT) END AS channels,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(16 AS INT) END AS bits_per_sample,
-        |  CASE WHEN doc_id % 3 = 1 THEN CAST(octet_length(CAST(text AS BLOB))
-        |       // ((doc_id % 2 + 1) * 2) AS BIGINT) END AS total_samples
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // analytic twin of the scan walk: table counts come straight from the
-    // doc_id construction formulas; the near-even scan split means
-    // total = L, min = L // n, max = (L + n - 1) // n (all operands
-    // non-negative). Audio rows are FLAC -> every walk field NULL.
-    "q_multimodal_scan_stats" ->
-      """SELECT doc_id,
-        |  (['image', 'audio', 'video'])[CAST(doc_id % 3 AS INT) + 1] AS media_type,
-        |  CASE WHEN doc_id % 3 = 1 THEN 'flac' ELSE 'jpeg' END AS container,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 2 + 1 AS INT) END AS n_dqt,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 4 + 1 AS INT) END AS n_dht,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 7 % 3 + 1 AS INT) END AS n_scans,
-        |  CASE WHEN doc_id % 3 <> 1
-        |       THEN CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) END AS scan_bytes_total,
-        |  CASE WHEN doc_id % 3 <> 1
-        |       THEN CAST(octet_length(CAST(text AS BLOB)) // (doc_id % 7 % 3 + 1) AS INT)
-        |       END AS scan_bytes_min,
-        |  CASE WHEN doc_id % 3 <> 1
-        |       THEN CAST((octet_length(CAST(text AS BLOB)) + doc_id % 7 % 3)
-        |            // (doc_id % 7 % 3 + 1) AS INT)
-        |       END AS scan_bytes_max
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // the PNG fields recomputed analytically from the generator's
-    // parameterization (doc_id-derived geometry, body = the text bytes,
-    // 2 + n_idat chunks); a wrong build, walk, or CRC shows as a
-    // mismatch — crc_bad must be 0 everywhere
-    "q_multimodal_png" ->
-      """SELECT doc_id,
-        |  (['image', 'audio', 'video'])[CAST(doc_id % 3 AS INT) + 1] AS media_type,
-        |  CASE WHEN doc_id % 3 = 1 THEN 'flac' ELSE 'png' END AS container,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 640 + 64 AS INT) END AS width,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 480 + 48 AS INT) END AS height,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(8 AS INT) END AS bit_depth,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 2 * 4 + 2 AS INT) END AS color_type,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 7 % 2 AS INT) END AS interlace,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 5 % 4 + 3 AS INT) END AS n_chunks,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 5 % 4 + 1 AS INT) END AS n_idat,
-        |  CASE WHEN doc_id % 3 <> 1
-        |       THEN CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) END AS idat_bytes_total,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(0 AS INT) END AS crc_bad
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // every EXIF column analytic from the construction: 3 IFDs both
-    // layouts (IFD0+Exif+GPS vs IFD0+Exif+thumbnail-IFD1), tag counts
-    // 5+2+3 vs 4+2+1, values straight from the doc_id arithmetic
-    "q_multimodal_exif" -> EXIF_STATS_SQL(scrubbed = false),
-
-    // the scrub face: identical census except the coordinate
-    // numerators read 0 — structure preserved is WHAT the oracle pins
-    "q_multimodal_exif_scrub" -> EXIF_STATS_SQL(scrubbed = true),
-
-    // the BMFF fields recomputed analytically from the generator's
-    // parameterization: mvhd timescale/duration and the trak/mdat
-    // census are doc_id-derived, mdat bytes are exactly the text body,
-    // n_boxes = ftyp + moov + n_mdat top-level + mvhd + n_trak children
-    "q_multimodal_mp4" ->
-      """SELECT doc_id,
-        |  (['image', 'audio', 'video'])[CAST(doc_id % 3 AS INT) + 1] AS media_type,
-        |  CASE WHEN doc_id % 3 = 1 THEN 'flac' ELSE 'mp4' END AS container,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 48000 + 1000 AS INT) END AS timescale,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 100000 + 100 AS BIGINT) END AS duration,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 3 + 1 AS INT) END AS n_trak,
-        |  CASE WHEN doc_id % 3 <> 1
-        |       THEN CAST(3 + doc_id % 5 % 4 + 1 + doc_id % 3 + 1 AS INT) END AS n_boxes,
-        |  CASE WHEN doc_id % 3 <> 1 THEN CAST(doc_id % 5 % 4 + 1 AS INT) END AS n_mdat,
-        |  CASE WHEN doc_id % 3 <> 1
-        |       THEN CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) END AS mdat_bytes_total
-        |FROM documents
-        |ORDER BY doc_id""".stripMargin,
-
-    // the WARC census recomputed ANALYTICALLY from the construction
-    // arithmetic (the q_multimodal_mp4 discipline): per doc, nr = id%4+1
-    // records split text near-evenly; per-record header bytes are the
-    // 65 fixed framing bytes (version line 10, three header names with
-    // ": " and CRLFs 36+6, blank line 2, terminator 4, per warcRecord's
-    // literals) + the type name + the record id + the decimal width of
-    // each Content-Length — never a byte parsed. Shared with
-    // q_multimodal_warc_gz: the inflated .warc.gz stream is
-    // byte-identical to the uncompressed build (stored-block identity),
-    // so ONE analytic census covers both read paths.
-    "q_multimodal_warc" -> WARC_STATS_SQL,
-
-    // per-record geometry recomputed analytically: record i's payload
-    // starts after every prior record's full size (a window sum) plus
-    // its own pre-payload framing (61 fixed bytes + type + id + the
-    // Content-Length decimal width — the 65 above minus the trailing
-    // 4-byte terminator, which follows the payload)
-    "q_multimodal_warc_records" ->
-      """WITH d AS (SELECT doc_id, doc_id % 4 + 1 AS nr,
-        |    CAST(length(text) AS BIGINT) AS l FROM documents),
-        |r AS (SELECT d.doc_id, d.nr, d.l, i.i
-        |  FROM d CROSS JOIN (SELECT unnest(range(4)) AS i) i
-        |  WHERE i.i < d.nr),
-        |per AS (SELECT doc_id, i,
-        |    l // nr + CASE WHEN i < l % nr THEN 1 ELSE 0 END AS chunk,
-        |    CASE WHEN i = 0 THEN 'warcinfo'
-        |         ELSE CASE (doc_id + i) % 3 WHEN 0 THEN 'response'
-        |              WHEN 1 THEN 'request' ELSE 'metadata' END
-        |    END AS wtype,
-        |    length('<urn:graft:' || CAST(doc_id AS VARCHAR) || '-'
-        |      || CAST(i AS VARCHAR) || '>') AS ridlen
-        |  FROM r),
-        |sized AS (SELECT doc_id, i, wtype, chunk,
-        |    61 + length(wtype) + ridlen
-        |      + length(CAST(chunk AS VARCHAR)) AS pre,
-        |    65 + length(wtype) + ridlen
-        |      + length(CAST(chunk AS VARCHAR)) + chunk AS rsize
-        |  FROM per)
-        |SELECT doc_id, CAST(i AS BIGINT) AS rec_idx, wtype,
-        |  CAST(chunk AS BIGINT) AS content_length,
-        |  CAST(coalesce(sum(rsize) OVER (PARTITION BY doc_id ORDER BY i
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + pre
-        |    AS BIGINT) AS payload_offset
-        |FROM sized ORDER BY doc_id, rec_idx""".stripMargin,
-
-    // the census monoid row: the per-record analytic arithmetic summed
-    // corpus-wide (the built corpus has no malformed files, pinned 0)
-    "q_multimodal_warc_census" ->
-      """WITH d AS (SELECT doc_id, doc_id % 4 + 1 AS nr,
-        |    CAST(length(text) AS BIGINT) AS l FROM documents),
-        |r AS (SELECT d.doc_id, d.nr, d.l, i.i
-        |  FROM d CROSS JOIN (SELECT unnest(range(4)) AS i) i
-        |  WHERE i.i < d.nr),
-        |per AS (SELECT doc_id, i,
-        |    l // nr + CASE WHEN i < l % nr THEN 1 ELSE 0 END AS chunk,
-        |    CASE WHEN i = 0 THEN 'warcinfo'
-        |         ELSE CASE (doc_id + i) % 3 WHEN 0 THEN 'response'
-        |              WHEN 1 THEN 'request' ELSE 'metadata' END
-        |    END AS wtype,
-        |    length('<urn:graft:' || CAST(doc_id AS VARCHAR) || '-'
-        |      || CAST(i AS VARCHAR) || '>') AS ridlen
-        |  FROM r)
-        |SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_files,
-        |  CAST(0 AS BIGINT) AS n_malformed,
-        |  CAST(count(*) AS BIGINT) AS n_records,
-        |  CAST(sum(CASE WHEN wtype = 'warcinfo' THEN 1 ELSE 0 END) AS BIGINT) AS n_warcinfo,
-        |  CAST(sum(CASE WHEN wtype = 'response' THEN 1 ELSE 0 END) AS BIGINT) AS n_response,
-        |  CAST(sum(CASE WHEN wtype = 'request' THEN 1 ELSE 0 END) AS BIGINT) AS n_request,
-        |  CAST(sum(CASE WHEN wtype = 'metadata' THEN 1 ELSE 0 END) AS BIGINT) AS n_metadata,
-        |  CAST(0 AS BIGINT) AS n_other,
-        |  CAST(sum(chunk) AS BIGINT) AS payload_bytes,
-        |  CAST(sum(65 + length(wtype) + ridlen
-        |    + length(CAST(chunk AS VARCHAR))) AS BIGINT) AS header_bytes,
-        |  CAST(sum(chunk) + sum(65 + length(wtype) + ridlen
-        |    + length(CAST(chunk AS VARCHAR))) AS BIGINT) AS total_bytes
-        |FROM per""".stripMargin,
-
-    // the gzip member census recomputed ANALYTICALLY from the
-    // construction arithmetic: per doc, nm = id%4+1 members split text
-    // near-evenly; member i's optional field cycles none/FNAME/FEXTRA by
-    // (id+i)%3 (9 = "m<d>-<i>.txt"+NUL / 6 = XLEN+4 extra bytes), its
-    // deflate stream is (id+i)%4+1 stored blocks at 5 framing bytes
-    // each, its trailer 8 bytes; crc_ok = n_members because the walker
-    // RECOMPUTES CRC32+ISIZE and the builder wrote matching values —
-    // never a byte parsed by the oracle
-    "q_multimodal_gzip" -> (GZIP_PER_MEMBER_CTES + """
-      |SELECT doc_id,
-      |  CAST(count(*) AS BIGINT) AS n_members,
-      |  CAST(sum(CASE WHEN flg = 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_fname,
-      |  CAST(sum(CASE WHEN flg = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_fextra,
-      |  CAST(sum(nblk) AS BIGINT) AS n_blocks,
-      |  CAST(sum(header_len) AS BIGINT) AS header_bytes,
-      |  CAST(sum(deflate_len) AS BIGINT) AS deflate_bytes,
-      |  CAST(8 * count(*) AS BIGINT) AS trailer_bytes,
-      |  CAST(sum(chunk) AS BIGINT) AS isize_total,
-      |  CAST(sum(mtime) AS BIGINT) AS mtime_sum,
-      |  CAST(count(*) AS BIGINT) AS crc_ok,
-      |  CAST(sum(header_len + deflate_len + 8) AS BIGINT) AS total_bytes
-      |FROM sized GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-
-    // per-member geometry from the same construction CTEs
-    "q_multimodal_gzip_members" -> (GZIP_PER_MEMBER_CTES + """
-      |SELECT doc_id, CAST(i AS BIGINT) AS member_idx,
-      |  CAST(flg AS BIGINT) AS flg, CAST(mtime AS BIGINT) AS mtime,
-      |  CAST(header_len AS BIGINT) AS header_len,
-      |  CAST(deflate_len AS BIGINT) AS deflate_len,
-      |  CAST(nblk AS BIGINT) AS n_blocks,
-      |  CAST(chunk AS BIGINT) AS isize,
-      |  CAST(1 AS BIGINT) AS crc_ok
-      |FROM sized ORDER BY doc_id, member_idx""".stripMargin),
-
-    // the .warc.gz path replays the UNCOMPRESSED census verbatim: the
-    // gzip layer inflates to the byte-identical stream (stored-block
-    // identity, spec'd), so the analytic WARC arithmetic is the oracle
-    // for the compressed read path too
-    "q_multimodal_warc_gz" -> WARC_STATS_SQL,
-
-    // the cdx index re-derived with no byte parsed: record geometry
-    // from the WARC construction arithmetic (the warc_records CTEs),
-    // member geometry from the gzip construction arithmetic over the
-    // warc stream's total length (near-even byte split, optional-field
-    // and block-count cycles), record -> member by the uncompressed
-    // span containment the engine's range filter applies
-    "q_multimodal_cdx" ->
-      """WITH d AS (SELECT doc_id, doc_id % 4 + 1 AS nr,
-        |    CAST(length(text) AS BIGINT) AS l FROM documents),
-        |r AS (SELECT d.doc_id, d.nr, d.l, i.i
-        |  FROM d CROSS JOIN (SELECT unnest(range(4)) AS i) i
-        |  WHERE i.i < d.nr),
-        |per AS (SELECT doc_id, i,
-        |    l // nr + CASE WHEN i < l % nr THEN 1 ELSE 0 END AS chunk,
-        |    CASE WHEN i = 0 THEN 'warcinfo'
-        |         ELSE CASE (doc_id + i) % 3 WHEN 0 THEN 'response'
-        |              WHEN 1 THEN 'request' ELSE 'metadata' END
-        |    END AS wtype,
-        |    length('<urn:graft:' || CAST(doc_id AS VARCHAR) || '-'
-        |      || CAST(i AS VARCHAR) || '>') AS ridlen
-        |  FROM r),
-        |sized AS (SELECT doc_id, i, wtype, chunk,
-        |    61 + length(wtype) + ridlen
-        |      + length(CAST(chunk AS VARCHAR)) AS pre,
-        |    65 + length(wtype) + ridlen
-        |      + length(CAST(chunk AS VARCHAR)) + chunk AS rsize
-        |  FROM per),
-        |recs AS (SELECT doc_id, CAST(i AS BIGINT) AS rec_idx, wtype,
-        |    CAST(chunk AS BIGINT) AS content_length,
-        |    CAST(coalesce(sum(rsize) OVER (PARTITION BY doc_id ORDER BY i
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) + pre
-        |      AS BIGINT) AS payload_offset
-        |  FROM sized),
-        |tot AS (SELECT doc_id, CAST(sum(rsize) AS BIGINT) AS wl
-        |  FROM sized GROUP BY 1),
-        |m AS (SELECT t.doc_id, t.wl, t.doc_id % 4 + 1 AS nm, mi.i AS member_idx
-        |  FROM tot t CROSS JOIN (SELECT unnest(range(4)) AS i) mi
-        |  WHERE mi.i < t.doc_id % 4 + 1),
-        |msized AS (SELECT doc_id, member_idx,
-        |    wl // nm + CASE WHEN member_idx < wl % nm THEN 1 ELSE 0 END AS mchunk,
-        |    10 + CASE (doc_id + member_idx) % 3 WHEN 1 THEN 9 WHEN 2 THEN 6
-        |         ELSE 0 END
-        |      + 5 * ((doc_id + member_idx) % 4 + 1) AS overhead
-        |  FROM m),
-        |mfull AS (SELECT doc_id, member_idx, mchunk,
-        |    CAST(overhead + mchunk + 8 AS BIGINT) AS member_clen,
-        |    CAST(coalesce(sum(overhead + mchunk + 8) OVER (
-        |      PARTITION BY doc_id ORDER BY member_idx
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS member_offset,
-        |    CAST(coalesce(sum(mchunk) OVER (
-        |      PARTITION BY doc_id ORDER BY member_idx
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |      AS BIGINT) AS member_ustart
-        |  FROM msized)
-        |SELECT r.doc_id, r.rec_idx, r.wtype, r.content_length,
-        |  r.payload_offset, CAST(f.member_idx AS BIGINT) AS member_idx,
-        |  f.member_offset, f.member_clen, f.member_ustart
-        |FROM recs r JOIN mfull f ON f.doc_id = r.doc_id
-        |  AND r.payload_offset >= f.member_ustart
-        |  AND r.payload_offset < f.member_ustart + f.mchunk
-        |ORDER BY r.doc_id, r.rec_idx""".stripMargin,
-
-    // the REAL-deflate path: the same analytic WARC arithmetic (the
-    // round trip is lossless), extended with the gzip certificate
-    // columns the construction determines — ONE member, a fixed 10-byte
-    // header, isize = the WARC stream's full byte length, and crc_ok =
-    // 1 because the walker recomputes CRC32/ISIZE over its own inflate
-    // output (Deflater-dependent values never reach the frame)
-    "q_multimodal_gzip_real" ->
-      """WITH d AS (SELECT doc_id, doc_id % 4 + 1 AS nr,
-        |    CAST(length(text) AS BIGINT) AS l FROM documents),
-        |r AS (SELECT d.doc_id, d.nr, d.l, i.i
-        |  FROM d CROSS JOIN (SELECT unnest(range(4)) AS i) i
-        |  WHERE i.i < d.nr),
-        |per AS (SELECT doc_id, i,
-        |    l // nr + CASE WHEN i < l % nr THEN 1 ELSE 0 END AS chunk,
-        |    CASE WHEN i = 0 THEN 'warcinfo'
-        |         ELSE CASE (doc_id + i) % 3 WHEN 0 THEN 'response'
-        |              WHEN 1 THEN 'request' ELSE 'metadata' END
-        |    END AS wtype,
-        |    length('<urn:graft:' || CAST(doc_id AS VARCHAR) || '-'
-        |      || CAST(i AS VARCHAR) || '>') AS ridlen
-        |  FROM r),
-        |agg AS (SELECT doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_records,
-        |    CAST(sum(CASE WHEN wtype = 'warcinfo' THEN 1 ELSE 0 END) AS BIGINT) AS n_warcinfo,
-        |    CAST(sum(CASE WHEN wtype = 'response' THEN 1 ELSE 0 END) AS BIGINT) AS n_response,
-        |    CAST(sum(CASE WHEN wtype = 'request' THEN 1 ELSE 0 END) AS BIGINT) AS n_request,
-        |    CAST(sum(CASE WHEN wtype = 'metadata' THEN 1 ELSE 0 END) AS BIGINT) AS n_metadata,
-        |    CAST(0 AS BIGINT) AS n_other,
-        |    CAST(sum(chunk) AS BIGINT) AS payload_bytes,
-        |    CAST(sum(65 + length(wtype) + ridlen
-        |      + length(CAST(chunk AS VARCHAR))) AS BIGINT) AS header_bytes
-        |  FROM per GROUP BY doc_id)
-        |SELECT doc_id, CAST(1 AS BIGINT) AS gz_members,
-        |  CAST(10 AS BIGINT) AS gz_header_bytes,
-        |  payload_bytes + header_bytes AS gz_isize,
-        |  CAST(1 AS BIGINT) AS gz_crc_ok,
-        |  n_records, n_warcinfo, n_response, n_request,
-        |  n_metadata, n_other, payload_bytes, header_bytes,
-        |  payload_bytes + header_bytes AS total_bytes
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    // the tar census re-derived from the construction arithmetic:
-    // member bodies are the text (BYTE length — strlen, never the char
-    // count), the 1-char label, and the json template; checksum/magic
-    // verification counts equal n_members by construction (the walker
-    // recomputes both from the bytes, certifying the builder)
-    "q_multimodal_tar" -> (TAR_PER_MEMBER_CTES + """
-        |SELECT doc_id, CAST(nm AS BIGINT) AS n_members,
-        |  CAST(sum(msize) AS BIGINT) AS body_bytes,
-        |  CAST(sum(padded - msize) AS BIGINT) AS pad_bytes,
-        |  CAST(nm AS BIGINT) AS chksum_ok,
-        |  CAST(nm AS BIGINT) AS ustar_ok,
-        |  CAST(1 AS BIGINT) AS n_txt,
-        |  CAST(CASE WHEN nm >= 2 THEN 1 ELSE 0 END AS BIGINT) AS n_cls,
-        |  CAST(CASE WHEN nm >= 3 THEN 1 ELSE 0 END AS BIGINT) AS n_json,
-        |  CAST(0 AS BIGINT) AS n_other,
-        |  CAST(sum(mtime) AS BIGINT) AS mtime_sum,
-        |  CAST(nm + sum(padded) // 512 + 2 AS BIGINT) AS n_blocks,
-        |  CAST(nm * 512 + sum(padded) + 1024 AS BIGINT) AS total_bytes
-        |FROM sized GROUP BY doc_id, nm ORDER BY doc_id""".stripMargin),
-
-    "q_multimodal_tar_members" -> (TAR_PER_MEMBER_CTES + """
-        |SELECT doc_id, CAST(i AS BIGINT) AS member_idx,
-        |  CAST(doc_id AS BIGINT) AS sample_id,
-        |  CAST(i + 1 AS BIGINT) AS ext_code,
-        |  CAST(512 * (i + 1) + COALESCE(SUM(padded) OVER (
-        |    PARTITION BY doc_id ORDER BY i
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS body_offset,
-        |  CAST(msize AS BIGINT) AS size,
-        |  CAST(mtime AS BIGINT) AS mtime,
-        |  CAST(1 AS BIGINT) AS chksum_ok
-        |FROM sized ORDER BY doc_id, member_idx""".stripMargin),
-
-    "q_multimodal_wds" -> (TAR_PER_MEMBER_CTES + """
-        |SELECT doc_id, CAST(doc_id AS BIGINT) AS sample_id,
-        |  CAST(nm AS BIGINT) AS n_fields,
-        |  CAST(1 AS BIGINT) AS has_txt,
-        |  CAST(CASE WHEN nm >= 2 THEN 1 ELSE 0 END AS BIGINT) AS has_cls,
-        |  CAST(CASE WHEN nm >= 3 THEN 1 ELSE 0 END AS BIGINT) AS has_json,
-        |  CAST(sum(msize) AS BIGINT) AS body_bytes
-        |FROM sized GROUP BY doc_id, nm ORDER BY doc_id""".stripMargin),
-
-    // zip: the same trio arithmetic with zip framing — entry bytes are
-    // 30+nlen+size (local header + name + stored data), directory
-    // entries 46+nlen, EOCD 22; DOS dtime is the builder's
-    // (doc_id·16+i) mod 2^16 (= the tar mtime mod 2^16); every
-    // verification counter equals n_entries by construction
-    "q_multimodal_zip" -> (TAR_PER_MEMBER_CTES + """,
-        |z AS (SELECT doc_id, nm, i, msize, mtime % 65536 AS dtime,
-        |    strlen(CAST(doc_id AS VARCHAR))
-        |      + CASE i WHEN 2 THEN 5 ELSE 4 END AS nlen
-        |  FROM sized)
-        |SELECT doc_id, CAST(nm AS BIGINT) AS n_entries,
-        |  CAST(nm AS BIGINT) AS n_stored,
-        |  CAST(0 AS BIGINT) AS n_deflated,
-        |  CAST(sum(msize) AS BIGINT) AS usize_total,
-        |  CAST(sum(msize) AS BIGINT) AS csize_total,
-        |  CAST(nm AS BIGINT) AS crc_ok,
-        |  CAST(nm AS BIGINT) AS cd_ok,
-        |  CAST(sum(dtime) AS BIGINT) AS dtime_sum,
-        |  CAST(1 AS BIGINT) AS n_txt,
-        |  CAST(CASE WHEN nm >= 2 THEN 1 ELSE 0 END AS BIGINT) AS n_cls,
-        |  CAST(CASE WHEN nm >= 3 THEN 1 ELSE 0 END AS BIGINT) AS n_json,
-        |  CAST(sum(30 + nlen + msize) + sum(46 + nlen) + 22 AS BIGINT)
-        |    AS total_bytes
-        |FROM z GROUP BY doc_id, nm ORDER BY doc_id""".stripMargin),
-
-    "q_multimodal_zip_entries" -> (TAR_PER_MEMBER_CTES + """,
-        |z AS (SELECT doc_id, nm, i, msize, mtime % 65536 AS dtime,
-        |    strlen(CAST(doc_id AS VARCHAR))
-        |      + CASE i WHEN 2 THEN 5 ELSE 4 END AS nlen
-        |  FROM sized)
-        |SELECT doc_id, CAST(i AS BIGINT) AS entry_idx,
-        |  CAST(doc_id AS BIGINT) AS sample_id,
-        |  CAST(i + 1 AS BIGINT) AS ext_code,
-        |  CAST(0 AS BIGINT) AS method,
-        |  CAST(COALESCE(SUM(30 + nlen + msize) OVER (
-        |    PARTITION BY doc_id ORDER BY i
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS lfh_offset,
-        |  CAST(30 + nlen + COALESCE(SUM(30 + nlen + msize) OVER (
-        |    PARTITION BY doc_id ORDER BY i
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |    AS BIGINT) AS data_offset,
-        |  CAST(msize AS BIGINT) AS csize,
-        |  CAST(msize AS BIGINT) AS usize,
-        |  CAST(dtime AS BIGINT) AS dtime,
-        |  CAST(1 AS BIGINT) AS crc_ok,
-        |  CAST(1 AS BIGINT) AS cd_ok
-        |FROM z ORDER BY doc_id, entry_idx""".stripMargin),
-
-    // the corpus-level sums of the same tar/zip construction arithmetic
-    "q_multimodal_tar_census" -> (TAR_PER_MEMBER_CTES + """
-        |SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_shards,
-        |  CAST(0 AS BIGINT) AS n_malformed,
-        |  CAST(count(*) AS BIGINT) AS n_members,
-        |  CAST(sum(msize) AS BIGINT) AS body_bytes,
-        |  CAST(sum(padded - msize) AS BIGINT) AS pad_bytes,
-        |  CAST(count(*) AS BIGINT) AS chksum_ok,
-        |  CAST(count(*) AS BIGINT) AS ustar_ok,
-        |  CAST(sum(CASE WHEN i = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_txt,
-        |  CAST(sum(CASE WHEN i = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_cls,
-        |  CAST(sum(CASE WHEN i = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_json,
-        |  CAST(0 AS BIGINT) AS n_other,
-        |  CAST(sum(mtime) AS BIGINT) AS mtime_sum,
-        |  CAST(count(*) + sum(padded) // 512
-        |    + 2 * count(DISTINCT doc_id) AS BIGINT) AS n_blocks,
-        |  CAST(512 * count(*) + sum(padded)
-        |    + 1024 * count(DISTINCT doc_id) AS BIGINT) AS total_bytes
-        |FROM sized""".stripMargin),
-
-    "q_multimodal_zip_census" -> (TAR_PER_MEMBER_CTES + """,
-        |z AS (SELECT doc_id, nm, i, msize, mtime % 65536 AS dtime,
-        |    strlen(CAST(doc_id AS VARCHAR))
-        |      + CASE i WHEN 2 THEN 5 ELSE 4 END AS nlen
-        |  FROM sized)
-        |SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_archives,
-        |  CAST(0 AS BIGINT) AS n_malformed,
-        |  CAST(count(*) AS BIGINT) AS n_entries,
-        |  CAST(count(*) AS BIGINT) AS n_stored,
-        |  CAST(0 AS BIGINT) AS n_deflated,
-        |  CAST(sum(msize) AS BIGINT) AS usize_total,
-        |  CAST(sum(msize) AS BIGINT) AS csize_total,
-        |  CAST(count(*) AS BIGINT) AS crc_ok,
-        |  CAST(count(*) AS BIGINT) AS cd_ok,
-        |  CAST(sum(dtime) AS BIGINT) AS dtime_sum,
-        |  CAST(sum(CASE WHEN i = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_txt,
-        |  CAST(sum(CASE WHEN i = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_cls,
-        |  CAST(sum(CASE WHEN i = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_json,
-        |  CAST(sum(30 + nlen + msize) + sum(46 + nlen)
-        |    + 22 * count(DISTINCT doc_id) AS BIGINT) AS total_bytes
-        |FROM z""".stripMargin),
-
-    // the dispatch census: routing is doc_id mod 4 by construction, so
-    // the per-type counts are pure arithmetic
-    "q_multimodal_sniff" ->
-      """SELECT CASE doc_id % 4 WHEN 0 THEN 'tar' WHEN 1 THEN 'zip'
-        |    WHEN 2 THEN 'gzip' ELSE 'warc' END AS container,
-        |  CAST(count(*) AS BIGINT) AS n_docs
-        |FROM documents GROUP BY 1 ORDER BY container""".stripMargin,
-
-    // the JDK-written zip: one deflated .txt entry per doc; usize is
-    // the text's BYTE length, the verification bits are the walker's
-    // recomputed certificates, dtime 0 is the pinned midnight
-    "q_multimodal_zip_real" ->
-      """SELECT doc_id, CAST(1 AS BIGINT) AS n_entries,
-        |  CAST(0 AS BIGINT) AS n_stored,
-        |  CAST(1 AS BIGINT) AS n_deflated,
-        |  CAST(strlen(text) AS BIGINT) AS usize_total,
-        |  CAST(1 AS BIGINT) AS crc_ok,
-        |  CAST(1 AS BIGINT) AS cd_ok,
-        |  CAST(0 AS BIGINT) AS dtime_sum,
-        |  CAST(1 AS BIGINT) AS n_txt
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // the .tar.gz path: the same analytic tar arithmetic (the real
-    // deflate round trip is lossless), extended with the gzip
-    // certificate columns the construction determines — ONE member,
-    // isize = the archive's full byte length, crc_ok = 1 because the
-    // walker recomputes CRC32/ISIZE over its own inflate output
-    "q_multimodal_tar_gz" -> (TAR_PER_MEMBER_CTES + """
-        |SELECT doc_id, CAST(1 AS BIGINT) AS gz_members,
-        |  CAST(nm * 512 + sum(padded) + 1024 AS BIGINT) AS gz_isize,
-        |  CAST(1 AS BIGINT) AS gz_crc_ok,
-        |  CAST(nm AS BIGINT) AS n_members,
-        |  CAST(sum(msize) AS BIGINT) AS body_bytes,
-        |  CAST(sum(padded - msize) AS BIGINT) AS pad_bytes,
-        |  CAST(nm AS BIGINT) AS chksum_ok,
-        |  CAST(nm AS BIGINT) AS ustar_ok,
-        |  CAST(1 AS BIGINT) AS n_txt,
-        |  CAST(CASE WHEN nm >= 2 THEN 1 ELSE 0 END AS BIGINT) AS n_cls,
-        |  CAST(CASE WHEN nm >= 3 THEN 1 ELSE 0 END AS BIGINT) AS n_json,
-        |  CAST(sum(mtime) AS BIGINT) AS mtime_sum,
-        |  CAST(nm + sum(padded) // 512 + 2 AS BIGINT) AS n_blocks
-        |FROM sized GROUP BY doc_id, nm ORDER BY doc_id""".stripMargin),
-
-    // same independent byte-stream recomputation as q_multimodal (both
-    // codec bodies are exactly the text bytes: the JPEG kernel range
-    // [sof+19, len-2) and the FLAC range [42, len) each cover the text
-    // and nothing else), with the container split on doc_id % 3
-    "q_multimodal_codec_features" ->
-      """WITH flat AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(string_split(text, ''), (c, i) -> {'idx': i - 1, 'v': ord(c)})) AS e
-        |  FROM documents),
-        |b AS (SELECT doc_id, e.idx AS idx, e.v AS v FROM flat),
-        |ch AS (
-        |  SELECT doc_id, idx % 3 AS c, count(*) AS n,
-        |    CAST(sum(v) AS BIGINT) AS s, CAST(sum(v * v) AS BIGINT) AS ss
-        |  FROM b GROUP BY 1, 2),
-        |chs AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN c = 0 THEN CAST(s AS DOUBLE) / n END) AS mean_b,
-        |    max(CASE WHEN c = 1 THEN CAST(s AS DOUBLE) / n END) AS mean_g,
-        |    max(CASE WHEN c = 2 THEN CAST(s AS DOUBLE) / n END) AS mean_r,
-        |    max(CASE WHEN c = 0 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_b,
-        |    max(CASE WHEN c = 1 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_g,
-        |    max(CASE WHEN c = 2 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_r
-        |  FROM ch GROUP BY doc_id),
-        |pair AS (
-        |  SELECT doc_id, idx // 2 AS k,
-        |    max(CASE WHEN idx % 2 = 0 THEN v END) AS lo,
-        |    max(CASE WHEN idx % 2 = 1 THEN v END) AS hi
-        |  FROM b GROUP BY 1, 2),
-        |smp AS (
-        |  SELECT doc_id, k,
-        |    lo + 256 * hi - CASE WHEN lo + 256 * hi >= 32768 THEN 65536 ELSE 0 END AS smpv
-        |  FROM pair WHERE hi IS NOT NULL),
-        |sgn AS (
-        |  SELECT doc_id, smpv, lag(smpv) OVER (PARTITION BY doc_id ORDER BY k) AS prev
-        |  FROM smp),
-        |wavs AS (
-        |  SELECT doc_id,
-        |    sqrt(CAST(CAST(sum(smpv * smpv) AS BIGINT) AS DOUBLE) / count(*)) AS pcm_rms,
-        |    CASE WHEN count(*) < 2 THEN 0.0
-        |         ELSE CAST(CAST(sum(CASE WHEN prev IS NOT NULL
-        |                AND ((smpv >= 0) <> (prev >= 0)) THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
-        |              / (count(*) - 1) END AS pcm_zcr
-        |  FROM sgn GROUP BY doc_id)
-        |SELECT d.doc_id AS doc_id,
-        |  (['image', 'audio', 'video'])[CAST(d.doc_id % 3 AS INT) + 1] AS media_type,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN 'flac' ELSE 'jpeg' END AS container,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN w.pcm_rms END AS pcm_rms,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN w.pcm_zcr END AS pcm_zcr,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_b END AS px_mean_b,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_g END AS px_mean_g,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_r END AS px_mean_r,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_b END AS px_std_b,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_g END AS px_std_g,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_r END AS px_std_r
-        |FROM documents d
-        |LEFT JOIN chs c ON c.doc_id = d.doc_id
-        |LEFT JOIN wavs w ON w.doc_id = d.doc_id
-        |ORDER BY doc_id""".stripMargin,
-
-    // identical byte-stream recomputation for the MP4 seam: the
-    // concatenated mdat payloads ARE the text bytes in order (the
-    // near-even split preserves the global index), so the channel and
-    // PCM math is literally the codec-features oracle with the mp4
-    // container label
-    "q_multimodal_mp4_features" ->
-      """WITH flat AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(string_split(text, ''), (c, i) -> {'idx': i - 1, 'v': ord(c)})) AS e
-        |  FROM documents),
-        |b AS (SELECT doc_id, e.idx AS idx, e.v AS v FROM flat),
-        |ch AS (
-        |  SELECT doc_id, idx % 3 AS c, count(*) AS n,
-        |    CAST(sum(v) AS BIGINT) AS s, CAST(sum(v * v) AS BIGINT) AS ss
-        |  FROM b GROUP BY 1, 2),
-        |chs AS (
-        |  SELECT doc_id,
-        |    max(CASE WHEN c = 0 THEN CAST(s AS DOUBLE) / n END) AS mean_b,
-        |    max(CASE WHEN c = 1 THEN CAST(s AS DOUBLE) / n END) AS mean_g,
-        |    max(CASE WHEN c = 2 THEN CAST(s AS DOUBLE) / n END) AS mean_r,
-        |    max(CASE WHEN c = 0 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_b,
-        |    max(CASE WHEN c = 1 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_g,
-        |    max(CASE WHEN c = 2 THEN sqrt(CAST(n * ss - s * s AS DOUBLE) / CAST(n * n AS DOUBLE)) END) AS std_r
-        |  FROM ch GROUP BY doc_id),
-        |pair AS (
-        |  SELECT doc_id, idx // 2 AS k,
-        |    max(CASE WHEN idx % 2 = 0 THEN v END) AS lo,
-        |    max(CASE WHEN idx % 2 = 1 THEN v END) AS hi
-        |  FROM b GROUP BY 1, 2),
-        |smp AS (
-        |  SELECT doc_id, k,
-        |    lo + 256 * hi - CASE WHEN lo + 256 * hi >= 32768 THEN 65536 ELSE 0 END AS smpv
-        |  FROM pair WHERE hi IS NOT NULL),
-        |sgn AS (
-        |  SELECT doc_id, smpv, lag(smpv) OVER (PARTITION BY doc_id ORDER BY k) AS prev
-        |  FROM smp),
-        |wavs AS (
-        |  SELECT doc_id,
-        |    sqrt(CAST(CAST(sum(smpv * smpv) AS BIGINT) AS DOUBLE) / count(*)) AS pcm_rms,
-        |    CASE WHEN count(*) < 2 THEN 0.0
-        |         ELSE CAST(CAST(sum(CASE WHEN prev IS NOT NULL
-        |                AND ((smpv >= 0) <> (prev >= 0)) THEN 1 ELSE 0 END) AS BIGINT) AS DOUBLE)
-        |              / (count(*) - 1) END AS pcm_zcr
-        |  FROM sgn GROUP BY doc_id)
-        |SELECT d.doc_id AS doc_id,
-        |  (['image', 'audio', 'video'])[CAST(d.doc_id % 3 AS INT) + 1] AS media_type,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN 'flac' ELSE 'mp4' END AS container,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN w.pcm_rms END AS pcm_rms,
-        |  CASE WHEN d.doc_id % 3 = 1 THEN w.pcm_zcr END AS pcm_zcr,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_b END AS px_mean_b,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_g END AS px_mean_g,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.mean_r END AS px_mean_r,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_b END AS px_std_b,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_g END AS px_std_g,
-        |  CASE WHEN d.doc_id % 3 <> 1 THEN c.std_r END AS px_std_r
-        |FROM documents d
-        |LEFT JOIN chs c ON c.doc_id = d.doc_id
-        |LEFT JOIN wavs w ON w.doc_id = d.doc_id
-        |ORDER BY doc_id""".stripMargin,
-  )
-
-  /** DuckDB side of q_asof_attribution (and its bucketed twin). */
-  /** DuckDB twin of Graph.pagerankInt over Graph.eventTransitions: the
-    * same 5 integer-exact iterations UNROLLED as chained CTEs (aggregates
-    * are illegal in a recursive term, and a fixed iteration count needs
-    * no recursion). Every expression is integer division on positives —
-    * `//`/`%` here, `DIV`/`%` in Spark — including the overflow-free
-    * per-edge split, so the frames hash-match bit-for-bit. */
-  /** Direct lift recomputation — the shared oracle for q_basket_lift
-    * (computed directly by the engine too) and q_basket_increment
-    * (engine merges an order-key split; the merge law makes them equal). */
-  private val BASKET_LIFT_SQL =
-    """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-      |pc AS (SELECT a.p AS a, b.p AS b, count(*) AS n_ab
-      |       FROM op a JOIN op b ON a.o = b.o AND a.p < b.p GROUP BY 1, 2),
-      |parts AS (SELECT p, count(*) AS n_p FROM op GROUP BY 1),
-      |tot AS (SELECT count(DISTINCT o) AS n_orders FROM op)
-      |SELECT pc.a, pc.b, pc.n_ab, pa.n_p AS n_a, pb.n_p AS n_b,
-      |  CAST(t.n_orders * pc.n_ab AS DOUBLE) / (pa.n_p * pb.n_p) AS lift
-      |FROM pc JOIN parts pa ON pa.p = pc.a JOIN parts pb ON pb.p = pc.b
-      |CROSS JOIN tot t
-      |WHERE pc.n_ab >= 2
-      |ORDER BY a, b""".stripMargin
-
-  /** The shared unrolled-iteration PageRank oracle: `edgesCtes` supplies
-    * `seq`/`pairs`/`edges` (the graph construction varies; the
-    * recurrence doesn't), `dangling` adds the per-iteration redistributed
-    * dangling-mass scalar — the same `D div n` term, computed the same
-    * way, as the engine's `redistributeDangling` path. */
-  private def pagerankSqlFor(edgesCtes: String, dangling: Boolean): String = {
-    val (scale, num, den, iters) = (1000000000000L, 85, 100, 5)
-    def iter(k: Int) = {
-      val dangJoin = if (dangling)
-        s"""
-           |  CROSS JOIN (SELECT coalesce(sum(r), CAST(0 AS BIGINT)) AS d
-           |    FROM it${k - 1} WHERE node NOT IN (SELECT src FROM outw)) ds""".stripMargin
-      else ""
-      val contribTerm = if (dangling)
-        s"($num * (coalesce(c.contrib, CAST(0 AS BIGINT)) + ds.d // nc.n)) // $den"
-      else
-        s"($num * coalesce(c.contrib, CAST(0 AS BIGINT))) // $den"
-      s"""it$k AS (
-         |  SELECT n.node,
-         |    (CAST($scale AS BIGINT) * ${den - num}) // ($den * nc.n)
-         |      + $contribTerm AS r
-         |  FROM nodes n CROSS JOIN ncount nc$dangJoin
-         |  LEFT JOIN (
-         |    SELECT e.dst AS node,
-         |      CAST(sum((r.r // o.w) * e.m + ((r.r % o.w) * e.m) // o.w) AS BIGINT) AS contrib
-         |    FROM it${k - 1} r JOIN edges e ON e.src = r.node
-         |    JOIN outw o ON o.src = e.src
-         |    GROUP BY e.dst) c ON c.node = n.node)""".stripMargin
-    }
-    s"""WITH $edgesCtes,
-       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |ncount AS (SELECT count(*) AS n FROM nodes),
-       |outw AS (SELECT src, CAST(sum(m) AS BIGINT) AS w FROM edges GROUP BY 1),
-       |it0 AS (SELECT n.node, CAST($scale AS BIGINT) // nc.n AS r
-       |  FROM nodes n CROSS JOIN ncount nc),
-       |${(1 to iters).map(iter).mkString(",\n")}
-       |SELECT node, CAST(r AS BIGINT) AS rank_q,
-       |  CAST(r AS DOUBLE) / $scale AS rank
-       |FROM it$iters ORDER BY node""".stripMargin
-  }
-
   /** Analytic oracle of the HTML extraction census — shared verbatim
     * by text_html_extract (pages built directly) and
     * q_multimodal_warc_html (pages sliced back out of the WARC by the
     * record walk): the container round-trip is lossless, so the
     * expected frame is the construction's either way. */
-  private val HTML_EXTRACT_SQL: String =
+  private[graft] val HTML_EXTRACT_SQL: String =
     """WITH w AS (SELECT doc_id, text, 10 + doc_id % 7 AS w FROM documents
         |  WHERE text IS NOT NULL),
         |e AS (SELECT doc_id, text, w,
@@ -6513,281 +200,35 @@ object SparkEntry {
         |    AS markup_ratio_ppm
         |FROM x ORDER BY doc_id""".stripMargin
 
-  /** The prefix-doubling CTE prefix shared by both substring-dedup
-    * oracles: token grain with packed keys, rank0 on single tokens,
-    * five doubling refinements to 32-token windows (the kCore
-    * unrolling pattern) — ends at `r5`. */
-  private val SUBSTR_CTES: String = {
-    val rounds = Seq(1, 2, 4, 8, 16).zipWithIndex.map { case (s, i) =>
-      s"""p${i + 1} AS (SELECT a.doc_id, a.p, a.key, a.r, b.r AS r2
-         |  FROM r$i a JOIN r$i b ON a.doc_id = b.doc_id AND b.p = a.p + $s),
-         |c${i + 1} AS (SELECT r, r2, min(key) AS nr FROM p${i + 1} GROUP BY r, r2),
-         |r${i + 1} AS (SELECT doc_id, p, key, nr AS r
-         |  FROM p${i + 1} JOIN c${i + 1} USING (r, r2))""".stripMargin
-    }.mkString(",\n")
-    """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w,
-      |    CAST(generate_subscripts(string_split(text, ' '), 1) - 1 AS BIGINT) AS p
-      |  FROM documents WHERE text IS NOT NULL),
-      |k AS (SELECT doc_id, p, doc_id * 1048576 + p AS key, w FROM tok),
-      |c0 AS (SELECT w, min(key) AS r FROM k GROUP BY w),
-      |r0 AS (SELECT k.doc_id, k.p, k.key, c0.r FROM k JOIN c0 USING (w)),
-      |""".stripMargin + rounds
-  }
-
-  /** Per-doc repeat census over the doubling ranks. */
-  private val SUBSTR_DEDUP_SQL: String = {
-    SUBSTR_CTES + """,
-      |st AS (SELECT r, CAST(count(*) AS BIGINT) AS n_occ,
-      |    CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-      |  FROM r5 GROUP BY r),
-      |j AS (SELECT a.doc_id, st.n_occ, st.n_docs FROM r5 a JOIN st USING (r)),
-      |cen AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
-      |    CAST(sum(CASE WHEN n_occ >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_repeat_windows,
-      |    CAST(sum(CASE WHEN n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-      |      AS n_crossdoc_windows
-      |  FROM j GROUP BY doc_id)
-      |SELECT d.doc_id, CAST(coalesce(c.n_windows, 0) AS BIGINT) AS n_windows,
-      |  CAST(coalesce(c.n_repeat_windows, 0) AS BIGINT) AS n_repeat_windows,
-      |  CAST(coalesce(c.n_crossdoc_windows, 0) AS BIGINT)
-      |    AS n_crossdoc_windows,
-      |  CAST(CASE WHEN coalesce(c.n_windows, 0) > 0
-      |       THEN 1000000 * c.n_repeat_windows // c.n_windows
-      |       ELSE 0 END AS BIGINT) AS repeat_ppm
-      |FROM documents d LEFT JOIN cen c USING (doc_id)
-      |ORDER BY d.doc_id""".stripMargin
-  }
-
-  /** The removal face: flagged starts cover [p, p+32); token covered
-    * iff the running max of flag ends over p' <= p exceeds p; kept
-    * reassembly md5'd in order (the lineDedup FILTER/string_agg
-    * pattern). */
-  private val SUBSTR_REMOVE_SQL: String = {
-    SUBSTR_CTES + """,
-      |st AS (SELECT r, CAST(count(*) AS BIGINT) AS n_occ FROM r5 GROUP BY r),
-      |fl AS (SELECT a.doc_id, a.p, a.p + 32 AS flag_end
-      |  FROM r5 a JOIN st USING (r) WHERE st.n_occ >= 2),
-      |cv AS (SELECT k.doc_id, k.p, k.w,
-      |    max(fl.flag_end) OVER (PARTITION BY k.doc_id ORDER BY k.p
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cov_end
-      |  FROM k LEFT JOIN fl ON fl.doc_id = k.doc_id AND fl.p = k.p),
-      |m AS (SELECT doc_id, p, w,
-      |    CASE WHEN cov_end IS NOT NULL AND cov_end > p THEN 1 ELSE 0 END
-      |      AS covered
-      |  FROM cv)
-      |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-      |  CAST(sum(covered) AS BIGINT) AS n_removed,
-      |  md5(coalesce(string_agg(w, ' ' ORDER BY p)
-      |        FILTER (WHERE covered = 0), '')) AS kept_md5,
-      |  1000000 * CAST(sum(covered) AS BIGINT) // count(*) AS removed_ppm
-      |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** Shared CTE chain for the URL-hygiene family: rebuild the
-    * deterministic doc URL (`u`), then extract host → registered
-    * domain from the STRING (`h`, `d`) the way the engine does. */
-  private val DOC_URL_CTES: String =
-    """u AS (SELECT doc_id, source, n_chars,
-      |    'https://' || CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END ||
-      |    source || '-' || CAST(doc_id % 100 AS VARCHAR) || '.' ||
-      |    ['com', 'org', 'net', 'io', 'edu'][CAST(doc_id % 5 AS INT) + 1] ||
-      |    '/doc/' || CAST(doc_id AS VARCHAR) AS url
-      |  FROM documents),
-      |h AS (SELECT doc_id, source, n_chars,
-      |    string_split(string_split(url, '://')[2], '/')[1] AS host FROM u),
-      |d AS (SELECT doc_id, source, n_chars,
-      |    CASE WHEN host LIKE 'www.%' THEN substr(host, 5) ELSE host END AS domain
-      |  FROM h)""".stripMargin
-
-  /** Shared CTE chain for the hybrid-retrieval family: BM25 lexical
-    * ranks @10 (`lex`), brute-cosine dense ranks @10 (`dense`), their
-    * floor-scaled RRF fusion (`fused`) and the fused rank frame (`rr`).
-    * sim_hybrid_topk selects the fused top-5 verbatim; sim_mrr_audit
-    * appends the truth/first-hit CTEs on the same chain. */
-  private val HYBRID_RANK_CTES: String =
-    """tf AS (SELECT doc_id, w, count(*) AS tf
-      |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
-      |        FROM documents) GROUP BY 1, 2),
-      |lens AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY 1),
-      |stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-      |    CAST(sum(dl) AS BIGINT) AS n_tokens FROM lens),
-      |dfreq AS (SELECT w, count(*) AS df FROM tf GROUP BY 1
-      |  HAVING count(*) <= 1000),
-      |q AS (SELECT doc_id AS query_id, w FROM tf WHERE doc_id < 5),
-      |sc AS (SELECT q.query_id, t.doc_id,
-      |    CAST(round(ln((CAST(s.n_docs AS DOUBLE) - CAST(d.df AS DOUBLE) + 0.5)
-      |        / (CAST(d.df AS DOUBLE) + 0.5) + 1.0)
-      |      * (CAST(t.tf AS DOUBLE) * 2.2)
-      |      / (CAST(t.tf AS DOUBLE) + 1.2 * (0.25 + 0.75
-      |        * CAST(l.dl AS DOUBLE)
-      |        / (CAST(s.n_tokens AS DOUBLE) / CAST(s.n_docs AS DOUBLE))))
-      |      * 1000000) AS BIGINT) AS qs
-      |  FROM q JOIN tf t ON t.w = q.w AND t.doc_id <> q.query_id
-      |  JOIN dfreq d ON d.w = q.w
-      |  JOIN lens l ON l.doc_id = t.doc_id
-      |  CROSS JOIN stats s),
-      |agg AS (SELECT query_id, doc_id, CAST(sum(qs) AS BIGINT) AS score_q
-      |  FROM sc GROUP BY 1, 2),
-      |lex AS (SELECT query_id, neighbor_id, lex_rank FROM (
-      |  SELECT query_id, doc_id AS neighbor_id,
-      |    CAST(row_number() OVER (PARTITION BY query_id
-      |      ORDER BY score_q DESC, doc_id) AS BIGINT) AS lex_rank FROM agg)
-      |  WHERE lex_rank <= 10),
-      |dense AS (SELECT query_id, neighbor_id, dense_rank FROM (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |    CAST(row_number() OVER (PARTITION BY a.vec_id
-      |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-      |        CAST(b.embedding AS DOUBLE[])) DESC, b.vec_id) AS BIGINT)
-      |      AS dense_rank
-      |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-      |  WHERE a.vec_id < 5)
-      |  WHERE dense_rank <= 10),
-      |fused AS (SELECT coalesce(l.query_id, d.query_id) AS query_id,
-      |    coalesce(l.neighbor_id, d.neighbor_id) AS neighbor_id,
-      |    l.lex_rank, d.dense_rank,
-      |    CAST(coalesce(1000000 // (60 + l.lex_rank), 0)
-      |       + coalesce(1000000 // (60 + d.dense_rank), 0) AS BIGINT) AS rrf
-      |  FROM lex l FULL OUTER JOIN dense d
-      |    ON l.query_id = d.query_id AND l.neighbor_id = d.neighbor_id),
-      |rr AS (SELECT query_id, neighbor_id, lex_rank, dense_rank, rrf,
-      |    CAST(row_number() OVER (PARTITION BY query_id
-      |      ORDER BY rrf DESC, neighbor_id) AS BIGINT) AS rank FROM fused)""".stripMargin
-
-  /** DuckDB twin of Graph.kCore over Graph.coOrderedParts: the same 8
-    * synchronous h-operator rounds unrolled as chained CTEs (the LPA
-    * pattern — fixed iteration count, aggregates illegal in a recursive
-    * term). The h-index subquery is tie-order-invariant, so the
-    * row_number tie rule carries no semantics on either engine. */
-  private val KCORE_SQL: String = {
-    def iter(k: Int) =
-      s"""c$k AS (
-         |  SELECT p.node, CAST(coalesce(h.h, 0) AS BIGINT) AS c
-         |  FROM c${k - 1} p LEFT JOIN (
-         |    SELECT node, max(rn) AS h FROM (
-         |      SELECT b.node, l.c,
-         |        CAST(row_number() OVER (PARTITION BY b.node
-         |          ORDER BY l.c DESC, b.nbr) AS BIGINT) AS rn
-         |      FROM nbrs b JOIN c${k - 1} l ON l.node = b.nbr) v
-         |    WHERE c >= rn GROUP BY node) h ON h.node = p.node)""".stripMargin
-    s"""WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-       |e AS (SELECT DISTINCT a.p AS a, b.p AS b
-       |      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
-       |nbrs AS MATERIALIZED (SELECT a AS node, b AS nbr FROM e
-       |  UNION ALL SELECT b, a FROM e),
-       |c0 AS MATERIALIZED (SELECT node, CAST(count(*) AS BIGINT) AS c
-       |  FROM nbrs GROUP BY 1),
-       |${(1 to 8).map(iter).mkString(",\n")}
-       |SELECT c0.node AS node, c0.c AS degree, c8.c AS core
-       |FROM c0 JOIN c8 USING (node) ORDER BY node""".stripMargin
-  }
-
-  /** DuckDB twin of Graph.labelPropagation over Graph.eventTransitions:
-    * the same 5 synchronous min-tie rounds unrolled as chained CTEs (the
-    * pagerank pattern — fixed iteration count, aggregates illegal in a
-    * recursive term). nbrs/nodes/fin are MATERIALIZED: each is
-    * referenced by every round or twice at the end. */
-  private val LPA_SQL: String = {
-    def iter(k: Int) =
-      s"""l$k AS (
-         |  SELECT n.node, coalesce(w.community, n.node) AS community
-         |  FROM nodes n LEFT JOIN (
-         |    SELECT node, community FROM (
-         |      SELECT v.node, v.community,
-         |        row_number() OVER (PARTITION BY v.node
-         |          ORDER BY v.vw DESC, v.community) AS rn
-         |      FROM (SELECT b.node, l.community, CAST(sum(b.w) AS BIGINT) AS vw
-         |            FROM nbrs b JOIN l${k - 1} l ON l.node = b.nbr
-         |            GROUP BY 1, 2) v)
-         |    WHERE rn = 1) w ON w.node = n.node)""".stripMargin
-    s"""WITH seq AS (SELECT user_id, event_type, ts, event_id FROM events
-       |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL),
-       |pairs AS (SELECT event_type AS src,
-       |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-       |  FROM seq),
-       |edges AS (SELECT src, dst, count(*) AS m FROM pairs WHERE dst IS NOT NULL
-       |  GROUP BY 1, 2),
-       |und AS (SELECT src, dst, m FROM edges WHERE src <> dst),
-       |nbrs AS MATERIALIZED (SELECT node, nbr, CAST(sum(m) AS BIGINT) AS w FROM (
-       |  SELECT src AS node, dst AS nbr, m FROM und
-       |  UNION ALL SELECT dst AS node, src AS nbr, m FROM und) GROUP BY 1, 2),
-       |nodes AS MATERIALIZED (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-       |l0 AS (SELECT node, node AS community FROM nodes),
-       |${(1 to 5).map(iter).mkString(",\n")},
-       |fin AS MATERIALIZED (SELECT node, community FROM l5)
-       |SELECT f.node, f.community, c.n_members
-       |FROM fin f JOIN (SELECT community, CAST(count(*) AS BIGINT) AS n_members
-       |  FROM fin GROUP BY 1) c USING (community)
-       |ORDER BY f.node""".stripMargin
-  }
-
-  private val PAGERANK_SQL: String = pagerankSqlFor(
-    """seq AS (SELECT user_id, event_type, ts, event_id FROM events
-      |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL),
-      |pairs AS (SELECT event_type AS src,
-      |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-      |  FROM seq),
-      |edges AS (SELECT src, dst, count(*) AS m FROM pairs WHERE dst IS NOT NULL
-      |  GROUP BY 1, 2)""".stripMargin, dangling = false)
-
-  /** Event-chain graph (node = event_id, per-user consecutive edges,
-    * weight 1): every user's terminal event is a certified dangling sink,
-    * so this exercises the redistribution path on every iteration. */
-  private val PAGERANK_DANGLING_SQL: String = pagerankSqlFor(
-    """seq AS (SELECT user_id, event_id, ts FROM events
-      |  WHERE user_id IS NOT NULL AND event_type IS NOT NULL AND ts IS NOT NULL),
-      |pairs AS (SELECT event_id AS src,
-      |    lead(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-      |  FROM seq),
-      |edges AS (SELECT src, dst, CAST(1 AS BIGINT) AS m FROM pairs
-      |  WHERE dst IS NOT NULL)""".stripMargin, dangling = true)
-
-  private val ASOF_ATTRIBUTION_SQL =
-    """WITH p AS (SELECT event_id, user_id, ts, epoch_us(ts) AS ts_us, value
-      |           FROM events WHERE event_type = 'purchase'),
-      |     v AS (SELECT user_id, ts, epoch_us(ts) AS ts_us,
-      |             max(event_id) AS event_id, arg_max(value, event_id) AS value
-      |           FROM events WHERE event_type = 'view' GROUP BY 1, 2, 3)
-      |SELECT p.event_id AS event_id, p.user_id AS user_id,
-      |  strftime(p.ts, '%Y-%m-%d %H:%M:%S.%f') AS purchase_ts,
-      |  p.value AS purchase_value,
-      |  v.event_id AS view_event_id,
-      |  v.value AS view_value,
-      |  p.ts_us - v.ts_us AS lag_us
-      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
-      |ORDER BY event_id""".stripMargin
-
-  /** Exact top-k cosine (DuckDB side of sim_topk_brute, and of
-    * sim_topk_ivf_full — full-probe IVF reduces to the same scan). */
-  /** Brute-force top-5 over the SQL-reconstructed planted-cluster corpus —
-    * the shared certificate oracle for sim_topk_ivf_clustered,
-    * sim_topk_pq_planted, and sim_topk_ivfpq_planted. */
-  private val PLANTED_TOPK_SQL =
-    """WITH base AS (
-      |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]), x -> x) AS v
-      |  FROM embeddings),
-      |members AS (
-      |  SELECT CASE WHEN j = 0 THEN s.vec_id
-      |              ELSE 1000 + s.vec_id * 6 + j END AS vec_id,
-      |         list_transform(s.v, x -> x + 0.002 * j) AS v
-      |  FROM (SELECT vec_id, v FROM base WHERE vec_id < 8) s
-      |  CROSS JOIN (SELECT unnest(range(6)) AS j) js),
-      |bg AS (SELECT vec_id + 1000000 AS vec_id, v FROM base WHERE vec_id >= 8),
-      |corpus AS (SELECT vec_id, v FROM members UNION ALL SELECT vec_id, v FROM bg)
-      |SELECT query_id, rank, neighbor_id, cosine FROM (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |    list_cosine_similarity(a.v, b.v) AS cosine,
-      |    row_number() OVER (PARTITION BY a.vec_id
-      |      ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.vec_id) AS rank
-      |  FROM corpus a JOIN corpus b ON a.vec_id <> b.vec_id
-      |  WHERE a.vec_id < 8)
-      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+  /** Over a word-shingle frame `sh` (doc_id, s): `losers` = the later doc
+    * of every pair at shingle Jaccard >= 0.8, `qual` = the text_quality
+    * score per doc. Shared by the curation and train-ready oracles. */
+  private[graft] val LOSERS_QUALITY_CTES: String =
+    """sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+      |prs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
+      |        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
+      |losers AS (
+      |  SELECT DISTINCT id2 AS doc_id FROM prs
+      |  JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2
+      |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
+      |qual AS (
+      |  SELECT doc_id, lang,
+      |    ttr * 0.4 + stopword_ratio * 0.3 +
+      |      CASE WHEN n_tokens >= 40 THEN 0.3 ELSE CAST(n_tokens AS DOUBLE) / 40.0 * 0.3 END AS quality_score
+      |  FROM (
+      |    SELECT doc_id, lang,
+      |      len(string_split(text, ' ')) AS n_tokens,
+      |      CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')) AS ttr,
+      |      CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the', 'a'))) AS DOUBLE)
+      |        / len(string_split(text, ' ')) AS stopword_ratio
+      |    FROM documents))""".stripMargin
 
   /** The full train-ready chain (dedup losers, quality floor,
     * repetition cap, decontamination, split) shared by the
     * per-language census and the per-source token budget — the CTE
     * chain ends at the `kept` doc set, each consumer appends its own
     * final select (and extra CTEs via a leading comma). */
-  private val TRAIN_READY_CTES: String =
+  private[graft] val TRAIN_READY_CTES: String =
     """WITH w AS (SELECT doc_id, lang, string_split(text, ' ') AS ws,
         |    CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) <= 'e5'
         |         THEN 0 ELSE 1 END AS is_eval
@@ -6796,24 +237,7 @@ object SparkEntry {
         |        unnest(range(1, greatest(len(ws) - 1, 2))) AS i FROM w),
         |sh AS (SELECT DISTINCT doc_id, is_eval,
         |       array_to_string(list_slice(ws, i, i + 2), ' ') AS s FROM idx),
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-        |prs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-        |        FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT id2 AS doc_id FROM prs
-        |  JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2
-        |  WHERE CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) >= 0.8),
-        |qual AS (
-        |  SELECT doc_id, lang,
-        |    ttr * 0.4 + stopword_ratio * 0.3 +
-        |      CASE WHEN n_tokens >= 40 THEN 0.3 ELSE CAST(n_tokens AS DOUBLE) / 40.0 * 0.3 END AS quality_score
-        |  FROM (
-        |    SELECT doc_id, lang,
-        |      len(string_split(text, ' ')) AS n_tokens,
-        |      CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) / len(string_split(text, ' ')) AS ttr,
-        |      CAST(len(list_filter(string_split(text, ' '), x -> x IN ('the', 'a'))) AS DOUBLE)
-        |        / len(string_split(text, ' ')) AS stopword_ratio
-        |    FROM documents)),
+        |""".stripMargin + LOSERS_QUALITY_CTES + """,
         |bi AS (SELECT doc_id, ws[i] || ' ' || ws[i+1] AS b
         |       FROM (SELECT doc_id, ws, unnest(range(1, len(ws))) AS i FROM w)),
         |bc AS (SELECT doc_id, b, count(*) AS c FROM bi GROUP BY 1, 2),
@@ -6846,8 +270,9 @@ object SparkEntry {
     * replace). MATERIALIZED is load-bearing: p_r and w_r both reference
     * w_{r-1}, so inlined CTEs would double the plan per round — 2^16
     * scans of `documents` (observed as an fd-exhaustion failure). */
-  private val BPE_R = 16
-  private val BPE_TRAIN_CTES: String = {
+  private[graft] val BPE_R = 16
+
+  private[graft] val BPE_TRAIN_CTES: String = {
     val sb = new StringBuilder
     sb ++= """w0 AS MATERIALIZED (
       |  SELECT ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS seq,
@@ -6874,14 +299,15 @@ object SparkEntry {
     * through b1..bR in rank order. LEFT JOIN ON true + chr(1) guards
     * keep exhausted rounds (empty b_r) from annihilating the frame the
     * way a bare cross join would. */
-  private val BPE_REPL: String =
+  private[graft] val BPE_REPL: String =
     (1 to BPE_R).foldLeft("seq0") { (e, r) =>
       s"replace($e, coalesce(' '||b$r.t1||'  '||b$r.t2||' ', chr(1)), coalesce(' '||b$r.t1||b$r.t2||' ', chr(1)))"
     }
-  private val BPE_JOINS: String =
+
+  private[graft] val BPE_JOINS: String =
     (1 to BPE_R).map(r => s" LEFT JOIN b$r ON true").mkString
 
-  private val BPE_APPLY_CTES: String =
+  private[graft] val BPE_APPLY_CTES: String =
     s""",
       |dw AS (SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents),
       |wt AS (SELECT doc_id, word,
@@ -6892,395 +318,13 @@ object SparkEntry {
       |    CAST(len(string_split(trim($BPE_REPL), '  ')) AS BIGINT)) AS ntok
       |  FROM wt$BPE_JOINS)""".stripMargin
 
-  /** Segmentation twin: per-word replay reassembled in POSITION order
-    * (the list_transform index lambda), vocabulary words normalized to
-    * single-space token joins, OOV words verbatim (empty → the U+0001
-    * sentinel, outside the input alphabet — never conflated with a
-    * genuine token). */
-  private val BPE_SEGMENTS_SQL: String =
-    "WITH " + BPE_TRAIN_CTES + s""",
-      |dw AS (SELECT doc_id, e.i AS i, e.w AS word
-      |  FROM (SELECT doc_id,
-      |          unnest(list_transform(string_split(text, ' '), (w, i) -> {'i': i, 'w': w})) AS e
-      |        FROM documents)),
-      |wt AS (SELECT doc_id, i, word,
-      |    CASE WHEN word ~ '^[a-z]+$$' THEN NULL
-      |         WHEN length(word) = 0 THEN chr(1) ELSE word END AS fixed,
-      |    ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS seq0
-      |  FROM dw),
-      |applied AS (SELECT doc_id, i,
-      |    coalesce(fixed, regexp_replace(trim($BPE_REPL), ' +', ' ', 'g')) AS toks
-      |  FROM wt$BPE_JOINS)
-      |SELECT doc_id, string_agg(toks, ' ' ORDER BY i) AS bpe_text,
-      |  CAST(len(string_split(string_agg(toks, ' ' ORDER BY i), ' ')) AS BIGINT) AS n_bpe_tokens
-      |FROM applied GROUP BY 1 ORDER BY doc_id""".stripMargin
-
-  private val BPE_VOCAB_SQL: String =
-    "WITH " + BPE_TRAIN_CTES + ",\nmerges AS (" +
-      (1 to BPE_R).map(r =>
-        s"SELECT rank, t1 AS left_tok, t2 AS right_tok, t1 || t2 AS merged, c AS pair_count FROM b$r")
-        .mkString(" UNION ALL ") +
-      ")\nSELECT * FROM merges ORDER BY rank"
-
-  private val BPE_TOKENS_SQL: String =
-    "WITH " + BPE_TRAIN_CTES + BPE_APPLY_CTES + """
-      |SELECT doc_id, CAST(sum(ntok) AS BIGINT) AS n_bpe_tokens,
-      |  CAST(count(*) AS BIGINT) AS n_ws_tokens
-      |FROM applied GROUP BY 1 ORDER BY doc_id""".stripMargin
-
-  /** DuckDB twin of Similarity.principalDirection: the SAME exact Gram
-    * sketch (one integer-summed pass over the milli-quantized corpus)
-    * and the same 8 driver rounds unrolled as CTEs over that d×d
-    * relation — every cross-term sum is integer (order-free) and every
-    * float step a single correctly-rounded scalar op, so each loading
-    * hash-matches bit-for-bit. */
-  private val PCA_K = 8
-  /** The shared one-scan Gram CTEs: per-element milli-longs, exact
-    * HUGEINT-safe pair sums for i ≤ j (1-based, DuckDB list indexing),
-    * mirrored to the full symmetric matrix the rounds multiply by. */
-  private val PCA_GRAM_CTES: String = """qr AS (SELECT vec_id, list_transform(x, xe -> CAST(floor(1000.0 * xe) AS BIGINT)) AS q FROM e),
-    |qx AS MATERIALIZED (SELECT vec_id, u.pr.i AS i, u.pr.e AS e
-    |  FROM (SELECT vec_id, unnest(list_transform(q, (e, i) -> {'i': i, 'e': e})) AS pr FROM qr) u),
-    |gram AS MATERIALIZED (SELECT a.i AS i, b.i AS j, CAST(sum(a.e * b.e) AS BIGINT) AS g
-    |  FROM qx a JOIN qx b ON a.vec_id = b.vec_id AND a.i <= b.i GROUP BY 1, 2),
-    |gramfull AS MATERIALIZED (SELECT i, j, g FROM gram UNION ALL SELECT j AS i, i AS j, g FROM gram WHERE i < j),
-    |dims AS MATERIALIZED (SELECT DISTINCT i AS j FROM gram),
-    |dd AS (SELECT CAST(count(*) AS DOUBLE) AS d FROM dims)""".stripMargin
-  /** One unrolled Gram-power block, CTE names prefixed so blocks chain;
-    * `priors` are the earlier components' quantized-axis CTEs the
-    * iterate re-orthogonalizes against each round (the driver's
-    * one-sided deflation, float part per-element only). */
-  private def pcaIterCtes(pfx: String, priors: Seq[String]): String = {
-    val sb = new StringBuilder
-    sb ++= s"${pfx}v0q AS (SELECT j, CAST(floor(1000000.0 / sqrt(dd.d)) AS BIGINT) AS vq FROM dims, dd)"
-    for (r <- 1 to PCA_K) {
-      val p = r - 1
-      sb ++= s""",
-        |${pfx}ya$r AS MATERIALIZED (SELECT g.j AS j, SUM(CAST(g.g AS HUGEINT) * v.vq) AS y
-        |  FROM gramfull g JOIN ${pfx}v${p}q v ON g.i = v.j GROUP BY 1)""".stripMargin
-      var prev = s"${pfx}ya$r"
-      priors.zipWithIndex.foreach { case (u, pi) =>
-        sb ++= s""",
-          |${pfx}dp${r}_$pi AS (SELECT SUM(CAST(u.vq AS HUGEINT) * y.y) AS dp FROM $u u JOIN $prev y ON u.j = y.j),
-          |${pfx}yb${r}_$pi AS MATERIALIZED (SELECT y.j AS j,
-          |    y.y - CAST(floor(CAST(d.dp AS DOUBLE) / 1000000000000.0 * CAST(u.vq AS DOUBLE)) AS HUGEINT) AS y
-          |  FROM $prev y JOIN $u u ON y.j = u.j, ${pfx}dp${r}_$pi d)""".stripMargin
-        prev = s"${pfx}yb${r}_$pi"
-      }
-      sb ++= s""",
-        |${pfx}n$r AS (SELECT sqrt(CAST(SUM(y * y) AS DOUBLE)) AS norm FROM $prev),
-        |${pfx}v$r AS MATERIALIZED (SELECT j, CAST(y AS DOUBLE) / n.norm AS v FROM $prev y, ${pfx}n$r n),
-        |${pfx}v${r}q AS (SELECT j, CAST(floor(1000000.0 * v) AS BIGINT) AS vq FROM ${pfx}v$r)""".stripMargin
-    }
-    sb.toString
-  }
-  private val PCA_CTES: String =
-    "WITH e AS MATERIALIZED (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS x FROM embeddings),\n" +
-      PCA_GRAM_CTES + ",\n" + pcaIterCtes("", Nil) + s""",
-    |axis1 AS (SELECT list(v ORDER BY j) AS v FROM v$PCA_K)""".stripMargin
-
-  private val PCA_SQL: String = PCA_CTES + s"""
-    |SELECT v.j - 1 AS dim, v.v AS loading, n.norm / 1000000000000.0 AS lambda
-    |FROM v$PCA_K v, n$PCA_K n ORDER BY dim""".stripMargin
-
-  /** The projection consumer: each vector's kernel dot with the final
-    * axis — scores are per-row doubles, oracle-exact. */
-  private val PCA_SCORES_SQL: String = PCA_CTES + s"""
-    |SELECT e.vec_id, list_inner_product(e.x, a.v) AS score
-    |FROM e, axis1 a ORDER BY e.vec_id""".stripMargin
-
-  /** Rank-2 twin: component 2 runs the SAME Gram rounds with the
-    * component-1 quantized axis as deflation prior — zero extra corpus
-    * passes, exactly the driver's arithmetic. */
-  private val PCA2_CTES: String = PCA_CTES + ",\n" +
-    pcaIterCtes("c2", Seq(s"v${PCA_K}q")) + s""",
-    |axis2 AS (SELECT list(v ORDER BY j) AS v FROM c2v$PCA_K)""".stripMargin
-
-  private val PCA2_SQL: String = PCA2_CTES + s"""
-    |SELECT CAST(1 AS INT) AS component, v.j - 1 AS dim, v.v AS loading,
-    |  n.norm / 1000000000000.0 AS lambda
-    |FROM v$PCA_K v, n$PCA_K n
-    |UNION ALL
-    |SELECT CAST(2 AS INT), v.j - 1, v.v, n.norm / 1000000000000.0
-    |FROM c2v$PCA_K v, c2n$PCA_K n
-    |ORDER BY component, dim""".stripMargin
-
-  /** The 2-D map: c1 on the corpus frame, c2 on the per-row RESIDUAL
-    * (x minus the axis-1 coordinate) — the apply-side convention the
-    * engine's principalCoords uses. */
-  private val PCA_COORDS_SQL: String = PCA2_CTES + s""",
-    |e2 AS MATERIALIZED (SELECT q2.vec_id, list_transform(q2.x, (xe, i) -> xe - q2.s * q2.v[i]) AS x
-    |  FROM (SELECT e.vec_id, e.x, a.v, list_inner_product(e.x, a.v) AS s FROM e, axis1 a) q2)
-    |SELECT e.vec_id, list_inner_product(e.x, a.v) AS c1,
-    |  list_inner_product(e2.x, b.v) AS c2
-    |FROM e JOIN e2 USING (vec_id), axis1 a, axis2 b
-    |ORDER BY e.vec_id""".stripMargin
-
-  /** The drift screen: per-label exact median/MAD of the micro-quantized
-    * axis coordinate (the q_value_mad rank selection) and the k·MAD
-    * outlier count. */
-  private val PCA_OUTLIERS_SQL: String = PCA_CTES + s""",
-    |sq AS (SELECT e.label,
-    |    CAST(floor(1000000.0 * list_inner_product(e.x, a.v)) AS BIGINT) AS qv
-    |  FROM e, axis1 a WHERE e.label IS NOT NULL),
-    |sr AS (SELECT label, qv,
-    |    row_number() OVER (PARTITION BY label ORDER BY qv) AS rn,
-    |    count(*) OVER (PARTITION BY label) AS n FROM sq),
-    |smed AS (SELECT label, qv AS med_q FROM sr WHERE rn = (n + 1) // 2),
-    |sd AS (SELECT sq.label, sq.qv, smed.med_q, abs(sq.qv - smed.med_q) AS dev
-    |       FROM sq JOIN smed USING (label)),
-    |srd AS (SELECT label, dev,
-    |    row_number() OVER (PARTITION BY label ORDER BY dev) AS rn,
-    |    count(*) OVER (PARTITION BY label) AS n FROM sd),
-    |smad AS (SELECT label, dev AS mad_q FROM srd WHERE rn = (n + 1) // 2)
-    |SELECT sd.label, count(*) AS n, max(sd.med_q) AS med_q,
-    |  max(smad.mad_q) AS mad_q,
-    |  CAST(sum(CASE WHEN sd.dev > 3 * smad.mad_q THEN 1 ELSE 0 END) AS BIGINT) AS n_out
-    |FROM sd JOIN smad USING (label)
-    |GROUP BY sd.label ORDER BY sd.label""".stripMargin
-
   /** DuckDB twin of Similarity.kCenterSelect: the same 8 greedy rounds
     * unrolled as chained CTEs (seed = min vec_id; per round, coverage
     * mc = max cosine to the selected set, pick = argmin (mc, vec_id)).
     * Generated, not hand-written, so k changes in ONE place — and the
-    * CTE chain is shared with the assignment oracle below. */
-  /** DuckDB twin of the Ulm hard-EM trainer: seed substring counts over
-    * the capped word frame, micro-nat costs, and per round the Viterbi
-    * DP unrolled one CTE per end position (≤4 piece-length branches,
-    * per-word (cost, seg) argmin), recount, re-score. Generated, so the
-    * round count and bounds live in ONE place with the engine's. */
-  private def ulmCtes(rounds: Int): String = {
-    val L = graft.ops.Ulm.maxWordLen
-    val P = graft.ops.Ulm.maxPieceLen
-    val V = graft.ops.Ulm.vocabSize
-    val W = graft.ops.Ulm.wordLimit
-    val sb = new StringBuilder
-    sb ++=
-      s"""WITH toks AS MATERIALIZED (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-         |docsw AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS n FROM toks
-         |  WHERE regexp_matches(word, '^[a-z]+$$') AND length(word) <= $L GROUP BY 1),
-         |words AS MATERIALIZED (SELECT word, n FROM (SELECT word, n,
-         |    row_number() OVER (ORDER BY n DESC, word) AS rn FROM docsw)
-         |  WHERE rn <= $W),
-         |subs AS MATERIALIZED (SELECT substr(w.word, CAST(i.range AS INT), CAST(k.range AS INT)) AS piece, w.n
-         |  FROM words w, range(1, ${L + 1}) i, range(1, ${P + 1}) k
-         |  WHERE i.range + k.range - 1 <= length(w.word)),
-         |subcnt AS MATERIALIZED (SELECT piece, CAST(sum(n) AS BIGINT) AS cnt FROM subs GROUP BY 1),
-         |cand AS MATERIALIZED (SELECT piece, cnt FROM (SELECT piece, cnt,
-         |    row_number() OVER (ORDER BY cnt DESC, piece) AS rn FROM subcnt)
-         |  WHERE rn <= $V
-         |  UNION SELECT piece, cnt FROM subcnt WHERE length(piece) = 1),
-         |vr AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS v FROM cand),
-         |tot0 AS MATERIALIZED (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM cand),
-         |c0 AS MATERIALIZED (SELECT c.piece,
-         |    CAST(-round(ln(CAST(c.cnt + 1 AS DOUBLE) / CAST(t.total + v.v AS DOUBLE))
-         |      * 1000000.0) AS BIGINT) AS qcost
-         |  FROM cand c CROSS JOIN tot0 t CROSS JOIN vr v)""".stripMargin
-    for (r <- 1 to rounds) {
-      sb ++= s""",
-        |b${r}_0 AS MATERIALIZED (SELECT word, n, CAST(0 AS BIGINT) AS cost, '' AS seg FROM words)""".stripMargin
-      for (j <- 1 to L) {
-        val branches = (1 to P).filter(_ <= j).map { k =>
-          s"""SELECT p.word, p.n, p.cost + c.qcost AS cost,
-             |      p.seg || ' ' || c.piece AS seg
-             |    FROM b${r}_${j - k} p JOIN c${r - 1} c
-             |      ON c.piece = substr(p.word, ${j - k + 1}, $k)
-             |    WHERE length(p.word) >= $j""".stripMargin
-        }.mkString("\n    UNION ALL\n    ")
-        sb ++= s""",
-          |b${r}_$j AS MATERIALIZED (SELECT word, n, cost, seg FROM (
-          |  SELECT word, n, cost, seg,
-          |    row_number() OVER (PARTITION BY word ORDER BY cost, seg) AS rn
-          |  FROM ($branches)) WHERE rn = 1)""".stripMargin
-      }
-      val done = (1 to L)
-        .map(j => s"SELECT word, n, seg FROM b${r}_$j WHERE length(word) = $j")
-        .mkString("\n  UNION ALL ")
-      sb ++= s""",
-        |seg$r AS MATERIALIZED (SELECT word, n, ltrim(seg) AS seg FROM (
-        |  $done)),
-        |cnt$r AS MATERIALIZED (SELECT d.piece, CAST(COALESCE(x.c, 0) AS BIGINT) AS cnt
-        |  FROM cand d LEFT JOIN (SELECT piece, CAST(sum(n) AS BIGINT) AS c
-        |    FROM (SELECT n, unnest(string_split(seg, ' ')) AS piece FROM seg$r)
-        |    GROUP BY 1) x ON d.piece = x.piece),
-        |tot$r AS MATERIALIZED (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM cnt$r),
-        |c$r AS MATERIALIZED (SELECT c.piece, c.cnt,
-        |    CAST(-round(ln(CAST(c.cnt + 1 AS DOUBLE) / CAST(t.total + v.v AS DOUBLE))
-        |      * 1000000.0) AS BIGINT) AS qcost
-        |  FROM cnt$r c CROSS JOIN tot$r t CROSS JOIN vr v)""".stripMargin
-    }
-    sb.toString
-  }
-
-  private val ULM_ROUNDS = 2
-
-  private val ULM_VOCAB_SQL: String = ulmCtes(ULM_ROUNDS) + s"""
-    |SELECT piece, cnt, qcost FROM c$ULM_ROUNDS WHERE cnt > 0
-    |ORDER BY piece""".stripMargin
-
-  private def ulmApplyCtes: String = ulmCtes(ULM_ROUNDS) + s""",
-    |wp AS (SELECT word, CAST(len(string_split(seg, ' ')) AS BIGINT) AS n_pieces
-    |  FROM seg$ULM_ROUNDS)""".stripMargin
-
-  private val ULM_TOKENS_SQL: String = ulmApplyCtes + s""",
-    |dw AS (SELECT doc_id, word FROM (SELECT doc_id,
-    |    unnest(string_split(text, ' ')) AS word FROM documents)
-    |  WHERE regexp_matches(word, '^[a-z]+$$')
-    |    AND length(word) <= ${graft.ops.Ulm.maxWordLen}),
-    |ag AS (SELECT dw.doc_id, CAST(count(*) AS BIGINT) AS nw,
-    |    CAST(sum(wp.n_pieces) AS BIGINT) AS np
-    |  FROM dw JOIN wp ON dw.word = wp.word GROUP BY 1)
-    |SELECT d.doc_id, CAST(COALESCE(a.nw, 0) AS BIGINT) AS n_words,
-    |  CAST(COALESCE(a.np, 0) AS BIGINT) AS n_ulm_tokens
-    |FROM documents d LEFT JOIN ag a ON d.doc_id = a.doc_id
-    |ORDER BY d.doc_id""".stripMargin
-
-  private val ULM_FERTILITY_SQL: String = ulmApplyCtes + s""",
-    |dw AS (SELECT doc_id, lang, word FROM (SELECT doc_id, lang,
-    |    unnest(string_split(text, ' ')) AS word FROM documents)
-    |  WHERE regexp_matches(word, '^[a-z]+$$')
-    |    AND length(word) <= ${graft.ops.Ulm.maxWordLen})
-    |SELECT lang, n_docs, n_words, n_ulm_pieces,
-    |  CAST(n_ulm_pieces AS DOUBLE) / CAST(n_words AS DOUBLE) AS fertility
-    |FROM (SELECT dw.lang, CAST(count(DISTINCT dw.doc_id) AS BIGINT) AS n_docs,
-    |    CAST(count(*) AS BIGINT) AS n_words,
-    |    CAST(sum(wp.n_pieces) AS BIGINT) AS n_ulm_pieces
-    |  FROM dw JOIN wp ON dw.word = wp.word GROUP BY 1)
-    |ORDER BY lang""".stripMargin
-
-  /** DuckDB twin of QualityModel.train: the teacher rule (text_quality's
-    * replay, micro-quantized), the exact integer ratio features (floor
-    * division both engines share), the same 1944-candidate grid, and the
-    * same (n_err, weights)-lexicographic argmin. */
-  private val QUALITY_MODEL_CTES: String =
-    """WITH lblq AS (SELECT doc_id,
-      |    CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-      |      / len(string_split(text, ' ')) AS ttr,
-      |    CAST(len(list_filter(string_split(text, ' '), w -> w IN ('the', 'a'))) AS DOUBLE)
-      |      / len(string_split(text, ' ')) AS stopword_ratio,
-      |    len(string_split(text, ' ')) AS n_tokens
-      |  FROM documents),
-      |lbl AS (SELECT doc_id,
-      |    CAST(CASE WHEN CAST(floor((ttr * 0.4 + stopword_ratio * 0.3 +
-      |      CASE WHEN n_tokens >= 40 THEN 0.3
-      |        ELSE CAST(n_tokens AS DOUBLE) / 40.0 * 0.3 END) * 1000000.0) AS BIGINT)
-      |      >= 500000 THEN 1 ELSE -1 END AS BIGINT) AS label
-      |  FROM lblq),
-      |rawf AS (SELECT doc_id,
-      |    CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS nd,
-      |    CAST(len(list_filter(string_split(text, ' '), w -> w IN ('the', 'a'))) AS BIGINT) AS sc,
-      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
-      |  FROM documents),
-      |feats AS (SELECT f.doc_id,
-      |    (f.nd * 1000000) // f.nt AS x1,
-      |    (f.sc * 1000000) // f.nt AS x2,
-      |    least(f.nt, 40) * 25000 AS x3,
-      |    l.label
-      |  FROM rawf f JOIN lbl l ON f.doc_id = l.doc_id),
-      |cands AS (SELECT a.range AS w1, b.range AS w2, c.range AS w3,
-      |    d.range AS w0
-      |  FROM range(0, 6) a, range(0, 6) b, range(0, 6) c, range(-8, 1) d),
-      |errs AS (SELECT c.w1, c.w2, c.w3, c.w0,
-      |    CAST(sum(CASE WHEN
-      |      ((c.w1*f.x1 + c.w2*f.x2 + c.w3*f.x3 + c.w0*1000000) > 0)
-      |        = (f.label = 1)
-      |      THEN 0 ELSE 1 END) AS BIGINT) AS n_err
-      |  FROM feats f CROSS JOIN cands c GROUP BY 1, 2, 3, 4),
-      |best AS (SELECT CAST(w1 AS BIGINT) AS w1, CAST(w2 AS BIGINT) AS w2,
-      |    CAST(w3 AS BIGINT) AS w3, CAST(w0 AS BIGINT) AS w0, n_err
-      |  FROM errs ORDER BY n_err, w1, w2, w3, w0 LIMIT 1)""".stripMargin
-
-  private val QUALITY_MODEL_SQL: String = QUALITY_MODEL_CTES + """
-    |SELECT w1, w2, w3, w0, n_err FROM best""".stripMargin
-
-  private val QUALITY_SCORE_SQL: String = QUALITY_MODEL_CTES + """
-    |SELECT f.doc_id,
-    |  b.w1*f.x1 + b.w2*f.x2 + b.w3*f.x3 + b.w0*1000000 AS margin,
-    |  CAST(CASE WHEN (b.w1*f.x1 + b.w2*f.x2 + b.w3*f.x3 + b.w0*1000000) > 0
-    |    THEN 1 ELSE -1 END AS BIGINT) AS pred,
-    |  f.label
-    |FROM feats f CROSS JOIN best b ORDER BY f.doc_id""".stripMargin
-
-  /** DuckDB twin of Layout.hilbertKey: the same rotate/reflect walk
-    * unrolled as one CTE per level, each carrying (id, hx, hy, hd) — a
-    * LINEAR chain, where an expression-tree form would duplicate the
-    * coordinate state ~3× per level. Reflection uses n−1 (values stay in
-    * [0, n)), digits by the same (3rx) xor ry table written as a CASE. */
-  private def hilbertCtes(bits: Int, src: String, idCol: String,
-                          xExpr: String, yExpr: String): String = {
-    val n1 = (1L << bits) - 1L
-    val sb = new StringBuilder
-    sb ++= s"WITH h0 AS (SELECT $idCol, (($xExpr) & $n1) AS hx, " +
-      s"(($yExpr) & $n1) AS hy, CAST(0 AS BIGINT) AS hd FROM $src)"
-    for (i <- 0 until bits) {
-      val k = bits - 1 - i
-      val s2 = (1L << k) * (1L << k)
-      sb ++=
-        s""",
-           |h${i + 1} AS (SELECT $idCol,
-           |  CASE WHEN ((hy >> $k) & 1) = 1 THEN hx
-           |       WHEN ((hx >> $k) & 1) = 1 THEN $n1 - hy
-           |       ELSE hy END AS hx,
-           |  CASE WHEN ((hy >> $k) & 1) = 1 THEN hy
-           |       WHEN ((hx >> $k) & 1) = 1 THEN $n1 - hx
-           |       ELSE hx END AS hy,
-           |  hd + CAST($s2 AS BIGINT) * (CASE
-           |    WHEN ((hx >> $k) & 1) = 1 AND ((hy >> $k) & 1) = 1 THEN 2
-           |    WHEN ((hx >> $k) & 1) = 1 THEN 3
-           |    WHEN ((hy >> $k) & 1) = 1 THEN 1
-           |    ELSE 0 END) AS hd
-           |FROM h$i)""".stripMargin
-    }
-    sb.toString
-  }
-
-  private val HILBERT_LAYOUT_SQL: String =
-    hilbertCtes(16, "part", "p_partkey",
-      "p_size", "CAST(floor(p_retailprice) AS BIGINT)") + """
-      |SELECT p_partkey, hd AS hkey FROM h16
-      |ORDER BY hkey, p_partkey""".stripMargin
-
-  /** The best-fit-decreasing fold (Sampling.packSequencesBfd, budget
-    * 256) as a recursive CTE: per shard, docs advance in (n desc,
-    * doc_id) rank order and each recursion step re-derives the chosen
-    * bin and the updated load list — exact integers, so the per-doc
-    * frame hash-matches the engine's aggregate() fold. */
-  private val BFD_CTES: String =
-    """WITH RECURSIVE t0 AS (
-      |  SELECT doc_id, md5('pack:' || CAST(doc_id AS VARCHAR)) AS h,
-      |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n
-      |  FROM documents),
-      |t AS (
-      |  SELECT doc_id, n,
-      |    CAST(instr('0123456789abcdef', substr(h, 1, 1)) - 1 AS INT) AS shard,
-      |    CAST(row_number() OVER (
-      |      PARTITION BY CAST(instr('0123456789abcdef', substr(h, 1, 1)) - 1 AS INT)
-      |      ORDER BY n DESC, doc_id) AS BIGINT) AS rn
-      |  FROM t0),
-      |fold AS (
-      |  SELECT shard, CAST(0 AS BIGINT) AS rn, CAST(NULL AS BIGINT) AS doc_id,
-      |         CAST(NULL AS BIGINT) AS n, CAST(NULL AS BIGINT) AS bin,
-      |         CAST([] AS BIGINT[]) AS loads
-      |  FROM (SELECT DISTINCT shard FROM t)
-      |  UNION ALL
-      |  SELECT t.shard, f.rn + 1, t.doc_id, t.n,
-      |    CASE WHEN len(list_filter(f.loads, l -> l + t.n <= 256)) = 0
-      |         THEN CAST(len(f.loads) AS BIGINT)
-      |         ELSE CAST(list_position(f.loads,
-      |           list_max(list_filter(f.loads, l -> l + t.n <= 256))) - 1 AS BIGINT)
-      |    END AS bin,
-      |    CASE WHEN len(list_filter(f.loads, l -> l + t.n <= 256)) = 0
-      |         THEN list_append(f.loads, t.n)
-      |         ELSE f.loads[1:list_position(f.loads,
-      |                list_max(list_filter(f.loads, l -> l + t.n <= 256))) - 1]
-      |              || [f.loads[list_position(f.loads,
-      |                   list_max(list_filter(f.loads, l -> l + t.n <= 256)))] + t.n]
-      |              || f.loads[list_position(f.loads,
-      |                   list_max(list_filter(f.loads, l -> l + t.n <= 256))) + 1:]
-      |    END AS loads
-      |  FROM fold f JOIN t ON t.shard = f.shard AND t.rn = f.rn + 1)""".stripMargin
-
+    * CTE chain is shared by the k-center and SemDeDup oracles. */
   private val KCENTER_K = 8
+
   /** `seedWhere` restricts the corpus the greedy rounds SELECT FROM
     * (empty = whole corpus) — the increment oracle seeds its exemplars
     * from the stored slice only, everything else shares this chain.
@@ -7288,7 +332,7 @@ object SparkEntry {
     * corpus itself (the SemDeDup oracles run the chain over the
     * reconstructed planted-cluster corpus); the defaults regenerate the
     * original text byte-for-byte. */
-  private def kcenterCtes(seedWhere: String, prelude: String = "",
+  private[graft] def kcenterCtes(seedWhere: String, prelude: String = "",
       corpusSql: String =
         "SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings")
       : String = {
@@ -7313,568 +357,4 @@ object SparkEntry {
         .mkString(" UNION ALL ") + ")"
     sb.toString
   }
-  private val KCENTER_CTES: String = kcenterCtes("")
-
-  /** The planted-cluster corpus (Similarity.plantedClusterCorpus with
-    * seeds=8, copies=6) reconstructed in SQL — the same construction
-    * PLANTED_TOPK_SQL inlines, shaped as a kcenterCtes prelude. */
-  private val PLANTED_PRELUDE: String =
-    """base AS (
-      |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]), x -> x) AS v
-      |  FROM embeddings),
-      |members AS (
-      |  SELECT CASE WHEN j = 0 THEN s.vec_id
-      |              ELSE 1000 + s.vec_id * 6 + j END AS vec_id,
-      |         list_transform(s.v, x -> x + 0.002 * j) AS v
-      |  FROM (SELECT vec_id, v FROM base WHERE vec_id < 8) s
-      |  CROSS JOIN (SELECT unnest(range(6)) AS j) js),
-      |bg AS (SELECT vec_id + 1000000 AS vec_id, v FROM base WHERE vec_id >= 8),
-      |""".stripMargin
-
-  /** k-center chain over the planted corpus + per-row assignment + the
-    * within-cell thresholded pair stage — shared by the SemDeDup pair
-    * and keeper oracles. asg and sempairs are MATERIALIZED: each is
-    * referenced more than once downstream and carries the whole
-    * selection chain (the r13 inlining lesson). */
-  private val SEMDEDUP_CTES: String =
-    kcenterCtes("", PLANTED_PRELUDE,
-      "SELECT vec_id, v FROM members UNION ALL SELECT vec_id, v FROM bg") +
-      """,
-        |asg AS MATERIALIZED (SELECT vec_id, center_id, v FROM (
-        |  SELECT e.vec_id, e.v, sel.vec_id AS center_id,
-        |    row_number() OVER (PARTITION BY e.vec_id
-        |      ORDER BY list_cosine_similarity(e.v, sel.v) DESC, sel.vec_id) AS rn
-        |  FROM corpus e CROSS JOIN sel)
-        |  WHERE rn = 1),
-        |sempairs AS MATERIALIZED (SELECT center_id, id1, id2, cos FROM (
-        |  SELECT a.center_id, a.vec_id AS id1, b.vec_id AS id2,
-        |    list_cosine_similarity(a.v, b.v) AS cos
-        |  FROM asg a JOIN asg b ON a.center_id = b.center_id
-        |    AND a.vec_id < b.vec_id)
-        |  WHERE cos >= 0.9)""".stripMargin
-
-  /** The incremental SemDeDup replay: exemplars greedily selected from
-    * the STORED slice of the planted corpus, stored keeper frame by the
-    * within-cell smaller-id rule, then the batch pruned against stored
-    * KEPT cellmates (pruned stored docs never prune — the corpus AS
-    * SERVED) and smaller-id batch cellmates. */
-  private val DEDUP_SEM_INCR_SQL: String = {
-    val assignFrom = (src: String, name: String) =>
-      s"""$name AS MATERIALIZED (SELECT vec_id, center_id, v FROM (
-         |  SELECT e.vec_id, e.v, c.center_id,
-         |    row_number() OVER (PARTITION BY e.vec_id
-         |      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.center_id) AS rn
-         |  FROM $src e CROSS JOIN kc c) WHERE rn = 1)""".stripMargin
-    kcenterCtes("vec_id % 5 <> 4", PLANTED_PRELUDE,
-      "SELECT vec_id, v FROM members UNION ALL SELECT vec_id, v FROM bg") +
-      s""",
-         |stored AS MATERIALIZED (SELECT vec_id, v FROM corpus WHERE vec_id % 5 <> 4),
-         |batch AS MATERIALIZED (SELECT vec_id, v FROM corpus WHERE vec_id % 5 = 4),
-         |kc AS (SELECT vec_id AS center_id, v AS cv FROM sel),
-         |${assignFrom("stored", "sasg")},
-         |sprune AS (SELECT DISTINCT b.vec_id FROM sasg a JOIN sasg b
-         |  ON a.center_id = b.center_id AND a.vec_id < b.vec_id
-         |  WHERE list_cosine_similarity(a.v, b.v) >= 0.9),
-         |skept AS MATERIALIZED (SELECT s.vec_id, s.center_id, s.v FROM sasg s
-         |  LEFT JOIN sprune p ON p.vec_id = s.vec_id WHERE p.vec_id IS NULL),
-         |${assignFrom("batch", "basg")},
-         |cand AS (
-         |  SELECT b.vec_id, s.vec_id AS cand_id,
-         |    list_cosine_similarity(b.v, s.v) AS cos
-         |  FROM basg b JOIN skept s ON s.center_id = b.center_id
-         |  UNION ALL
-         |  SELECT b.vec_id, o.vec_id AS cand_id,
-         |    list_cosine_similarity(b.v, o.v) AS cos
-         |  FROM basg b JOIN basg o ON o.center_id = b.center_id
-         |    AND o.vec_id < b.vec_id),
-         |pr AS (SELECT vec_id, min(cand_id) AS pruned_by, max(cos) AS max_cos
-         |  FROM cand WHERE cos >= 0.9 GROUP BY 1)
-         |SELECT g.vec_id, g.center_id, p.pruned_by,
-         |  CAST(CASE WHEN p.pruned_by IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep,
-         |  p.max_cos
-         |FROM basg g LEFT JOIN pr p ON p.vec_id = g.vec_id
-         |ORDER BY g.vec_id""".stripMargin
-  }
-
-  /** The increment replay: exemplars greedily selected from the STORED
-    * slice only, the late-arriving batch assigned per-row (cos desc,
-    * center-id ties) against them — the full incremental-maintenance
-    * path in SQL, which the Lloyd IVF increment can never have. */
-  private val KCENTER_INCR_SQL: String =
-    kcenterCtes("vec_id % 5 <> 4") + """,
-      |kcenters AS (SELECT vec_id AS centroid_id, v AS cv FROM sel),
-      |batch AS (SELECT vec_id, v FROM corpus WHERE vec_id % 5 = 4)
-      |SELECT vec_id, cell, assign_cos FROM (
-      |  SELECT e.vec_id, c.centroid_id AS cell,
-      |    list_cosine_similarity(e.v, c.cv) AS assign_cos,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.centroid_id) AS crank
-      |  FROM batch e CROSS JOIN kcenters c) WHERE crank = 1
-      |ORDER BY vec_id""".stripMargin
-
-  private val KCENTER_SQL: String =
-    KCENTER_CTES + "\nSELECT rank, vec_id, nearest_cos FROM sel ORDER BY rank"
-
-  /** The k-center IVF SERVING replay (DuckDB side of sim_topk_kcenter):
-    * the selected exemplars become cells, the corpus assigns probe-1,
-    * queries probe their 3 nearest cells, candidates rank per query —
-    * the same (cosine desc, id) tie rules as assignCells/topKIvfKCenter,
-    * every cosine the shared sequential-sum kernel. */
-  private val KCENTER_SERVE_CTES: String =
-    KCENTER_CTES + """,
-      |kcenters AS (SELECT vec_id AS centroid_id, v AS cv FROM sel),
-      |kcells AS (SELECT vec_id, v, centroid_id AS cell FROM (
-      |  SELECT e.vec_id, e.v, c.centroid_id,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.centroid_id) AS crank
-      |  FROM corpus e CROSS JOIN kcenters c) WHERE crank = 1),
-      |kqcells AS (SELECT vec_id AS query_id, v AS qv, centroid_id AS cell FROM (
-      |  SELECT e.vec_id, e.v, c.centroid_id,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY list_cosine_similarity(e.v, c.cv) DESC, c.centroid_id) AS crank
-      |  FROM corpus e CROSS JOIN kcenters c WHERE e.vec_id < 10) WHERE crank <= 3),
-      |kserved AS (SELECT query_id, rank, neighbor_id, cosine FROM (
-      |  SELECT q.query_id, n.vec_id AS neighbor_id,
-      |    list_cosine_similarity(q.qv, n.v) AS cosine,
-      |    row_number() OVER (PARTITION BY q.query_id
-      |      ORDER BY list_cosine_similarity(q.qv, n.v) DESC, n.vec_id) AS rank
-      |  FROM kqcells q JOIN kcells n USING (cell)
-      |  WHERE q.query_id <> n.vec_id) WHERE rank <= 5)""".stripMargin
-
-  private val KCENTER_TOPK_SQL: String = KCENTER_SERVE_CTES + """
-    |SELECT query_id, rank, neighbor_id, cosine FROM kserved
-    |ORDER BY query_id, rank""".stripMargin
-
-  /** Recall@5 of the k-center serving path vs brute-force truth — both
-    * sides replayed, intersection by exact pair join, recall one
-    * correctly-rounded division of small exact longs. */
-  private val RECALL_AUDIT_SQL: String = KCENTER_SERVE_CTES + """,
-    |ktruth AS (SELECT query_id, neighbor_id FROM (
-    |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-    |    row_number() OVER (PARTITION BY a.vec_id
-    |      ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.vec_id) AS rank
-    |  FROM corpus a JOIN corpus b ON a.vec_id <> b.vec_id
-    |  WHERE a.vec_id < 10) WHERE rank <= 5),
-    |kservedp AS (SELECT DISTINCT query_id AS sq, neighbor_id AS sn FROM kserved)
-    |SELECT t.query_id, CAST(count(*) AS BIGINT) AS n_true,
-    |  CAST(sum(CASE WHEN s.sn IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-    |  CAST(sum(CASE WHEN s.sn IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
-    |    / count(*) AS recall
-    |FROM ktruth t LEFT JOIN kservedp s
-    |  ON t.query_id = s.sq AND t.neighbor_id = s.sn
-    |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
-
-  /** The recall audit's position-aware sibling over the same CTE
-    * chain: first-true-hit rank in the k-center-served list, 10^6 DIV
-    * rank, 0 on all-miss — queries from the truth side, so all-miss
-    * rows survive. */
-  private val MRR_KCENTER_SQL: String = KCENTER_SERVE_CTES + """,
-    |ktruth AS (SELECT query_id, neighbor_id FROM (
-    |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-    |    row_number() OVER (PARTITION BY a.vec_id
-    |      ORDER BY list_cosine_similarity(a.v, b.v) DESC, b.vec_id) AS rank
-    |  FROM corpus a JOIN corpus b ON a.vec_id <> b.vec_id
-    |  WHERE a.vec_id < 10) WHERE rank <= 5),
-    |kfh AS (SELECT t.query_id, CAST(min(s.rank) AS BIGINT) AS fr
-    |        FROM ktruth t JOIN kserved s
-    |          ON s.query_id = t.query_id AND s.neighbor_id = t.neighbor_id
-    |        GROUP BY 1),
-    |kqs AS (SELECT DISTINCT query_id FROM ktruth)
-    |SELECT q.query_id, kfh.fr AS first_rank,
-    |  CAST(coalesce(1000000 // kfh.fr, 0) AS BIGINT) AS rr_scaled
-    |FROM kqs q LEFT JOIN kfh ON kfh.query_id = q.query_id
-    |ORDER BY q.query_id""".stripMargin
-
-  /** The assignment twin: every vector to its most-similar exemplar
-    * ((cos desc, center_id) tie), per-exemplar census with the
-    * micro-quantized-exact mean. */
-  private val KCENTER_ASSIGN_SQL: String =
-    KCENTER_CTES + """,
-      |asg AS (SELECT e.vec_id, sel.rank, sel.vec_id AS center_id,
-      |    list_cosine_similarity(e.v, sel.v) AS c,
-      |    row_number() OVER (PARTITION BY e.vec_id
-      |      ORDER BY list_cosine_similarity(e.v, sel.v) DESC, sel.vec_id) AS rn
-      |  FROM corpus e CROSS JOIN sel)
-      |SELECT rank, center_id, count(*) AS n_assigned,
-      |  CAST(sum(CAST(floor(c * 1000000.0) AS BIGINT)) AS BIGINT) AS sum_cos_micro,
-      |  CAST(sum(CAST(floor(c * 1000000.0) AS BIGINT)) AS DOUBLE) / 1000000.0
-      |    / count(*) AS mean_cos
-      |FROM asg WHERE rn = 1 GROUP BY rank, center_id ORDER BY rank""".stripMargin
-
-  /** Shared by text_bigram_lp and its stored-model twin. */
-  private val BIGRAM_LP_CTES: String =
-      """tkl AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        |bgf AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM (
-        |  SELECT doc_id, unnest(list_transform(range(2, len(tk) + 1),
-        |    i -> {'w1': tk[i - 1], 'w2': tk[i]})) AS b
-        |  FROM tkl WHERE len(tk) >= 2)),
-        |c12 AS (SELECT w1, w2, count(*) AS c12 FROM bgf GROUP BY 1, 2),
-        |c1 AS (SELECT w1, count(*) AS c1 FROM bgf GROUP BY 1),
-        |vv AS (SELECT count(DISTINCT w2) AS v FROM bgf),
-        |q AS (SELECT f.doc_id,
-        |    CAST(round(ln(CAST(p.c12 + 1 AS DOUBLE) / CAST(c.c1 + vv.v AS DOUBLE))
-        |      * 1000000) AS BIGINT) AS qlp
-        |  FROM bgf f JOIN c12 p ON f.w1 = p.w1 AND f.w2 = p.w2
-        |  JOIN c1 c ON f.w1 = c.w1 CROSS JOIN vv),
-        |agg AS (SELECT doc_id, count(*) AS n_bigram,
-        |    CAST(sum(qlp) AS BIGINT) AS sum_qlp FROM q GROUP BY 1)""".stripMargin
-
-  /** The EXIF census recomputed analytically from the construction
-    * (the q_multimodal_mp4 discipline); the scrub face differs only in
-    * the two coordinate numerators reading 0. */
-  private def EXIF_STATS_SQL(scrubbed: Boolean): String = {
-    val lat = if (scrubbed) "0" else "doc_id % 90"
-    val lon = if (scrubbed) "0" else "doc_id % 180"
-    s"""SELECT doc_id,
-       |  CASE WHEN doc_id % 2 = 1 THEN 'MM' ELSE 'II' END AS endian,
-       |  CAST(3 AS BIGINT) AS n_ifds,
-       |  CAST(CASE WHEN doc_id % 4 <> 3 THEN 10 ELSE 7 END AS BIGINT) AS n_tags,
-       |  CAST(doc_id % 8 + 1 AS BIGINT) AS orientation,
-       |  CAST(doc_id % 640 + 64 AS BIGINT) AS width_tag,
-       |  CAST(doc_id % 800 + 100 AS BIGINT) AS iso,
-       |  CAST(doc_id % 4000 + 320 AS BIGINT) AS pixel_x,
-       |  CAST(CASE WHEN doc_id % 4 <> 3 THEN 1 ELSE 0 END AS BIGINT) AS has_gps,
-       |  CAST(CASE WHEN doc_id % 4 <> 3 THEN 3 ELSE 0 END AS BIGINT) AS n_gps_tags,
-       |  CAST(CASE WHEN doc_id % 4 <> 3 THEN $lat ELSE -1 END AS BIGINT)
-       |    AS gps_lat_num,
-       |  CAST(CASE WHEN doc_id % 4 <> 3 THEN $lon ELSE -1 END AS BIGINT)
-       |    AS gps_lon_num
-       |FROM documents ORDER BY doc_id""".stripMargin
-  }
-
-  /** The robots parse + gate replayed whole (RFC 9309): the per-domain
-    * robots.txt fixture classes, line split, comment strip, the
-    * user-agent grouping window, empty-pattern drop, exact-agent-else-*
-    * group choice, and longest-prefix-wins with Allow on ties. Shared
-    * by the rules, gate, and budget oracles; ends at CTEs `rules`,
-    * `cand`, and `gate`. */
-  private val ROBOTS_CTES: String =
-    """ub AS (SELECT doc_id, source,
-        |    'https://' || CASE WHEN doc_id % 3 = 0 THEN 'www.' ELSE '' END
-        |      || source || '-' || CAST(doc_id % 100 AS VARCHAR) || '.'
-        |      || (['com','org','net','io','edu'])[CAST(doc_id % 5 AS INT) + 1]
-        |      || '/doc/' || CAST(doc_id AS VARCHAR) AS u
-        |  FROM documents),
-        |cand AS (SELECT doc_id, u AS url,
-        |    CASE WHEN h LIKE 'www.%' THEN substr(h, 5) ELSE h END AS domain,
-        |    CASE WHEN length(p) = 0 THEN '/' ELSE p END AS path
-        |  FROM (SELECT doc_id, u,
-        |      string_split(string_split(u, '://')[2], '/')[1] AS h,
-        |      regexp_replace(u, '^[A-Za-z]+://[^/?]*', '') AS p
-        |    FROM ub)),
-        |rtxt AS (SELECT domain,
-        |    CASE length(domain) % 3
-        |      WHEN 0 THEN 'Sitemap: https://' || domain || '/sitemap-index.xml'
-        |        || chr(10) || '# catch-all stands down; the bot group rules'
-        |        || chr(10) || 'User-agent: *' || chr(10) || 'Disallow:'
-        |        || chr(10) || chr(10) || 'User-agent: graftbot' || chr(10)
-        |        || 'Disallow: /doc' || chr(10) || 'Allow: /doc/1' || chr(10)
-        |        || 'Crawl-delay: 2' || chr(10)
-        |      WHEN 1 THEN 'User-agent: *' || chr(10) || 'Disallow: /'
-        |        || chr(10) || 'Allow: /doc' || chr(10)
-        |        || 'Disallow: /doc/13' || chr(10) || 'Crawl-delay: 1' || chr(10)
-        |      ELSE 'User-agent: graftbot' || chr(10) || 'User-agent: otherbot'
-        |        || chr(10) || 'Allow: /doc/2' || chr(10) || 'Disallow: /doc/2'
-        |        || chr(10) || 'Disallow: /doc/3' || chr(10) || chr(10)
-        |        || 'User-agent: *' || chr(10) || 'Disallow: /' || chr(10)
-        |        || 'Sitemap: https://' || domain || '/sitemap-index.xml' || chr(10)
-        |    END AS robots_txt
-        |  FROM (SELECT DISTINCT domain FROM cand)),
-        |lns AS (SELECT domain, CAST(u.i AS BIGINT) AS line_no,
-        |    trim(regexp_replace(ls[CAST(u.i + 1 AS INT)], '#.*', '')) AS ln
-        |  FROM (SELECT domain, string_split(robots_txt, chr(10)) AS ls
-        |        FROM rtxt), unnest(range(len(ls))) u(i)),
-        |typ AS (SELECT domain, line_no,
-        |    CASE WHEN lower(ln) LIKE 'user-agent:%' THEN 'ua'
-        |         WHEN lower(ln) LIKE 'allow:%' THEN 'allow'
-        |         WHEN lower(ln) LIKE 'disallow:%' THEN 'disallow'
-        |         WHEN lower(ln) LIKE 'crawl-delay:%' THEN 'delay' END AS kind,
-        |    trim(substr(ln, strpos(ln, ':') + 1)) AS value
-        |  FROM lns
-        |  WHERE lower(ln) LIKE 'user-agent:%' OR lower(ln) LIKE 'allow:%'
-        |    OR lower(ln) LIKE 'disallow:%' OR lower(ln) LIKE 'crawl-delay:%'),
-        |bnd AS (SELECT domain, line_no, kind, value,
-        |    CASE WHEN kind = 'ua' AND coalesce(lag(kind) OVER
-        |        (PARTITION BY domain ORDER BY line_no), '-') <> 'ua'
-        |      THEN 1 ELSE 0 END AS boundary
-        |  FROM typ),
-        |grpd AS (SELECT domain, line_no, kind, value,
-        |    sum(boundary) OVER (PARTITION BY domain ORDER BY line_no) AS grp
-        |  FROM bnd),
-        |ag AS (SELECT domain, grp, lower(value) AS agent FROM grpd
-        |  WHERE kind = 'ua'),
-        |rules AS (SELECT r.domain, a.agent, r.rule, r.prefix, r.line_no
-        |  FROM ag a
-        |  JOIN (SELECT domain, grp, kind AS rule, value AS prefix, line_no
-        |        FROM grpd WHERE kind IN ('allow', 'disallow')
-        |          AND length(value) > 0) r
-        |    ON a.domain = r.domain AND a.grp = r.grp),
-        |dly AS (SELECT d.domain, a.agent,
-        |    CAST(min(CAST(d.value AS BIGINT)) AS BIGINT) AS delay_s
-        |  FROM ag a
-        |  JOIN (SELECT domain, grp, value FROM grpd
-        |        WHERE kind = 'delay' AND regexp_matches(value, '^[0-9]+$')) d
-        |    ON a.domain = d.domain AND a.grp = d.grp
-        |  GROUP BY 1, 2),
-        |arule AS (SELECT * FROM rules WHERE agent = 'graftbot'),
-        |appl AS (SELECT * FROM arule
-        |  UNION ALL
-        |  SELECT * FROM rules r WHERE r.agent = '*' AND NOT EXISTS
-        |    (SELECT 1 FROM arule a WHERE a.domain = r.domain)),
-        |best AS (SELECT doc_id, rule, prefix FROM (
-        |  SELECT c.doc_id, r.rule, r.prefix,
-        |      row_number() OVER (PARTITION BY c.doc_id
-        |        ORDER BY length(r.prefix) DESC, r.rule, r.line_no) AS rk
-        |    FROM cand c JOIN appl r ON c.domain = r.domain
-        |    WHERE substr(c.path, 1, length(r.prefix)) = r.prefix)
-        |  WHERE rk = 1),
-        |gate AS (SELECT c.doc_id, c.domain, c.path, b.rule, b.prefix,
-        |    (b.rule IS NULL OR b.rule = 'allow') AS allowed
-        |  FROM cand c LEFT JOIN best b ON c.doc_id = b.doc_id)""".stripMargin
-
-  /** The sitemap build + walk replayed whole on top of [[ROBOTS_CTES]]
-    * (reusing `cand` for the per-domain URL list, `appl` for the
-    * precedence rules, `dly` for the effective delay): the two
-    * discovered-only URLs per domain, the `<url>` blocks with their
-    * mod-4 optional-field omissions, the cap-7 chunking, the
-    * sitemapindex, and the parse back off the XML strings — ends at
-    * CTE `sent` (domain, chunk_no, loc, lastmod, priority). Portable
-    * pmod spelled ((x % m) + m) % m for the negative sort keys. */
-  private val SITEMAP_CTES: String =
-    """,smu AS (SELECT domain, CAST(doc_id AS BIGINT) AS ord, url AS loc FROM cand
-        |  UNION ALL
-        |  SELECT domain, CAST(-1 AS BIGINT), 'https://' || domain || '/doc/new-1'
-        |  FROM (SELECT DISTINCT domain FROM cand)
-        |  UNION ALL
-        |  SELECT domain, CAST(-2 AS BIGINT), 'https://' || domain || '/private/new-2'
-        |  FROM (SELECT DISTINCT domain FROM cand)),
-        |smb AS (SELECT domain, ord,
-        |    '<url><loc>' || loc || '</loc>'
-        |    || CASE WHEN ((ord % 4) + 4) % 4 = 0 THEN '' ELSE
-        |         '<lastmod>' || strftime(DATE '2020-01-01'
-        |           + CAST(((ord % 365) + 365) % 365 AS INT), '%Y-%m-%d')
-        |         || '</lastmod>' END
-        |    || CASE WHEN ((ord % 4) + 4) % 4 = 1 THEN '' ELSE
-        |         '<priority>0.' || CAST(((ord % 10) + 10) % 10 AS VARCHAR)
-        |         || '</priority>' END
-        |    || '</url>' AS blk,
-        |    row_number() OVER (PARTITION BY domain ORDER BY ord) AS rn
-        |  FROM smu),
-        |smc AS (SELECT domain, CAST((rn - 1) // 7 AS BIGINT) AS chunk_no,
-        |    '<?xml version="1.0" encoding="UTF-8"?><urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-        |      || string_agg(blk, '' ORDER BY ord) || '</urlset>' AS xml
-        |  FROM smb GROUP BY 1, 2),
-        |smi AS (SELECT domain,
-        |    '<?xml version="1.0" encoding="UTF-8"?><sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">'
-        |      || string_agg('<sitemap><loc>https://' || domain || '/sitemap-'
-        |          || CAST(chunk_no AS VARCHAR) || '.xml</loc></sitemap>',
-        |          '' ORDER BY chunk_no)
-        |      || '</sitemapindex>' AS xml
-        |  FROM smc GROUP BY 1),
-        |sic AS (SELECT domain,
-        |    CAST(regexp_extract(regexp_extract(blk, '<loc>([^<]*)</loc>', 1),
-        |      'sitemap-([0-9]+)\.xml$', 1) AS BIGINT) AS chunk_no
-        |  FROM (SELECT domain, unnest(regexp_extract_all(xml,
-        |      '(?s)<sitemap(?:\s[^>]*)?>(.*?)</sitemap>', 1)) AS blk FROM smi)),
-        |sie AS (SELECT c.domain, c.chunk_no, unnest(regexp_extract_all(k.xml,
-        |      '(?s)<url(?:\s[^>]*)?>(.*?)</url>', 1)) AS blk
-        |  FROM sic c JOIN smc k
-        |    ON c.domain = k.domain AND c.chunk_no = k.chunk_no),
-        |sent AS (SELECT domain, chunk_no,
-        |    regexp_extract(blk, '<loc>([^<]*)</loc>', 1) AS loc,
-        |    nullif(regexp_extract(blk, '<lastmod>([^<]*)</lastmod>', 1), '')
-        |      AS lastmod,
-        |    CAST(nullif(regexp_extract(blk, '<priority>([^<]*)</priority>', 1),
-        |      '') AS DOUBLE) AS priority
-        |  FROM sie)""".stripMargin
-
-  /** The char-bigram frame both langid-NB oracles build on: one row
-    * per 2-char window occurrence, labeled by the doc's lang. */
-  private val LANGID_NB_CTES: String =
-    """gf AS (SELECT doc_id, lang,
-        |    unnest(list_transform(range(1, length(text)),
-        |      i -> substr(text, CAST(i AS INT), 2))) AS g
-        |  FROM documents
-        |  WHERE text IS NOT NULL AND length(text) >= 2 AND lang IS NOT NULL)""".stripMargin
-
-  /** Shared by text_langid_trained and its stored-model twin. */
-  private val LANGID_SCORE_SQL: String =
-    "WITH " + LANGID_NB_CTES + """,
-        |sgf AS (SELECT doc_id, lang AS actual_lang,
-        |    unnest(list_transform(range(1, length(text)),
-        |      i -> substr(text, CAST(i AS INT), 2))) AS g
-        |  FROM documents WHERE text IS NOT NULL AND length(text) >= 2),
-        |pr AS (SELECT lang, g, CAST(count(*) AS BIGINT) AS c FROM gf GROUP BY 1, 2),
-        |tt AS (SELECT lang, CAST(count(*) AS BIGINT) AS tot FROM gf GROUP BY 1),
-        |vv AS (SELECT CAST(count(DISTINCT g) AS BIGINT) AS v FROM gf),
-        |ts AS (SELECT d.g, t.lang,
-        |    CAST(round(ln(CAST(coalesce(p.c, 0) + 1 AS DOUBLE)
-        |      / CAST(t.tot + vv.v AS DOUBLE)) * 1000000) AS BIGINT) AS qlp
-        |  FROM (SELECT DISTINCT g FROM sgf) d
-        |  CROSS JOIN tt t
-        |  LEFT JOIN pr p ON p.lang = t.lang AND p.g = d.g
-        |  CROSS JOIN vv),
-        |byd AS (SELECT s.doc_id, s.actual_lang, ts.lang,
-        |    CAST(sum(ts.qlp) AS BIGINT) AS score
-        |  FROM sgf s JOIN ts ON ts.g = s.g GROUP BY 1, 2, 3),
-        |rk AS (SELECT doc_id, actual_lang, lang, score,
-        |    row_number() OVER (PARTITION BY doc_id
-        |      ORDER BY score DESC, lang) AS rn FROM byd)
-        |SELECT doc_id, lang AS predicted_lang, actual_lang,
-        |  score AS score_qnat, lang = actual_lang AS match
-        |FROM rk WHERE rn = 1 ORDER BY doc_id""".stripMargin
-
-  private val BIGRAM_LP_SQL: String =
-    "WITH " + BIGRAM_LP_CTES + """
-        |SELECT d.doc_id,
-        |  CAST(coalesce(agg.n_bigram, 0) AS BIGINT) AS n_bigram,
-        |  CAST(coalesce(agg.sum_qlp, 0) AS BIGINT) AS sum_qlp,
-        |  CASE WHEN agg.n_bigram > 0
-        |       THEN CAST(agg.sum_qlp AS DOUBLE) / 1000000.0 / agg.n_bigram
-        |  END AS mean_logprob
-        |FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-        |ORDER BY d.doc_id""".stripMargin
-
-  private val TOPK_SQL =
-    """SELECT query_id, rank, neighbor_id, cosine FROM (
-      |  SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-      |    list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS cosine,
-      |    row_number() OVER (PARTITION BY a.vec_id
-      |      ORDER BY list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) DESC,
-      |               b.vec_id) AS rank
-      |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-      |  WHERE a.vec_id < 10)
-      |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** Brute-force word-shingle Jaccard (DuckDB side of dedup_jaccard and
-    * the verification bar for dedup_minhash). */
-  private val JACCARD_SQL =
-    """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-      |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-      |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-      |          FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-      |SELECT id1, id2, jaccard FROM (
-      |  SELECT id1, id2, CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-      |  FROM pairs JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2)
-      |WHERE jaccard >= 0.8 ORDER BY id1, id2""".stripMargin
-
-  /** The portable-SimHash replay: the shared shingle CTEs, the 60-bit
-    * md5 slice, 60 generated sign-sum columns, the fingerprint as a sum
-    * of disjoint powers, 4×15-bit pigeonhole pairing with
-    * bit_count(xor) hamming. */
-  private val SIMHASH_MD5_SQL: String = {
-    val bitSums = (0 until 60).map(j =>
-      s"sum(CASE WHEN (h >> $j) & 1 = 1 THEN 1 ELSE -1 END) AS b$j")
-      .mkString(",\n      ")
-    val fp = (0 until 60).map(j =>
-      s"(CASE WHEN b$j > 0 THEN ${1L << j} ELSE 0 END)").mkString(" + ")
-    s"""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-       |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-       |hs AS (SELECT doc_id, ('0x' || substr(md5('sh:' || s), 1, 15))::BIGINT AS h FROM sh),
-       |bits AS (SELECT doc_id,
-       |      $bitSums
-       |  FROM hs GROUP BY 1),
-       |fp AS (SELECT doc_id, CAST($fp AS BIGINT) AS simhash FROM bits),
-       |ch AS (SELECT doc_id, simhash, CAST(i.range AS INT) AS chunk_idx,
-       |    (simhash >> CAST(i.range * 15 AS INT)) & 32767 AS chunk
-       |  FROM fp, range(0, 4) i)
-       |SELECT DISTINCT a.doc_id AS id1, b.doc_id AS id2,
-       |  CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-       |FROM ch a JOIN ch b
-       |  ON a.chunk_idx = b.chunk_idx AND a.chunk = b.chunk
-       |  AND a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-       |ORDER BY id1, id2""".stripMargin
-  }
-
-  /** Capped variant: shingles in more than 5 docs are dropped before BOTH
-    * the intersections and the sizes (same universe, or capping would
-    * deflate every score). */
-  private val JACCARD_CAPPED_SQL =
-    """WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-      |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-      |df AS (SELECT s, count(*) AS c FROM sh GROUP BY 1),
-      |shf AS (SELECT sh.doc_id, sh.s FROM sh JOIN df ON sh.s = df.s WHERE df.c <= 5),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM shf GROUP BY 1),
-      |pairs AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-      |          FROM shf a JOIN shf b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2)
-      |SELECT id1, id2, jaccard FROM (
-      |  SELECT id1, id2, CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-      |  FROM pairs JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2)
-      |WHERE jaccard >= 0.8 ORDER BY id1, id2""".stripMargin
-
-  /** Min-cascade funnel CTEs shared by the per-user and rollup oracles,
-    * parameterized over the event source (the rollup windows it down so
-    * stage variety survives this corpus's per-user event density). */
-  private def funnelCtes(src: String) =
-    s"""ev AS ($src),
-       |s1 AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM ev
-       |  WHERE event_type = 'view' GROUP BY 1),
-       |s2 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t2 FROM ev e
-       |  JOIN s1 ON e.user_id = s1.user_id
-       |  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s1.t1 GROUP BY 1),
-       |s3 AS (SELECT e.user_id, min(epoch_us(e.ts)) AS t3 FROM ev e
-       |  JOIN s2 ON e.user_id = s2.user_id
-       |  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s2.t2 GROUP BY 1),
-       |f AS (SELECT u.user_id,
-       |    CAST(CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-       |              WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS stage_reached,
-       |    t1 AS t1_us, t2 AS t2_us, t3 AS t3_us
-       |  FROM (SELECT DISTINCT user_id FROM ev) u
-       |  LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-       |  LEFT JOIN s3 USING (user_id))""".stripMargin
-  private val FUNNEL_CTES = funnelCtes("SELECT * FROM events")
-  private val FUNNEL_DAY1_CTES = funnelCtes(
-    "SELECT * FROM events WHERE ts < TIMESTAMP '2024-01-02 00:00:00'")
-
-  /** Shared CTE chain for the component-resolution oracles: the JACCARD_SQL
-    * pair derivation (verbatim semantics), then symmetric edges, then the
-    * transitive closure as a recursive CTE ending in per-node min label. */
-  private val COMPONENT_CTES =
-    """w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-      |idx AS (SELECT doc_id, w, unnest(range(1, greatest(len(w) - 1, 2))) AS i FROM w),
-      |sh AS (SELECT DISTINCT doc_id, array_to_string(list_slice(w, i, i + 2), ' ') AS s FROM idx),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-      |cand AS (SELECT a.doc_id AS id1, b.doc_id AS id2, count(*) AS inter
-      |         FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      |p AS (SELECT id1, id2 FROM (
-      |    SELECT id1, id2, CAST(inter AS DOUBLE) / (sa.n + sb.n - inter) AS jaccard
-      |    FROM cand JOIN sizes sa ON sa.doc_id = id1 JOIN sizes sb ON sb.doc_id = id2)
-      |  WHERE jaccard >= 0.8),
-      |e AS (SELECT id1 AS u, id2 AS v FROM p UNION SELECT id2, id1 FROM p),
-      |reach(id, lab) AS (
-      |  SELECT u, u FROM e
-      |  UNION
-      |  SELECT e.u, r.lab FROM reach r JOIN e ON e.v = r.id),
-      |comp AS (SELECT id, min(lab) AS comp FROM reach GROUP BY id)""".stripMargin
-
-  private val COMPONENTS_SQL =
-    s"""WITH RECURSIVE
-       |$COMPONENT_CTES
-       |SELECT id, comp FROM comp ORDER BY id""".stripMargin
-
-  private val CANONICAL_SQL =
-    s"""WITH RECURSIVE
-       |$COMPONENT_CTES
-       |SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS canonical_id
-       |FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-       |ORDER BY d.doc_id""".stripMargin
-
-  /** Cluster-size histogram over the same recursive canonical closure
-    * (`csz`, not `sizes` — COMPONENT_CTES already binds `sizes` to the
-    * shingle-set cardinalities). */
-  private val CLUSTER_SIZES_SQL =
-    s"""WITH RECURSIVE
-       |$COMPONENT_CTES,
-       |canon AS (SELECT d.doc_id, coalesce(c.comp, d.doc_id) AS canonical_id
-       |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
-       |csz AS (SELECT canonical_id, count(*) AS cluster_size FROM canon GROUP BY 1)
-       |SELECT CAST(cluster_size AS BIGINT) AS cluster_size,
-       |  count(*) AS n_clusters,
-       |  CAST(cluster_size * count(*) AS BIGINT) AS n_docs
-       |FROM csz GROUP BY cluster_size ORDER BY cluster_size""".stripMargin
 }

@@ -269,16 +269,6 @@ object Multimodal {
           graft.functions.MediaFunctions.byteChannelStats(col("payload"), offset = 54, stride = 3)))
       .drop("payload")
 
-  /** Frame sampling: every strideth byte window of the payload — the
-    * column-expression form (real frame extraction lives behind the same
-    * batch seam as the header decode). */
-  def sampleFrames(media: DataFrame, frameBytes: Int = 16, nFrames: Int = 4): DataFrame =
-    media.select(
-      col("doc_id"), col("media_type"),
-      transform(sequence(lit(0), lit(nFrames - 1)),
-        i => substring_index(base64(substr(col("payload"),
-          i * (length(col("payload")) / nFrames) + 1, lit(frameBytes))), "=", 1)).as("frames"))
-
   // ---- JPEG / FLAC container seams ---------------------------------------
   // Same philosophy as BMP/WAV but one notch harder on the decode side:
   // JPEG metadata is NOT at a fixed offset — SOF0 sits behind a chain of

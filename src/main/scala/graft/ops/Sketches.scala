@@ -91,19 +91,6 @@ object Sketches {
                      seed: String = "hll:"): DataFrame =
     hllCertificateBy(df, Seq.empty, value, b, seed)
 
-  /** Per-key registers — "distinct users per event type" in ONE pass:
-    * the register table gains the key columns and stays ≤ m rows PER KEY,
-    * still max-mergeable shard-by-shard. This is what a sketch-as-relation
-    * buys over an opaque blob: GROUP BY composes with it. */
-  def hllRegistersBy(df: DataFrame, keys: Seq[String], value: Column,
-                     b: Int = 9, seed: String = "hll:"): DataFrame = {
-    val m = requireB(b)
-    val h = hash(value, seed)
-    df.filter(value.isNotNull)
-      .select(keys.map(col) :+ bucketCol(h, m) :+ rhoCol(h): _*)
-      .groupBy((keys :+ "bucket").map(col): _*).agg(max("rho").as("m_j"))
-  }
-
   /** Per-key certificate: estimate + exact + realized error, one row per
     * key, one linear plan (the [[hllCertificate]] shape with the key
     * threaded through every grain). */

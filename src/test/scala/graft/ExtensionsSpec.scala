@@ -63,12 +63,18 @@ class ExtensionsSpec extends SparkSpec {
 
   test("wrong arity fails with the function signature, not an index error") {
     GraftExtensions.register(spark)
-    for (bad <- Seq("graft_dot(array(1.0d))", "graft_shingles('a', 2, 3)",
-                    "graft_srp_sig(array(1.0d))")) {
+    for ((bad, expected) <- Seq(
+        "graft_dot(array(1.0d))" -> "expects 2 arguments",
+        "graft_shingles('a', 2, 3)" -> "expects 2 arguments",
+        "graft_srp_sig(array(1.0d))" -> "expects 2 arguments",
+        "graft_utf8_stats(CAST('a' AS BINARY), 1)" ->
+          "graft_utf8_stats(bytes) expects 1 argument, got 2",
+        "graft_byte_channel_stats_at(CAST(x'00' AS BINARY), 0, 2)" ->
+          "graft_byte_channel_stats_at(payload, offsetExpr, stride, tailTrim) expects 4 arguments, got 3")) {
       val e = intercept[Exception] { spark.sql(s"SELECT $bad").collect() }
       def chain(t: Throwable): Seq[Throwable] =
         if (t == null) Nil else t +: chain(t.getCause)
-      assert(chain(e).exists(c => Option(c.getMessage).exists(_.contains("expects 2 arguments"))),
+      assert(chain(e).exists(c => Option(c.getMessage).exists(_.contains(expected))),
         s"$bad: ${e.getMessage}")
     }
   }

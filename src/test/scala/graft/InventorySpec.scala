@@ -2,12 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.{Oracle, RowsOnly}
+
 /** Mechanized inventory census — the build-failing check that replaced
   * hand-maintained counts (round 12 needed two correction commits for
   * drifted numbers). The canonical census phrases in COVERAGE.md and
   * SURVEY.md §2.7 — "N queries (M oracle-green + K rows-only" and
   * "N specs" — are parsed and EVERY occurrence must equal the live
-  * counts from `SparkEntry` and the test sources, so a new operator
+  * counts from `SparkEntry.registry` and the test sources, so a new operator
   * landed without its docs (or docs edited without the operator) fails
   * `sbt test`, not a judge's recount. */
 class InventorySpec extends AnyFunSuite {
@@ -31,15 +33,19 @@ class InventorySpec extends AnyFunSuite {
     """(\d+) queries\s+\((\d+) oracle-green \+ (\d+) rows-only""".r
   private val specCensus = """(\d+) specs""".r
 
-  test("oracleSql keys are a subset of queries keys") {
-    val orphans = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(orphans.isEmpty, s"oracleSql entries without a query: $orphans")
+  test("registry names are distinct") {
+    // toMap keeps the last of two queries declared under one name
+    val repeated = SparkEntry.registry.groupBy(_.name).collect {
+      case (name, qs) if qs.size > 1 => name
+    }
+    assert(repeated.isEmpty, s"queries declared more than once: $repeated")
   }
 
   test("COVERAGE.md and SURVEY.md census lines equal the live SparkEntry counts") {
-    val nQueries = SparkEntry.queries.size
-    val nOracle = SparkEntry.oracleSql.size
-    val nRowsOnly = nQueries - nOracle
+    val checks = SparkEntry.registry.map(_.check)
+    val nQueries = checks.size
+    val nOracle = checks.count(_.isInstanceOf[Oracle])
+    val nRowsOnly = checks.count(_.isInstanceOf[RowsOnly])
     Seq("COVERAGE.md", "SURVEY.md").foreach { doc =>
       val text = read(doc)
       val found = queryCensus.findAllMatchIn(text).toSeq
@@ -47,11 +53,11 @@ class InventorySpec extends AnyFunSuite {
         s"$doc carries no canonical census line ('N queries (M oracle-green + K rows-only')")
       found.foreach { m =>
         assert(m.group(1).toInt === nQueries,
-          s"$doc census says ${m.group(1)} queries; SparkEntry.queries has $nQueries")
+          s"$doc census says ${m.group(1)} queries; the registry has $nQueries")
         assert(m.group(2).toInt === nOracle,
-          s"$doc census says ${m.group(2)} oracle-green; SparkEntry.oracleSql has $nOracle")
+          s"$doc census says ${m.group(2)} oracle-green; the registry has $nOracle Oracle entries")
         assert(m.group(3).toInt === nRowsOnly,
-          s"$doc census says ${m.group(3)} rows-only; the live diff is $nRowsOnly")
+          s"$doc census says ${m.group(3)} rows-only; the registry has $nRowsOnly RowsOnly entries")
       }
     }
   }
