@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   * All queries take the sf directory at call time so the same code runs at
   * any scale factor; at cluster scale these would be catalog tables with
   * partition pruning — here they are single parquet files per table.
+  * Every table (and every artifact, through `Artifacts`) is read by
+  * [[parquet]], which infers a path's schema from its footers once and
+  * memoizes it under a fingerprint of the path's files and the session's
+  * parquet confs, so a later load of an unchanged input runs no job.
   */
 object Tables {
   /** Confs every graft session needs, applied at builder time through
@@ -62,20 +68,72 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target, key) else df
   }
 
+  /** The table `name` of the sf dir `sfDir`, read through [[parquet]]:
+    * the first load of a table infers its schema from the footer (one
+    * job); a later load of the unchanged file reuses the memoized schema
+    * and runs none. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Fallback for externally-built sessions only: set once, not per load
     // (a per-load session-conf mutation races with concurrent planners).
     sessionConfs.foreach { case (k, v) =>
       if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
     }
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+  }
+
+  /** What a memoized schema was inferred under: (path, length,
+    * modification time) of every file under the read path, and the
+    * session's `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+    * values, which decide how footer types map to Spark types. */
+  private final case class Fingerprint(files: Seq[(String, Long, Long)],
+                                       confs: Map[String, String])
+
+  /** One entry per read path: its footer-inferred schema and the
+    * fingerprint it was inferred under. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Fingerprint, StructType)]()
+
+  /** Read the parquet file or directory at `path`. A schema-less
+    * `read.parquet` runs one Spark job per call to read a footer, even for
+    * a file read a second earlier; with the schema supplied the read plans
+    * from the file listing alone and runs no job. So the footer-inferred
+    * schema is memoized per path under a [[Fingerprint]] of the path's
+    * files and parquet confs, and any mismatch (a rewritten table, a
+    * rebuilt artifact, a flipped conf) infers again and replaces the
+    * entry. The schema is never hard-coded: `normalizeEvents` branches on
+    * the type the footer declares. A file rewritten in place with the
+    * same length and modification time is the one change the fingerprint
+    * cannot see. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val files = try {
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      // plain FileStatus, never LocatedFileStatus: building one reads the
+      // permissions, which the local file system gets by forking `ls`
+      def leaves(s: FileStatus): Seq[FileStatus] =
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
+      leaves(fs.getFileStatus(root))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    } catch { // a missing path: the inferring read raises Spark's usual error
+      case _: java.io.FileNotFoundException => Nil
+    }
+    val print = Fingerprint(files, spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    })
+    schemas.get(path) match {
+      case (`print`, schema) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val inferred = spark.read.parquet(path)
+        schemas.put(path, (print, inferred.schema))
+        inferred
+    }
   }
 
   /** Raw schema of the events parquet — needed by the streaming file
     * source, which requires an explicit schema. The driver currently
     * writes ts as parquet timestamp[us]; `normalizeEvents` also accepts
     * the earlier nanos-as-long encoding for batch reads. */
-  val eventsRawSchema: org.apache.spark.sql.types.StructType = {
+  val eventsRawSchema: StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampNTZType),

@@ -4,10 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Write-once/read-many parquet artifacts — the train-once seam for
   * expensive deterministic intermediates (IVF centroids, near-dup pair
-  * lists): the first touch builds and writes, every later touch reads.
-  * The build MUST be deterministic so the artifact is a cache, never a
-  * semantic fork; callers own invalidation (rebuild on corpus change),
-  * as with any offline model artifact.
+  * lists): the first touch builds and writes, every later touch reads
+  * through `Tables.parquet`, whose schema memo (keyed by a fingerprint of
+  * the artifact's files and the session's parquet confs) lets a re-touch
+  * of an unchanged artifact run no job; a rebuild writes new part files,
+  * so it is read with a freshly inferred schema. The build MUST be
+  * deterministic so the artifact is a cache, never a semantic fork;
+  * callers own invalidation (rebuild on corpus change), as with any
+  * offline model artifact.
   *
   * The existence probe resolves through the Hadoop FileSystem API from
   * the session conf, so the seam works wherever the path lives — s3a,
@@ -21,7 +25,7 @@ object Artifacts {
     val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(marker))
       build.write.mode("overwrite").parquet(path)
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
   }
 
   /** Absolute location of the `kind` artifact `tag` built from the sf

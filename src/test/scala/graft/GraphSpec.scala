@@ -41,8 +41,8 @@ class GraphSpec extends SparkSpec {
       === graft.ops.Sampling.leakageSafeSplit(docs, pairs)
         .collect().map(r => (r.getLong(0), r.getString(2))).toMap)
     // re-touch must READ, not re-resolve: pointer doubling schedules one
-    // job per round plus the seed aggregate; a pure artifact read
-    // schedules at most the footer/listing job
+    // job per round plus the seed aggregate; a pure artifact read of the
+    // unchanged files reuses the memoized schema and schedules none
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -54,7 +54,7 @@ class GraphSpec extends SparkSpec {
         sys.error("re-touch must not rebuild"): org.apache.spark.sql.DataFrame)
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() <= 1, s"components artifact re-touch ran ${jobs.get()} jobs")
+    assert(jobs.get() === 0, s"components artifact re-touch ran ${jobs.get()} jobs")
   }
 
   test("a 200-node path converges well inside the round budget") {
