@@ -15,14 +15,35 @@ import org.apache.spark.sql.types.StructType
   * parquet confs, so a later load of an unchanged input runs no job.
   */
 object Tables {
+  /** Entries of Spark's codegen cache, which is LRU and keyed by the
+    * generated source and the class loader that compiles it, so a
+    * driver-side and a task-side compile of one source take two entries.
+    * Spark's default of 100 is below graft's working set: a cold pass of
+    * the six `llm_batch` benchmark queries compiles 164 classes, and a
+    * `Verify` pass over all 296 registry queries at sf0.01 3,790. Below
+    * that an LRU cache evicts, on every repeated pass, the classes the
+    * pass asks for next: a warm `llm_batch` pass compiled 115–118
+    * classes at 100 entries and none at 4,096, and the `Verify` pass
+    * compiled 7,816 at 100 (counted with Spark's `CodegenMetrics`,
+    * `local[2]` and `local[4]`). Held classes cost metaspace and code
+    * cache: that `Verify` pass peaked at 230 MB of metaspace (was 214)
+    * and 167 MB of compiled methods (was 147). */
+  val CodegenCacheEntries = 4096
+
   /** Confs every graft session needs, applied at builder time through
     * [[configured]] (by [[session]] for the entrypoints, and by the tests):
-    * nanosAsLong stays set so a TIMESTAMP(NANOS) events regeneration
-    * (the pre-round-9 encoding, which Spark 4 otherwise rejects) reads
-    * as a raw long that `normalizeEvents` adapts to; on the current
-    * timestamp[us] data the conf is a no-op. */
-  val sessionConfs: Map[String, String] =
-    Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    *  - nanosAsLong stays set so a TIMESTAMP(NANOS) events regeneration
+    *    (the pre-round-9 encoding, which Spark 4 otherwise rejects) reads
+    *    as a raw long that `normalizeEvents` adapts to; on the current
+    *    timestamp[us] data the conf is a no-op;
+    *  - the codegen cache holds [[CodegenCacheEntries]], so a repeated
+    *    query reuses its compiled classes. The conf is static: it sizes
+    *    the JVM-wide cache only when set on the builder before the JVM's
+    *    first compile, and a session built without it keeps Spark's
+    *    default. */
+  val sessionConfs: Map[String, String] = Map(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
 
   /** Apply `sessionConfs` to a builder mechanically — every session
     * builder goes through here, so adding a conf above propagates
@@ -75,8 +96,9 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     // Fallback for externally-built sessions only: set once, not per load
     // (a per-load session-conf mutation races with concurrent planners).
+    // A static conf cannot be set at runtime: such a session keeps its value.
     sessionConfs.foreach { case (k, v) =>
-      if (!spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
+      if (spark.conf.isModifiable(k) && !spark.conf.getOption(k).contains(v)) spark.conf.set(k, v)
     }
     parquet(spark, s"$sfDir/$name.parquet")
   }

@@ -1,9 +1,13 @@
 package graft.sinks
 
+import java.time.Instant
+
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import scala.util.{Failure, Success, Try}
 import scala.util.control.NonFatal
+
+import graft.functions.InstantFunctions
 
 /** Per-sink success tracking, mirroring the reference's StorageResult
   * (service/StorageResult.java:11-79): which sinks succeeded, and the
@@ -281,15 +285,24 @@ object Sinks {
     * joined, partial failure produces a DLQ frame covering the batch (the
     * reference's per-record StorageResult folded up to batch
     * granularity). The frame is returned, not appended: a caller that
-    * also appends to the DLQ must order the two appends itself. */
+    * also appends to the DLQ must order the two appends itself.
+    *
+    * `at` is the batch's one instant: the archive's day, both sinks'
+    * `created_at` and the DLQ frame's `timestamp`. `created_at` and
+    * `timestamp` read it by reference ([[graft.functions.BatchInstant]]),
+    * so a later batch reuses the compiled classes; the archive's y/m/d
+    * fold into string literals, which generated code also references. A
+    * `current_timestamp()` column would compile new source on every
+    * call. */
   def fanout(classified: DataFrame, archivePath: String, timeseriesPath: String,
-             rawPath: String, processingTime: Column = current_timestamp()): (StorageResult, Option[DataFrame]) = {
+             rawPath: String, at: Instant = Instant.now()): (StorageResult, Option[DataFrame]) = {
+    val createdAt = InstantFunctions.batchTimestamp(at)
     classified.persist()
     try {
       val writes = Seq(
-        "archive" -> fork("archive")(writeArchive(classified, archivePath, processingTime)),
-        "timeseries" -> fork("timeseries")(writeTimeseries(classified, timeseriesPath, processingTime)),
-        "raw" -> fork("raw")(writeRaw(classified, rawPath, processingTime)))
+        "archive" -> fork("archive")(writeArchive(classified, archivePath, lit(at))),
+        "timeseries" -> fork("timeseries")(writeTimeseries(classified, timeseriesPath, createdAt)),
+        "raw" -> fork("raw")(writeRaw(classified, rawPath, createdAt)))
       joinAll(writes.map(_._2): _*)
       val failures = writes.flatMap { case (name, w) =>
         w.outcome match {
@@ -313,7 +326,8 @@ object Sinks {
           // batch lineage after the unpersist below (and possibly diverge
           // from what the sinks actually saw)
           val f = dlqFrame(classified,
-            errorReason = s"Storage failed for: ${failures.map(_._1).mkString(",")}")
+            errorReason = s"Storage failed for: ${failures.map(_._1).mkString(",")}",
+            timestamp = InstantFunctions.batchMillis(at))
           f.persist()
           f.count()
           Some(f) // caller should unpersist after delivering it

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
+import graft.functions.InstantFunctions
 import graft.ops.{Hrfco, Thresholds}
 import graft.sinks.Sinks
 
@@ -28,6 +29,13 @@ import graft.sinks.Sinks
   *    The storage-failure DLQ append starts only after the parse-failure
   *    one has finished (one parquet directory, one committer), and a
   *    failed parse-failure append still fails the batch;
+  *  - each micro-batch takes one instant on the driver. It is the parse
+  *    fallback time, the DLQ `timestamp` of both DLQ producers, the sinks'
+  *    `created_at` and the archive's day, so the sinks of one batch agree.
+  *    Generated code reads it by reference
+  *    ([[graft.functions.BatchInstant]]), so a warm stream compiles no
+  *    class per batch; a `current_timestamp()` compiles new source on
+  *    every call;
   *  - the threshold dim is re-derived per batch — the streaming analogue
   *    of the reference's continuously-refreshed broadcast dimension.
   */
@@ -78,17 +86,20 @@ object StreamingPipeline {
         // Both DLQ producers share one envelope schema (camelCase + ts).
         // The raw projection is computed once and persisted so the DLQ
         // write and the storage fanout share ONE scan of the micro-batch.
+        // the batch's one instant (see above)
+        val at = java.time.Instant.now()
         val raw = Hrfco.rawObservations(batch).persist()
         try {
-          val classified = Hrfco.pipelineFromRaw(raw, dimProvider(), wlMax = wlMax)
+          val classified = Hrfco.pipelineFromRaw(raw, dimProvider(),
+            tsFallback = InstantFunctions.batchTimestamp(at), wlMax = wlMax)
           // the parse-failure DLQ append runs alongside the fanout's three
           // writes, on a thread that inherits this batch's local properties
           val parseDlq = Sinks.fork("dlq") {
-            Hrfco.dlqEnvelope(raw).drop("event_id")
+            Hrfco.dlqEnvelope(raw, InstantFunctions.batchMillis(at)).drop("event_id")
               .write.mode("append").parquet(paths.dlq)
           }
           val (result, dlq) =
-            try Sinks.fanout(classified, paths.archive, paths.timeseries, paths.raw)
+            try Sinks.fanout(classified, paths.archive, paths.timeseries, paths.raw, at)
             finally Sinks.joinAll(parseDlq)
           try {
             // a failed parse-failure DLQ write fails the batch; otherwise

@@ -216,6 +216,37 @@ class StreamingSpec extends SparkSpec {
         s"${seen.count(!_.contains(q.id.toString))} of ${seen.size} jobs lack its id")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("micro-batches after the first compile no class") {
+    // a per-batch instant pasted into generated source (a folded
+    // `current_timestamp()`) would compile the classify stage, the DLQ
+    // envelope and both sink projections again on every batch. The dim
+    // provider runs once at the start of each batch, so the compile counts
+    // it records split the run by batch.
+    val (work, srcDir, ev) = eventSource("codegen", 3)
+    val dim = Thresholds.fromEvents(ev)
+    def compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val paths = StreamingPipeline.SinkPaths(
+      s"$work/archive", s"$work/timeseries", s"$work/raw", s"$work/dlq")
+    val q = StreamingPipeline.startWithDim(spark, srcDir, () => { marks.add(compiled); dim },
+      paths, s"$work/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0)
+    assert(q.awaitTermination(120000), "streaming query timed out")
+    marks.add(compiled)
+    val perBatch = marks.asScala.toSeq.sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    assert(perBatch.size === 3, s"expected three micro-batches: $perBatch")
+    assert(perBatch.tail === Seq(0L, 0L), s"classes compiled per batch: $perBatch")
+    assert(spark.read.parquet(paths.timeseries).count() ===
+      Hrfco.pipeline(ev, dim, wlMax = 300.0).count())
+    // one instant per batch, shared by both sinks and the DLQ
+    def instants(path: String, c: org.apache.spark.sql.Column) =
+      spark.read.parquet(path).select(c).distinct().collect().map(_.getLong(0)).sorted.toSeq
+    val created = instants(paths.timeseries, unix_millis(col("created_at")))
+    assert(created.size === 3, s"created_at values: $created")
+    assert(instants(paths.raw, unix_millis(col("created_at"))) === created)
+    assert(instants(paths.dlq, col("timestamp")) === created)
+  }
 }
 
 /** The local file system under the `slowclose:` scheme, except that each

@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
 /** `Tables.parquet`'s schema memo: a load reports the schema a plain
   * `read.parquet` infers, a repeated load of an unchanged input runs no
   * job, and a rewritten file or a flipped parquet conf is never read with
-  * the stale schema. */
+  * the stale schema. And `Tables.sessionConfs`' codegen cache holds a
+  * working set larger than Spark's default. */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
 
@@ -91,5 +92,19 @@ class TablesSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("a repeated cycle of 150 distinct generated classes compiles none") {
+    // each projection pastes its own literal into the generated source, so
+    // the cycle asks for more classes than Spark's default 100-entry LRU
+    // cache holds: there, every class is evicted before the cycle comes
+    // back to it
+    val cycle = (1 to 150).map(i => () => spark.range(10).selectExpr(s"id * $i").collect())
+    cycle.foreach(_())
+    def compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
+    val before = compiled
+    cycle.foreach(_())
+    assert(compiled - before === 0, "classes compiled by the second cycle")
   }
 }
