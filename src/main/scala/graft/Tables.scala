@@ -40,10 +40,26 @@ object Tables {
     *    query reuses its compiled classes. The conf is static: it sizes
     *    the JVM-wide cache only when set on the builder before the JVM's
     *    first compile, and a session built without it keeps Spark's
-    *    default. */
+    *    default;
+    *  - the `file:` scheme is served by [[graft.util.LocalFileSystem]] and,
+    *    for FileContext, [[graft.util.LocalFs]]. Without libhadoop
+    *    Hadoop's local file system forks `chmod` for every file and
+    *    directory it creates and `readlink` twice per FileContext rename:
+    *    one `hrfco_stream` benchmark run started 2,357 processes (1,594
+    *    `chmod`, 728 `readlink`), about 80 per micro-batch at 3–5 ms each,
+    *    from the sinks, the DLQ and the checkpoint's offset and commit
+    *    logs. graft's subclass does the same work through `java.nio.file`:
+    *    34 process starts remain, all Spark's own, and the checkpoint's
+    *    WAL commit fell from 32–34 to 2–4 ms per batch (JFR census and
+    *    traced runs, `local[2]` on a 4-core VM). These are Hadoop
+    *    confs (`spark.hadoop.*`), not SQL confs, so [[load]]'s runtime
+    *    fallback cannot set them: a session not built through
+    *    [[configured]] keeps Hadoop's forking file system. */
   val sessionConfs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString)
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" -> classOf[graft.util.LocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.util.LocalFs].getName)
 
   /** Apply `sessionConfs` to a builder mechanically — every session
     * builder goes through here, so adding a conf above propagates

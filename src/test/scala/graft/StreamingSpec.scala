@@ -247,6 +247,31 @@ class StreamingSpec extends SparkSpec {
     assert(instants(paths.raw, unix_millis(col("created_at"))) === created)
     assert(instants(paths.dlq, col("timestamp")) === created)
   }
+
+  test("a micro-batch starts no process") {
+    // without libhadoop, Hadoop's own local file system forks `chmod` for
+    // every file and directory the sinks, the DLQ and the checkpoint create
+    // and `readlink` for every checkpoint-log rename: dozens per batch
+    val (work, srcDir, ev) = eventSource("forks", 3)
+    val dim = Thresholds.fromEvents(ev)
+    val paths = StreamingPipeline.SinkPaths(
+      s"$work/archive", s"$work/timeseries", s"$work/raw", s"$work/dlq")
+    var batches = 0L
+    val forks = ProcessStarts.fromHadoopFs {
+      val q = StreamingPipeline.startWithDim(spark, srcDir, () => dim, paths,
+        s"$work/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0)
+      assert(q.awaitTermination(120000), "streaming query timed out")
+      batches = q.recentProgress.count(_.numInputRows > 0)
+    }
+    assert(batches === 3, "expected three micro-batches")
+    assert(forks.size === 0, s"processes started, e.g. ${forks.take(3)}")
+    val stored = Hrfco.pipeline(ev, dim, wlMax = 300.0).count()
+    assert(graft.sinks.Sinks.readArchive(spark, paths.archive).count() === stored)
+    assert(spark.read.parquet(paths.timeseries).count() === stored)
+    assert(spark.read.parquet(paths.raw).count() === stored)
+    assert(spark.read.parquet(paths.dlq).count() ===
+      Hrfco.dlqEnvelope(Hrfco.rawObservations(ev)).count())
+  }
 }
 
 /** The local file system under the `slowclose:` scheme, except that each
