@@ -1,17 +1,26 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark: times every SparkEntry.queries entry at the given
-  * scale factor and prints ONE JSON line. Queries are materialized through
-  * the noop datasource (full execution of every operator and expression —
-  * `.count()` would let Catalyst prune most of the work). */
+  * scale factor and prints two JSON lines, the per-query detail line and
+  * then a short summary line. Queries are materialized through the noop
+  * datasource (full execution of every operator and expression —
+  * `.count()` would let Catalyst prune most of the work).
+  *
+  * env: SPARK_GRAFT_SF_DIR (the scale-factor directory), SPARK_GRAFT_CPUS
+  * (default 32), SPARK_GRAFT_BENCH_ONLY=q1,q2 (restricts the run; its
+  * lines are marked "filtered"). A/B work belongs to perfbench/. */
 object Bench {
-  @volatile private var calSink: Long = 0L
+  type Build = (SparkSession, String) => DataFrame
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).toSet)
+    val selected = select(SparkEntry.queries, only)
     val spark = Tables.session(cpus)
 
     // Warm the session (codegen, shuffle machinery, parquet footers) so the
@@ -20,571 +29,68 @@ object Bench {
       .groupBy("k").count().write.format("noop").mode("overwrite").save()
     Tables.lineitem(spark, sfDir).limit(1).collect()
 
-    // Host calibration: a fixed synthetic workload (no data dependency, no
-    // IO variance) timed before and after the query loop. This sandbox's
-    // host demonstrably slows 2.5x mid-session on byte-identical code
-    // (GATE_r6.md); the cal numbers let a reader — and bench_gate.py —
-    // distinguish host drift from genuine regression. min-of-3 after the
-    // warm-up above, so JIT/codegen are already paid.
-    def hostCal(): Double = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        spark.range(8000000L)
-          .select((col("id") % 9973).as("k"), col("id"))
-          .groupBy("k")
-          .agg(sum("id").as("s"), avg("id").as("a"), count(lit(1)).as("c"))
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      Seq.fill(3)(once()).min
-    }
-    // Engine-INDEPENDENT calibration: a pure-JVM xorshift loop that never
-    // touches Spark. The Spark-based cal above runs through the engine under
-    // test, so a uniform engine regression in aggregation/codegen would
-    // inflate it identically and be rescaled away by the gate; this loop
-    // measures only the host CPU. bench_gate.py prefers this number when
-    // both compared runs carry it.
-    // jvmCalOnce is also the adjudication's per-flag snapshot — ONE loop
-    // body, so the snapshot provably measures the same workload as the
-    // before/after numbers it is read against
-    def jvmCalOnce(): Double = {
-      val t0 = System.nanoTime()
-      var x = 0x9E3779B97F4A7C15L
-      var s = 0L
-      var i = 0
-      while (i < 300000000) {
-        x ^= x << 13; x ^= x >>> 7; x ^= x << 17; s += x; i += 1
-      }
-      calSink = s // observable side effect so the JIT can't elide the loop
-      (System.nanoTime() - t0) / 1e9
-    }
-    def jvmCal(): Double = Seq.fill(3)(jvmCalOnce()).min
-    // Memory-bandwidth calibration: the jvm xorshift loop is pure-ALU and
-    // stays flat through host phases that slow MEMORY-BOUND work (round-12
-    // adjudication found untouched queries elevated ~1.4x with jvm-cal
-    // flat at 0.62 — the phase the ALU loop cannot see). This loop streams
-    // a 256 MB long array (far past LLC) so its time tracks DRAM
-    // bandwidth, the resource shuffles and scans actually contend for.
-    val memArr = new Array[Long](32 * 1024 * 1024)
-    java.util.Arrays.fill(memArr, 0x9E3779B97F4A7C15L)
-    // memCalOnce is also the adjudication's per-flag snapshot (round 13):
-    // the round-12 adjudication proved the contaminating phase is a
-    // BANDWIDTH phase the per-flag jvm-cal snapshot is blind to (jvm flat
-    // at 0.62 while untouched control queries ran 1.4x slow), so 4 flags
-    // stayed open that a clean run closed trivially. One loop body shared
-    // with the before/after numbers, same reasoning as jvmCalOnce.
-    def memCalOnce(): Double = {
-      val t0 = System.nanoTime()
-      var s = 0L
-      var pass = 0
-      while (pass < 6) {
-        var i = 0
-        // stride 8 longs = one touch per 64 B cache line: the loop is
-        // line-fill-bound, not ALU-bound
-        while (i < memArr.length) { s += memArr(i); i += 8 }
-        pass += 1
-      }
-      calSink = s
-      (System.nanoTime() - t0) / 1e9
-    }
-    def memCal(): Double = Seq.fill(3)(memCalOnce()).min
+    lines(time(spark, sfDir, selected), only.isDefined, sfDir).foreach(println)
+    spark.stop()
+  }
 
-    // ---- prior clean record (parsed BEFORE the timed pass: it both seeds
-    // the host-settle precondition below and the self-adjudication after
-    // the loop) ----------------------------------------------------------
-    // SPARK_GRAFT_BENCH_RECORD points at an alternate record file (used
-    // by the gate ritual to adjudicate against a mid-round run, and to
-    // exercise the flag path in testing); default is the committed
-    // resource — the prior round's clean record. The queries map is only
-    // usable at the record's own scale factor; the calibration readings
-    // are pure host probes and scale-independent.
-    val (record: Map[String, Double], recordMemCal: Option[Double],
-         recordJvmCal: Option[Double]) =
-      try {
-        val txt = sys.env.get("SPARK_GRAFT_BENCH_RECORD") match {
-          case Some(p) => Some(new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-            java.nio.charset.StandardCharsets.UTF_8))
-          case None =>
-            Option(getClass.getResourceAsStream("/graft/bench_record.json")).map { in =>
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            }
-        }
-        txt.map { t =>
-          import org.json4s._
-          val parsed = org.json4s.jackson.JsonMethods.parse(t)
-          // the record must come from the SAME scale factor: flag ratios
-          // across scales are meaningless (see the adjudication comment
-          // below). A record without an "sf" field is refused likewise.
-          val recSf = parsed \ "sf" match {
-            case JString(s) => Some(s)
-            case _ => None
-          }
-          def num(v: JValue): Option[Double] = v match {
-            case JDouble(d) => Some(d)
-            case JInt(i) => Some(i.toDouble)
-            case JDecimal(d) => Some(d.toDouble)
-            case _ => None
-          }
-          // the record's clean calibration readings: min of its
-          // before/after pair — the host-settle reference and the
-          // denominator for per-flag bandwidth-phase normalization
-          val mem = Seq(parsed \ "mem_cal_before", parsed \ "mem_cal_after")
-            .flatMap(num).filter(_ > 0)
-          val jvm = Seq(parsed \ "jvm_cal_before", parsed \ "jvm_cal_after")
-            .flatMap(num).filter(_ > 0)
-          val qs =
-            if (!recSf.contains(sfDir)) {
-              System.err.println(s"[bench] record sf ${recSf.getOrElse("<absent>")} " +
-                s"!= run sf $sfDir — self-adjudication disabled for this run")
-              Map.empty[String, Double]
-            } else parsed \ "queries" match {
-              case JObject(fields) => fields.flatMap { case (k, v) => num(v).map(k -> _) }.toMap
-              case _ => Map.empty[String, Double]
-            }
-          (qs, if (mem.isEmpty) None else Some(mem.min),
-            if (jvm.isEmpty) None else Some(jvm.min))
-        }.getOrElse((Map.empty[String, Double], None, None))
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] prior record unreadable: ${e.getMessage}")
-        (Map.empty[String, Double], None, None)
-      }
-
-    // ---- standalone interleaved A/B mode (round 17 gate tooling) --------
-    // SPARK_GRAFT_INTERLEAVE=<query>[:<rounds>] runs ONLY the interleaved
-    // same-JVM A/B of <query> against the pinned untouched control and
-    // prints one JSON line — the instrument the r16 verdict promoted to
-    // official adjudication evidence, exposed directly so the gate ritual
-    // can confirm or re-baseline a record under a never-flat host without
-    // waiting for a flag to fire. Both sides warm once (JIT/codegen paid
-    // outside the measured rounds), then alternate; mins are the answer.
-    sys.env.get("SPARK_GRAFT_INTERLEAVE").foreach { spec =>
-      val parts = spec.split(":")
-      val qName = parts(0).trim
-      val abRounds = if (parts.length > 1) parts(1).trim.toInt else 4
-      require(SparkEntry.queries.contains(qName),
-        s"SPARK_GRAFT_INTERLEAVE names unknown query: $qName")
-      val cName = if (qName == "q5_region_revenue") "q1_pricing_summary"
-                  else "q5_region_revenue"
-      def timeQ(n: String): Double = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      def ibarrier(): Unit = {
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        spark.catalog.clearCache()
-      }
-      timeQ(qName); ibarrier(); timeQ(cName); ibarrier()
-      val jvmB = jvmCalOnce(); val memB = memCalOnce()
-      val as = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val cs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var i = 0
-      while (i < abRounds) {
-        as += timeQ(qName); ibarrier()
-        cs += timeQ(cName); ibarrier()
-        i += 1
-      }
-      val jvmA = jvmCalOnce(); val memA = memCalOnce()
-      def arr(xs: Seq[Double]) = xs.mkString("[", ",", "]")
-      println(s"""{"metric":"interleave","query":"$qName","ctrl":"$cName"""" +
-        s""","rounds":$abRounds,"a":${arr(as.toSeq)},"c":${arr(cs.toSeq)}""" +
-        s""","a_min":${as.min},"c_min":${cs.min}""" +
-        s""","record_a":${record.getOrElse(qName, -1.0)}""" +
-        s""","record_c":${record.getOrElse(cName, -1.0)}""" +
-        s""","jvm_cal_before":$jvmB,"jvm_cal_after":$jvmA""" +
-        s""","mem_cal_before":$memB,"mem_cal_after":$memA,"sf":"$sfDir"}""")
-      spark.stop()
-      sys.exit(0)
-    }
-
-    // ---- host-settle precondition (round 14) ----------------------------
-    // Five consecutive official records were taken on whatever host phase
-    // happened to be live, and the adjudicator then spent the round
-    // REFUTING the resulting flags (16/16 in-band last round). Prevention
-    // beats adjudication: refuse to start the timed pass until the two
-    // engine-independent probes sit inside a tolerance band of the
-    // committed clean record's readings (jvm ≤ 1.10x — the ALU probe is
-    // flat on a clean host; mem ≤ 1.25x — DRAM readings wobble ~10%
-    // clean-to-clean). Bounded: up to 12 attempts, ~4 s apart, then the
-    // run PROCEEDS with settle_ok:false and the full attempt trail in the
-    // record — a refusal to start would leave the round with no official
-    // number at all, which is strictly worse than a flagged one.
-    val settleTrail = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    val settleStatus: String =
-      (recordJvmCal, recordMemCal) match {
-        case (Some(jvmRef), Some(memRef)) =>
-          var ok = false
-          var attempt = 0
-          while (!ok && attempt < 12) {
-            val j = jvmCalOnce()
-            val m = memCalOnce()
-            settleTrail += ((j, m))
-            ok = j <= 1.10 * jvmRef && m <= 1.25 * memRef
-            attempt += 1
-            if (!ok && attempt < 12) Thread.sleep(4000)
-          }
-          if (!ok) System.err.println(
-            s"[bench] host did not settle after $attempt probes " +
-              s"(last jvm=${settleTrail.last._1} vs ref $jvmRef, " +
-              s"mem=${settleTrail.last._2} vs ref $memRef) — proceeding, " +
-              "the record carries the trail")
-          if (ok) "settled" else "exhausted"
-        case _ =>
-          System.err.println("[bench] no calibration reference in the prior " +
-            "record — host-settle precondition skipped")
-          "no_reference"
-      }
-    val settleJson = {
-      val refs = s""""ref_jvm":${recordJvmCal.getOrElse(-1.0)},"ref_mem":${recordMemCal.getOrElse(-1.0)}"""
-      val attempts = settleTrail.map { case (j, m) => s"""{"jvm":$j,"mem":$m}""" }
-        .mkString("[", ",", "]")
-      s""""settle":{"status":"$settleStatus",$refs,"attempts":$attempts}"""
-    }
-
-    val calBefore = hostCal()
-    val jvmCalBefore = jvmCal()
-    val memCalBefore = memCal()
-
-    // two executions per query, keep the min: the first run pays JIT +
-    // codegen compilation (measured 3-6x on the hot path) and this host's
-    // load noise is large; steady-state is the honest number for an
-    // engine that runs queries repeatedly
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run for targeted profiling
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // a typo'd filter must not masquerade as a (fast, empty) full run
+  /** The queries a run times, in name order. A typo'd filter must not
+    * masquerade as a (fast, empty) full run, so an unknown name is an
+    * error. */
+  def select(queries: Map[String, Build], only: Option[Set[String]]): Seq[(String, Build)] = {
     only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
+      val unknown = names.diff(queries.keySet)
       if (unknown.nonEmpty)
         sys.error(s"SPARK_GRAFT_BENCH_ONLY names unknown queries: ${unknown.mkString(",")}")
     }
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = selected.map { case (name, fn) =>
-      def once(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
-        }
-      }
-      // isolation barrier: queries that persist() intermediates would
-      // serve run 2 from run 1's cache and undercount, and the scoped
-      // caches release via ASYNC listener events — drain the bus so a
-      // prior run's release (or lingering storage) can't land mid-way
-      // through the next timed run, then clear whatever remains
-      def barrier(): Unit = {
-        org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-        spark.catalog.clearCache()
-      }
-      val first = once()
-      barrier()
-      val second = once()
-      barrier()
-      (first, second) match {
-        case (Some(a), Some(b)) => (name, math.min(a, b), true)
-        case _ => (name, 0.0, false)
-      }
-    }
-    // failed queries are reported as -1 so a crash can never read as a
-    // fast run in the machine-readable output
-    val qs = results.map { case (k, v, ok) => "\"" + k + "\":" + (if (ok) v else -1.0) }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (k, _, false) => "\"" + k + "\"" }.mkString("[", ",", "]")
-    val total = results.collect { case (_, v, true) => v }.sum
-    val calAfter = hostCal()
-    val jvmCalAfter = jvmCal()
-    val memCalAfter = memCal()
+    queries.toSeq.sortBy(_._1).filter { case (n, _) => only.forall(_.contains(n)) }
+  }
 
-    // ---- in-band self-adjudication --------------------------------------
-    // Three consecutive official records (r9-r11) were host-contaminated
-    // — a degraded host phase mid-run elevated 10-20 queries >2x their
-    // clean-record times, and each round burned an adjudication pass
-    // cross-referencing gate runs after the fact. Close the loop IN the
-    // record: any query that lands >2x its entry in the committed prior
-    // clean record (shipped as a resource; the 2x ratio is the VERDICT's
-    // perf-weak rule and the >1s absolute floor is bench_gate.py's
-    // sub-second-wobble guard — NOTE the gate itself fails at 1.5x, so a
-    // 1.5-2x elevation still needs the gate's cal-normalized compare
-    // rather than an in-band re-run) is re-run immediately with a fresh
-    // engine-independent jvm-cal snapshot alongside, so the record
-    // carries its own refutation (re-run back in band ⇒ host phase) or
-    // confirmation (still elevated on a clean cal ⇒ real) and needs no
-    // gate archaeology. Queries absent from the record (new this round)
-    // cannot flag, and a record taken at a DIFFERENT scale factor
-    // disables adjudication entirely (comparing sf0.1 times against an
-    // sf1 run would mass-flag; against sf0.001 it could never fire).
-    // The full bench at sf0.1 runs only on the official driver pass, so
-    // the extra re-runs cost seconds, bounded by the flag count.
-    // (The prior clean record itself is parsed before the timed pass —
-    // it also seeds the host-settle precondition.)
-    val flagged = results.collect {
-      case (name, v, true) if record.get(name).exists(r => r > 0 && v > 2 * r && v - r > 1.0) =>
-        (name, v, record(name))
-    }
-    // Per-flag control queries (round 13): the re-run alone cannot clear a
-    // flag when the host phase outlives the re-run (round 12 left 4 flags
-    // open that way — q_dlq re-ran 1.94 s vs record 0.57 INSIDE the
-    // phase). Each flag therefore also times one untouched control pair —
-    // q1_pricing_summary (CPU-flat across observed phases) and
-    // q5_region_revenue (shuffle/scan-bound, tracks bandwidth phases) —
-    // plus a mem-cal snapshot, and the flag closes if the re-run is back
-    // in band AFTER dividing out the host's current measured slowdown.
-    // The normalizer is the MIN of (mem-cal ratio, q5 ratio), max'd with
-    // 1.0: both an engine-independent probe and a real query must agree
-    // the host is slow, and the lesser elevation is used — a fast host
-    // can never excuse a slow query, and a genuinely regressed query
-    // cannot normalize itself (its own time plays no part in the norm).
-    val ctrlFlatName = "q1_pricing_summary"
-    val ctrlPhaseName = "q5_region_revenue"
-    def runControl(name: String): Double =
-      SparkEntry.queries.get(name).map { fn =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] control $name failed: ${e.getMessage}"); -1.0
-        }
-      }.getOrElse(-1.0)
-    def adjBarrier(): Unit = {
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-      spark.catalog.clearCache()
-    }
-    // ---- interleaved same-JVM A/B (round 17) -----------------------------
-    // The one instrument that produced a usable answer under r16's
-    // never-flat host (it refuted the r15 triangle-guard regression claim):
-    // alternate the flagged query with a PINNED UNTOUCHED CONTROL `rounds`
-    // times in the same JVM, so both sample the same host phases, and keep
-    // each side's MIN — the best window each saw. Promoted from ad-hoc gate
-    // tooling to official adjudication evidence (VERDICT r16 item 1). The
-    // control is q5 (shuffle/scan-bound, tracks every phase family seen so
-    // far); when the flag IS q5 the flat control substitutes.
-    def interleaveAB(name: String, rounds: Int): (Double, Double, String) = {
-      val ctrlName = if (name == ctrlPhaseName) ctrlFlatName else ctrlPhaseName
-      var aMin = -1.0
-      var cMin = -1.0
-      var i = 0
-      while (i < rounds) {
-        val a = {
-          val t0 = System.nanoTime()
-          try { SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] interleave $name failed: ${e.getMessage}")
-            -1.0 }
-        }
-        adjBarrier()
-        val c = runControl(ctrlName)
-        adjBarrier()
-        if (a > 0 && (aMin < 0 || a < aMin)) aMin = a
-        if (c > 0 && (cMin < 0 || c < cMin)) cMin = c
-        i += 1
-      }
-      (aMin, cMin, ctrlName)
-    }
-    // ---- adjudication re-settle (round 16) -------------------------------
-    // The settle precondition guards only the START of the run: 22 of 23
-    // official r15 flags were a host phase that developed mid-run, and the
-    // adjudicator's reruns themselves executed under 2-3x controls — the
-    // one genuinely-open flag was adjudicated on evidence as contaminated
-    // as the reading it was meant to judge. Before each flag's rerun,
-    // re-probe the engine-independent cals against the clean record's refs
-    // and WAIT (bounded) for the host to return to flat; if it never
-    // does, the adjudication proceeds but the flag is recorded as
-    // "deferred_host" — an explicit in-band deferral, never presented as
-    // a clean open flag nor laundered closed. Once a re-settle exhausts,
-    // later flags probe with a short budget (the phase evidently
-    // persists; burning 12 waits per flag would add minutes for nothing).
-    var resettleExhausted = false
-    def resettleForAdjudication(): (Boolean, Int) =
-      (recordJvmCal, recordMemCal) match {
-        case (Some(jvmRef), Some(memRef)) =>
-          val maxAttempts = if (resettleExhausted) 2 else 12
-          var ok = false
-          var attempt = 0
-          while (!ok && attempt < maxAttempts) {
-            val j = jvmCalOnce()
-            val m = memCalOnce()
-            ok = j <= 1.10 * jvmRef && m <= 1.25 * memRef
-            attempt += 1
-            if (!ok && attempt < maxAttempts) Thread.sleep(4000)
-          }
-          if (!ok) resettleExhausted = true else resettleExhausted = false
-          (ok, attempt)
-        // no clean-record refs: flatness is unjudgeable, same stance as
-        // the start-of-run precondition (proceed, never block)
-        case _ => (true, 0)
-      }
-    val adjudicated = flagged.map { case (name, mainT, rec) =>
-      val (calFlat, resettleAttempts) = resettleForAdjudication()
-      val calSnap = jvmCalOnce()
-      val memSnap = memCalOnce()
-      def rerunOnce(): Option[Double] = {
-        val t0 = System.nanoTime()
-        try { SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-          Some((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] adjudication rerun of $name failed: ${e.getMessage}")
-          None
-        }
-      }
-      val r1 = rerunOnce()
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-      spark.catalog.clearCache()
-      val r2 = rerunOnce()
-      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-      spark.catalog.clearCache()
-      val rerun: Double =
-        (r1.toSeq ++ r2.toSeq).reduceOption((a: Double, b: Double) => math.min(a, b))
-          .getOrElse(-1.0)
-      val ctrlFlat = runControl(ctrlFlatName)
-      val ctrlPhase = runControl(ctrlPhaseName)
-      adjBarrier()
-      val memRatio = recordMemCal.filter(_ > 0).collect {
-        case m if memSnap > 0 => memSnap / m
-      }
-      // a flagged control query must not normalize ITSELF: when the flag
-      // is q5 (or q1) its fresh control run is excluded from the norm, and
-      // the engine-independent mem-cal ratio must be present at all for any
-      // norm > 1 — without it a lone query ratio could launder a real
-      // regression into "host phase" (r13 advice)
-      val ctrlRatio = record.get(ctrlPhaseName)
-        .filter(r => r > 0 && name != ctrlPhaseName).collect {
-          case r if ctrlPhase > 0 => ctrlPhase / r
-        }
-      // third member (round 17, VERDICT r16 item 2): the CPU-flat control's
-      // ratio joins the agreed set — r16's scheduler/IO phase elevated every
-      // real Spark job while BOTH probes stayed flat, so min(mem, q5) was
-      // blind to it. The min rule is retained: a fast host still never
-      // excuses a slow query, the new member can only make the norm more
-      // conservative or corroborate a phase the probes miss.
-      val flatRatio = record.get(ctrlFlatName)
-        .filter(r => r > 0 && name != ctrlFlatName).collect {
-          case r if ctrlFlat > 0 => ctrlFlat / r
-        }
-      val agreed = Seq(memRatio, flatRatio, ctrlRatio).flatten
-      val norm =
-        if (memRatio.isEmpty || agreed.isEmpty) 1.0
-        else math.max(1.0, agreed.min)
-      // closure, in evidence-strength order: "rerun" = plain re-run back
-      // in band (the r12 rule, 2x + 1 s floor); "control" = re-run in band
-      // after host normalization, at the verdict's tighter 1.3x bar;
-      // "interleaved" = the same-JVM A/B (round 17) — run ONLY for flags
-      // the first two instruments cannot close, it alternates the flag
-      // with a pinned control 4 rounds so both sample the same host
-      // phases, and judges the flag's min against the control-normalized
-      // 1.3x bar. A flag that STILL fails is open only if the interleave's
-      // own control evidence was clean; a contaminated control (>2x + 1 s
-      // vs record — the r16 scheduler phase that read 21-34 s on q1 with
-      // cal_flat:true) or a hot-host re-settle is an explicit DEFERRAL —
-      // the evidence against the flag is as contaminated as the reading
-      // it judges, so the record says so instead of presenting a
-      // contaminated open flag as engine truth.
-      val preliminary =
-        if (rerun >= 0 && !(rerun > 2 * rec && rerun - rec > 1.0)) "rerun"
-        else if (rerun >= 0 && {
-          val eff = rerun / norm
-          !(eff > 1.3 * rec && eff - rec > 1.0)
-        }) "control"
-        else ""
-      val (closedBy, abMin, abCtrlMin, abNorm) =
-        if (preliminary.nonEmpty) (preliminary, -1.0, -1.0, 1.0)
-        else {
-          val (aMin, cMin, abCtrlName) = interleaveAB(name, 4)
-          val abCtrlRec = record.get(abCtrlName).filter(_ > 0)
-          val iNorm = abCtrlRec.filter(_ => cMin > 0)
-            .map(r => math.max(1.0, cMin / r)).getOrElse(1.0)
-          val effI = if (aMin > 0) aMin / iNorm else -1.0
-          val ctrlContaminated =
-            abCtrlRec.exists(r => cMin > 2 * r && cMin - r > 1.0)
-          val by =
-            if (effI >= 0 && !(effI > 1.3 * rec && effI - rec > 1.0)) "interleaved"
-            else if (!calFlat || ctrlContaminated) "deferred_host"
-            else ""
-          (by, aMin, cMin, iNorm)
-        }
-      (name, mainT, rerun, rec, calSnap, memSnap, ctrlFlat, ctrlPhase, norm,
-        closedBy, calFlat, resettleAttempts, abMin, abCtrlMin, abNorm)
-    }
-    val adjJson = adjudicated.map {
-      case (name, mainT, rerun, rec, calSnap, memSnap, ctrlFlat, ctrlPhase,
-            norm, closedBy, calFlat, resettleAttempts, abMin, abCtrlMin,
-            abNorm) =>
-        "\"" + name + "\":{\"main\":" + mainT + ",\"rerun\":" + rerun +
-          ",\"record\":" + rec + ",\"jvm_cal\":" + calSnap +
-          ",\"mem_cal\":" + memSnap + ",\"ctrl_flat\":" + ctrlFlat +
-          ",\"ctrl_phase\":" + ctrlPhase + ",\"norm\":" + norm +
-          ",\"cal_flat\":" + calFlat +
-          ",\"resettle_attempts\":" + resettleAttempts +
-          ",\"ab_min\":" + abMin + ",\"ab_ctrl_min\":" + abCtrlMin +
-          ",\"ab_norm\":" + abNorm +
-          ",\"closed_by\":\"" + closedBy + "\"}"
-    }.mkString("{", ",", "}")
-    // a flag stays OPEN only if the immediate re-run lands >2x the record
-    // raw AND >1.3x after dividing out the measured host slowdown — those
-    // are the engine's to answer, PROVIDED the adjudication itself ran on
-    // flat cals; the rest are self-refuted host wobble (closed in-band)
-    // or explicit host deferrals (listed apart, never silently open)
-    val flagsOpen = adjudicated.collect {
-      case (name, _, _, _, _, _, _, _, _, closedBy, _, _, _, _, _)
-        if closedBy.isEmpty => "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val flagsDeferred = adjudicated.collect {
-      case (name, _, _, _, _, _, _, _, _, closedBy, _, _, _, _, _)
-        if closedBy == "deferred_host" => "\"" + name + "\""
-    }.mkString("[", ",", "]")
-    val adj = s""""adjudication":$adjJson,"flags_open":$flagsOpen,"flags_deferred":$flagsDeferred"""
-    // ---- adjudicated total (round 18) ------------------------------------
-    // The official r17 summary read 554.87 s = 2.82x the record total while
-    // three committed same-HEAD runs read 1.15-1.35x: the raw total sums
-    // every contaminated main-pass time even when the in-band adjudication
-    // itself PROVED (rerun / interleave back in band) that the main reading
-    // was a host phase — and the raw value additionally absorbs none of
-    // that proof. So beside the raw total, emit a total where each FLAGGED
-    // query contributes the best direct timing of that query this run
-    // observed — min over (main, adjudication rerun, interleave a_min);
-    // controls, calibrations, and re-settle probes are never part of any
-    // query's time — and every unflagged query contributes its main-pass
-    // min unchanged. This is the acceptance number: it is still a full
-    // same-JVM execution of every query this run, just with the
-    // adjudication's own refutations folded in instead of reported apart.
-    val bestByName = adjudicated.map { case t =>
-      (t._1, Seq(t._2, t._3, t._13).filter(_ > 0).min)
-    }.toMap
-    val adjudicatedTotal = results.collect {
-      case (name, v, true) => bestByName.getOrElse(name, v)
-    }.sum
-    // "filtered" marks partial runs so they can never be mistaken for the
-    // official full-bench line
-    val filtered = if (only.isDefined) ""","filtered":true""" else ""
-    val cals = s""""host_cal_before":$calBefore,"host_cal_after":$calAfter,"jvm_cal_before":$jvmCalBefore,"jvm_cal_after":$jvmCalAfter,"mem_cal_before":$memCalBefore,"mem_cal_after":$memCalAfter"""
-    val fullLine = s"""{"metric":"total","value":$total,"adjudicated_total":$adjudicatedTotal,"unit":"sec","queries":$qs,"failed":$failed$filtered,$cals,$settleJson,$adj,"sf":"$sfDir"}"""
-    println(fullLine)
-    // Self-contained record: the stdout capture is tail-windowed (8 KiB)
-    // and the per-query line's FRONT scrolls out past ~90 queries, so the
-    // full record also lands in a file no window can truncate. Official
-    // full runs only — a filtered run must never overwrite the record.
-    if (only.isEmpty)
+  /** Two executions per query, keep the min: the first run pays JIT +
+    * codegen compilation and the host's load noise is large; steady state
+    * is the honest number for an engine that runs queries repeatedly.
+    * None when either run failed. */
+  def time(spark: SparkSession, sfDir: String,
+           selected: Seq[(String, Build)]): Seq[(String, Option[Double])] = {
+    def once(name: String, fn: Build): Option[Double] = {
+      val t0 = System.nanoTime()
       try {
-        val p = java.nio.file.Paths.get("tools/bench_last.json")
-        java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.write(p,
-          (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
       } catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write tools/bench_last.json: ${e.getMessage}")
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"); None
       }
-    // Compact trailing summary: the per-query line above grows with the
-    // query count and an 8 KiB tail window truncates its FRONT (the round-7
-    // record lost the total and the dedup family that way). This second
-    // line is small and LAST, so any tail capture always carries the total,
-    // both calibrations, the query count, and the failure list.
-    println(s"""{"metric":"summary","value":$total,"adjudicated_total":$adjudicatedTotal,"unit":"sec","n_queries":${results.size},"failed":$failed$filtered,$cals,"settle_status":"$settleStatus","n_flagged":${adjudicated.size},"flags_open":$flagsOpen,"flags_deferred":$flagsDeferred,"sf":"$sfDir"}""")
-    spark.stop()
+    }
+    // isolation barrier: queries that persist() intermediates would serve
+    // run 2 from run 1's cache and undercount, and the scoped caches
+    // release via ASYNC listener events — drain the bus so a prior run's
+    // release can't land mid-way through the next timed run, then clear
+    // whatever remains
+    def barrier(): Unit = {
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      spark.catalog.clearCache()
+    }
+    selected.map { case (name, fn) =>
+      val first = once(name, fn)
+      barrier()
+      val second = once(name, fn)
+      barrier()
+      name -> (for (a <- first; b <- second) yield math.min(a, b))
+    }
+  }
+
+  /** The detail line, then the summary line. Failed queries read -1 so a
+    * crash can never read as a fast run, and are left out of the total.
+    * The summary is small and LAST, so a tail-windowed capture that cuts
+    * the front of the growing detail line still carries the total. */
+  def lines(results: Seq[(String, Option[Double])], filtered: Boolean,
+            sfDir: String): Seq[String] = {
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v.getOrElse(-1.0) }
+      .mkString("{", ",", "}")
+    val failed = results.collect { case (k, None) => "\"" + k + "\"" }.mkString("[", ",", "]")
+    val total = results.flatMap(_._2).sum
+    val filt = if (filtered) ""","filtered":true""" else ""
+    Seq(
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed$filt,"sf":"$sfDir"}""",
+      s"""{"metric":"summary","value":$total,"unit":"sec","n_queries":${results.size},"failed":$failed$filt,"sf":"$sfDir"}""")
   }
 }

@@ -3,9 +3,15 @@
 parquet dumps + oracle_sql.json, run each oracle in DuckDB against the same
 sf tables, and compare (row count, column names, sorted-row values).
 
+DuckDB 1.0 inlines every reference to a CTE, so an oracle whose CTEs read
+earlier ones several times (the prefix-doubling chain of dedup_substring)
+plans exponentially many copies and runs out of memory. Such an oracle is
+re-run once with every CTE marked MATERIALIZED, which computes each CTE once
+and returns the same rows; a line before its PASS/FAIL line says so.
+
 Usage: python3 tools/local_verify.py <sfDir> <outDir> [query ...]
 """
-import sys, json, glob, os
+import sys, json, glob, os, re
 import duckdb
 import pandas as pd
 
@@ -13,6 +19,9 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 only = set(sys.argv[3:])
 
 con = duckdb.connect()
+# bounded, so an oracle that would plan too many CTE copies fails fast into
+# the materialized re-run instead of filling the host's memory
+con.sql("SET memory_limit = '4GB'")
 for p in glob.glob(f"{sfdir}/*.parquet"):
     name = os.path.basename(p)[:-8]
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
@@ -22,6 +31,15 @@ unknown = only - set(oracle)
 if unknown:
     print(f"FATAL: unknown query name(s): {sorted(unknown)}")
     sys.exit(2)
+
+# a CTE definition: `name AS (` right after WITH [RECURSIVE] or after the
+# previous definition's `),`
+CTE_DEF = re.compile(r"(\bWITH\s+(?:RECURSIVE\s+)?|\),\s*)(\w+)\s+AS\s*\(", re.I)
+
+
+def materialized(sql):
+    return CTE_DEF.sub(lambda m: f"{m.group(1)}{m.group(2)} AS MATERIALIZED (", sql)
+
 
 fail = 0
 for name, sql in sorted(oracle.items()):
@@ -47,7 +65,12 @@ for name, sql in sorted(oracle.items()):
             print(f"FAIL {name}: oracle output not driver-portable "
                   f"(CAST to BIGINT/DOUBLE): {wide}")
             fail += 1; continue
-        want = rel.df()
+        try:
+            want = rel.df()
+        except duckdb.OutOfMemoryException:
+            print(f"  {name}: DuckDB ran out of memory; "
+                  "re-running the oracle with materialized CTEs")
+            want = con.sql(materialized(sql)).df()
     except Exception as e:
         print(f"FAIL {name}: oracle error: {e}"); fail += 1; continue
     gc, wc = sorted(got.columns), sorted(want.columns)

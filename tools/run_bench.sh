@@ -1,9 +1,12 @@
 #!/bin/bash
 # Run a graft main class directly on the compiled classes (no sbt startup).
-# Usage: tools/run_bench.sh [MainClass] [args...]
-#   env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ONLY, ...
+# Usage: tools/run_bench.sh [MainClass] [args...]   (default graft.Bench)
+#   graft.Bench env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ONLY
+#   SPARK_DRIVER_MEM sets the heap (default 8g).
 # Compile first with `sbt -batch compile` — this script does NOT compile.
+# Before/after comparisons belong to perfbench/ (see BENCHMARK.json).
 set -euo pipefail
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 MAIN="${1:-graft.Bench}"
 shift || true
 ADD_OPENS=""
@@ -19,5 +22,5 @@ exec java $ADD_OPENS \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -XX:ReservedCodeCacheSize=512m \
-  -cp "/root/repo/target/scala-2.13/classes:/root/repo/src/main/resources:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
