@@ -143,19 +143,7 @@ object Tables {
     * same length and modification time is the one change the fingerprint
     * cannot see. */
   def parquet(spark: SparkSession, path: String): DataFrame = {
-    val root = new Path(path)
-    val files = try {
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      // plain FileStatus, never LocatedFileStatus: building one reads the
-      // permissions, which the local file system gets by forking `ls`
-      def leaves(s: FileStatus): Seq[FileStatus] =
-        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
-      leaves(fs.getFileStatus(root))
-        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
-    } catch { // a missing path: the inferring read raises Spark's usual error
-      case _: java.io.FileNotFoundException => Nil
-    }
-    val print = Fingerprint(files, spark.conf.getAll.filter { case (k, _) =>
+    val print = Fingerprint(listing(spark, path), spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     })
     schemas.get(path) match {
@@ -164,6 +152,23 @@ object Tables {
         val inferred = spark.read.parquet(path)
         schemas.put(path, (print, inferred.schema))
         inferred
+    }
+  }
+
+  /** (path, length, modification time) of every file under `path`, in
+    * path order; empty when the path does not exist. */
+  def listing(spark: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val root = new Path(path)
+    try {
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+      // plain FileStatus, never LocatedFileStatus: building one reads the
+      // permissions, which the local file system gets by forking `ls`
+      def leaves(s: FileStatus): Seq[FileStatus] =
+        if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(leaves) else Seq(s)
+      leaves(fs.getFileStatus(root))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    } catch { // a missing path: a read of it raises Spark's usual error
+      case _: java.io.FileNotFoundException => Nil
     }
   }
 

@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.functions.LookupFunctions
 
 /** The HRFCO observation pipeline re-expressed Spark-first.
   *
@@ -135,14 +138,17 @@ object Hrfco {
                   timestamp: Column = unix_millis(current_timestamp())): DataFrame =
     raw
       .filter(parseFailed)
-      .select(
-        col("event_id"),
-        col("wlobscd").as("originalKey"),
-        col("raw_payload").as("originalValue"),
-        lit("Processing failed: JsonParseException").as("errorReason"),
-        lit("JsonParseException").as("exceptionClass"),
-        lit("malformed payload").as("exceptionMessage"),
-        timestamp.as("timestamp"))
+      .select(col("event_id") +: parseFailureEnvelope(col("wlobscd"), timestamp): _*)
+
+  /** The T3 envelope's columns for a parse-failed row whose station code
+    * is `key`: the DLQ schema without `event_id`. */
+  def parseFailureEnvelope(key: Column, timestamp: Column): Seq[Column] = Seq(
+    key.as("originalKey"),
+    col("raw_payload").as("originalValue"),
+    lit("Processing failed: JsonParseException").as("errorReason"),
+    lit("JsonParseException").as("exceptionClass"),
+    lit("malformed payload").as("exceptionMessage"),
+    timestamp.as("timestamp"))
 
   /** T9: count of thresholds that are non-null AND > 0
     * (AnomalyDetector.java:98-105). */
@@ -181,9 +187,31 @@ object Hrfco {
     * map-side join with no shuffle at any scale. */
   def classify(parsed: DataFrame, dim: DataFrame,
                wlMin: Double = WlMinDefault, wlMax: Double = WlMaxDefault,
-               fwMin: Double = FwMinDefault, fwMax: Double = FwMaxDefault): DataFrame = {
-    val joined = parsed
-      .join(broadcast(dim.withColumn("dim_present", lit(true))), Seq("wlobscd"), "left")
+               fwMin: Double = FwMinDefault, fwMax: Double = FwMaxDefault): DataFrame =
+    classifyJoined(joinDim(dim)(parsed), wlMin, wlMax, fwMin, fwMax)
+
+  /** T8: `parsed` left-joined to the station dim `dim` on `wlobscd`, by
+    * broadcast, with `dim_present` true where a dim row matched. */
+  def joinDim(dim: DataFrame): DataFrame => DataFrame = parsed =>
+    parsed.join(broadcast(dim.withColumn("dim_present", lit(true))), Seq("wlobscd"), "left")
+
+  /** [[joinDim]] against dim rows already collected on the driver, as a
+    * hash lookup inside the row's stage (`graft_lookup`) instead of a
+    * broadcast: the same columns in the same order, `dim_present`
+    * included, and no job. None when two rows share a station, which the
+    * join would match twice. */
+  def lookupDim(rows: Seq[Row], schema: StructType): Option[DataFrame => DataFrame] =
+    LookupFunctions.lookup(col("wlobscd"), rows, schema, "wlobscd").map {
+      station => parsed =>
+        val dimColumns = schema.fieldNames.filterNot(_ == "wlobscd")
+        parsed.select((col("wlobscd") +: parsed.columns.toSeq.filterNot(_ == "wlobscd").map(col)) ++
+          dimColumns.map(c => station.getField(c).as(c)) :+
+          when(station.isNotNull, true).as("dim_present"): _*)
+    }
+
+  /** T9-T11 on a frame [[joinDim]] (or [[lookupDim]]) has joined. */
+  private def classifyJoined(joined: DataFrame, wlMin: Double, wlMax: Double,
+                             fwMin: Double, fwMax: Double): DataFrame = {
     val wl = col("water_level")
     joined
       .withColumn("range_valid", rangeValid(wlMin, wlMax, fwMin, fwMax))
@@ -244,10 +272,46 @@ object Hrfco {
                       tsFallback: Column = current_timestamp(),
                       wlMin: Double = WlMinDefault, wlMax: Double = WlMaxDefault,
                       fwMin: Double = FwMinDefault, fwMax: Double = FwMaxDefault): DataFrame =
-    classify(
+    withAlerts(classify(
       parseTyped(raw.filter(!parseFailed), tsFallback)
         .filter(requiredFields),
-      dim, wlMin, wlMax, fwMin, fwMax)
+      dim, wlMin, wlMax, fwMin, fwMax))
+
+  private def withAlerts(classified: DataFrame): DataFrame =
+    classified
       .withColumn("alert_level", alertLevel)
       .withColumn("message", alertMessage)
+
+  /** The column [[routedFromRaw]] adds to the [[pipelineFromRaw]] schema:
+    * true on a parse failure. */
+  val ParseFailedColumn = "parse_failed"
+
+  /** Both branches of a micro-batch in ONE frame, joined to the dim by
+    * `dimJoin` ([[joinDim]] or [[lookupDim]]), so a single pass can feed
+    * the DLQ and the stores: every raw row that is a parse failure or
+    * passes the required-field check (the rest are dropped, as in
+    * [[pipelineFromRaw]]), with `parse_failed` telling the two apart. A
+    * stored row (`parse_failed` false) carries exactly the columns and
+    * values [[pipelineFromRaw]] gives it, plus `parse_failed`; a parse
+    * failure carries what [[parseFailureEnvelope]] reads, and its other
+    * columns carry no meaning. A parse failure meets the dim with a null
+    * station code, so it matches no dim row and stays one row whatever
+    * the dim holds; the code is put back afterwards, which also keeps
+    * the column's nullability, the one the parquet sinks record. */
+  def routedFromRaw(raw: DataFrame, dimJoin: DataFrame => DataFrame,
+                    tsFallback: Column = current_timestamp(),
+                    wlMin: Double = WlMinDefault, wlMax: Double = WlMaxDefault,
+                    fwMin: Double = FwMinDefault, fwMax: Double = FwMaxDefault): DataFrame = {
+    val marked = raw
+      .withColumn(ParseFailedColumn, parseFailed)
+      .filter(col(ParseFailedColumn) || requiredFields)
+      .withColumn("__station", col("wlobscd"))
+      .withColumn("wlobscd", when(!col(ParseFailedColumn), col("wlobscd")))
+    val routed = withAlerts(classifyJoined(dimJoin(parseTyped(marked, tsFallback)),
+      wlMin, wlMax, fwMin, fwMax))
+    routed.select(routed.columns.toSeq.filter(_ != "__station").map {
+      case "wlobscd" => coalesce(col("wlobscd"), col("__station")).as("wlobscd")
+      case c => col(c)
+    }: _*)
+  }
 }

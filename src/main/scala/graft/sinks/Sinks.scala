@@ -3,9 +3,9 @@ package graft.sinks
 import java.time.Instant
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import scala.util.{Failure, Success, Try}
-import scala.util.control.NonFatal
 
 import graft.functions.InstantFunctions
 
@@ -39,7 +39,8 @@ final case class StorageResult(
   *    (kafka itself is config-gated; no broker in CI).
   *  - K8 fanout: the tri-store write with per-sink failure isolation and
   *    partial-failure → DLQ routing (HRFCOStorageService.java:72-122,
-  *    WaterLevelProcessor.java:70-75); the three writes run concurrently.
+  *    WaterLevelProcessor.java:70-75); the three writes are one
+  *    [[FusedWriter]] job, a single pass over the batch.
   */
 object Sinks {
 
@@ -50,17 +51,19 @@ object Sinks {
   /** Glob matching every leaf directory of the K1 layout. */
   private val ArchiveLeaves = ArchivePartitions.map(_ + "=*").mkString("/")
 
-  /** Writer of `classified` into the K1 layout: the partition values
-    * derive from the anomaly flag and `processingTime`. */
-  private def archiveWriter(classified: DataFrame, processingTime: Column) = {
-    val values = Seq(when(col("is_anomaly"), "anomalies").otherwise("normal"),
+  /** The K1 partition columns with their values, which derive from the
+    * anomaly flag and `processingTime`. */
+  private def archivePartitionValues(processingTime: Column): Seq[(String, Column)] =
+    ArchivePartitions.zip(Seq(when(col("is_anomaly"), "anomalies").otherwise("normal"),
       date_format(processingTime, "yyyy"),
       date_format(processingTime, "MM"),
-      date_format(processingTime, "dd"))
-    ArchivePartitions.zip(values)
+      date_format(processingTime, "dd")))
+
+  /** Writer of `classified` into the K1 layout. */
+  private def archiveWriter(classified: DataFrame, processingTime: Column) =
+    archivePartitionValues(processingTime)
       .foldLeft(classified) { case (df, (name, value)) => df.withColumn(name, value) }
       .write.partitionBy(ArchivePartitions: _*)
-  }
 
   /** K1: partitioned JSON archive. Layout: type=normal|anomalies/y/M/d.
     * One file per partition per batch instead of one file per record. */
@@ -213,22 +216,26 @@ object Sinks {
     * reachable — the frame is identical. */
   def writeTimeseries(classified: DataFrame, target: String,
                       createdAt: Column = current_timestamp()): Unit =
-    classified.select(
-      col("wlobscd").as("observation_code"),
-      col("obs_ts_utc").as("observation_time"),
-      col("water_level"), col("flow_rate"),
-      col("is_anomaly"), col("flood_warning_level"),
-      createdAt.as("created_at"))
+    classified.select(timeseriesColumns(createdAt): _*)
       .write.mode(SaveMode.Append).parquet(target)
+
+  private def timeseriesColumns(createdAt: Column): Seq[Column] = Seq(
+    col("wlobscd").as("observation_code"),
+    col("obs_ts_utc").as("observation_time"),
+    col("water_level"), col("flow_rate"),
+    col("is_anomaly"), col("flood_warning_level"),
+    createdAt.as("created_at"))
 
   /** K3: raw payload + classification flags. */
   def writeRaw(classified: DataFrame, target: String,
                createdAt: Column = current_timestamp()): Unit =
-    classified.select(
-      col("raw_payload"), col("wlobscd"),
-      col("is_anomaly"), col("flood_warning_level"),
-      createdAt.as("created_at"))
+    classified.select(rawColumns(createdAt): _*)
       .write.mode(SaveMode.Append).parquet(target)
+
+  private def rawColumns(createdAt: Column): Seq[Column] = Seq(
+    col("raw_payload"), col("wlobscd"),
+    col("is_anomaly"), col("flood_warning_level"),
+    createdAt.as("created_at"))
 
   /** K4: dimension upsert — rows in `updates` replace same-key rows in
     * `existing`, new keys are inserted (the replaceOne(upsert=true)
@@ -277,15 +284,17 @@ object Sinks {
       lit(exceptionMessage).cast("string").as("exceptionMessage"),
       timestamp.as("timestamp"))
 
-  /** K8: tri-store fanout with per-sink failure isolation. The batch is
-    * persisted once, then the archive, timeseries and raw writes run at
-    * the same time, each on its own [[fork]]ed thread: no write's
-    * planning or commit waits for another's. Per-sink failures are
-    * captured instead of failing the stream; once all three writes have
-    * joined, partial failure produces a DLQ frame covering the batch (the
+  /** K8: tri-store fanout with per-sink failure isolation. The archive,
+    * timeseries and raw writes are one [[FusedWriter]] job: a single pass
+    * over `classified`, with no cache and no second job. A sink that fails
+    * (at job setup or inside a task) is aborted on its own and the other
+    * two commit; its failure is captured instead of failing the caller,
+    * and partial failure produces a DLQ frame covering the batch (the
     * reference's per-record StorageResult folded up to batch
     * granularity). The frame is returned, not appended: a caller that
-    * also appends to the DLQ must order the two appends itself.
+    * also appends to the DLQ must order the two appends itself. It is
+    * lazy, so delivering it derives `classified` again; that happens only
+    * when a sink has failed.
     *
     * `at` is the batch's one instant: the archive's day, both sinks'
     * `created_at` and the DLQ frame's `timestamp`. `created_at` and
@@ -296,87 +305,41 @@ object Sinks {
     * call. */
   def fanout(classified: DataFrame, archivePath: String, timeseriesPath: String,
              rawPath: String, at: Instant = Instant.now()): (StorageResult, Option[DataFrame]) = {
+    val failed = FusedWriter.write(classified, storageDestinations(
+      archivePath, timeseriesPath, rawPath, classified.columns.toSeq, at))
+    storageOutcome(classified, failed, at)
+  }
+
+  /** The three K8 stores as [[FusedWriter]] destinations over a frame
+    * holding the classified `columns`. A row goes to all three when
+    * `stored` holds, and to none otherwise. */
+  private[graft] def storageDestinations(archivePath: String, timeseriesPath: String,
+                                         rawPath: String, columns: Seq[String], at: Instant,
+                                         stored: Column = lit(true)): Seq[Destination] = {
     val createdAt = InstantFunctions.batchTimestamp(at)
-    classified.persist()
-    try {
-      val writes = Seq(
-        "archive" -> fork("archive")(writeArchive(classified, archivePath, lit(at))),
-        "timeseries" -> fork("timeseries")(writeTimeseries(classified, timeseriesPath, createdAt)),
-        "raw" -> fork("raw")(writeRaw(classified, rawPath, createdAt)))
-      joinAll(writes.map(_._2): _*)
-      val failures = writes.flatMap { case (name, w) =>
-        w.outcome match {
-          case Success(_) => None
-          // NonFatal only: an OOM/LinkageError means the JVM is suspect and
-          // must not be recorded as a routine sink failure
-          case Failure(NonFatal(e)) => Some((name, e.toString))
-          case Failure(fatal) => throw fatal
-        }
-      }
-      val result = StorageResult(
-        archiveOk = !failures.exists(_._1 == "archive"),
-        timeseriesOk = !failures.exists(_._1 == "timeseries"),
-        rawOk = !failures.exists(_._1 == "raw"),
-        failures = failures)
-      val dlq =
-        if (failures.isEmpty) None
-        else {
-          // materialize the envelope while `classified` is still cached:
-          // returning a lazy frame would let the caller recompute the whole
-          // batch lineage after the unpersist below (and possibly diverge
-          // from what the sinks actually saw)
-          val f = dlqFrame(classified,
-            errorReason = s"Storage failed for: ${failures.map(_._1).mkString(",")}",
-            timestamp = InstantFunctions.batchMillis(at))
-          f.persist()
-          f.count()
-          Some(f) // caller should unpersist after delivering it
-        }
-      (result, dlq)
-    } finally classified.unpersist()
+    def row(cs: Seq[Column]) = when(stored, struct(cs: _*))
+    Seq(
+      Destination("archive", new JsonFileFormat, archivePath, row(columns.map(col)),
+        archivePartitionValues(lit(at))),
+      Destination("timeseries", new ParquetFileFormat, timeseriesPath,
+        row(timeseriesColumns(createdAt))),
+      Destination("raw", new ParquetFileFormat, rawPath, row(rawColumns(createdAt))))
   }
 
-  /** A write running on its own thread, started by [[fork]]. */
-  private[graft] final class Forked[A] private[Sinks] (name: String, body: => A) {
-    @volatile private var result: Try[A] = _
-    private[Sinks] val thread = new Thread(() =>
-      result = try Success(body) catch { case t: Throwable => Failure(t) },
-      s"graft-sink-$name")
-
-    /** How the write ended, fatal errors included, so the caller decides
-      * what to rethrow. Read it only after [[joinAll]] returns. */
-    def outcome: Try[A] = result
-  }
-
-  /** Start `body` on a fresh thread. Fresh, not pooled: a new thread
-    * inherits the caller's SparkContext local properties, so a write
-    * forked from a micro-batch keeps the batch's job group and
-    * `sql.streaming.queryId`. `StreamingQuery.stop()` cancels the write's
-    * jobs through that group, and each job still traces back to its
-    * batch. A pooled thread would keep the properties of whichever
-    * thread created it. */
-  private[graft] def fork[A](name: String)(body: => A): Forked[A] = {
-    val f = new Forked(name, body)
-    f.thread.setDaemon(true)
-    f.thread.start()
-    f
-  }
-
-  /** Wait for every forked write. If the waiting thread is interrupted
-    * (`StreamingQuery.stop()`), interrupt the writes too and still wait
-    * for them, so none starts a job after its caller has returned; then
-    * rethrow the interrupt. */
-  private[graft] def joinAll(forks: Forked[_]*): Unit = {
-    var interrupted: Option[InterruptedException] = None
-    forks.foreach { f =>
-      while (f.thread.isAlive)
-        try f.thread.join()
-        catch {
-          case e: InterruptedException =>
-            if (interrupted.isEmpty) forks.foreach(_.thread.interrupt())
-            interrupted = interrupted.orElse(Some(e))
-        }
-    }
-    interrupted.foreach(throw _)
+  /** The [[StorageResult]] of a fused write of the three stores that
+    * `failed` as listed, and, when a store failed, the DLQ envelope of
+    * every row in `stored`, which is built only then. */
+  private[graft] def storageOutcome(stored: => DataFrame, failed: Seq[(String, Throwable)],
+                                    at: Instant): (StorageResult, Option[DataFrame]) = {
+    val failures = failed.map { case (name, e) => (name, e.toString) }
+    val names = failures.map(_._1).toSet
+    val result = StorageResult(archiveOk = !names("archive"),
+      timeseriesOk = !names("timeseries"), rawOk = !names("raw"), failures = failures)
+    val dlq =
+      if (failures.isEmpty) None
+      else Some(dlqFrame(stored,
+        errorReason = s"Storage failed for: ${failures.map(_._1).mkString(",")}",
+        timestamp = InstantFunctions.batchMillis(at)))
+    (result, dlq)
   }
 }

@@ -30,4 +30,23 @@ object Bridge {
                        timeoutMillis: Long = 30000): Unit =
     try spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)
     catch { case _: java.util.concurrent.TimeoutException => () } // best-effort barrier
+
+  /** Ask the driver's output commit coordinator whether the running task
+    * attempt may commit its partition's output, as
+    * `SparkHadoopMapRedUtil.commitTask` does before each commit, and throw
+    * Spark's `CommitDeniedException` if not. The coordinator answers one
+    * request per task partition and stage, so a task that commits several
+    * outputs (graft.sinks.FusedWriter) asks once for all of them. The
+    * coordinator is private[spark]. */
+  def authorizeTaskCommit(): Unit = {
+    val env = org.apache.spark.SparkEnv.get
+    if (env.conf.getBoolean("spark.hadoop.outputCommitCoordination.enabled", defaultValue = true)) {
+      val ctx = org.apache.spark.TaskContext.get()
+      if (!env.outputCommitCoordinator.canCommit(ctx.stageId(), ctx.stageAttemptNumber(),
+          ctx.partitionId(), ctx.attemptNumber()))
+        throw new org.apache.spark.executor.CommitDeniedException(
+          s"task ${ctx.taskAttemptId()}: not committed because the driver did not authorize commit",
+          ctx.stageId(), ctx.partitionId(), ctx.attemptNumber())
+    }
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.ops.{Hrfco, Thresholds}
 import graft.sinks.Sinks
@@ -223,5 +224,89 @@ class SinksSpec extends SparkSpec {
     val env = dlq.get.collect()
     assert(env.length === 10)
     assert(env.head.getAs[String]("errorReason").contains("timeseries"))
+  }
+
+  test("fused writer: one batch lands in the layout, schemas and rows of the four separate writes") {
+    val base = tmp()
+    // 2000 events over five stations (`error` has no dim row, `signup`
+    // only null thresholds) in two partitions, so two tasks write; ids
+    // that are multiples of 107 are parse failures, of 103 required-field
+    // drops
+    val stations = array(Seq("click", "purchase", "view", "signup", "error").map(lit): _*)
+    val ev = Tables.normalizeEvents(spark.range(1, 2001, 1, 2).select(
+      col("id").as("event_id"),
+      timestamp_seconds(lit(1765290600L) + col("id") * 60).cast("timestamp_ntz").as("ts"),
+      (col("id") % 50).as("user_id"),
+      element_at(stations, (col("id") % 5 + 1).cast("int")).as("event_type"),
+      (col("id") % 250).cast("double").as("value"),
+      format_string("{\"k\": \"%d.5\"}", col("id") % 9).as("props")))
+    val raw = Hrfco.rawObservations(ev)
+    val dim = Thresholds.fromEvents(ev)
+    val at = java.time.Instant.parse("2026-03-04T05:06:07Z")
+    val fallback = graft.functions.InstantFunctions.batchTimestamp(at)
+    val millis = graft.functions.InstantFunctions.batchMillis(at)
+    def paths(side: String) = Seq("archive", "timeseries", "raw", "dlq").map(d => d -> s"$base/$side/$d").toMap
+
+    // separately: the four writes the stream made before the fused writer
+    val sep = paths("separate")
+    val classified = Hrfco.pipelineFromRaw(raw, dim, tsFallback = fallback, wlMax = 300.0)
+    val createdAt = graft.functions.InstantFunctions.batchTimestamp(at)
+    Sinks.writeArchive(classified, sep("archive"), lit(at))
+    Sinks.writeTimeseries(classified, sep("timeseries"), createdAt)
+    Sinks.writeRaw(classified, sep("raw"), createdAt)
+    Hrfco.dlqEnvelope(raw, millis).drop("event_id").write.mode("append").parquet(sep("dlq"))
+
+    // fused: the streaming pass's frame and destinations, joined to the
+    // dim's collected rows by lookup, as a stream joins a memoized dim
+    val fus = paths("fused")
+    val lookup = Hrfco.lookupDim(dim.collect().toSeq, dim.schema)
+    assert(lookup.isDefined, "the derived dim holds one row per station")
+    val routed = Hrfco.routedFromRaw(raw, lookup.get, tsFallback = fallback, wlMax = 300.0)
+    val columns = routed.columns.toSeq.filter(_ != Hrfco.ParseFailedColumn)
+    val failed = graft.sinks.FusedWriter.write(routed,
+      Sinks.storageDestinations(fus("archive"), fus("timeseries"), fus("raw"), columns, at,
+        stored = !col("parse_failed")) :+
+        graft.sinks.Destination("dlq",
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat, fus("dlq"),
+          when(col("parse_failed"), struct(Hrfco.parseFailureEnvelope(col("wlobscd"), millis): _*))))
+    assert(failed.isEmpty, s"fused write failed: $failed")
+
+    // every file, relative to its destination, with the job's uuid masked:
+    // the same leaves, names, extensions, checksum files and _SUCCESS
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+    def layout(dir: String): Seq[String] = {
+      val root = new java.io.File(dir).toPath
+      Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => uuid.replaceAllIn(root.relativize(p).toString, "<uuid>")).toSeq.sorted
+    }
+    for (d <- sep.keys) {
+      assert(layout(fus(d)) === layout(sep(d)), s"$d layout")
+      assert(layout(fus(d)).count(_ == "_SUCCESS") === 1, s"$d: one _SUCCESS")
+      assert(layout(fus(d)).exists(_.matches(
+        """(.*/)?part-\d{5}-<uuid>[-.]c000\.(snappy\.parquet|json)""")), s"$d file names")
+    }
+    assert(layout(fus("archive")).exists(_.startsWith(
+      "type=normal/y=2026/m=03/d=04/part-")), "archive leaf")
+
+    // parquet footers: the same message type and Spark row metadata
+    def footer(dir: String) = {
+      val f = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val meta = scala.util.Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getAbsolutePath), spark.sparkContext.hadoopConfiguration))
+      )(_.getFooter.getFileMetaData)
+      (meta.getSchema.toString,
+        meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+    }
+    for (d <- Seq("timeseries", "raw", "dlq")) assert(footer(fus(d)) === footer(sep(d)), s"$d footer")
+
+    // the same rows, both ways
+    def rows(d: String, dir: String) =
+      if (d == "archive") Sinks.readArchive(spark, dir) else spark.read.parquet(dir)
+    for (d <- sep.keys) {
+      val (a, b) = (rows(d, fus(d)), rows(d, sep(d)))
+      assert(a.count() > 0, s"$d is empty")
+      assert(a.exceptAll(b).count() === 0 && b.exceptAll(a).count() === 0, s"$d rows")
+    }
   }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.ops.{Hrfco, Thresholds}
 import graft.streaming.StreamingPipeline
 
@@ -187,34 +188,195 @@ class StreamingSpec extends SparkSpec {
     assert(dlq.filter(col("errorReason") === "Storage failed for: timeseries").count() === stored)
   }
 
-  test("every job the stream runs carries its query id, sink writes included") {
-    // the sink writes run on their own threads; without the micro-batch's
-    // local properties their jobs would escape stop()'s job-group cancel.
-    // Two queries in a row, so a writer thread kept from the first query
-    // would show up with the wrong id in the second.
-    val (work, srcDir, ev) = eventSource("queryid", 2)
-    val dim = Thresholds.fromEvents(ev)
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+  /** Run the query `start` returns to termination, and return it with the
+    * jobs that started meanwhile. */
+  private def withJobs(start: => StreamingQuery): (StreamingQuery, Seq[BatchJob]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(java.util.Properties, Seq[Int])]
+    val shuffled = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId"))))
+        jobs.add((e.properties, e.stageIds))
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (Option(e.stageInfo.taskMetrics).exists(_.shuffleWriteMetrics.recordsWritten > 0))
+          shuffled.add(e.stageInfo.stageId)
     }
     spark.sparkContext.addSparkListener(listener)
-    try Seq("first", "second").foreach { run =>
-      jobs.clear()
-      val paths = StreamingPipeline.SinkPaths(s"$work/$run/archive",
-        s"$work/$run/timeseries", s"$work/$run/raw", s"$work/$run/dlq")
-      val q = StreamingPipeline.startWithDim(spark, srcDir, () => dim, paths,
-        s"$work/$run/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0)
+    try {
+      val q = start
       assert(q.awaitTermination(120000), "streaming query timed out")
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
-      assert(q.recentProgress.count(_.numInputRows > 0) === 2, "expected two micro-batches")
-      val seen = jobs.asScala.toSeq
-      // per batch: the DLQ write plus one job per sink at least
-      assert(seen.size >= 8, s"$run query: too few jobs seen: ${seen.size}")
-      assert(seen.forall(_.contains(q.id.toString)), s"$run query: " +
-        s"${seen.count(!_.contains(q.id.toString))} of ${seen.size} jobs lack its id")
+      (q, jobs.asScala.toSeq.map { case (props, stages) =>
+        def prop(k: String) = Option(props).flatMap(p => Option(p.getProperty(k)))
+        BatchJob(prop("sql.streaming.queryId"), prop("streaming.sql.batchId").map(_.toLong),
+          stages.exists(shuffled.contains))
+      })
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** Jobs per micro-batch of `q`, in batch order. */
+  private def perBatch(q: StreamingQuery, jobs: Seq[BatchJob]): Seq[Seq[BatchJob]] =
+    jobs.filter(_.queryId.contains(q.id.toString)).groupBy(_.batchId).toSeq
+      .sortBy(_._1).map(_._2)
+
+  private def sinkPaths(work: String) = StreamingPipeline.SinkPaths(
+    s"$work/archive", s"$work/timeseries", s"$work/raw", s"$work/dlq")
+
+  test("every job the stream runs carries its query id, sink writes included") {
+    // the fused write runs on the micro-batch thread; without the batch's
+    // local properties its job would escape stop()'s job-group cancel.
+    // Two queries in a row, so properties kept from the first query would
+    // show up with the wrong id in the second.
+    val (work, srcDir, ev) = eventSource("queryid", 2)
+    val dim = Thresholds.fromEvents(ev)
+    Seq("first", "second").foreach { run =>
+      val (q, seen) = withJobs(StreamingPipeline.startWithDim(spark, srcDir, () => dim,
+        sinkPaths(s"$work/$run"), s"$work/$run/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0))
+      assert(q.recentProgress.count(_.numInputRows > 0) === 2, "expected two micro-batches")
+      assert(seen.forall(_.queryId.contains(q.id.toString)), s"$run query: " +
+        s"${seen.count(!_.queryId.contains(q.id.toString))} of ${seen.size} jobs lack its id")
+      // every micro-batch ran a job, and every job belongs to a batch
+      assert(seen.map(_.batchId).distinct.sorted === Seq(Some(0L), Some(1L)),
+        s"$run query: batch ids of its jobs: ${seen.map(_.batchId)}")
+    }
+  }
+
+  test("a micro-batch is one write job, plus the dim's jobs in the first batch") {
+    // the parse-failure DLQ and the three stores are one fused job; the
+    // first batch also derives the threshold dim (an aggregate: a map job
+    // and a result job) and collects it, and every batch probes the
+    // collected rows inside the write's own stage
+    val (work, srcDir, ev) = eventSource("jobcount", 4)
+    val (q, seen) = withJobs(StreamingPipeline.start(spark, srcDir, ev,
+      sinkPaths(work), s"$work/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0))
+    val counts = perBatch(q, seen).map(_.size)
+    assert(counts === Seq(3, 1, 1, 1), s"jobs per micro-batch: $counts")
+  }
+
+  test("a sink that fails inside its task is aborted alone; its rows go to the DLQ") {
+    // the timeseries file system refuses every data file, so that sink
+    // fails inside the fused task, after its job setup succeeded
+    val (work, srcDir, ev) = eventSource("taskfail", 2)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.failpart.impl", classOf[FailingPartFileSystem].getName)
+    val paths = StreamingPipeline.SinkPaths(s"$work/archive",
+      s"failpart://$work/timeseries", s"$work/raw", s"$work/dlq")
+    val q = StreamingPipeline.start(
+      spark, srcDir, ev, paths, s"$work/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0)
+    assert(q.awaitTermination(120000), "streaming query timed out")
+    assert(q.recentProgress.count(_.numInputRows > 0) === 2, "expected two micro-batches")
+
+    val stored = Hrfco.pipeline(ev, Thresholds.fromEvents(ev), wlMax = 300.0)
+    val parseFailures = Hrfco.dlqEnvelope(Hrfco.rawObservations(ev)).count()
+    assert(stored.count() > 0 && parseFailures > 0)
+    // the other sinks hold every stored row
+    assert(graft.sinks.Sinks.readArchive(spark, paths.archive).count() === stored.count())
+    assert(spark.read.parquet(paths.raw).select("raw_payload", "wlobscd")
+      .exceptAll(stored.select("raw_payload", "wlobscd")).count() === 0)
+    assert(spark.read.parquet(paths.raw).count() === stored.count())
+    // the failed sink committed no data file
+    val tsDir = new java.io.File(s"$work/timeseries")
+    val committed = if (!tsDir.exists()) Nil else Files.walk(tsDir.toPath).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("part-")).toList
+    assert(committed.isEmpty, s"committed timeseries files: $committed")
+    // the DLQ holds the parse failures and every stored row of both batches
+    val dlq = spark.read.parquet(paths.dlq)
+    assert(dlq.count() === parseFailures + stored.count())
+    assert(dlq.filter(col("errorReason") === "Storage failed for: timeseries")
+      .select(col("originalValue")).exceptAll(stored.select("raw_payload")).count() === 0)
+    assert(dlq.filter(col("errorReason") === "Storage failed for: timeseries").count() ===
+      stored.count())
+  }
+
+  /** Two one-row source files under a fresh work directory, so
+    * `maxFilesPerTrigger = 1` drives two micro-batches over the same
+    * observation: station `click`, water level 100. */
+  private def twoObservations(name: String): (String, String) = {
+    import spark.implicits._
+    val base = new java.io.File("target/test-out").getAbsoluteFile.toPath
+    Files.createDirectories(base)
+    val work = Files.createTempDirectory(base, name).toString
+    val srcDir = new java.io.File(s"$work/incoming"); srcDir.mkdirs()
+    val ts = java.time.LocalDateTime.of(2025, 12, 9, 15, 30)
+    Seq(1L -> "a", 2L -> "b").foreach { case (id, file) =>
+      val staging = s"$work/stage_$file"
+      Seq((id, ts, 42L, "click", 100.0, """{"k": "5.0"}"""))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.parquet(staging)
+      val part = new java.io.File(staging).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, new java.io.File(srcDir, s"$file.parquet").toPath)
+    }
+    (work, srcDir.getAbsolutePath)
+  }
+
+  test("dim memo: rewriting the dim's parquet file reclassifies on the next micro-batch") {
+    import spark.implicits._
+    val (work, srcDir) = twoObservations("dimfile")
+    // one dim file, rewritten in place between the two batches: the same
+    // path and plan, a new length and modification time
+    val dimFile = new java.io.File(s"$work/dim/dim.parquet")
+    dimFile.getParentFile.mkdirs()
+    def writeDim(name: String, srswl: Double): Unit = {
+      val staging = s"$work/dimstage_$name"
+      Seq(("click", srswl - 30, srswl - 20, srswl - 10, srswl, s"station $name", "addr"))
+        .toDF("wlobscd", "attwl", "wrnwl", "almwl", "srswl", "obsnm", "addr")
+        .coalesce(1).write.parquet(staging)
+      val part = new java.io.File(staging).listFiles().filter(_.getName.endsWith(".parquet")).head
+      Files.copy(part.toPath, dimFile.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    writeDim("lenient", 980) // wl=100 below everything → NORMAL
+    val before = dimFile.length()
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val q = StreamingPipeline.startWithDim(spark, srcDir, () => {
+      if (calls.incrementAndGet() == 2) writeDim("strict and renamed", 40) // wl=100 ≥ srswl → CRITICAL
+      Tables.parquet(spark, dimFile.getAbsolutePath)
+    }, sinkPaths(work), s"$work/ckpt", maxFilesPerTrigger = 1, wlMax = 300.0)
+    assert(q.awaitTermination(120000), "streaming query timed out")
+    assert(calls.get === 2 && dimFile.length() != before)
+    val out = spark.read.parquet(s"$work/timeseries")
+      .select("flood_warning_level").as[String].collect().sorted.toSeq
+    assert(out === Seq("CRITICAL", "NORMAL"), s"the rewritten dim did not reclassify: $out")
+  }
+
+  test("dim memo: the same dim over unchanged files runs no dim job after the first batch") {
+    val (work, srcDir, ev) = eventSource("dimmemo", 3)
+    val dim = Thresholds.fromEvents(ev)
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val (q, seen) = withJobs(StreamingPipeline.startWithDim(spark, srcDir,
+      () => { calls.incrementAndGet(); dim }, sinkPaths(work), s"$work/ckpt",
+      maxFilesPerTrigger = 1, wlMax = 300.0))
+    val batches = perBatch(q, seen)
+    assert(batches.size === 3 && calls.get === 3, "the provider is consulted once per batch")
+    assert(batches.head.exists(_.shuffles), "the first batch derives the dim")
+    assert(batches.tail.forall(_.forall(!_.shuffles)),
+      s"dim jobs after the first batch: ${batches.map(_.count(_.shuffles))}")
+    // and the memoized rows classify as the dim itself does
+    val streamed = spark.read.parquet(s"$work/timeseries")
+      .select("observation_code", "water_level", "flow_rate", "is_anomaly", "flood_warning_level")
+    val batch = Hrfco.pipeline(ev, dim, wlMax = 300.0)
+      .select(col("wlobscd").as("observation_code"), col("water_level"),
+        col("flow_rate"), col("is_anomaly"), col("flood_warning_level"))
+    assert(streamed.exceptAll(batch).count() === 0 && batch.exceptAll(streamed).count() === 0)
+  }
+
+  test("dim memo: an RDD-backed dim is derived again on every batch") {
+    val (work, srcDir, ev) = eventSource("dimrdd", 3)
+    val derived = Thresholds.fromEvents(ev)
+    val rows = derived.collect().toSeq
+    val evaluated = spark.sparkContext.longAccumulator("dim rows evaluated")
+    val dim = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1)
+      .map { r => evaluated.add(1); r }, derived.schema)
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+    val q = StreamingPipeline.startWithDim(spark, srcDir,
+      () => { marks.add(evaluated.value); dim }, sinkPaths(work), s"$work/ckpt",
+      maxFilesPerTrigger = 1, wlMax = 300.0)
+    assert(q.awaitTermination(120000), "streaming query timed out")
+    marks.add(evaluated.value)
+    val perBatch = marks.asScala.toSeq.sliding(2).map { case Seq(a, b) => b - a }.toSeq
+    assert(perBatch.size === 3 && perBatch.forall(_ >= rows.size),
+      s"dim rows evaluated per batch: $perBatch")
+    assert(spark.read.parquet(s"$work/timeseries").count() ===
+      Hrfco.pipeline(ev, derived, wlMax = 300.0).count())
   }
 
   test("micro-batches after the first compile no class") {
@@ -289,4 +451,24 @@ class SlowCloseFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
       override def close(): Unit = { Thread.sleep(2000); super.close() }
     }
   }
+}
+
+/** What a job tells about the micro-batch that ran it: the query and batch
+  * ids from its local properties, and whether one of its stages wrote
+  * shuffle records (the threshold dim's aggregate does; the fused write does
+  * not). */
+private final case class BatchJob(queryId: Option[String], batchId: Option[Long],
+                                  shuffles: Boolean)
+
+/** The local file system under the `failpart:` scheme, except that it
+  * refuses to create any `part-` data file: a write job on it sets up, then
+  * fails in its tasks. */
+class FailingPartFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def getScheme: String = "failpart"
+  override def getUri: java.net.URI = java.net.URI.create("failpart:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream =
+    if (f.getName.startsWith("part-")) throw new java.io.IOException(s"refused: $f")
+    else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
 }
