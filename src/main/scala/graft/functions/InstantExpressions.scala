@@ -3,9 +3,11 @@ package graft.functions
 import java.time.Instant
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.date_format
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.LeafExpression
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
@@ -21,7 +23,10 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
   * its generated code reads the value through `ctx.addReferenceObj` into
   * a field set once per generated instance, so the source is the same
   * for every instant, and a row reads that field where it read an inline
-  * constant. */
+  * constant.
+  *
+  * A stream that reuses one analyzed plan for every batch puts the batch's
+  * instant into each of these slots with [[at]]. */
 case class BatchInstant(value: Long, dataType: DataType) extends LeafExpression {
   require(dataType == TimestampType || dataType == LongType,
     s"a batch instant is a timestamp or epoch millis, not $dataType")
@@ -31,6 +36,9 @@ case class BatchInstant(value: Long, dataType: DataType) extends LeafExpression 
   override def foldable: Boolean = false
 
   override def prettyName: String = "graft_batch_instant"
+
+  /** This slot holding `instant` instead, in the same form. */
+  def at(instant: Instant): BatchInstant = BatchInstant.of(instant, dataType)
 
   override def eval(input: InternalRow): Any = value
 
@@ -42,14 +50,57 @@ case class BatchInstant(value: Long, dataType: DataType) extends LeafExpression 
   }
 }
 
+object BatchInstant {
+  /** `at` as epoch micros for a timestamp, as epoch millis for a long. */
+  def of(at: Instant, dataType: DataType): BatchInstant = {
+    val micros = DateTimeUtils.instantToMicros(at)
+    BatchInstant(if (dataType == LongType) Math.floorDiv(micros, 1000L) else micros, dataType)
+  }
+}
+
+/** `child`, an expression of [[BatchInstant]]s and constants that reads
+  * no column, computed once per plan instance instead of once per row: a
+  * batch's archive day, say, which a folded `date_format` of a literal
+  * instant gave as a constant. Like [[BatchInstant]] it is deterministic
+  * but not foldable, and generated code reads the value by reference, so
+  * the source is the same for every batch. */
+case class BatchValue(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = child.dataType
+
+  override def nullable: Boolean = child.nullable
+
+  override def foldable: Boolean = false
+
+  override def prettyName: String = "graft_batch_value"
+
+  @transient private lazy val value: Any = child.eval(null)
+
+  override def eval(input: InternalRow): Any = value
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("batchValue", value, CodeGenerator.boxedType(dataType))
+    ev.copy(code = code"""
+      |boolean ${ev.isNull} = $ref == null;
+      |${CodeGenerator.javaType(dataType)} ${ev.value} =
+      |  ${ev.isNull} ? ${CodeGenerator.defaultValue(dataType)} : $ref;""".stripMargin)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object InstantFunctions {
   /** `at` as a timestamp column that compiles to the same source for
     * every instant. */
-  def batchTimestamp(at: Instant): Column =
-    Bridge.column(BatchInstant(DateTimeUtils.instantToMicros(at), TimestampType))
+  def batchTimestamp(at: Instant): Column = Bridge.column(BatchInstant.of(at, TimestampType))
 
   /** `at` as epoch milliseconds: `unix_millis` of [[batchTimestamp]],
     * with no per-row division. */
-  def batchMillis(at: Instant): Column =
-    Bridge.column(BatchInstant(Math.floorDiv(DateTimeUtils.instantToMicros(at), 1000L), LongType))
+  def batchMillis(at: Instant): Column = Bridge.column(BatchInstant.of(at, LongType))
+
+  /** `at` formatted by `pattern` in the session time zone, as
+    * `date_format` of [[batchTimestamp]] gives it, computed once per plan
+    * ([[BatchValue]]) rather than per row. */
+  def batchFormat(at: Instant, pattern: String): Column =
+    Bridge.column(BatchValue(Bridge.expression(date_format(batchTimestamp(at), pattern))))
 }

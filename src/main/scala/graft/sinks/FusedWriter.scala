@@ -68,17 +68,27 @@ object FusedWriter {
   /** Write `frame` to every destination in one job. Returns each failed
     * destination with its error, in `destinations` order; fatal errors are
     * rethrown. */
-  def write(frame: DataFrame, destinations: Seq[Destination]): Seq[(String, Throwable)] = {
-    require(destinations.map(_.name).distinct.size == destinations.size,
-      s"destination names must be unique: ${destinations.map(_.name)}")
-    val spark = frame.sparkSession
-    // one flat projection: each destination's row struct, then its
-    // partition values, at consecutive ordinals from its slot
-    val slots = destinations.scanLeft(0)((at, d) => at + 1 + d.partitionBy.size)
-    val routed = frame.select(destinations.flatMap(d =>
+  def write(frame: DataFrame, destinations: Seq[Destination]): Seq[(String, Throwable)] =
+    writeProjected(project(frame, destinations), destinations)
+
+  /** The one flat projection of `frame` that a pass reads: each
+    * destination's row struct, then its partition values as strings, at
+    * consecutive ordinals from its slot. Apart from the write, so a caller
+    * can analyze it once and reuse the analyzed plan. */
+  def project(frame: DataFrame, destinations: Seq[Destination]): DataFrame =
+    frame.select(destinations.flatMap(d =>
       d.row +: d.partitionBy.map(_._2.cast("string"))).zipWithIndex.map { case (c, i) =>
       c.as(s"_$i")
     }: _*)
+
+  /** [[write]] of a frame that [[project]] has already projected for
+    * `destinations`, or of one with the same plan over other input. */
+  def writeProjected(routed: DataFrame,
+                     destinations: Seq[Destination]): Seq[(String, Throwable)] = {
+    require(destinations.map(_.name).distinct.size == destinations.size,
+      s"destination names must be unique: ${destinations.map(_.name)}")
+    val spark = routed.sparkSession
+    val slots = destinations.scanLeft(0)((at, d) => at + 1 + d.partitionBy.size)
     val failures = mutable.Map.empty[String, Throwable]
     def fail(name: String, e: Throwable): Unit = e match {
       case NonFatal(_) => failures.getOrElseUpdate(name, e)

@@ -52,16 +52,15 @@ object Sinks {
   private val ArchiveLeaves = ArchivePartitions.map(_ + "=*").mkString("/")
 
   /** The K1 partition columns with their values, which derive from the
-    * anomaly flag and `processingTime`. */
-  private def archivePartitionValues(processingTime: Column): Seq[(String, Column)] =
-    ArchivePartitions.zip(Seq(when(col("is_anomaly"), "anomalies").otherwise("normal"),
-      date_format(processingTime, "yyyy"),
-      date_format(processingTime, "MM"),
-      date_format(processingTime, "dd")))
+    * anomaly flag and the processing day, `day(pattern)` being the
+    * processing time formatted by `pattern`. */
+  private def archivePartitionValues(day: String => Column): Seq[(String, Column)] =
+    ArchivePartitions.zip(when(col("is_anomaly"), "anomalies").otherwise("normal") +:
+      Seq("yyyy", "MM", "dd").map(day))
 
   /** Writer of `classified` into the K1 layout. */
   private def archiveWriter(classified: DataFrame, processingTime: Column) =
-    archivePartitionValues(processingTime)
+    archivePartitionValues(date_format(processingTime, _))
       .foldLeft(classified) { case (df, (name, value)) => df.withColumn(name, value) }
       .write.partitionBy(ArchivePartitions: _*)
 
@@ -297,12 +296,13 @@ object Sinks {
     * when a sink has failed.
     *
     * `at` is the batch's one instant: the archive's day, both sinks'
-    * `created_at` and the DLQ frame's `timestamp`. `created_at` and
-    * `timestamp` read it by reference ([[graft.functions.BatchInstant]]),
-    * so a later batch reuses the compiled classes; the archive's y/m/d
-    * fold into string literals, which generated code also references. A
-    * `current_timestamp()` column would compile new source on every
-    * call. */
+    * `created_at` and the DLQ frame's `timestamp`. All three read it from
+    * one kind of slot ([[graft.functions.BatchInstant]]; the day is
+    * formatted from it once per plan, [[graft.functions.BatchValue]])
+    * that generated code reads by reference, so a later batch reuses the
+    * compiled classes, and a stream that reuses one analyzed plan can put
+    * each batch's instant into every slot. A `current_timestamp()`
+    * column would compile new source on every call. */
   def fanout(classified: DataFrame, archivePath: String, timeseriesPath: String,
              rawPath: String, at: Instant = Instant.now()): (StorageResult, Option[DataFrame]) = {
     val failed = FusedWriter.write(classified, storageDestinations(
@@ -320,7 +320,7 @@ object Sinks {
     def row(cs: Seq[Column]) = when(stored, struct(cs: _*))
     Seq(
       Destination("archive", new JsonFileFormat, archivePath, row(columns.map(col)),
-        archivePartitionValues(lit(at))),
+        archivePartitionValues(InstantFunctions.batchFormat(at, _))),
       Destination("timeseries", new ParquetFileFormat, timeseriesPath,
         row(timeseriesColumns(createdAt))),
       Destination("raw", new ParquetFileFormat, rawPath, row(rawColumns(createdAt))))

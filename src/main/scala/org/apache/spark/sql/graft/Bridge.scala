@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Expression↔Column bridge. ExpressionUtils is private[sql], so the
   * conversion lives in the sql package namespace — the standard idiom for
@@ -48,5 +49,22 @@ object Bridge {
           s"task ${ctx.taskAttemptId()}: not committed because the driver did not authorize commit",
           ctx.stageId(), ctx.partitionId(), ctx.attemptNumber())
     }
+  }
+
+  /** `plan` as a DataFrame, analyzed as any new frame is. The classic
+    * `Dataset` object, which holds `ofRows`, is private[sql]. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `plan`, which must already be resolved, as a DataFrame on which the
+    * analyzer runs no rule: the plan is marked analyzed
+    * (`AnalysisHelper.setAnalyzed`, private[sql]), and
+    * `Analyzer.executeAndCheck` returns a marked plan as it is. For a plan
+    * made from an analyzed one by substitutions that keep every reference
+    * resolved, as graft.streaming.StreamingPipeline rebinds one analyzed
+    * write plan to each micro-batch. */
+  def analyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
   }
 }

@@ -410,6 +410,111 @@ class StreamingSpec extends SparkSpec {
     assert(instants(paths.dlq, col("timestamp")) === created)
   }
 
+  /** Analyzer and optimizer rules run so far in this JVM. */
+  private def ruleRuns: Long =
+    org.apache.spark.sql.catalyst.rules.RuleExecutor.getCurrentMetrics().numRuns
+
+  test("a micro-batch after the first builds its write frame without running an analyzer rule") {
+    // the dim provider runs at the start of each batch's body and the
+    // archive's job setup is the write's first step once the frame is
+    // built, before the optimizer: rule runs between the two are the
+    // analysis of the batch's write frame
+    val (work, srcDir, ev) = eventSource("analysis", 3)
+    val dim = Thresholds.fromEvents(ev)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.setupmark.impl", classOf[SetupMarkFileSystem].getName)
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
+    SetupMarkFileSystem.onSetup = () => marks.add("setup" -> ruleRuns)
+    val paths = StreamingPipeline.SinkPaths(s"setupmark://$work/archive",
+      s"$work/timeseries", s"$work/raw", s"$work/dlq")
+    try {
+      val q = StreamingPipeline.startWithDim(spark, srcDir,
+        () => { marks.add("dim" -> ruleRuns); dim }, paths, s"$work/ckpt",
+        maxFilesPerTrigger = 1, wlMax = 300.0)
+      assert(q.awaitTermination(120000), "streaming query timed out")
+    } finally SetupMarkFileSystem.onSetup = () => ()
+    val seq = marks.asScala.toSeq
+    val perBatch = seq.zipWithIndex.collect { case (("dim", at), i) =>
+      seq.drop(i + 1).collectFirst { case ("setup", to) => to - at }.getOrElse(-1L)
+    }
+    assert(perBatch.size === 3, s"expected three micro-batches: $seq")
+    assert(perBatch.head > 0, s"the first batch analyzes its write plan: $perBatch")
+    assert(perBatch.tail === Seq(0L, 0L), s"rule runs building each batch's frame: $perBatch")
+    assert(spark.read.parquet(paths.timeseries).count() ===
+      Hrfco.pipeline(ev, dim, wlMax = 300.0).count())
+  }
+
+  test("a rebound write frame equals a fresh build of its batch, across days and a dim swap") {
+    import spark.implicits._
+    // every branch of the write: ids 107 and 214 are parse failures, 103
+    // and 206 required-field drops (blank station), `error` has no dim
+    // row (NO_THRESHOLD), every tenth water level (400) is out of range
+    val stations = array(Seq("click", "purchase", "view", "error").map(lit): _*)
+    def batch(from: Long) = Tables.normalizeEvents(spark.range(from, from + 300, 1, 2).select(
+      col("id").as("event_id"),
+      timestamp_seconds(lit(1765290600L) + col("id") * 60).cast("timestamp_ntz").as("ts"),
+      (col("id") % 50).as("user_id"),
+      element_at(stations, (col("id") % 4 + 1).cast("int")).as("event_type"),
+      when(col("id") % 10 === 0, lit(400.0)).otherwise((col("id") % 250).cast("double"))
+        .as("value"),
+      format_string("{\"k\": \"%d.5\"}", col("id") % 9).as("props")))
+    def join(srswl: Double) = {
+      val dim = Seq("click", "purchase", "view")
+        .map(s => (s, srswl - 30, srswl - 20, srswl - 10, srswl, s"station $s", "addr"))
+        .toDF("wlobscd", "attwl", "wrnwl", "almwl", "srswl", "obsnm", "addr")
+      Hrfco.lookupDim(dim.collect().toSeq, dim.schema).get
+    }
+    val (lenient, strict) = (join(980), join(120))
+    val (first, second) = (batch(1), batch(301))
+    val paths = sinkPaths("unused")
+    val plan = new StreamingPipeline.WritePlan(paths, wlMax = 300.0)
+    def at(s: String) = java.time.Instant.parse(s)
+    // two days apart in year, month and day; the dim swapped for the third
+    // batch, so its template is built again and then reused for the fourth
+    val steps = Seq(
+      (first, lenient, at("2025-12-31T23:59:30Z"), "2025", "12", "31"),
+      (second, lenient, at("2026-01-01T00:00:30Z"), "2026", "01", "01"),
+      (first, strict, at("2026-02-03T04:05:06Z"), "2026", "02", "03"),
+      (second, strict, at("2026-03-04T05:06:07Z"), "2026", "03", "04"))
+    val runs = steps.map { case (b, dimJoin, instant, y, m, d) =>
+      b.queryExecution.analyzed
+      val before = ruleRuns
+      val frames = plan(b, dimJoin, instant)
+      val built = ruleRuns - before
+      val routed = Hrfco.routedFromRaw(Hrfco.rawObservations(b), dimJoin,
+        tsFallback = graft.functions.InstantFunctions.batchTimestamp(instant), wlMax = 300.0)
+      val fresh = graft.sinks.FusedWriter.project(routed,
+        StreamingPipeline.destinations(paths, routed, instant))
+      assert(frames.write.schema === fresh.schema, s"$instant: schema and nullability")
+      val (got, want) = (frames.write.collect().toSeq, fresh.collect().toSeq)
+      assert(got.size === want.size, s"$instant: rows")
+      assert(got.diff(want).size === 0, s"$instant: rows that a fresh build lacks")
+      assert(got.size < b.count(), s"$instant: the required-field drops are dropped")
+      // the stored rows a failed store sends to the DLQ
+      val stored = routed.filter(!col(Hrfco.ParseFailedColumn))
+        .select(routed.columns.filter(_ != Hrfco.ParseFailedColumn).map(col): _*)
+      assert(frames.stored.schema === stored.schema, s"$instant: stored schema")
+      val storedRows = frames.stored.collect().toSeq
+      assert(storedRows.size === stored.count() &&
+        storedRows.diff(stored.collect().toSeq).size === 0, s"$instant: stored rows")
+      // the archive leaves are the batch's day (archive slots: _1 to _4)
+      val leaves = frames.write.filter(col("_0").isNotNull)
+        .select("_1", "_2", "_3", "_4").distinct().as[(String, String, String, String)]
+        .collect().toSet
+      assert(leaves === Set(("normal", y, m, d), ("anomalies", y, m, d)), s"$instant leaves")
+      val levels = frames.write.select(col("_5.flood_warning_level")).as[String]
+        .collect().toSet
+      assert(levels.contains("NO_THRESHOLD"), s"$instant: levels $levels")
+      assert(frames.write.filter(col("_7").isNotNull).count() > 0, s"$instant: parse failures")
+      built
+    }
+    assert(runs(0) > 0 && runs(2) > 0, s"the first and the swapped dim build a template: $runs")
+    assert(runs(1) === 0 && runs(3) === 0, s"a rebind runs no rule: $runs")
+    // the swap reclassified: the strict dim makes some levels critical
+    assert(plan(first, strict, at("2026-02-03T04:05:06Z")).write
+      .filter(col("_5.flood_warning_level") === "CRITICAL").count() > 0)
+  }
+
   test("a micro-batch starts no process") {
     // without libhadoop, Hadoop's own local file system forks `chmod` for
     // every file and directory the sinks, the DLQ and the checkpoint create
@@ -471,4 +576,24 @@ class FailingPartFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
       blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream =
     if (f.getName.startsWith("part-")) throw new java.io.IOException(s"refused: $f")
     else super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+}
+
+/** The raw local file system under the `setupmark:` scheme, except that it
+  * runs `SetupMarkFileSystem.onSetup` whenever a write job sets up, that
+  * is, when the job's `_temporary/0` directory is made. */
+class SetupMarkFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.Path
+  import org.apache.hadoop.fs.permission.FsPermission
+  override def getScheme: String = "setupmark"
+  override def getUri: java.net.URI = java.net.URI.create("setupmark:///")
+  private def mark(f: Path): Unit =
+    if (f.getName == "0" && f.getParent.getName == "_temporary") SetupMarkFileSystem.onSetup()
+  override def mkdirs(f: Path): Boolean = { mark(f); super.mkdirs(f) }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    mark(f); super.mkdirs(f, permission)
+  }
+}
+
+object SetupMarkFileSystem {
+  @volatile var onSetup: () => Unit = () => ()
 }
