@@ -20,14 +20,14 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
   * compiles a new class: a stream compiled its classify stage, DLQ
   * envelope and sink projections again on every poll batch. This leaf is
   * deterministic but not foldable, so the optimizer keeps it as it is;
-  * its generated code reads the value through `ctx.addReferenceObj` into
-  * a field set once per generated instance, so the source is the same
-  * for every instant, and a row reads that field where it read an inline
-  * constant.
+  * its generated code reads the value from the expression, passed by
+  * `ctx.addReferenceObj` (see [[InstantSlot]]), into a field set once per
+  * generated instance, so the source is the same for every instant, and
+  * a row reads that field where it read an inline constant.
   *
   * A stream that reuses one analyzed plan for every batch puts the batch's
   * instant into each of these slots with [[at]]. */
-case class BatchInstant(value: Long, dataType: DataType) extends LeafExpression {
+case class BatchInstant(value: Long, dataType: DataType) extends LeafExpression with InstantSlot {
   require(dataType == TimestampType || dataType == LongType,
     s"a batch instant is a timestamp or epoch millis, not $dataType")
 
@@ -43,9 +43,9 @@ case class BatchInstant(value: Long, dataType: DataType) extends LeafExpression 
   override def eval(input: InternalRow): Any = value
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("batchInstant", java.lang.Long.valueOf(value), "java.lang.Long")
+    val ref = ctx.addReferenceObj("batchInstant", this)
     val field = ctx.addMutableState(CodeGenerator.JAVA_LONG, "batchInstant",
-      v => s"$v = $ref.longValue();")
+      v => s"$v = $ref.value();")
     ExprCode.forNonNullValue(JavaCode.global(field, dataType))
   }
 }
@@ -64,7 +64,7 @@ object BatchInstant {
   * instant gave as a constant. Like [[BatchInstant]] it is deterministic
   * but not foldable, and generated code reads the value by reference, so
   * the source is the same for every batch. */
-case class BatchValue(child: Expression) extends UnaryExpression {
+case class BatchValue(child: Expression) extends UnaryExpression with InstantSlot {
   override def dataType: DataType = child.dataType
 
   override def nullable: Boolean = child.nullable
@@ -73,20 +73,55 @@ case class BatchValue(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "graft_batch_value"
 
-  @transient private lazy val value: Any = child.eval(null)
+  /** The value, computed once per instance. It is computed on the driver
+    * when code is generated or the slot is moved ([[at]]), and a
+    * serialized instance carries it, so a task does not compute it again. */
+  lazy val value: Any = child.eval(null)
+
+  def at(instant: Instant): BatchValue = {
+    val moved = BatchValue(child.transform { case i: BatchInstant => i.at(instant) })
+    moved.value
+    moved
+  }
 
   override def eval(input: InternalRow): Any = value
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("batchValue", value, CodeGenerator.boxedType(dataType))
+    value // now, on the driver, before the reference is serialized
+    val boxed = CodeGenerator.boxedType(dataType)
+    val ref = ctx.addReferenceObj("batchValue", this)
+    val field = ctx.addMutableState(boxed, "batchValue", v => s"$v = ($boxed) $ref.value();")
     ev.copy(code = code"""
-      |boolean ${ev.isNull} = $ref == null;
+      |boolean ${ev.isNull} = $field == null;
       |${CodeGenerator.javaType(dataType)} ${ev.value} =
-      |  ${ev.isNull} ? ${CodeGenerator.defaultValue(dataType)} : $ref;""".stripMargin)
+      |  ${ev.isNull} ? ${CodeGenerator.defaultValue(dataType)} : $field;""".stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** A value that is fixed for one micro-batch and set from its instant:
+  * [[BatchInstant]] or [[BatchValue]]. Its generated code reads the value
+  * from the expression itself, passed to the generated class as a
+  * reference, so the references of a compiled stage can be moved to
+  * another batch's instant by replacing these slots, found by their type
+  * ([[InstantSlot.at]]), and the stage run again without generating code.
+  * An expression that generated code evaluates without codegen is itself
+  * a reference, and a slot inside it is moved the same way. */
+sealed trait InstantSlot extends Expression {
+  /** This slot holding its value at `instant`. */
+  def at(instant: Instant): InstantSlot
+}
+
+object InstantSlot {
+  /** `references` of a generated stage with every slot moved to
+    * `instant`, also one inside a referenced expression; every other
+    * reference is kept as it is. */
+  def at(references: Array[Any], instant: Instant): Array[Any] = references.map {
+    case e: Expression => e.transform { case s: InstantSlot => s.at(instant) }
+    case r => r
+  }
 }
 
 object InstantFunctions {

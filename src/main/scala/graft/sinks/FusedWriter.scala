@@ -16,10 +16,11 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.internal.io.FileNameSpec
 import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter, OutputWriterFactory,
   SQLHadoopMapReduceCommitProtocol}
 import org.apache.spark.sql.types.StructType
@@ -85,9 +86,22 @@ object FusedWriter {
     * `destinations`, or of one with the same plan over other input. */
   def writeProjected(routed: DataFrame,
                      destinations: Seq[Destination]): Seq[(String, Throwable)] = {
+    val qe = routed.queryExecution
+    writeRows(qe, destinations)(qe.toRdd)
+  }
+
+  /** The core of every write: the rows of a [[project]]ed frame, whose
+    * execution is `qe`, written to `destinations` in one job inside one
+    * SQL execution of `qe`. `rows` is derived inside that execution: the
+    * frame's `toRdd`, or the same rows from a stage generated for that
+    * frame and run over another batch's input, which then borrows the
+    * frame's `qe` for its execution. */
+  private[graft] def writeRows(qe: QueryExecution, destinations: Seq[Destination])
+                              (rows: => RDD[InternalRow]): Seq[(String, Throwable)] = {
     require(destinations.map(_.name).distinct.size == destinations.size,
       s"destination names must be unique: ${destinations.map(_.name)}")
-    val spark = routed.sparkSession
+    val spark = qe.sparkSession
+    val schema = qe.analyzed.schema
     val slots = destinations.scanLeft(0)((at, d) => at + 1 + d.partitionBy.size)
     val failures = mutable.Map.empty[String, Throwable]
     def fail(name: String, e: Throwable): Unit = e match {
@@ -96,14 +110,13 @@ object FusedWriter {
     }
     val conf = spark.sessionState.newHadoopConf()
     val live = destinations.zip(slots).flatMap { case (d, slot) =>
-      val schema = routed.schema(slot).dataType.asInstanceOf[StructType]
-      try Some(prepare(spark, conf, d, slot, schema))
+      val rowSchema = schema(slot).dataType.asInstanceOf[StructType]
+      try Some(prepare(spark, conf, d, slot, rowSchema))
       catch { case e: Throwable => fail(d.name, e); None }
     }
-    val qe = routed.queryExecution
     val name = Some("fused write: " + live.map(_.name).mkString(", "))
     if (live.nonEmpty) SQLExecution.withNewExecutionId(qe, name) {
-      val rdd = qe.toRdd
+      val rdd = rows
       // a frame of no partitions still runs one task, as FileFormatWriter
       // does, so every destination writes its schema-bearing file
       val input =

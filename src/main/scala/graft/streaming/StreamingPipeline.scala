@@ -8,15 +8,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{AttributeMap, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.{Bridge, CodegenStage}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
-import graft.functions.{BatchInstant, InstantFunctions}
+import graft.functions.{BatchInstant, InstantFunctions, InstantSlot}
 import graft.ops.{Hrfco, Thresholds}
 import graft.sinks.{Destination, FusedWriter, Sinks}
 
@@ -48,9 +49,10 @@ import graft.sinks.{Destination, FusedWriter, Sinks}
   *    ([[graft.functions.BatchInstant]]), so a warm stream compiles no
   *    class per batch; a `current_timestamp()` compiles new source on
   *    every call;
-  *  - the write's plan is analyzed once per query, not once per batch:
-  *    each batch rebinds it to its own rows and instant ([[WritePlan]]),
-  *    and Spark optimizes, plans and runs it as before;
+  *  - the write is analyzed, optimized, planned and generated once per
+  *    query, not once per batch ([[WritePlan]]): the first batch runs it
+  *    as a frame and keeps its generated stage, and each later batch runs
+  *    that stage over its own rows with its own instant;
   *  - the threshold dim is consulted once per batch — the streaming
   *    analogue of the reference's continuously-refreshed broadcast
   *    dimension — and reused as rows collected on the driver while the
@@ -106,7 +108,7 @@ object StreamingPipeline {
         // branches, and one pass writes it to all four destinations.
         val at = Instant.now() // the batch's one instant (see above)
         val frames = plan(batch, dim(), at)
-        val failed = FusedWriter.writeProjected(frames.write, frames.destinations)
+        val failed = frames.run()
         // a failed parse-failure DLQ write fails the batch; otherwise the
         // storage-failure append follows the committed pass: two appends
         // in flight on one parquet directory share the committer's
@@ -139,22 +141,32 @@ object StreamingPipeline {
   private def storedColumns(routed: DataFrame): Seq[String] =
     routed.columns.toSeq.filter(_ != Hrfco.ParseFailedColumn)
 
-  /** A micro-batch's frames: the [[graft.sinks.FusedWriter.project]] of
-    * its routed rows to `destinations`, and, built only when asked for,
-    * its stored rows, the ones a failed store sends to the DLQ. */
-  private[graft] final class BatchFrames(val write: DataFrame,
-                                         val destinations: Seq[Destination],
-                                         storedRows: => DataFrame) {
+  /** A micro-batch's write: the [[graft.sinks.FusedWriter.project]] of
+    * its routed rows to its [[destinations]], which [[run]] writes, and
+    * its stored rows, the ones a failed store sends to the DLQ. Both
+    * frames are built only when asked for. */
+  private[graft] final class BatchFrames(writeFrame: => DataFrame,
+                                         storedRows: => DataFrame,
+                                         runWrite: () => Seq[(String, Throwable)]) {
+    lazy val write: DataFrame = writeFrame
+
     def stored: DataFrame = storedRows
+
+    /** Write the batch to every destination in one job; returns each
+      * failed destination with its error, as
+      * [[graft.sinks.FusedWriter.writeProjected]] of [[write]] does. */
+    def run(): Seq[(String, Throwable)] = runWrite()
   }
 
-  /** The write plan of every micro-batch of one query, analyzed once.
+  /** The write plan of every micro-batch of one query, analyzed once and,
+    * where it is one generated stage, planned and generated once.
     *
     * A poll batch is small, so its cost is mostly fixed per-batch work.
     * Analyzing [[graft.ops.Hrfco.routedFromRaw]] over the batch, about 17
     * `withColumn`/`filter` steps that each analyze the growing plan
     * again, and the write's projection on top took 72–83 ms of a warm
-    * 500-row batch (medians of 50 batches, `local[4]`), yet the analyzed
+    * 500-row batch (medians of 50 batches, `local[4]`); optimizing,
+    * planning and generating its code took about 100 ms more. Yet the
     * plan differs from batch to batch only in its source and its instant.
     * So the plan is analyzed once, over a template leaf with the batch's
     * schema, and each batch rebinds it in under a millisecond:
@@ -167,8 +179,21 @@ object StreamingPipeline {
     *  - the result is marked analyzed and wrapped as a frame
     *    ([[org.apache.spark.sql.graft.Bridge.analyzed]]), so the analyzer
     *    runs no rule on it.
-    * Spark still optimizes, plans, generates code for and runs each
-    * batch's write. The stored-row frame a failed store needs is rebound
+    *
+    * The first batch of a template then optimizes, plans and runs that
+    * frame. When its executed plan is one whole-stage-codegen stage over
+    * the batch's rows (a `foreachBatch` batch is an existing RDD), the
+    * template keeps the stage's generated source and references
+    * ([[org.apache.spark.sql.graft.CodegenStage]]) and the frame's
+    * execution. Each later batch runs that stage over its own RDD, with
+    * the instant slots among the references moved to its instant
+    * ([[graft.functions.InstantSlot]]): no optimizer rule, no planner and
+    * no code generation. A plan of any other shape (a dim joined by
+    * broadcast, as a repeated station or an unfingerprintable dim is) is
+    * rebound and run as a frame every batch. Either way the rows go
+    * through the one [[graft.sinks.FusedWriter]] core. The SQL metrics of
+    * a reused stage are those of its first batch's plan and add up over
+    * the batches. The stored-row frame a failed store needs is rebound
     * from the same template, and analyzed the first time a store fails.
     *
     * The template is built again when the batch schema changes or the dim
@@ -198,6 +223,9 @@ object StreamingPipeline {
       private val write = analyzed(FusedWriter.project(routed, writeTo))
       private lazy val stored = analyzed(routed.filter(!col(Hrfco.ParseFailedColumn))
         .select(storedColumns(routed).map(col): _*))
+      /** None until the template's first run, then the write's stage if
+        * it is one. */
+      private var compiled: Option[Option[Compiled]] = None
 
       private def isLeaf(p: LogicalPlan): Boolean = p match {
         case r: LocalRelation => r.output == leaf.output
@@ -212,8 +240,32 @@ object StreamingPipeline {
         plan
       }
 
-      def bind(batch: LogicalPlan, at: Instant): BatchFrames =
-        new BatchFrames(rebind(write, batch, at), writeTo, rebind(stored, batch, at))
+      def bind(batch: LogicalPlan, at: Instant): BatchFrames = {
+        lazy val frame = rebind(write, batch, at)
+        new BatchFrames(frame, rebind(stored, batch, at), () => run(batch, frame, at))
+      }
+
+      /** Write the batch whose analyzed plan is `batch`: through the kept
+        * stage when there is one and the batch is an RDD, else as `frame`,
+        * whose stage the template's first run keeps. */
+      private def run(batch: LogicalPlan, frame: => DataFrame,
+                      at: Instant): Seq[(String, Throwable)] = (compiled, batch) match {
+        case (Some(Some(c)), input: LogicalRDD) =>
+          FusedWriter.writeRows(c.qe, writeTo)(
+            c.stage.over(input.rdd, InstantSlot.at(c.stage.references, at)))
+        case _ =>
+          val qe = frame.queryExecution
+          FusedWriter.writeRows(qe, writeTo) {
+            val first = compiled.isEmpty
+            val kept = batch match {
+              case input: LogicalRDD if first =>
+                Bridge.codegenStage(qe.executedPlan).filter(_._2 eq input.rdd)
+              case _ => None
+            }
+            if (first) compiled = Some(kept.map { case (stage, _) => Compiled(stage, qe) })
+            kept.fold(qe.toRdd) { case (stage, rdd) => stage.over(rdd) }
+          }
+      }
 
       private def rebind(plan: LogicalPlan, batch: LogicalPlan, at: Instant): DataFrame = {
         val attrs = AttributeMap(leaf.output.zip(batch.output))
@@ -227,6 +279,10 @@ object StreamingPipeline {
       }
     }
   }
+
+  /** A stage generated for a [[WritePlan]] template's write, and the
+    * execution of the frame it was generated for. */
+  private final case class Compiled(stage: CodegenStage, qe: QueryExecution)
 
   /** The threshold dim as the batches of one query see it. Each batch
     * consults `provider`; the first dim it returns is collected on the

@@ -1,9 +1,18 @@
 package org.apache.spark.sql.graft
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
+import org.apache.spark.sql.execution.{InputAdapter, RDDScanExec, SparkPlan,
+  WholeStageCodegenEvaluatorFactory, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.metric.SQLMetric
 
 /** Expression↔Column bridge. ExpressionUtils is private[sql], so the
   * conversion lives in the sql package namespace — the standard idiom for
@@ -66,5 +75,48 @@ object Bridge {
   def analyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
     plan.setAnalyzed()
     ofRows(spark, plan)
+  }
+
+  /** The generated stage of `plan` and the RDD it reads, when `plan` is
+    * one whole-stage-codegen stage whose only leaf is a scan of an
+    * existing RDD and which has no subquery. This is the first half of
+    * `WholeStageCodegenExec.doExecute`: it generates the stage's source
+    * and compiles it (a hit in the codegen cache once compiled). None for
+    * any other plan, and for a stage that does not compile or has a method
+    * over `spark.sql.codegen.hugeMethodLimit`, which Spark runs without
+    * codegen. */
+  def codegenStage(plan: SparkPlan): Option[(CodegenStage, RDD[InternalRow])] = plan match {
+    case stage: WholeStageCodegenExec
+        if stage.subqueriesAll.isEmpty && !stage.exists(_.isInstanceOf[InputAdapter]) =>
+      stage.collectLeaves() match {
+        case Seq(scan: RDDScanExec) =>
+          val (ctx, source) = stage.doCodeGen()
+          val fits = try CodeGenerator.compile(source)._2.maxMethodCodeSize <=
+            stage.conf.hugeMethodLimit catch { case NonFatal(_) => false }
+          if (!fits) None
+          else Some(new CodegenStage(stage.tryBroadcastCleanedSource(source),
+            stage.longMetric("pipelineTime"),
+            ctx.references.toArray) -> scan.rdd)
+        case _ => None
+      }
+    case _ => None
+  }
+}
+
+/** A whole-stage-codegen stage generated once ([[Bridge.codegenStage]]),
+  * to be run over any RDD of the rows its scan read: the second half of
+  * `WholeStageCodegenExec.doExecute`. Each task builds the stage's
+  * iterator from the compiled class and `references`, the objects its
+  * generated code reads (metrics, lookup tables, expressions). */
+final class CodegenStage private[graft] (
+    source: Either[Broadcast[CodeAndComment], CodeAndComment],
+    pipelineTime: SQLMetric,
+    val references: Array[Any]) {
+
+  /** The stage's output over `input`, with `refs` in place of its
+    * references: the same objects, or some moved to another batch. */
+  def over(input: RDD[InternalRow], refs: Array[Any] = references): RDD[InternalRow] = {
+    val factory = new WholeStageCodegenEvaluatorFactory(source, pipelineTime, refs)
+    input.mapPartitionsWithIndex((i, rows) => factory.createEvaluator().eval(i, rows))
   }
 }

@@ -515,6 +515,149 @@ class StreamingSpec extends SparkSpec {
       .filter(col("_5.flood_warning_level") === "CRITICAL").count() > 0)
   }
 
+  test("a micro-batch after the first neither optimizes, plans nor generates code for its write") {
+    // the dim provider runs at the start of each batch's body and the DLQ's
+    // job commit (its `_SUCCESS` marker) ends the write, the body's last
+    // step when no store fails. Between the two, the first batch optimizes,
+    // plans and generates the write's one stage; later batches run that
+    // stage over their own rows. This also pins the plan shape the reuse
+    // needs: one whole-stage-codegen stage over the batch's RDD.
+    val (work, srcDir, ev) = eventSource("compiled", 3)
+    val dim = Thresholds.fromEvents(ev)
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.commitmark.impl", classOf[CommitMarkFileSystem].getName)
+    val marks = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
+    CommitMarkFileSystem.onCommit = () => marks.add("commit" -> ruleRuns)
+    val paths = StreamingPipeline.SinkPaths(s"$work/archive", s"$work/timeseries",
+      s"$work/raw", s"commitmark://$work/dlq")
+    val generated = CodegenLog.during { thread =>
+      if (thread.startsWith("stream execution thread")) marks.add("codegen" -> 0L)
+    } {
+      val q = StreamingPipeline.startWithDim(spark, srcDir,
+        () => { marks.add("dim" -> ruleRuns); dim }, paths, s"$work/ckpt",
+        maxFilesPerTrigger = 1, wlMax = 300.0)
+      try assert(q.awaitTermination(120000), "streaming query timed out")
+      finally CommitMarkFileSystem.onCommit = () => ()
+    }
+    assert(generated > 0, "whole-stage code generation was not seen")
+    val seq = marks.asScala.toSeq
+    val batches = seq.zipWithIndex.collect { case (("dim", at), i) =>
+      val body = seq.drop(i + 1).takeWhile(_._1 != "dim")
+      val end = body.collectFirst { case ("commit", to) => to - at }.getOrElse(-1L)
+      (end, body.takeWhile(_._1 != "commit").count(_._1 == "codegen"))
+    }
+    assert(batches.size === 3, s"expected three micro-batches: $seq")
+    val (rules, stages) = batches.unzip
+    assert(rules.head > 0 && stages.head > 0, s"the first batch plans its write: $batches")
+    assert(rules.tail === Seq(0L, 0L), s"rule runs per batch: $rules")
+    assert(stages.tail === Seq(0, 0), s"stage sources generated per batch: $stages")
+    val stored = Hrfco.pipeline(ev, dim, wlMax = 300.0)
+    assert(spark.read.parquet(paths.timeseries).count() === stored.count())
+    assert(spark.read.parquet(paths.dlq).count() ===
+      Hrfco.dlqEnvelope(Hrfco.rawObservations(ev)).count())
+  }
+
+  test("a compiled micro-batch write equals a fresh write of its batch, across days and dims") {
+    import spark.implicits._
+    // every branch of the write, as in the rebound-frame case above; each
+    // batch is an RDD, as a foreachBatch batch is, so a template's first
+    // run keeps the write's stage and later runs of the template reuse it
+    val stations = array(Seq("click", "purchase", "view", "error").map(lit): _*)
+    def batch(from: Long) = {
+      val built = Tables.normalizeEvents(spark.range(from, from + 300, 1, 2).select(
+        col("id").as("event_id"),
+        timestamp_seconds(lit(1765290600L) + col("id") * 60).cast("timestamp_ntz").as("ts"),
+        (col("id") % 50).as("user_id"),
+        element_at(stations, (col("id") % 4 + 1).cast("int")).as("event_type"),
+        when(col("id") % 10 === 0, lit(400.0)).otherwise((col("id") % 250).cast("double"))
+          .as("value"),
+        format_string("{\"k\": \"%d.5\"}", col("id") % 9).as("props")))
+      // as ForeachBatchSink hands a batch over: its rows' RDD as a plan leaf
+      org.apache.spark.sql.graft.Bridge.ofRows(spark, org.apache.spark.sql.execution.LogicalRDD(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(built.schema),
+        built.queryExecution.toRdd)(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]))
+    }
+    def dim(srswl: Double, stations: Seq[String]) = stations
+      .map(s => (s, srswl - 30, srswl - 20, srswl - 10, srswl, s"station $s", "addr"))
+      .toDF("wlobscd", "attwl", "wrnwl", "almwl", "srswl", "obsnm", "addr")
+    def lookup(d: DataFrame) = Hrfco.lookupDim(d.collect().toSeq, d.schema).get
+    val base = new java.io.File("target/test-out").getAbsoluteFile.toPath
+    Files.createDirectories(base)
+    val work = Files.createTempDirectory(base, "compiled-equal").toString
+    val (compiled, fresh) = (sinkPaths(s"$work/compiled"), sinkPaths(s"$work/fresh"))
+    val (lenient, strict) = (lookup(dim(980, Seq("click", "purchase", "view"))),
+      lookup(dim(120, Seq("click", "purchase", "view"))))
+    // a repeated station: the dim is joined, not looked up, so the write is
+    // not one stage and every batch plans it
+    val repeated = Hrfco.joinDim(dim(150, Seq("click", "purchase", "view", "view")))
+    val (first, second) = (batch(1), batch(301))
+    val plan = new StreamingPipeline.WritePlan(compiled, wlMax = 300.0)
+    def at(s: String) = java.time.Instant.parse(s)
+    val steps = Seq(
+      (first, lenient, at("2025-12-31T23:59:30Z")),
+      (second, lenient, at("2026-01-01T00:00:30Z")),
+      (first, strict, at("2026-02-03T04:05:06Z")),
+      (second, strict, at("2026-03-04T05:06:07Z")),
+      (first, repeated, at("2026-04-05T06:07:08Z")),
+      (second, repeated, at("2026-05-06T07:08:09Z")))
+    val runs = steps.map { case (b, join, instant) =>
+      b.queryExecution.analyzed // as a foreachBatch batch arrives
+      val before = ruleRuns
+      val failed = plan(b, join, instant).run()
+      val planned = ruleRuns - before
+      val routed = Hrfco.routedFromRaw(Hrfco.rawObservations(b), join,
+        tsFallback = graft.functions.InstantFunctions.batchTimestamp(instant), wlMax = 300.0)
+      assert(failed.isEmpty && graft.sinks.FusedWriter.write(routed,
+        StreamingPipeline.destinations(fresh, routed, instant)).isEmpty, s"$instant: failures")
+      planned
+    }
+    assert(runs(1) === 0 && runs(3) === 0,
+      s"a warm batch of a one-stage write plans nothing: $runs")
+    assert(Seq(0, 2, 4, 5).forall(runs(_) > 0), s"first batches and joins plan: $runs")
+
+    def same(name: String, read: String => DataFrame,
+             path: StreamingPipeline.SinkPaths => String): Unit = {
+      val (got, want) = (read(path(compiled)), read(path(fresh)))
+      assert(got.schema === want.schema, s"$name schema")
+      assert(got.count() === want.count() && got.exceptAll(want).count() === 0 &&
+        want.exceptAll(got).count() === 0, s"$name rows")
+    }
+    same("archive", graft.sinks.Sinks.readArchive(spark, _), _.archive)
+    Seq[(String, StreamingPipeline.SinkPaths => String)](("timeseries", _.timeseries),
+      ("raw", _.raw), ("dlq", _.dlq)).foreach { case (name, path) =>
+      same(name, spark.read.parquet(_), path)
+      assert(footers(path(compiled)) === footers(path(fresh)), s"$name parquet schema")
+    }
+    // one archive day per batch, and one created_at per batch shared with
+    // the DLQ timestamp
+    val days = graft.sinks.Sinks.readArchive(spark, compiled.archive)
+      .select("y", "m", "d").distinct().as[(String, String, String)].collect().toSet
+    assert(days === steps.map { case (_, _, i) =>
+      val d = i.atZone(java.time.ZoneOffset.UTC).toLocalDate
+      (f"${d.getYear}%04d", f"${d.getMonthValue}%02d", f"${d.getDayOfMonth}%02d")
+    }.toSet)
+    val created = spark.read.parquet(compiled.timeseries)
+      .select(unix_millis(col("created_at"))).distinct().as[Long].collect().sorted.toSeq
+    assert(created === steps.map(_._3.toEpochMilli).sorted)
+    assert(spark.read.parquet(compiled.dlq).select("timestamp").distinct().as[Long]
+      .collect().sorted.toSeq === created)
+    assert(spark.read.parquet(compiled.timeseries)
+      .filter(col("flood_warning_level") === "CRITICAL").count() > 0, "the strict dim reclassified")
+  }
+
+  /** The parquet schemas, nullability included, of the data files under
+    * `path`. */
+  private def footers(path: String): Set[String] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
+      .filter(p => p.getFileName.toString.startsWith("part-")).map { p =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p.toUri), conf))
+        try reader.getFooter.getFileMetaData.getSchema.toString finally reader.close()
+      }.toSet
+  }
+
   test("a micro-batch starts no process") {
     // without libhadoop, Hadoop's own local file system forks `chmod` for
     // every file and directory the sinks, the DLQ and the checkpoint create
@@ -596,4 +739,60 @@ class SetupMarkFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object SetupMarkFileSystem {
   @volatile var onSetup: () => Unit = () => ()
+}
+
+/** The raw local file system under the `commitmark:` scheme, except that
+  * it runs `CommitMarkFileSystem.onCommit` whenever a write job commits,
+  * that is, when it creates the `_SUCCESS` marker. */
+class CommitMarkFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  override def getScheme: String = "commitmark"
+  override def getUri: java.net.URI = java.net.URI.create("commitmark:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: org.apache.hadoop.util.Progressable): FSDataOutputStream = {
+    if (f.getName == "_SUCCESS") CommitMarkFileSystem.onCommit()
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object CommitMarkFileSystem {
+  @volatile var onCommit: () => Unit = () => ()
+}
+
+/** Whole-stage code generation as Spark logs it: `WholeStageCodegenExec`
+  * logs each stage's generated source at DEBUG, once per generation. */
+object CodegenLog {
+  import org.apache.logging.log4j.Level
+  import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+  import org.apache.logging.log4j.core.appender.AbstractAppender
+  import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+
+  private val Logger = "org.apache.spark.sql.execution.WholeStageCodegenExec"
+
+  /** Run `body` with `onSource(thread)` called for every stage source
+    * generated meanwhile, by the thread named; returns how many there were. */
+  def during(onSource: String => Unit)(body: => Unit): Int = {
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("graft-codegen-log", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("GeneratedIteratorForCodegenStage")) {
+          seen.incrementAndGet()
+          onSource(e.getThreadName)
+        }
+    }
+    appender.start()
+    val ctx = LoggerContext.getContext(false)
+    val config = ctx.getConfiguration
+    val logger = new LoggerConfig(Logger, Level.DEBUG, false)
+    logger.addAppender(appender, Level.DEBUG, null)
+    config.addLogger(Logger, logger)
+    ctx.updateLoggers()
+    try body finally {
+      config.removeLogger(Logger)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    seen.get
+  }
 }
