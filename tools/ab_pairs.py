@@ -20,14 +20,22 @@ and the medians differ by more than the parent's interquartile distance;
 the last column says whether that holds. The script writes nothing into
 either checkout itself; perfbench keeps its own build and output
 directories in the checkout it runs in.
+
+Each run gets its own process group; a run that outlasts RUN_TIMEOUT is
+killed with its whole group (perfbench's JVM too) and counts as a failed
+run, so the comparison goes on and still prints its summary.
 """
 
 import argparse
 import json
 import os
+import signal
 import statistics
 import subprocess
 import sys
+
+SECONDS = 30          # the run length BENCHMARK.json's workloads use
+RUN_TIMEOUT = 1200    # seconds one perfbench run may take, build included
 
 
 def seeds(spec):
@@ -39,17 +47,28 @@ def seeds(spec):
     return out
 
 
-def run(checkout, workload, seed, seconds, timeout):
+def failed(error):
+    return {"correct": False, "failed": None, "attempted": None, "metrics": {},
+            "error": error}
+
+
+def run(checkout, workload, seed):
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
-    proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
-                          stderr=subprocess.DEVNULL, text=True, timeout=timeout)
-    lines = [l for l in proc.stdout.splitlines() if l.strip()]
+           "--seed", str(seed), "--seconds", str(SECONDS), "--trace", "0"]
+    proc = subprocess.Popen(cmd, cwd=checkout, stdout=subprocess.PIPE,
+                            stderr=subprocess.DEVNULL, text=True,
+                            start_new_session=True)
+    try:
+        out, _ = proc.communicate(timeout=RUN_TIMEOUT)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.communicate()
+        return failed(f"timed out after {RUN_TIMEOUT} s")
+    lines = [l for l in out.splitlines() if l.strip()]
     try:
         return json.loads(lines[-1])
     except (IndexError, ValueError):
-        return {"correct": False, "failed": None, "attempted": None, "metrics": {},
-                "error": f"exit {proc.returncode}, no result line"}
+        return failed(f"exit {proc.returncode}, no result line")
 
 
 def quartiles(values):
@@ -65,8 +84,6 @@ def main():
     ap.add_argument("change", help="checkout of the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 301-310 or 301,303")
-    ap.add_argument("--seconds", type=int, default=30)
-    ap.add_argument("--timeout", type=int, default=1200, help="per run, in seconds")
     args = ap.parse_args()
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
@@ -77,7 +94,7 @@ def main():
     for i, seed in enumerate(seeds(args.seeds)):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            r = run(sides[side], args.workload, seed, args.seconds, args.timeout)
+            r = run(sides[side], args.workload, seed)
             results[side].append(r)
             values = " ".join(f"{n}={r.get('metrics', {}).get(n, {}).get('value', float('nan')):.4g}"
                               for n, _, _ in metrics)
