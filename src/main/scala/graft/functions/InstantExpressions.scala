@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{DataType, LongType, TimestampType}
   * generated instance, so the source is the same for every instant, and
   * a row reads that field where it read an inline constant.
   *
-  * A stream that reuses one analyzed plan for every batch puts the batch's
-  * instant into each of these slots with [[at]]. */
+  * A stream that runs one compiled stage for every batch moves these
+  * slots among the stage's references to the batch's instant with [[at]]. */
 case class BatchInstant(value: Long, dataType: DataType) extends LeafExpression with InstantSlot {
   require(dataType == TimestampType || dataType == LongType,
     s"a batch instant is a timestamp or epoch millis, not $dataType")

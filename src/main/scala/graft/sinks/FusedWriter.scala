@@ -69,26 +69,21 @@ object FusedWriter {
   /** Write `frame` to every destination in one job. Returns each failed
     * destination with its error, in `destinations` order; fatal errors are
     * rethrown. */
-  def write(frame: DataFrame, destinations: Seq[Destination]): Seq[(String, Throwable)] =
-    writeProjected(project(frame, destinations), destinations)
+  def write(frame: DataFrame, destinations: Seq[Destination]): Seq[(String, Throwable)] = {
+    val qe = project(frame, destinations).queryExecution
+    writeRows(qe, destinations)(qe.toRdd)
+  }
 
   /** The one flat projection of `frame` that a pass reads: each
     * destination's row struct, then its partition values as strings, at
     * consecutive ordinals from its slot. Apart from the write, so a caller
-    * can analyze it once and reuse the analyzed plan. */
+    * that keeps the generated stage of a projected frame can run it with
+    * [[writeRows]]. */
   def project(frame: DataFrame, destinations: Seq[Destination]): DataFrame =
     frame.select(destinations.flatMap(d =>
       d.row +: d.partitionBy.map(_._2.cast("string"))).zipWithIndex.map { case (c, i) =>
       c.as(s"_$i")
     }: _*)
-
-  /** [[write]] of a frame that [[project]] has already projected for
-    * `destinations`, or of one with the same plan over other input. */
-  def writeProjected(routed: DataFrame,
-                     destinations: Seq[Destination]): Seq[(String, Throwable)] = {
-    val qe = routed.queryExecution
-    writeRows(qe, destinations)(qe.toRdd)
-  }
 
   /** The core of every write: the rows of a [[project]]ed frame, whose
     * execution is `qe`, written to `destinations` in one job inside one

@@ -300,8 +300,8 @@ object Sinks {
     * one kind of slot ([[graft.functions.BatchInstant]]; the day is
     * formatted from it once per plan, [[graft.functions.BatchValue]])
     * that generated code reads by reference, so a later batch reuses the
-    * compiled classes, and a stream that reuses one analyzed plan can put
-    * each batch's instant into every slot. A `current_timestamp()`
+    * compiled classes, and a stream that runs one compiled stage can move
+    * every slot to each batch's instant. A `current_timestamp()`
     * column would compile new source on every call. */
   def fanout(classified: DataFrame, archivePath: String, timeseriesPath: String,
              rawPath: String, at: Instant = Instant.now()): (StorageResult, Option[DataFrame]) = {

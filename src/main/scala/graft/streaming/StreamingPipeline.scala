@@ -5,9 +5,7 @@ import java.time.Instant
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeMap, AttributeReference}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
-import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -17,7 +15,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.Tables
-import graft.functions.{BatchInstant, InstantFunctions, InstantSlot}
+import graft.functions.{InstantFunctions, InstantSlot}
 import graft.ops.{Hrfco, Thresholds}
 import graft.sinks.{Destination, FusedWriter, Sinks}
 
@@ -49,10 +47,10 @@ import graft.sinks.{Destination, FusedWriter, Sinks}
   *    ([[graft.functions.BatchInstant]]), so a warm stream compiles no
   *    class per batch; a `current_timestamp()` compiles new source on
   *    every call;
-  *  - the write is analyzed, optimized, planned and generated once per
-  *    query, not once per batch ([[WritePlan]]): the first batch runs it
-  *    as a frame and keeps its generated stage, and each later batch runs
-  *    that stage over its own rows with its own instant;
+  *  - the first batch of a query builds its write fresh and keeps its
+  *    generated stage ([[WritePlan]]), and each later batch runs that
+  *    stage over its own rows with its own instant; a write of any other
+  *    shape is built fresh every batch;
   *  - the threshold dim is consulted once per batch — the streaming
   *    analogue of the reference's continuously-refreshed broadcast
   *    dimension — and reused as rows collected on the driver while the
@@ -107,14 +105,14 @@ object StreamingPipeline {
         // envelope schema (camelCase + ts). One frame carries both
         // branches, and one pass writes it to all four destinations.
         val at = Instant.now() // the batch's one instant (see above)
-        val frames = plan(batch, dim(), at)
-        val failed = frames.run()
+        val join = dim()
+        val failed = plan(batch, join, at)
         // a failed parse-failure DLQ write fails the batch; otherwise the
         // storage-failure append follows the committed pass: two appends
         // in flight on one parquet directory share the committer's
         // _temporary directory
         failed.find(_._1 == ParseDlq).foreach { case (_, e) => throw e }
-        val (result, dlq) = Sinks.storageOutcome(frames.stored, failed, at)
+        val (result, dlq) = Sinks.storageOutcome(plan.stored(batch, join, at), failed, at)
         dlq.foreach(_.write.mode("append").parquet(paths.dlq))
         if (!result.allOk)
           logger.warn(s"batch $batchId partial storage failure: ${result.failures}")
@@ -141,148 +139,81 @@ object StreamingPipeline {
   private def storedColumns(routed: DataFrame): Seq[String] =
     routed.columns.toSeq.filter(_ != Hrfco.ParseFailedColumn)
 
-  /** A micro-batch's write: the [[graft.sinks.FusedWriter.project]] of
-    * its routed rows to its [[destinations]], which [[run]] writes, and
-    * its stored rows, the ones a failed store sends to the DLQ. Both
-    * frames are built only when asked for. */
-  private[graft] final class BatchFrames(writeFrame: => DataFrame,
-                                         storedRows: => DataFrame,
-                                         runWrite: () => Seq[(String, Throwable)]) {
-    lazy val write: DataFrame = writeFrame
-
-    def stored: DataFrame = storedRows
-
-    /** Write the batch to every destination in one job; returns each
-      * failed destination with its error, as
-      * [[graft.sinks.FusedWriter.writeProjected]] of [[write]] does. */
-    def run(): Seq[(String, Throwable)] = runWrite()
-  }
-
-  /** The write plan of every micro-batch of one query, analyzed once and,
-    * where it is one generated stage, planned and generated once.
+  /** The write of every micro-batch of one query, planned and generated
+    * once where it is one generated stage.
     *
-    * A poll batch is small, so its cost is mostly fixed per-batch work.
-    * Analyzing [[graft.ops.Hrfco.routedFromRaw]] over the batch, about 17
-    * `withColumn`/`filter` steps that each analyze the growing plan
-    * again, and the write's projection on top took 72–83 ms of a warm
-    * 500-row batch (medians of 50 batches, `local[4]`); optimizing,
-    * planning and generating its code took about 100 ms more. Yet the
-    * plan differs from batch to batch only in its source and its instant.
-    * So the plan is analyzed once, over a template leaf with the batch's
-    * schema, and each batch rebinds it in under a millisecond:
-    *  - the batch's own plan takes the leaf's place, its attributes
-    *    mapped to the leaf's by position;
-    *  - every [[graft.functions.BatchInstant]] takes the batch's instant:
-    *    the parse fallback, the DLQ `timestamp`, `created_at` and the
-    *    archive's y/M/d, which are formatted from it
-    *    ([[graft.functions.BatchValue]]). No literal is matched by value;
-    *  - the result is marked analyzed and wrapped as a frame
-    *    ([[org.apache.spark.sql.graft.Bridge.analyzed]]), so the analyzer
-    *    runs no rule on it.
+    * A poll batch is small, so its cost is mostly fixed per-batch work:
+    * analyzing [[graft.ops.Hrfco.routedFromRaw]] over the batch and the
+    * write's projection on top took 72–83 ms of a warm 500-row batch
+    * (medians of 50 batches, `local[4]`), and optimizing, planning and
+    * generating its code about 100 ms more. Yet the plan differs from
+    * batch to batch only in its source and its instant.
     *
-    * The first batch of a template then optimizes, plans and runs that
-    * frame. When its executed plan is one whole-stage-codegen stage over
-    * the batch's rows (a `foreachBatch` batch is an existing RDD), the
-    * template keeps the stage's generated source and references
-    * ([[org.apache.spark.sql.graft.CodegenStage]]) and the frame's
-    * execution. Each later batch runs that stage over its own RDD, with
-    * the instant slots among the references moved to its instant
-    * ([[graft.functions.InstantSlot]]): no optimizer rule, no planner and
-    * no code generation. A plan of any other shape (a dim joined by
-    * broadcast, as a repeated station or an unfingerprintable dim is) is
-    * rebound and run as a frame every batch. Either way the rows go
-    * through the one [[graft.sinks.FusedWriter]] core. The SQL metrics of
-    * a reused stage are those of its first batch's plan and add up over
-    * the batches. The stored-row frame a failed store needs is rebound
-    * from the same template, and analyzed the first time a store fails.
+    * The first batch builds its write fresh, as [[graft.sinks.FusedWriter.write]]
+    * builds any frame, and runs it. When its executed plan is one
+    * whole-stage-codegen stage over the batch's rows (a `foreachBatch`
+    * batch is an existing RDD), the plan keeps the stage's generated
+    * source and references ([[org.apache.spark.sql.graft.CodegenStage]]),
+    * the frame's execution and its destinations. Each later batch runs that
+    * stage over its own RDD, with the instant slots among the references
+    * moved to its instant ([[graft.functions.InstantSlot]]): no analyzer
+    * or optimizer rule, no planner and no code generation. Any batch that
+    * cannot use a kept stage (a dim joined by broadcast, as a repeated
+    * station is; a changed dim join; a batch that is not an RDD) is built
+    * fresh and planned. Either way the rows go through the one
+    * [[graft.sinks.FusedWriter]] core. The SQL metrics of a kept stage are
+    * those of its first batch's plan and add up over the batches.
     *
-    * The template is built again when the batch schema changes or the dim
-    * join is not the one it was built with. [[DimSnapshot]] hands back
-    * the same join while its dim is unchanged; a dim it cannot
-    * fingerprint gives a new join, and so a new template, every batch. */
+    * The stage is kept for the batch schema and the dim join it was built
+    * with. [[DimSnapshot]] hands back the same join while its dim is
+    * unchanged; a dim it cannot fingerprint gives a new join, and so a
+    * fresh build, every batch. */
   private[graft] final class WritePlan(paths: SinkPaths, wlMax: Double) {
-    private var held: Option[Template] = None
+    private var kept: Option[Kept] = None
 
-    def apply(batch: DataFrame, join: DataFrame => DataFrame, at: Instant): BatchFrames = {
-      val template = held.filter(t => (t.join eq join) && t.schema == batch.schema)
-        .getOrElse {
-          val t = new Template(batch.sparkSession, batch.schema, join, at)
-          held = Some(t)
-          t
-        }
-      template.bind(batch.queryExecution.analyzed, at)
-    }
-
-    private final class Template(spark: SparkSession, val schema: StructType,
-                                 val join: DataFrame => DataFrame, at: Instant) {
-      private val leaf = LocalRelation(DataTypeUtils.toAttributes(schema))
-      private val routed = Hrfco.routedFromRaw(Hrfco.rawObservations(Bridge.ofRows(spark, leaf)),
-        join, tsFallback = InstantFunctions.batchTimestamp(at), wlMax = wlMax)
-      // every batch writes to these; their columns are already in `write`
-      private val writeTo = destinations(paths, routed, at)
-      private val write = analyzed(FusedWriter.project(routed, writeTo))
-      private lazy val stored = analyzed(routed.filter(!col(Hrfco.ParseFailedColumn))
-        .select(storedColumns(routed).map(col): _*))
-      /** None until the template's first run, then the write's stage if
-        * it is one. */
-      private var compiled: Option[Option[Compiled]] = None
-
-      private def isLeaf(p: LogicalPlan): Boolean = p match {
-        case r: LocalRelation => r.output == leaf.output
-        case _ => false
-      }
-
-      /** The analyzed plan of `frame`, which reads the leaf once. */
-      private def analyzed(frame: DataFrame): LogicalPlan = {
-        val plan = frame.queryExecution.analyzed
-        require(plan.collectLeaves().count(isLeaf) == 1,
-          s"the template leaf is not read exactly once: $plan")
-        plan
-      }
-
-      def bind(batch: LogicalPlan, at: Instant): BatchFrames = {
-        lazy val frame = rebind(write, batch, at)
-        new BatchFrames(frame, rebind(stored, batch, at), () => run(batch, frame, at))
-      }
-
-      /** Write the batch whose analyzed plan is `batch`: through the kept
-        * stage when there is one and the batch is an RDD, else as `frame`,
-        * whose stage the template's first run keeps. */
-      private def run(batch: LogicalPlan, frame: => DataFrame,
-                      at: Instant): Seq[(String, Throwable)] = (compiled, batch) match {
-        case (Some(Some(c)), input: LogicalRDD) =>
-          FusedWriter.writeRows(c.qe, writeTo)(
-            c.stage.over(input.rdd, InstantSlot.at(c.stage.references, at)))
-        case _ =>
-          val qe = frame.queryExecution
+    /** Write `batch`, joined to the dim by `join`, at the instant `at` to
+      * every destination in one job; returns each failed destination with
+      * its error, as [[graft.sinks.FusedWriter.write]] does. */
+    def apply(batch: DataFrame, join: DataFrame => DataFrame,
+              at: Instant): Seq[(String, Throwable)] =
+      (kept.filter(k => (k.join eq join) && k.schema == batch.schema),
+        batch.queryExecution.analyzed) match {
+        case (Some(k), input: LogicalRDD) =>
+          FusedWriter.writeRows(k.qe, k.destinations)(
+            k.stage.over(input.rdd, InstantSlot.at(k.stage.references, at)))
+        case (_, input) =>
+          val frame = routed(batch, join, at)
+          val writeTo = destinations(paths, frame, at)
+          val qe = FusedWriter.project(frame, writeTo).queryExecution
           FusedWriter.writeRows(qe, writeTo) {
-            val first = compiled.isEmpty
-            val kept = batch match {
-              case input: LogicalRDD if first =>
-                Bridge.codegenStage(qe.executedPlan).filter(_._2 eq input.rdd)
+            val stage = input match {
+              case rows: LogicalRDD =>
+                Bridge.codegenStage(qe.executedPlan).filter(_._2 eq rows.rdd)
               case _ => None
             }
-            if (first) compiled = Some(kept.map { case (stage, _) => Compiled(stage, qe) })
-            kept.fold(qe.toRdd) { case (stage, rdd) => stage.over(rdd) }
+            kept = stage.map { case (s, _) => Kept(batch.schema, join, s, qe, writeTo) }
+            stage.fold(qe.toRdd) { case (s, rdd) => s.over(rdd) }
           }
       }
 
-      private def rebind(plan: LogicalPlan, batch: LogicalPlan, at: Instant): DataFrame = {
-        val attrs = AttributeMap(leaf.output.zip(batch.output))
-        Bridge.analyzed(spark, plan.transformUp {
-          case l if isLeaf(l) => batch
-          case p => p.transformExpressions {
-            case a: AttributeReference if attrs.contains(a) => a.withExprId(attrs(a).exprId)
-            case i: BatchInstant => i.at(at)
-          }
-        })
-      }
+    /** The stored rows of `batch`, the ones a failed store sends to the
+      * DLQ. */
+    def stored(batch: DataFrame, join: DataFrame => DataFrame, at: Instant): DataFrame = {
+      val frame = routed(batch, join, at)
+      frame.filter(!col(Hrfco.ParseFailedColumn)).select(storedColumns(frame).map(col): _*)
     }
+
+    private def routed(batch: DataFrame, join: DataFrame => DataFrame, at: Instant): DataFrame =
+      Hrfco.routedFromRaw(Hrfco.rawObservations(batch), join,
+        tsFallback = InstantFunctions.batchTimestamp(at), wlMax = wlMax)
   }
 
-  /** A stage generated for a [[WritePlan]] template's write, and the
-    * execution of the frame it was generated for. */
-  private final case class Compiled(stage: CodegenStage, qe: QueryExecution)
+  /** A stage generated for the write of a batch of `schema` joined by
+    * `join`, and the execution and destinations of the frame it was
+    * generated for. */
+  private final case class Kept(schema: StructType, join: DataFrame => DataFrame,
+                                stage: CodegenStage, qe: QueryExecution,
+                                destinations: Seq[Destination])
 
   /** The threshold dim as the batches of one query see it. Each batch
     * consults `provider`; the first dim it returns is collected on the

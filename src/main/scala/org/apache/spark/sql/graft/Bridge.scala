@@ -65,18 +65,6 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** `plan`, which must already be resolved, as a DataFrame on which the
-    * analyzer runs no rule: the plan is marked analyzed
-    * (`AnalysisHelper.setAnalyzed`, private[sql]), and
-    * `Analyzer.executeAndCheck` returns a marked plan as it is. For a plan
-    * made from an analyzed one by substitutions that keep every reference
-    * resolved, as graft.streaming.StreamingPipeline rebinds one analyzed
-    * write plan to each micro-batch. */
-  def analyzed(spark: SparkSession, plan: LogicalPlan): DataFrame = {
-    plan.setAnalyzed()
-    ofRows(spark, plan)
-  }
-
   /** The generated stage of `plan` and the RDD it reads, when `plan` is
     * one whole-stage-codegen stage whose only leaf is a scan of an
     * existing RDD and which has no subquery. This is the first half of

@@ -444,77 +444,6 @@ class StreamingSpec extends SparkSpec {
       Hrfco.pipeline(ev, dim, wlMax = 300.0).count())
   }
 
-  test("a rebound write frame equals a fresh build of its batch, across days and a dim swap") {
-    import spark.implicits._
-    // every branch of the write: ids 107 and 214 are parse failures, 103
-    // and 206 required-field drops (blank station), `error` has no dim
-    // row (NO_THRESHOLD), every tenth water level (400) is out of range
-    val stations = array(Seq("click", "purchase", "view", "error").map(lit): _*)
-    def batch(from: Long) = Tables.normalizeEvents(spark.range(from, from + 300, 1, 2).select(
-      col("id").as("event_id"),
-      timestamp_seconds(lit(1765290600L) + col("id") * 60).cast("timestamp_ntz").as("ts"),
-      (col("id") % 50).as("user_id"),
-      element_at(stations, (col("id") % 4 + 1).cast("int")).as("event_type"),
-      when(col("id") % 10 === 0, lit(400.0)).otherwise((col("id") % 250).cast("double"))
-        .as("value"),
-      format_string("{\"k\": \"%d.5\"}", col("id") % 9).as("props")))
-    def join(srswl: Double) = {
-      val dim = Seq("click", "purchase", "view")
-        .map(s => (s, srswl - 30, srswl - 20, srswl - 10, srswl, s"station $s", "addr"))
-        .toDF("wlobscd", "attwl", "wrnwl", "almwl", "srswl", "obsnm", "addr")
-      Hrfco.lookupDim(dim.collect().toSeq, dim.schema).get
-    }
-    val (lenient, strict) = (join(980), join(120))
-    val (first, second) = (batch(1), batch(301))
-    val paths = sinkPaths("unused")
-    val plan = new StreamingPipeline.WritePlan(paths, wlMax = 300.0)
-    def at(s: String) = java.time.Instant.parse(s)
-    // two days apart in year, month and day; the dim swapped for the third
-    // batch, so its template is built again and then reused for the fourth
-    val steps = Seq(
-      (first, lenient, at("2025-12-31T23:59:30Z"), "2025", "12", "31"),
-      (second, lenient, at("2026-01-01T00:00:30Z"), "2026", "01", "01"),
-      (first, strict, at("2026-02-03T04:05:06Z"), "2026", "02", "03"),
-      (second, strict, at("2026-03-04T05:06:07Z"), "2026", "03", "04"))
-    val runs = steps.map { case (b, dimJoin, instant, y, m, d) =>
-      b.queryExecution.analyzed
-      val before = ruleRuns
-      val frames = plan(b, dimJoin, instant)
-      val built = ruleRuns - before
-      val routed = Hrfco.routedFromRaw(Hrfco.rawObservations(b), dimJoin,
-        tsFallback = graft.functions.InstantFunctions.batchTimestamp(instant), wlMax = 300.0)
-      val fresh = graft.sinks.FusedWriter.project(routed,
-        StreamingPipeline.destinations(paths, routed, instant))
-      assert(frames.write.schema === fresh.schema, s"$instant: schema and nullability")
-      val (got, want) = (frames.write.collect().toSeq, fresh.collect().toSeq)
-      assert(got.size === want.size, s"$instant: rows")
-      assert(got.diff(want).size === 0, s"$instant: rows that a fresh build lacks")
-      assert(got.size < b.count(), s"$instant: the required-field drops are dropped")
-      // the stored rows a failed store sends to the DLQ
-      val stored = routed.filter(!col(Hrfco.ParseFailedColumn))
-        .select(routed.columns.filter(_ != Hrfco.ParseFailedColumn).map(col): _*)
-      assert(frames.stored.schema === stored.schema, s"$instant: stored schema")
-      val storedRows = frames.stored.collect().toSeq
-      assert(storedRows.size === stored.count() &&
-        storedRows.diff(stored.collect().toSeq).size === 0, s"$instant: stored rows")
-      // the archive leaves are the batch's day (archive slots: _1 to _4)
-      val leaves = frames.write.filter(col("_0").isNotNull)
-        .select("_1", "_2", "_3", "_4").distinct().as[(String, String, String, String)]
-        .collect().toSet
-      assert(leaves === Set(("normal", y, m, d), ("anomalies", y, m, d)), s"$instant leaves")
-      val levels = frames.write.select(col("_5.flood_warning_level")).as[String]
-        .collect().toSet
-      assert(levels.contains("NO_THRESHOLD"), s"$instant: levels $levels")
-      assert(frames.write.filter(col("_7").isNotNull).count() > 0, s"$instant: parse failures")
-      built
-    }
-    assert(runs(0) > 0 && runs(2) > 0, s"the first and the swapped dim build a template: $runs")
-    assert(runs(1) === 0 && runs(3) === 0, s"a rebind runs no rule: $runs")
-    // the swap reclassified: the strict dim makes some levels critical
-    assert(plan(first, strict, at("2026-02-03T04:05:06Z")).write
-      .filter(col("_5.flood_warning_level") === "CRITICAL").count() > 0)
-  }
-
   test("a micro-batch after the first neither optimizes, plans nor generates code for its write") {
     // the dim provider runs at the start of each batch's body and the DLQ's
     // job commit (its `_SUCCESS` marker) ends the write, the body's last
@@ -559,9 +488,11 @@ class StreamingSpec extends SparkSpec {
 
   test("a compiled micro-batch write equals a fresh write of its batch, across days and dims") {
     import spark.implicits._
-    // every branch of the write, as in the rebound-frame case above; each
-    // batch is an RDD, as a foreachBatch batch is, so a template's first
-    // run keeps the write's stage and later runs of the template reuse it
+    // every branch of the write: ids 107 and 214 are parse failures, 103
+    // and 206 required-field drops (blank station), `error` has no dim row
+    // (NO_THRESHOLD), every tenth water level (400) is out of range. Each
+    // batch is an RDD, as a foreachBatch batch is, so the first batch of a
+    // dim keeps the write's stage and later batches of that dim reuse it
     val stations = array(Seq("click", "purchase", "view", "error").map(lit): _*)
     def batch(from: Long) = {
       val built = Tables.normalizeEvents(spark.range(from, from + 300, 1, 2).select(
@@ -603,7 +534,7 @@ class StreamingSpec extends SparkSpec {
     val runs = steps.map { case (b, join, instant) =>
       b.queryExecution.analyzed // as a foreachBatch batch arrives
       val before = ruleRuns
-      val failed = plan(b, join, instant).run()
+      val failed = plan(b, join, instant)
       val planned = ruleRuns - before
       val routed = Hrfco.routedFromRaw(Hrfco.rawObservations(b), join,
         tsFallback = graft.functions.InstantFunctions.batchTimestamp(instant), wlMax = 300.0)
@@ -643,6 +574,25 @@ class StreamingSpec extends SparkSpec {
       .collect().sorted.toSeq === created)
     assert(spark.read.parquet(compiled.timeseries)
       .filter(col("flood_warning_level") === "CRITICAL").count() > 0, "the strict dim reclassified")
+    // each batch writes both archive leaves of its day
+    val leaves = graft.sinks.Sinks.readArchive(spark, compiled.archive)
+      .select("type", "y", "m", "d").distinct().as[(String, String, String, String)]
+      .collect().toSet
+    assert(leaves === days.flatMap { case (y, m, d) =>
+      Seq(("normal", y, m, d), ("anomalies", y, m, d))
+    }, "archive leaves")
+    // and every branch: a NO_THRESHOLD level, parse failures in the DLQ,
+    // no required-field drop stored
+    val noThreshold = spark.read.parquet(compiled.timeseries)
+      .filter(col("flood_warning_level") === "NO_THRESHOLD")
+      .select(unix_millis(col("created_at"))).distinct().as[Long].collect().sorted.toSeq
+    assert(noThreshold === created, "batches with a NO_THRESHOLD level")
+    val parseFailed = spark.read.parquet(compiled.dlq)
+      .filter(col("exceptionClass") === "JsonParseException")
+      .select("timestamp").distinct().as[Long].collect().sorted.toSeq
+    assert(parseFailed === created, "batches with parse failures in the DLQ")
+    assert(graft.sinks.Sinks.readArchive(spark, compiled.archive)
+      .filter(col("event_id") % 103 === 0).count() === 0, "required-field drops stored")
   }
 
   /** The parquet schemas, nullability included, of the data files under

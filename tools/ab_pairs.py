@@ -17,7 +17,12 @@ comes from the `end_to_end` list of PARENT's BENCHMARK.json.
 
 A claimed gain holds when the change wins at least nine tenths of the pairs
 and the medians differ by more than the parent's interquartile distance;
-the last column says whether that holds. The script writes nothing into
+the "gain" column says whether that holds. The "bound" column says whether
+the change stays within the metric's `bound` from the same list: "no" when
+its median is worse than the parent's by more than that fraction of the
+parent's median, "unresolved" when the parent's own interquartile distance
+is wider than that fraction and not every change run beats every parent
+run, and "yes" otherwise (`within_bound`). The script writes nothing into
 either checkout itself; perfbench keeps its own build and output
 directories in the checkout it runs in.
 
@@ -78,6 +83,20 @@ def quartiles(values):
     return q1, med, q3
 
 
+def within_bound(parent, change, better, bound):
+    """'yes', 'no' or 'unresolved': whether the change's runs of one metric
+    stay within `bound` (a fraction of the parent's median) of the parent's
+    runs, where `better` is 'lower' or 'higher'."""
+    sign = -1 if better == "lower" else 1
+    pq, cq = quartiles(parent), quartiles(change)
+    limit = bound * abs(pq[1])
+    if sign * (cq[1] - pq[1]) < -limit:
+        return "no"
+    if pq[2] - pq[0] > limit and not all(sign * (c - p) > 0 for c in change for p in parent):
+        return "unresolved"
+    return "yes"
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("parent", help="checkout of the parent commit")
@@ -87,7 +106,8 @@ def main():
     args = ap.parse_args()
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
-        metrics = [(m["name"], m["unit"], m["better"]) for m in json.load(f)["end_to_end"]]
+        metrics = [(m["name"], m["unit"], m["better"], m["bound"])
+                   for m in json.load(f)["end_to_end"]]
 
     sides = {"parent": args.parent, "change": args.change}
     results = {"parent": [], "change": []}
@@ -97,15 +117,15 @@ def main():
             r = run(sides[side], args.workload, seed)
             results[side].append(r)
             values = " ".join(f"{n}={r.get('metrics', {}).get(n, {}).get('value', float('nan')):.4g}"
-                              for n, _, _ in metrics)
+                              for n, _, _, _ in metrics)
             print(f"seed {seed} {side:6} correct={r.get('correct')} failed={r.get('failed')} "
                   f"attempted={r.get('attempted')} {values}"
                   + (f" error={r['error']}" if "error" in r else ""), flush=True)
 
     pairs = len(results["parent"])
     print(f"\n{args.workload}: {pairs} pairs, medians [Q1-Q3]")
-    print(f"{'metric':16} {'unit':7} {'parent':>28} {'change':>28} {'wins':>6}  gain")
-    for name, unit, better in metrics:
+    print(f"{'metric':16} {'unit':7} {'parent':>28} {'change':>28} {'wins':>6}  gain  bound")
+    for name, unit, better, bound in metrics:
         def values(side):
             return [r["metrics"][name]["value"] for r in results[side]
                     if name in r.get("metrics", {})]
@@ -121,7 +141,7 @@ def main():
         gain = wins * 10 >= 9 * pairs and sign * (cq[1] - pq[1]) > pq[2] - pq[0]
         print(f"{name:16} {unit:7} {pq[1]:10.4g} [{pq[0]:.4g}-{pq[2]:.4g}] "
               f"{cq[1]:10.4g} [{cq[0]:.4g}-{cq[2]:.4g}] {wins:>3}/{pairs}  "
-              f"{'yes' if gain else 'no'}")
+              f"{'yes' if gain else 'no':5} {within_bound(p, c, better, bound)}")
     bad = [r for side in results.values() for r in side
            if not r.get("correct") or r.get("failed") != 0]
     print(f"runs not correct or with failures: {len(bad)}")
