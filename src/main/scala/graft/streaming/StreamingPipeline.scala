@@ -149,20 +149,23 @@ object StreamingPipeline {
     * generating its code about 100 ms more. Yet the plan differs from
     * batch to batch only in its source and its instant.
     *
-    * The first batch builds its write fresh, as [[graft.sinks.FusedWriter.write]]
-    * builds any frame, and runs it. When its executed plan is one
-    * whole-stage-codegen stage over the batch's rows (a `foreachBatch`
-    * batch is an existing RDD), the plan keeps the stage's generated
-    * source and references ([[org.apache.spark.sql.graft.CodegenStage]]),
-    * the frame's execution and its destinations. Each later batch runs that
-    * stage over its own RDD, with the instant slots among the references
-    * moved to its instant ([[graft.functions.InstantSlot]]): no analyzer
-    * or optimizer rule, no planner and no code generation. Any batch that
-    * cannot use a kept stage (a dim joined by broadcast, as a repeated
-    * station is; a changed dim join; a batch that is not an RDD) is built
-    * fresh and planned. Either way the rows go through the one
-    * [[graft.sinks.FusedWriter]] core. The SQL metrics of a kept stage are
-    * those of its first batch's plan and add up over the batches.
+    * The first batch builds its write fresh, as
+    * [[graft.sinks.FusedWriter.write]] builds any frame, and runs it. When
+    * its executed plan is one whole-stage-codegen stage over the batch's
+    * rows (a `foreachBatch` batch is an existing RDD), the plan keeps the
+    * stage's generated source and references
+    * ([[org.apache.spark.sql.graft.CodegenStage]]), the frame's execution
+    * and its destinations. Each later batch runs that stage over its own
+    * RDD, with the instant slots among the references moved to its
+    * instant ([[graft.functions.InstantSlot]]): no analyzer or optimizer
+    * rule, no planner and no code generation. Any batch that cannot use a
+    * kept stage (a dim joined by broadcast, as a repeated station is; a
+    * changed dim join; a batch that is not an RDD) is built fresh and
+    * planned. Either way the rows go through the one
+    * [[graft.sinks.FusedWriter]] core. The SQL metrics of a kept stage
+    * are those of its first batch's plan and add up over the batches. The
+    * stored-row frame a failed store sends to the DLQ is built fresh, and
+    * only then ([[stored]]).
     *
     * The stage is kept for the batch schema and the dim join it was built
     * with. [[DimSnapshot]] hands back the same join while its dim is

@@ -4,9 +4,9 @@ import scala.util.control.NonFatal
 
 /** Exponential-backoff retry, the mirror of the reference's standalone
   * util (util/RetryUtil.java:36-59: maxAttempts with initialDelay doubling
-  * per attempt). No graft code path calls it; only its specs do. Executor-
-  * side task retries are Spark's own. Sleep is injectable so specs don't
-  * wait. */
+  * per attempt). No graft code path calls it; only its specs do.
+  * Executor-side task retries are Spark's own. Sleep is injectable so
+  * specs don't wait. */
 object Retry {
   def withRetry[T](maxAttempts: Int = 3, initialDelayMs: Long = 500,
                    sleep: Long => Unit = Thread.sleep)(op: () => T): T = {

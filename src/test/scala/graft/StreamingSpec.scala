@@ -575,9 +575,9 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(compiled.timeseries)
       .filter(col("flood_warning_level") === "CRITICAL").count() > 0, "the strict dim reclassified")
     // each batch writes both archive leaves of its day
-    val leaves = graft.sinks.Sinks.readArchive(spark, compiled.archive)
-      .select("type", "y", "m", "d").distinct().as[(String, String, String, String)]
-      .collect().toSet
+    val archive = graft.sinks.Sinks.readArchive(spark, compiled.archive)
+    val leaves = archive.select("type", "y", "m", "d").distinct()
+      .as[(String, String, String, String)].collect().toSet
     assert(leaves === days.flatMap { case (y, m, d) =>
       Seq(("normal", y, m, d), ("anomalies", y, m, d))
     }, "archive leaves")
@@ -591,8 +591,8 @@ class StreamingSpec extends SparkSpec {
       .filter(col("exceptionClass") === "JsonParseException")
       .select("timestamp").distinct().as[Long].collect().sorted.toSeq
     assert(parseFailed === created, "batches with parse failures in the DLQ")
-    assert(graft.sinks.Sinks.readArchive(spark, compiled.archive)
-      .filter(col("event_id") % 103 === 0).count() === 0, "required-field drops stored")
+    assert(archive.filter(col("event_id") % 103 === 0).count() === 0,
+      "required-field drops stored")
   }
 
   /** The parquet schemas, nullability included, of the data files under
